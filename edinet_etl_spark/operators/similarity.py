@@ -1030,12 +1030,6 @@ def _pq_fold4(col_fmt: str) -> str:
     return out
 
 
-def _pq_pivot(agg_col: str) -> list[str]:
-    return [
-        f"MAX(CASE WHEN sub_id = {s} THEN {agg_col} END)" for s in range(_PQ_M)
-    ]
-
-
 @query(
     "pq_codebook_recon_error",
     oracle=f"""

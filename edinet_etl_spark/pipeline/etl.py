@@ -13,6 +13,8 @@ Injection of ``Fetcher`` keeps every test offline (FIXTURES.md §B).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 
 from edinet_etl_spark.pipeline.config import PipelineConfig
@@ -41,12 +43,7 @@ def ingest_filings(
         targeted,
         fetcher,
         companies_to_get=cfg.companies_to_get,
-        policy=RetryPolicy(
-            max_retries=cfg.max_retries,
-            retry_delay=cfg.retry_delay,
-            requests_per_second=cfg.request_per_second,
-            jitter_base=0.5,
-        ),
+        policy=replace(policy, jitter_base=0.5),
         num_partitions=cfg.fetch_partitions,
     )
     return companies, zip_extract.extract_filings(downloads)

@@ -5,9 +5,8 @@ refuse to write an empty frame (warn), write one UTF-8 CSV with
 header and no index; write errors are logged, not raised
 (``tests/test_load.py:48-59`` pins that).
 
-Spark-first shape: ``df.write.csv`` with header; ``coalesce(1)`` is
-*opt-in* for single-file parity — at 100 TB you never coalesce to one
-file, you keep one file per partition.
+Spark-first shape: ``df.write.csv`` with header, always after
+``coalesce(1)`` — one file, the reference's output shape.
 
 The input is persisted around the empty guard: ``isEmpty()`` is an
 action, and on an un-cached plan it would execute the ENTIRE upstream
@@ -16,77 +15,39 @@ probe and again for the write — double API quota, and two executions
 that could see different data through the retry-swallow path.  With
 the persist, the probe materializes the data once and the write reads
 it back.
+
+Every write is observed with Spark's native Observation API: row
+count, exact revenue total and null-revenue count are accumulated ON
+the write pass itself (no second scan, no extra job) and go out as
+``write_metrics`` on the sink's INFO log record.  The reference's
+monitoring is log lines with hand-computed counts re-scanning the
+frame (``src/extract.py:35,63-65``,
+``src/transform.py:141-144``); at 100 TB a re-count of the output
+would be a full second pass over the lake.  The revenue total is
+summed in exact decimal (numeric.py discipline), so the metric is
+reproducible run-to-run — usable as a data-quality gate, not just
+telemetry.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
 
-def _write_csv(df: DataFrame, target: str, single_file: bool) -> str | None:
-    out = df.coalesce(1) if single_file else df
-    try:
-        out.write.mode("overwrite").option("header", True).csv(target)
-    except Exception as e:  # noqa: BLE001 — log-not-raise (test_load.py:48-59)
-        logger.error("Failed to save data to %s: %s", target, e)
-        return None
-    logger.info("Data successfully saved to %s", target)
-    return target
-
-
-def load_to_csv(
-    df: DataFrame,
-    output_path: str,
-    file_name: str,
-    single_file: bool = True,
-) -> str | None:
+def load_to_csv(df: DataFrame, output_path: str, file_name: str) -> str | None:
     """Write ``df`` under ``{output_path}/{file_name}``; returns the
-    directory written, or None for empty input / write failure."""
-    df = df.persist()
-    try:
-        if df.isEmpty():  # S8 empty guard (src/load.py:20-22, main.py:33-35)
-            logger.warning("DataFrame is empty. No file will be written.")
-            return None
-        target = f"{output_path.rstrip('/')}/{file_name}"
-        return _write_csv(df, target, single_file)
-    finally:
-        df.unpersist()
-
-
-def load_to_csv_observed(
-    df: DataFrame,
-    output_path: str,
-    file_name: str,
-    single_file: bool = True,
-) -> tuple[str | None, dict]:
-    """`load_to_csv` with job monitoring via Spark's native Observation
-    API: row count, exact revenue total, and null-revenue count are
-    accumulated ON the write pass itself (no second scan, no extra
-    job) and returned for logging/alerting.
+    directory written, or None for empty input / write failure.
 
     Ordering matters: ``Observation.get`` captures the FIRST action on
     the observed plan, so the empty guard probes the RAW (persisted)
     frame and only the write touches the observed one — probing the
     observed plan would report the take(1) rows the probe consumed
-    (one per partition), not the written output.
-
-    The reference's monitoring is log lines with hand-computed counts
-    re-scanning the frame (`/root/reference/src/extract.py:35,63-65`,
-    `src/transform.py:141-144`; README.md:31 lists job monitoring as a
-    feature).  `df.observe` is the Spark-native form: metrics ride the
-    action, cost nothing extra, and at 100 TB a re-count of the output
-    would be a full second pass over the lake.  The revenue total is
-    summed in exact decimal (numeric.py discipline), so the observed
-    metric is also reproducible run-to-run — usable as a data-quality
-    gate, not just telemetry.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
+    (one per partition), not the written output."""
     metrics_cols = [F.count(F.lit(1)).alias("n_rows")]
     if "revenue" in df.columns:
         metrics_cols += [
@@ -97,17 +58,24 @@ def load_to_csv_observed(
         ]
     df = df.persist()
     try:
-        if df.isEmpty():
+        if df.isEmpty():  # S8 empty guard (src/load.py:20-22, main.py:33-35)
             logger.warning("DataFrame is empty. No file will be written.")
-            return None, {}
+            return None
         obs = Observation("pipeline_write")
-        observed = df.observe(obs, *metrics_cols)
+        out = df.observe(obs, *metrics_cols).coalesce(1)
         target = f"{output_path.rstrip('/')}/{file_name}"
-        written = _write_csv(observed, target, single_file)
-        if written is None:
-            return None, {}
+        try:
+            out.write.mode("overwrite").option("header", True).csv(target)
+        except Exception as e:  # noqa: BLE001 — log-not-raise (test_load.py:48-59)
+            logger.error("Failed to save data to %s: %s", target, e)
+            return None
         metrics = dict(obs.get)
     finally:
         df.unpersist()
-    logger.info("Observed write metrics for %s: %s", written, metrics)
-    return written, metrics
+    logger.info(
+        "Data successfully saved to %s: %s",
+        target,
+        metrics,
+        extra={"write_metrics": metrics},
+    )
+    return target

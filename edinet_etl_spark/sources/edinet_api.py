@@ -10,11 +10,16 @@ Reference behavior (``/root/reference/src/extract.py``):
   (``:149-162``);
 - per-doc download dispatched by csvFlag/xbrlFlag (``:173-186``).
 
-Spark-first shape: the date range is a DataFrame
-(``explode(sequence(...))`` — F2), HTTP happens inside a
-``mapInPandas`` island (the only executor-boundary crossing, SURVEY
+Spark-first shape: the date range is a DataFrame, HTTP happens inside
+a ``mapInPandas`` island (the only executor-boundary crossing, SURVEY
 §3), and everything around it — JSON decoding, semi-join, flag
 dispatch, limit — is declarative so Catalyst can optimize it.
+
+One list-ingestion path: every list read goes through ``_fetch_raw``
+(the retry loop) and ``_decode_list`` (``from_json`` → explode), over
+the dates ``_iso_dates`` enumerates.  ``list_documents`` is the batch
+form; ``stream_documents`` is the reference's daily polling loop as a
+streaming read, one day per micro-batch.
 
 The HTTP client is injected (``Fetcher``) so tests run entirely
 offline against recorded fixtures; ``HttpFetcher`` (stdlib urllib) is
@@ -25,11 +30,11 @@ the reference's single *global* limiter semantics when summed.
 
 from __future__ import annotations
 
-import json
 import random
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
+from datetime import date, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -81,7 +86,7 @@ class HttpFetcher(Fetcher):
 
         # urlopen raises HTTPError (an OSError) for any 4xx/5xx before
         # returning, so no status check is needed here — the retry
-        # wrapper catches it like any other transient failure
+        # wrapper catches it like any other OSError
         with urllib.request.urlopen(url, timeout=self.timeout) as resp:
             return resp.read()
 
@@ -132,30 +137,54 @@ class _PartitionLimiter:
 def _with_retries(fn, policy: RetryPolicy, limiter: _PartitionLimiter):
     """Reference retry loop (src/extract.py:122-141): exponential
     backoff × jitter; final failure returns None (missing rows, not
-    job failure)."""
+    job failure).  Only ``OSError`` — HTTPError, URLError, timeouts —
+    is retried and swallowed; any other exception is a bug and fails
+    the job."""
     for attempt in range(policy.max_retries + 1):
         try:
             limiter.wait()
             return fn()
-        except Exception:  # noqa: BLE001 — any fetch error retries
+        except OSError:
             if attempt < policy.max_retries:
                 wait = policy.retry_delay * (2**attempt)
                 time.sleep(wait * (policy.jitter_base + random.random()))
     return None
 
 
+def _fetch_raw(
+    fetcher: Fetcher, date_str: str, policy: RetryPolicy, limiter: _PartitionLimiter
+) -> str | None:
+    """One day's list response as text, or None once retries run out."""
+    raw = _with_retries(lambda: fetcher.fetch_list(date_str), policy, limiter)
+    return None if raw is None else raw.decode("utf-8")
+
+
+def _decode_list(fetched: DataFrame) -> DataFrame:
+    """(date_str, raw_json) rows → one row per document, declaratively
+    (``from_json`` + explode) so the optimizer sees past the fetch."""
+    return (
+        fetched.select(
+            "date_str",
+            F.from_json("raw_json", LIST_RESPONSE_SCHEMA).alias("resp"),
+        )
+        .select("date_str", F.explode_outer("resp.results").alias("doc"))
+        .filter(F.col("doc").isNotNull())
+        .select("date_str", "doc.*")
+    )
+
+
+def _iso_dates(start_date: str, end_date: str) -> list[str]:
+    """The reference's day-step loop (``src/extract.py:107-111``):
+    every 'yyyy-MM-dd' from start to end, both inclusive."""
+    d0, d1 = date.fromisoformat(start_date), date.fromisoformat(end_date)
+    return [(d0 + timedelta(days=i)).isoformat() for i in range((d1 - d0).days + 1)]
+
+
 def date_range(spark: SparkSession, start_date: str, end_date: str) -> DataFrame:
-    """F2: the reference's day-step loop (``src/extract.py:107-111``)
-    as ``explode(sequence(...))`` — column ``date_str`` 'yyyy-MM-dd'."""
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.to_date(F.lit(start_date), "yyyy-MM-dd"),
-                F.to_date(F.lit(end_date), "yyyy-MM-dd"),
-                F.expr("interval 1 day"),
-            )
-        ).alias("d")
-    ).select(F.date_format("d", "yyyy-MM-dd").alias("date_str"))
+    """F2: the date range as a DataFrame — column ``date_str``."""
+    return spark.createDataFrame(
+        [(d,) for d in _iso_dates(start_date, end_date)], "date_str string"
+    )
 
 
 def list_documents(
@@ -167,10 +196,8 @@ def list_documents(
     """S2: per-date metadata fetch → one row per document.
 
     The fetch is a ``mapInPandas`` island emitting (date_str, raw
-    JSON); JSON decoding is *declarative* (``from_json`` + explode) so
-    the optimizer sees everything after the boundary.  Dates that fail
-    all retries emit nothing — the reference's swallow-and-continue
-    semantics."""
+    JSON); ``_decode_list`` decodes it.  Dates that fail all retries
+    emit nothing — the reference's swallow-and-continue semantics."""
     policy = policy or RetryPolicy()
     per_partition_rate = policy.requests_per_second / max(num_partitions, 1)
 
@@ -179,25 +206,72 @@ def list_documents(
         for pdf in batches:
             rows = []
             for date_str in pdf["date_str"]:
-                raw = _with_retries(
-                    lambda d=date_str: fetcher.fetch_list(d), policy, limiter
-                )
+                raw = _fetch_raw(fetcher, date_str, policy, limiter)
                 if raw is not None:
-                    rows.append((date_str, raw.decode("utf-8")))
+                    rows.append((date_str, raw))
             yield pd.DataFrame(rows, columns=["date_str", "raw_json"])
 
     fetched = dates.repartition(num_partitions).mapInPandas(
         fetch, schema="date_str string, raw_json string"
     )
-    return (
-        fetched.select(
-            "date_str",
-            F.from_json("raw_json", LIST_RESPONSE_SCHEMA).alias("resp"),
-        )
-        .select("date_str", F.explode_outer("resp.results").alias("doc"))
-        .filter(F.col("doc").isNotNull())
-        .select("date_str", "doc.*")
-    )
+    return _decode_list(fetched)
+
+
+def stream_documents(
+    spark: SparkSession,
+    fetcher: Fetcher,
+    start_date: str,
+    end_date: str,
+    policy: RetryPolicy | None = None,
+) -> DataFrame:
+    """S2 as a streaming read: one day per micro-batch — the
+    reference's daily polling loop as an incremental source.
+
+    The offset is an index into the date range, so the same (start,
+    end) offsets always re-fetch the same dates: the deterministic
+    re-read exactly-once needs.  The DataSource class is defined here
+    so that it captures ``fetcher`` and ``policy`` itself and is
+    shipped with them to the Python worker.  A date that fails all
+    retries yields no rows."""
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    policy = policy or RetryPolicy()
+    dates = _iso_dates(start_date, end_date)
+
+    class _Reader(SimpleDataSourceStreamReader):
+        def __init__(self):
+            self.limiter = _PartitionLimiter(policy.requests_per_second)
+
+        def initialOffset(self):
+            return {"date_idx": 0}
+
+        def read(self, start: dict):
+            i = start["date_idx"]
+            if i >= len(dates):
+                return iter([]), start  # caught up — no new data
+            end = {"date_idx": i + 1}
+            # Spark pickles a batch's rows, so they must be materialized
+            return iter(list(self.readBetweenOffsets(start, end))), end
+
+        def readBetweenOffsets(self, start: dict, end: dict):
+            for d in dates[start["date_idx"] : end["date_idx"]]:
+                raw = _fetch_raw(fetcher, d, policy, self.limiter)
+                if raw is not None:
+                    yield (d, raw)
+
+    class _EdinetListStream(DataSource):
+        @classmethod
+        def name(cls):
+            return "edinet_list_stream"
+
+        def schema(self):
+            return "date_str string, raw_json string"
+
+        def simpleStreamReader(self, schema):
+            return _Reader()
+
+    spark.dataSource.register(_EdinetListStream)
+    return _decode_list(spark.readStream.format("edinet_list_stream").load())
 
 
 def filter_documents(

@@ -1,15 +1,15 @@
-"""Python DataSource API tests: the EDINET feed read through
-``spark.read.format("edinet_list")`` (batch) and
-``spark.readStream`` (one day per micro-batch) must produce exactly
-the rows the mapPartitions ingestion path produces from the same
-fixtures."""
+"""Streaming list ingestion: ``edinet_api.stream_documents`` reads the
+EDINET feed one day per micro-batch through an injected fetcher and
+must produce exactly the rows the batch path (``list_documents``)
+produces from the same fixtures."""
 
 from __future__ import annotations
 
 import pytest
 
-from edinet_etl_spark.sources import edinet_datasource
-from tests.fixtures.gen import build_all
+from edinet_etl_spark.sources import edinet_api
+from edinet_etl_spark.sources.edinet_api import RetryPolicy
+from tests.fixtures.gen import FixtureFetcher, build_all
 
 
 @pytest.fixture(scope="module")
@@ -22,32 +22,13 @@ def fixture_root(tmp_path_factory):
 EXPECTED_IDS = ["D001", "D002", "D003", "D004", "D005", "D006", "D007", "D009"]
 
 
-def test_batch_datasource_read(spark, fixture_root):
-    edinet_datasource.register(spark)
-    df = (
-        spark.read.format("edinet_list")
-        .option("start_date", "2024-06-01")
-        .option("end_date", "2024-06-04")
-        .option("fixture_root", fixture_root)
-        .option("retry_delay", "0.001")
-        .load()
-    )
-    rows = df.collect()
-    assert sorted(r["docID"] for r in rows) == EXPECTED_IDS
-    assert df.columns[0] == "date_str"
-    # P6-style pushdown-compatible filtering still works downstream
-    assert df.filter(df.docTypeCode == "130").count() == 1
-
-
 def test_streaming_datasource_one_day_per_batch(spark, fixture_root):
-    edinet_datasource.register(spark)
-    sdf = (
-        spark.readStream.format("edinet_list")
-        .option("start_date", "2024-06-01")
-        .option("end_date", "2024-06-04")
-        .option("fixture_root", fixture_root)
-        .option("retry_delay", "0.001")
-        .load()
+    sdf = edinet_api.stream_documents(
+        spark,
+        FixtureFetcher(fixture_root),
+        "2024-06-01",
+        "2024-06-04",
+        RetryPolicy(retry_delay=0.001),
     )
     q = (
         sdf.writeStream.format("memory")
@@ -58,9 +39,12 @@ def test_streaming_datasource_one_day_per_batch(spark, fixture_root):
     try:
         q.processAllAvailable()
         out = spark.table("edinet_stream_docs").collect()
+        batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
     finally:
         q.stop()
     assert sorted(r["docID"] for r in out) == EXPECTED_IDS
-    # one micro-batch per day: empty 2024-06-04 contributes batch, no rows
+    # one micro-batch per day: 2024-06-04's empty list is one raw row
+    # that decodes to no documents
+    assert batches == [1, 1, 1, 1]
     dates = sorted({r["date_str"] for r in out})
     assert dates == ["2024-06-01", "2024-06-02", "2024-06-03"]

@@ -93,7 +93,7 @@ def test_fetch_document_url_shape(recorder, file_type):
 
 
 def test_http_error_is_retried_then_swallowed(monkeypatch):
-    """4xx/5xx → HTTPError → the retry wrapper's generic except path:
+    """4xx/5xx → HTTPError (an OSError) → the retry wrapper's except path:
     max_retries+1 attempts, then None (missing rows, not job failure)
     — the reference's swallow-and-continue (src/extract.py:121-141)."""
     rec = _Recorder(status=503)

@@ -107,12 +107,17 @@ def test_end_to_end_golden(spark, fixture_root, cfg):
     assert all(r[4] != 5555 for r in rows)  # deduped XBRL never parsed
 
 
-def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path):
-    """S7: end-to-end run writes a single readable CSV."""
+def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path, caplog):
+    """S7: end-to-end run writes a single readable CSV and logs one
+    ``write_metrics`` record counting exactly the rows written."""
     import glob
+    import logging
 
-    out_dir = run_pipeline(spark, cfg, FixtureFetcher(fixture_root))
+    with caplog.at_level(logging.INFO, logger="edinet_etl_spark.pipeline.load"):
+        out_dir = run_pipeline(spark, cfg, FixtureFetcher(fixture_root))
     assert out_dir is not None
+    [metrics] = _write_metrics(caplog)
+    assert metrics["n_rows"] == len(GOLDEN)
     files = glob.glob(f"{out_dir}/*.csv")
     assert len(files) == 1  # coalesce(1) single-file parity
     back = spark.read.option("header", True).csv(out_dir)
@@ -212,6 +217,23 @@ def test_partition_limiter_and_retry_unit():
     assert _with_retries(lambda: (_ for _ in ()).throw(OSError()), policy, limiter) is None
 
 
+def test_fetcher_bug_fails_the_job(spark, fixture_root, cfg):
+    """Only OSError is retried and swallowed: a programming error in a
+    fetcher surfaces as a job failure, not as silently missing rows."""
+    from pyspark.errors import PythonException
+
+    class BrokenFetcher(FixtureFetcher):
+        def fetch_list(self, date_str: str) -> bytes:
+            raise TypeError("fetcher bug")
+
+    dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
+    docs = edinet_api.list_documents(
+        dates, BrokenFetcher(fixture_root), RetryPolicy(retry_delay=0.001), num_partitions=1
+    )
+    with pytest.raises(PythonException, match="TypeError: fetcher bug"):
+        docs.collect()
+
+
 def test_empty_sink_guard(spark, tmp_path, caplog):
     """S8: empty input → no write + warning (src/load.py:20-22,
     tests/test_load.py:33-45)."""
@@ -225,47 +247,49 @@ def test_empty_sink_guard(spark, tmp_path, caplog):
     assert any("empty" in r.message.lower() for r in caplog.records)
 
 
-def test_observed_write_metrics(spark, tmp_path):
-    """The Observation-API write reports row count / exact revenue total
-    / null counts measured on the write pass itself (S7 monitoring
-    parity — the reference logs re-scanned counts; we ride the action)."""
-    from edinet_etl_spark.pipeline.load import load_to_csv_observed
+def _write_metrics(caplog) -> list[dict]:
+    return [r.write_metrics for r in caplog.records if hasattr(r, "write_metrics")]
+
+
+def test_observed_write_metrics(spark, tmp_path, caplog):
+    """The sink reports row count / exact revenue total / null counts
+    measured on the write pass itself (S7 monitoring parity — the
+    reference logs re-scanned counts; we ride the action)."""
+    import glob
+    import logging
 
     df = spark.createDataFrame(
         [(2021, "A", 100), (2022, "A", 250), (2022, "B", None)],
         "year int, companyname string, revenue long",
     )
-    target, metrics = load_to_csv_observed(df, str(tmp_path), "observed")
+    with caplog.at_level(logging.INFO, logger="edinet_etl_spark.pipeline.load"):
+        target = load_to_csv(df, str(tmp_path), "observed")
     assert target is not None
+    [metrics] = _write_metrics(caplog)
     assert metrics["n_rows"] == 3
     assert metrics["revenue_total"] == "350"
     assert metrics["null_revenue"] == 1
-    # the write actually happened with all rows
-    import glob
-
+    # the write actually happened with all rows, in one file
     files = glob.glob(f"{target}/*.csv")
-    assert files
-    body = "".join(open(f).read() for f in files)
-    assert body.count("\n") == 4  # header + 3 rows
+    assert len(files) == 1
+    assert open(files[0]).read().count("\n") == 4  # header + 3 rows
 
 
-def test_observed_metrics_multi_partition(spark, tmp_path):
+def test_observed_metrics_multi_partition(spark, tmp_path, caplog):
     """Regression: Observation.get captures the FIRST action on the
     observed plan.  Before the fix, the empty-guard's isEmpty() probe
     consumed the observation, reporting one take(1) row per partition
     (8 for this frame) instead of the written 1000."""
-    from pyspark.sql import functions as F
-
-    from edinet_etl_spark.pipeline.load import load_to_csv_observed
+    import logging
 
     df = (
         spark.range(0, 1000, numPartitions=8)
         .select(F.col("id").cast("long").alias("revenue"))
     )
-    target, metrics = load_to_csv_observed(
-        df, str(tmp_path), "observed_mp", single_file=False
-    )
+    with caplog.at_level(logging.INFO, logger="edinet_etl_spark.pipeline.load"):
+        target = load_to_csv(df, str(tmp_path), "observed_mp")
     assert target is not None
+    [metrics] = _write_metrics(caplog)
     assert metrics["n_rows"] == 1000
     assert metrics["revenue_total"] == str(sum(range(1000)))
 
