@@ -22,7 +22,7 @@ from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.prefix import range_prefix_sum, range_row_number
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 
@@ -3120,7 +3120,7 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         16, 10,
     ).cast("bigint")
-    grid = (
+    grid = materialize(
         ev.select(
             h.alias("h"),
             F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
@@ -3131,9 +3131,8 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n"),
             F.sum("y").cast("bigint").alias("n_pos"),
         )
-        # constant-size ({_ISO_B} rows) and consumed by four downstream
-        # branches — checkpoint per the two-consumer rule
-        .localCheckpoint(eager=True)
+        # constant-size (_ISO_B rows); its four consumers prune it to
+        # different columns, so without the cut each re-scans events
     )
     w_cum = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -3240,10 +3239,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, never a fact table."""
     prep(spark)
     ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy(F.to_date("ts").alias("day"))
-        .agg(dsum(F.col("value"), "total"))
-        .localCheckpoint(eager=True)
+    daily = materialize(
+        ev.groupBy(F.to_date("ts").alias("day")).agg(dsum(F.col("value"), "total"))
     )
     a, b = daily.alias("a"), daily.alias("b")
     sgn = (
@@ -3345,10 +3342,8 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation against the broadcast grid copy."""
     prep(spark)
     ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy(F.to_date("ts").alias("day"))
-        .agg(dsum(F.col("value"), "total"))
-        .localCheckpoint(eager=True)
+    daily = materialize(
+        ev.groupBy(F.to_date("ts").alias("day")).agg(dsum(F.col("value"), "total"))
     )
     xy = daily.select(
         F.row_number().over(Window.orderBy("day")).cast("bigint").alias("x"),
@@ -3464,11 +3459,11 @@ def epsilon_greedy_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(arm.alias("arm"), "converted")
     )
-    arms = assigned.groupBy("arm").agg(
+    arms = materialize(assigned.groupBy("arm").agg(
         F.count("*").cast("bigint").alias("n_users"),
         F.sum("converted").cast("bigint").alias("n_converted"),
         (F.sum("converted").cast("double") / F.count("*")).alias("conv_rate"),
-    ).localCheckpoint(eager=True)  # 4 rows; argmax branch must not rescan
+    ))  # 4 rows; argmax branch must not rescan
     best = arms.orderBy(F.desc("conv_rate"), "arm").limit(1).select(
         F.col("arm").alias("best_arm")
     )

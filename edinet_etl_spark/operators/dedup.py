@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 N_HASHES = 8
@@ -101,6 +101,15 @@ def _shingles(docs: DataFrame, k: int = 5) -> DataFrame:
         "text",
         F.explode(positions).alias("pos"),
     ).select("doc_id", F.col("text").substr(F.col("pos"), F.lit(k)).alias("sh"))
+
+
+def _shingle_set(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(shd, sizes): the distinct (doc_id, sh) shingle set of the
+    exact-Jaccard truth arms, materialized because it feeds the per-doc
+    sizes AND both sides of the intersection join, plus its per-doc
+    shingle count n_sh."""
+    shd = materialize(_shingles(docs).select("doc_id", "sh").distinct())
+    return shd, shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -460,6 +469,22 @@ def lsh_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NJ_NUM = 4
 _NJ_DEN = 5
 
+
+def _doc_tokens(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(tok, sizes): the distinct (doc_id, source, tok) word-token set
+    of the token-Jaccard queries, materialized because it feeds the
+    sizes, df and rank aggregates AND both sides of the pair join
+    (also pre-shuffles the single-row-group scan), plus its per-doc
+    token count n_tok."""
+    tok = materialize(
+        docs.select(
+            "doc_id", "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        ).distinct()
+    )
+    sizes = tok.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n_tok"))
+    return tok, sizes
+
+
 # The brute-force within-block pair enumeration, shared verbatim by the
 # production query's ORACLE (completeness theorem: the prefix-filtered
 # plan returns exactly this set) and by the declared-baseline eval arm.
@@ -520,20 +545,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed (source, tok); verification is linear in candidates.  No
     all-pairs stage anywhere."""
     prep(spark)
-    docs = load(spark, sf_dir, "documents")
-    # checkpoint the token set: it feeds sizes/df/rank AND both sides
-    # of the verify join (two-consumer rule; also pre-shuffles the
-    # single-row-group scan)
-    tok = (
-        docs.select(
-            "doc_id", "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sizes = tok.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_tok")
-    )
+    tok, sizes = _doc_tokens(load(spark, sf_dir, "documents"))
     df = tok.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
     ranked = (
@@ -616,15 +628,7 @@ def ngram_jaccard_allpairs_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     against ground truth on corpora small enough to brute-force.
     Never the scale path."""
     prep(spark)
-    docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            "doc_id", "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
+    tok, sizes = _doc_tokens(load(spark, sf_dir, "documents"))
     a = tok.alias("a")
     b = tok.alias("b")
     inter = (
@@ -1032,10 +1036,9 @@ def simhash_hamming_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarantee, same verify filter); the sig-group table is bounded by
     # the 2^_SIMHASH_BITS signature universe, hence the eager
     # checkpoint for its three consumers.
-    sgrp = (
+    sgrp = materialize(
         sigs.groupBy("simhash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .localCheckpoint(eager=True)
     )
     same = (
         sgrp.filter(F.size("ids") > 1)
@@ -1169,7 +1172,7 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct cross-component pairs, then iterate min-label +
     path-halving on the component-level graph only, which shrinks
     toward empty (the O(m) node-level edges are touched exactly twice,
-    not once per round).  ``localCheckpoint`` truncates the exploding
+    not once per round).  ``materialize`` truncates the exploding
     lineage (the standard Spark idiom for iterative algorithms), and
     termination is exact: zero remaining cross-component edges IFF the
     labeling is stable, so no confirmation round.  Component diameters
@@ -1185,18 +1188,16 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(wmin).alias("grp_n"),
     )
     pairs = canonical_minhash_candidates(spark, sf_dir)
-    edges = (
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .unionByName(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = materialize(
         edges.groupBy("u")
         .agg(F.least(F.col("u"), F.min("v")).alias("comp"))
         .select(F.col("u").alias("node"), "comp")
-        .localCheckpoint(eager=True)
     )
     # The candidate-graph node set is orders smaller than the corpus
     # (only docs with ≥1 LSH collision); broadcast it while it fits so
@@ -1222,13 +1223,12 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an already-checkpointed frame).
     lu = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-    cedges = (
+    cedges = materialize(
         edges.join(hint(lu), "u")
         .join(hint(lv), "v")
         .filter(F.col("cu") != F.col("cv"))
         .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     while cedges.count() > 0:
         # one min-label round at component level, then path-halving
@@ -1244,14 +1244,13 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "old",
             F.least(F.col("new"), F.coalesce("jnew", F.col("new"))).alias("new"),
         )
-        labels = (
+        labels = materialize(
             labels.join(hint(m), labels.comp == m.old, "left")
             .select("node", F.coalesce("new", "comp").alias("comp"))
-            .localCheckpoint(eager=True)
         )
         mu = m.select(F.col("old").alias("u"), F.col("new").alias("mu"))
         mv = m.select(F.col("old").alias("v"), F.col("new").alias("mv"))
-        cedges = (
+        cedges = materialize(
             cedges.join(hint(mu), "u", "left")
             .join(hint(mv), "v", "left")
             .select(
@@ -1260,7 +1259,6 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
     # join-back: every raw doc inherits its canonical's component;
     # exact-dup groups (grp_n ≥ 2) without an LSH collision are their
@@ -1404,7 +1402,7 @@ def delta_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch boundary is pipeline metadata, not derived from the data).
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     start = int(_DELTA_FRACTION * (max_id + 1))
-    bands = lsh_bands(minhash_signatures(docs)).localCheckpoint(eager=True)
+    bands = materialize(lsh_bands(minhash_signatures(docs)))
     bucket_w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
     old_kept = (
         bands.filter(F.col("doc_id") < start)
@@ -1501,18 +1499,18 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str) -> DataFram
     exact Jaccard is one int/int correctly-rounded division; the error
     is one IEEE subtraction of identical doubles — all portable.
 
-    Plan: signatures are computed ONCE (checkpointed — they feed the
-    band pipeline AND both pair-join sides; Spark has no common-
-    subplan reuse); candidates come from the salted bucket-group; the
+    Plan: signatures are computed ONCE (materialized — they feed the
+    band explode AND both pair-join sides, consumers that spell
+    different subtrees, so exchange reuse cannot share the md5-heavy
+    signature pass); candidates come from the salted bucket-group; the
     intersection join is O(Σ_candidates |shingles|) — linear in
     candidate count, the same cost law as `jaccard_verify_candidates`."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
-    sigs = minhash_signatures(canon).localCheckpoint(eager=True)
+    sigs = materialize(minhash_signatures(canon))
     pairs = candidate_pairs(lsh_bands(sigs))
-    shd = _shingles(canon).select("doc_id", "sh").distinct().localCheckpoint(eager=True)
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    shd, sizes = _shingle_set(canon)
     a, b = shd.alias("a"), shd.alias("b")
     inter = (
         pairs.join(a, F.col("a.doc_id") == F.col("doc_a"))
@@ -1662,10 +1660,7 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = candidate_pairs(lsh_bands(minhash_signatures(sample))).select(
         F.col("doc_a").alias("p_a"), F.col("doc_b").alias("p_b"), F.lit(1).alias("hit")
     )
-    shd = (
-        _shingles(sample).select("doc_id", "sh").distinct().localCheckpoint(eager=True)
-    )
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    shd, sizes = _shingle_set(sample)
     a, b = shd.alias("a"), shd.alias("b")
     inter = (
         a.join(b, (F.col("b.sh") == F.col("a.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1819,7 +1814,7 @@ def duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "fp", "mult", F.split(F.col("text"), " ").alias("toks")
     )
     n_tok = F.size("toks")
-    wins = (
+    wins = materialize(
         toks.select(
             "doc_id",
             "mult",
@@ -1838,7 +1833,6 @@ def duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("s") + F.lit(_SPAN_W - 1)).alias("e"),
             F.concat_ws(" ", F.slice("toks", F.col("s"), _SPAN_W)).alias("shingle"),
         )
-        .localCheckpoint(eager=True)
     )
     dup = (
         wins.groupBy("shingle")

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum, sql_dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 # Synchronous label-propagation rounds.  A label spreads ≤ R hops in R
@@ -90,14 +90,15 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized distinct co-purchase edge list (columns u, v), the
-    Spark twin of ``_SQL_COPURCHASE``'s ``edges`` CTE, checkpointed
-    because every consumer reads it several times (per LPA round / per
-    moment-sum side — and the mirror union alone is two reads)."""
+    Spark twin of ``_SQL_COPURCHASE``'s ``edges`` CTE, materialized
+    because every consumer reads it several times (per LPA round, per
+    moment-sum side, per k-core peel round, per BFS hop — and the
+    mirror union alone is two reads)."""
     pairs = copurchase_pairs(spark, sf_dir)
-    return (
+    return materialize(
         pairs.unionByName(
             pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).localCheckpoint(eager=True)
+        )
     )
 
 
@@ -337,9 +338,9 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     an already-materialized checkpoint."""
     prep(spark)
     edges = copurchase_edges(spark, sf_dir)
-    deg = edges.groupBy(F.col("u").alias("node")).agg(
+    deg = materialize(edges.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
-    ).localCheckpoint(eager=True)  # read by both joins + the node count
+    ))  # read by both joins + the node count
     hint = F.broadcast if deg.count() < 5_000_000 else (lambda df: df)
     du = hint(deg.select(F.col("node").alias("u"), F.col("d").alias("dx")))
     dv = hint(deg.select(F.col("node").alias("v"), F.col("d").alias("dy")))
@@ -425,8 +426,8 @@ def copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     edges, labels = _lpa_labels(spark, sf_dir)
     # labels feeds BOTH endpoint joins — constant-size (one row per
-    # node) output of the expensive loop, so checkpoint it once
-    labels = labels.localCheckpoint(eager=True)
+    # node) output of the expensive loop, so materialize it once
+    labels = materialize(labels)
     lu = labels.select(F.col("node").alias("u"), F.col("lab").alias("lab_u"))
     lv = labels.select(F.col("node").alias("v"), F.col("lab").alias("lab_v"))
     percomm = (
@@ -528,9 +529,9 @@ def embedding_cluster_assignments(
     pairs = embedding_neardup_blocked(spark, sf_dir).select(
         F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
     )
-    edges = pairs.unionByName(
+    edges = materialize(pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)  # read once per LPA round
+    ))  # read once per LPA round
     labels = lpa_rounds_over(edges, _EMBC_ROUNDS)
     w_sz = Window.partitionBy("lab")
     return labels.select(
@@ -538,6 +539,34 @@ def embedding_cluster_assignments(
         F.col("lab").alias("cluster"),
         F.count("*").over(w_sz).cast("bigint").alias("cluster_size"),
     ).orderBy("vec_id")
+
+
+def pagerank_over(edges: DataFrame, iters: int, damp: float) -> DataFrame:
+    """``iters`` damped PageRank hops over a directed edge list
+    (columns src, dst; every node has out-degree >= 1, so there is no
+    dangling-mass term) — the Spark twin of the unrolled rank CTEs of
+    `pagerank_event_graph` and `textrank_corpus_keywords`.  Returns
+    (node, d, rank): the final ranks with each node's out-degree.
+
+    Each hop is one edges⋈ranks hash join plus one map-side-combinable
+    `dsum` per dst, so ranks are bit-identical under ANY partitioning
+    or AQE re-plan.  The (edge x src-degree) table is materialized
+    once: every hop joins it, and without the cut each unrolled hop
+    would re-derive the edge list.  The driver-side `.count()` is
+    loop-control only (the graph order n)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    n = deg.count()
+    ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("rank"))
+    ed = materialize(edges.join(deg, "src"))
+    for _ in range(iters):
+        contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
+            F.col("dst"), (F.col("rank") / F.col("d")).alias("contrib")
+        )
+        ranks = contribs.groupBy("dst").agg(dsum(F.col("contrib"), "csum")).select(
+            F.col("dst").alias("node"),
+            (F.lit(0.15 / n) + F.lit(damp) * F.col("csum")).alias("rank"),
+        )
+    return ranks.join(deg, ranks["node"] == deg["src"]).select("node", "d", "rank")
 
 
 # TextRank dials (corpus-level keyword extraction).
@@ -629,14 +658,13 @@ def textrank_corpus_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop-control only (the documented iterative idiom)."""
     prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = (
+    # both sides of the offset self-join read this explode, and they
+    # differ (one side fans out the offsets), so reuse cannot share it
+    toks = materialize(
         docs.select(
             "doc_id",
             F.posexplode(F.split("text", " ")).alias("pos", "tok"),
-        )
-        .filter(F.length("tok") >= _TR_MINLEN)
-        # both sides of the offset self-join read this explode
-        .localCheckpoint(eager=True)
+        ).filter(F.length("tok") >= _TR_MINLEN)
     )
     a = toks.select(
         "doc_id",
@@ -655,46 +683,19 @@ def textrank_corpus_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", "v")
         .distinct()
     )
-    # The tokenize→co-occurrence→distinct pipeline feeds FOUR separate
-    # evaluations (ed build, deg.count(), the rank seed, the final
-    # degree join) — checkpoint the two constant-size frames it
-    # collapses to (edges: vocabulary²-bounded distinct pairs; deg:
-    # vocabulary-sized) so the expensive explode+join runs ONCE
-    # (ADVICE r9; the CLAUDE.md multi-consumer rule).
-    edges = (
+    # The tokenize→co-occurrence→distinct pipeline feeds every hop and
+    # both degree reads — materialize the vocabulary²-bounded distinct
+    # edge set so the explode+join runs ONCE (the vocabulary-sized
+    # degree table is a cheap re-aggregate of it).
+    edges = materialize(
         cooc.unionByName(
             cooc.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
         .distinct()
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .localCheckpoint(eager=True)
     )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
-    )
-    ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    n = deg.count()  # loop-control constant (vocabulary size)
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(1.0 / n).alias("rank")
-    )
-    for _ in range(_TR_ITERS):
-        contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
-            F.col("dst"), (F.col("rank") / F.col("d")).alias("contrib")
-        )
-        ranks = (
-            contribs.groupBy("dst")
-            .agg(dsum(F.col("contrib"), "csum"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(0.15 / n) + F.lit(_TR_DAMP) * F.col("csum")).alias(
-                    "rank"
-                ),
-            )
-        )
     return (
-        ranks.join(deg, ranks["node"] == deg["src"])
+        pagerank_over(edges, _TR_ITERS, _TR_DAMP)
         .select(
             F.col("node").alias("word"),
             F.col("d").cast("bigint").alias("degree"),
@@ -788,10 +789,9 @@ def largestar_smallstar_over(
     measured against materialized input, exactly like the min-label
     loop."""
     # orient big -> small: (a, b), a > b
-    edges = (
+    edges = materialize(
         pairs.select(F.col("v").alias("a"), F.col("u").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def sig(e: DataFrame) -> tuple:
@@ -822,13 +822,12 @@ def largestar_smallstar_over(
         )
         # -- small-star over the large->small oriented output --
         smin = large.groupBy("a").agg(F.min("b").alias("m"))
-        nxt = (
+        nxt = materialize(
             large.join(smin, "a")
             .filter(F.col("b") != F.col("m"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .unionByName(smin.select("a", F.col("m").alias("b")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         new = sig(nxt)
         edges = nxt

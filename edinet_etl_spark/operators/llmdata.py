@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.numeric import sql_dsum, dsum
 from edinet_etl_spark.tables import load, parallel_scan
 
@@ -1206,7 +1206,7 @@ def _bpe_learn_merges(spark: SparkSession, docs: DataFrame) -> list[tuple]:
         ),
         F.lit("·"),
     )
-    vocab0 = words.select("n", sym0.alias("sym")).localCheckpoint(eager=True)
+    vocab0 = materialize(words.select("n", sym0.alias("sym")))
     arr = F.split(F.expr("substring(sym, 2, length(sym) - 2)"), "··")
     vocab = vocab0
     merges: list[tuple] = []  # (a, b, cnt) per round
@@ -1244,7 +1244,7 @@ def _bpe_learn_merges(spark: SparkSession, docs: DataFrame) -> list[tuple]:
             # silently build a '·None··None·' replace literal (old
             # pre-fold behavior raised IndexError here).  Fail loud.
             raise ValueError(
-                f"bpe_train_steps: no symbol pairs left at round {r} "
+                f"_bpe_learn_merges: no symbol pairs left at round {r} "
                 f"(corpus exhausted before _BPE_ROUNDS={_BPE_ROUNDS})"
             )
         merges.append((top["a"], top["b"], top["cnt"]))
@@ -2024,7 +2024,11 @@ def skipgram_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Zipf-bounded like the BPE vocab).  Negatives join the
     top pairs against the broadcast 500-row vocabulary by hashed rank;
     the modulus is the vocabulary's OWN count, so the query is correct
-    even on corpora with fewer distinct tokens."""
+    even on corpora with fewer distinct tokens.
+
+    Precondition: ``documents.doc_id`` is unique — the in-row build
+    pairs tokens within one ROW, the oracle's self-join within one
+    doc_id, and the two agree only when each id names one row."""
     prep(spark)
     # Co-occurrence WITHOUT the corpus self-join: the whole (center,
     # context) pair list of a document is built in-row from the word
@@ -2193,18 +2197,18 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1024),
         ).alias("bucket"),
     )
-    cnts = (
+    cnts = materialize(
         hashed.groupBy("doc_id", "lang", "bucket")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)  # ≤1024 rows/doc; the ONE
-        # materialization of the explode both passes read
+        # ≤1024 rows/doc; the ONE materialization of the explode both
+        # passes read
     )
-    dist = cnts.groupBy("bucket").agg(
+    dist = materialize(cnts.groupBy("bucket").agg(
         F.sum(F.when(F.col("lang") == "en", F.col("c")).otherwise(F.lit(0)))
         .cast("bigint")
         .alias("t_cnt"),
         F.sum("c").cast("bigint").alias("r_cnt"),
-    ).localCheckpoint(eager=True)  # 1024 rows; totals + ratio read this
+    ))  # 1024 rows; totals + ratio read this
     totals = dist.agg(
         F.sum("t_cnt").cast("bigint").alias("n_tgt"),
         F.sum("r_cnt").cast("bigint").alias("n_raw"),

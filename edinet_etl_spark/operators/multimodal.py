@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 FEATURE_DIM = 8
@@ -641,12 +641,11 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary payload column changes the kernel's input line only."""
     prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    sig = docs.mapInPandas(
+    sig = materialize(docs.mapInPandas(
         _ahash_batches,
         schema="doc_id long, b0 long, b1 long, b2 long, b3 long",
-    ).localCheckpoint(eager=True)  # feeds the bucket explode AND both
-    # sides of the verify join (two-consumer rule; also caps the
-    # Python island at one run)
+    ))  # feeds the bucket explode AND both sides of the verify join
+    # (also caps the Python island at one run)
     bands = sig.select(
         "doc_id",
         F.explode(

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 # Ordered most-specific → least-specific: earlier detectors consume
@@ -571,8 +571,8 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cellband is the collapsed audit grid (cells x present bands) and
     # feeds THREE branches (global bands, cell totals, dense join) —
-    # constant-size, so checkpoint per the two-consumer rule
-    cellband = cellband.localCheckpoint(eager=True)
+    # constant-size, so materialize it once
+    cellband = materialize(cellband)
     gband = cellband.groupBy("sens_band").agg(
         F.sum("a").cast("bigint").alias("b")
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.prefix import range_prefix_sums
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 # orders columns profiled: (name, cast-for-display)
@@ -387,7 +387,7 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the wire through the decimal dsum grid — bit-identical on
     any partitioning.  Plan: one word explode per side feeding
     map-side-combined term counts; the full-outer term join is
-    materialized ONCE (`localCheckpoint`) and every vocabulary metric
+    materialized ONCE (`materialize`) and every vocabulary metric
     (sizes, intersection, union, totals) comes out of a single
     combined aggregate over it, so the whole report is the explode
     job + two aggregate jobs + one doc-stats scan — not six
@@ -415,7 +415,7 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("c2"))
     # Materialize the vocabulary-sized join once; both downstream
     # aggregates read this (tiny) checkpoint, never the corpus again.
-    joined = c1.join(c2, "word", "full_outer").localCheckpoint(eager=True)
+    joined = materialize(c1.join(c2, "word", "full_outer"))
 
     g = joined.agg(
         F.count(F.col("c1")).alias("vs1"),

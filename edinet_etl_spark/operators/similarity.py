@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.numeric import _dec_to_double, dec, dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 def dot_exact(a: Column, b: Column) -> Column:
@@ -162,15 +162,14 @@ def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that is a 2B/3 reduction of all array work (6.1s → ~1.9s at
     # sf0.1).  sqrt(norm2_a)*sqrt(norm2_b) is the exact same double
     # expression the oracle evaluates per pair.
-    emb = (
+    emb = materialize(
         parallel_scan(spark, sf_dir, "embeddings")
         .withColumn(
             "norm", F.sqrt(dot_exact(F.col("embedding"), F.col("embedding")))
         )
         .withColumn("salt", ranked_salt(["label"], "vec_id", _BLOCK_CAP))
-        # both self-join sides read this subplan and Spark has no
-        # common-subplan reuse — materialize the scan+norm+window once
-        .localCheckpoint(eager=True)
+        # both self-join sides read this frame; exchange reuse would
+        # share the scan but still run the salt window once per side
     )
     a = emb.alias("a")
     b = emb.alias("b")
@@ -263,10 +262,9 @@ def lsh_bucket_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket via a hash equi-join on the bucket signature — the O(bucket)
     replacement for the O(n) brute-force scan."""
     prep(spark)
-    # both self-join sides read the bucketing subplan (8 hyperplane
-    # dots per vector) and Spark has no common-subplan reuse —
-    # materialize it once, the established pattern for self-joins here
-    buckets = lsh_hyperplane_buckets(spark, sf_dir).localCheckpoint(eager=True)
+    # both join sides read the bucketing (8 hyperplane dots per
+    # vector) and differ (the query side filters), so reuse can't help
+    buckets = materialize(lsh_hyperplane_buckets(spark, sf_dir))
     a = buckets.filter(F.col("vec_id") < 20).alias("a")
     b = buckets.alias("b")
     return a.join(
@@ -481,7 +479,7 @@ def kmeans_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     step `ivf_ann_topk` stubs out with static seeds.  Iterating this
     operator IS Lloyd's algorithm; one step is enough to pin the
     semantics (assignment + exact mean) against the oracle, and the
-    loop idiom (localCheckpoint per round) is proven by
+    loop idiom (`materialize` per round) is proven by
     `neardup_components`.
 
     Plan: assignment = the array-local `_assign_cells` argmin (in-row
@@ -742,7 +740,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-vacuous."""
     prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
-    cells = (
+    cells = materialize(
         _assign_cells(emb)
         .select(
             "vec_id",
@@ -755,11 +753,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cell of C members costs C·cap/2 cosines — linear in C, never
         # C²/2; round-robin keeps every sub-cell ≥ 2 members
         .withColumn("salt", ranked_salt(["sid"], "vec_id", _SEM_CELL_CAP))
-        # materialized once: cells feeds the self-join twice plus the
-        # final membership join, and Spark has no common-subplan reuse —
-        # without this the assignment scan + ranked-salt window would
-        # run three times
-        .localCheckpoint(eager=True)
+        # materialized once: cells feeds the self-join AND the final
+        # membership join, which reads only (sid, vec_id) — consumers
+        # that differ, so reuse cannot share the assignment + window
     )
     a = cells.alias("a")
     b = cells.alias("b")
@@ -1429,13 +1425,13 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     norm = F.sqrt(dot_exact(F.col("embedding"), F.col("embedding")))
-    proj = emb.select(
+    proj = materialize(emb.select(
         "vec_id",
         *[
             (dot_exact(F.col("embedding"), _jl_plane_array(p)) / norm).alias(f"pj{p}")
             for p in range(_JL_DIMS)
         ],
-    ).localCheckpoint(eager=True)
+    ))
     q = proj.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         *[F.col(f"pj{p}").alias(f"qpj{p}") for p in range(_JL_DIMS)],
@@ -1574,9 +1570,9 @@ def matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     adversarial floor, like the JL leg's."""
     prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
-    pre = emb.select(
+    pre = materialize(emb.select(
         "vec_id", "embedding", F.slice(F.col("embedding"), 1, _MRL_DIMS).alias("pre")
-    ).localCheckpoint(eager=True)
+    ))
     q = pre.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -1718,13 +1714,14 @@ def ivf_partitioned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(idx_dir, ignore_errors=True)
     cells.write.partitionBy("sid").parquet(idx_dir)
     # probed cells: the query vectors' own cell ids — |queries| scalars
+    # read back from the index just written, so `cells` (the assignment
+    # crossJoin) runs once, for the write
+    stored = spark.read.parquet(idx_dir)
     probed = sorted(
         r["sid"]
-        for r in cells.filter(F.col("vec_id") < 5).select("sid").distinct().collect()
+        for r in stored.filter(F.col("vec_id") < 5).select("sid").distinct().collect()
     )
-    index = spark.read.parquet(idx_dir).filter(
-        F.col("sid").cast("bigint").isin(probed)
-    )
+    index = stored.filter(F.col("sid").cast("bigint").isin(probed))
     q = (
         index.filter(F.col("vec_id") < 5)
         .select(
@@ -2468,8 +2465,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k with WindowGroupLimit pushdown — identical to
     `cosine_topk_bruteforce`; swap in the IVF probe to cut it to a
     cell).  Everything after operates on the COLLAPSED pool
-    (queries × 8 rows, constant-size, localCheckpointed per CLAUDE
-    rule) — the greedy loop is K bounded rounds of anti-join +
+    (queries × 8 rows, constant-size, materialized once) — the
+    greedy loop is K bounded rounds of anti-join +
     max-aggregate + argmax window over that constant frame, never the
     corpus.  Scores stay hash-exact: cosine = fixed-fold dot /
     (sqrt·sqrt), the MMR combination is two literal products and one
@@ -2485,14 +2482,13 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sqrt(dot_exact(F.col("emb"), F.col("emb")))
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("rel"), "cand_id")
-    pool = (
+    pool = materialize(
         e.crossJoin(F.broadcast(q))
         .filter(F.col("cand_id") != F.col("query_id"))
         .select("query_id", "cand_id", rel.alias("rel"), "emb")
         .withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= _MMR_POOL)
         .drop("rn")
-        .localCheckpoint(eager=True)
     )
     pa = pool.select("query_id", F.col("cand_id").alias("cand_a"), F.col("emb").alias("emb_a"))
     pb = pool.select("query_id", F.col("cand_id").alias("cand_b"), F.col("emb").alias("emb_b"))
@@ -2500,14 +2496,13 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(dot_exact(F.col("emb_a"), F.col("emb_a")))
         * F.sqrt(dot_exact(F.col("emb_b"), F.col("emb_b")))
     )
-    sims = (
+    sims = materialize(
         pa.join(pb, "query_id")
         .filter(F.col("cand_a") != F.col("cand_b"))
         .select("query_id", "cand_a", "cand_b", sim.alias("sim"))
-        .localCheckpoint(eager=True)
     )
     w1 = Window.partitionBy("query_id").orderBy(F.desc("rel"), "cand_id")
-    selected = (
+    selected = materialize(
         pool.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select(
@@ -2516,7 +2511,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rel").alias("score"),
             F.lit(1).cast("int").alias("round"),
         )
-        .localCheckpoint(eager=True)
     )
     ws = Window.partitionBy("query_id").orderBy(F.desc("score"), "cand_id")
     for r in range(2, _MMR_K + 1):
@@ -2546,7 +2540,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(r).cast("int").alias("round"),
             )
         )
-        selected = selected.union(pick).localCheckpoint(eager=True)
+        selected = materialize(selected.union(pick))
     return selected.select(
         "query_id", "round", "cand_id", F.col("score").alias("mmr_score")
     )
@@ -2640,10 +2634,9 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .select(F.col("embedding").alias("c_emb"))
     )
-    cur = (
+    cur = materialize(
         emb.crossJoin(F.broadcast(seedf))
         .select("vec_id", "embedding", sqdist(F.col("c_emb")).alias("mind"))
-        .localCheckpoint(eager=True)
     )
     out = []
     for r in range(1, _KCENTER_K):
@@ -2656,7 +2649,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("mind").alias("c_mind"),
             )
         )
-        nxt = (
+        nxt = materialize(
             cur.crossJoin(F.broadcast(best))
             .select(
                 "vec_id",
@@ -2665,7 +2658,6 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_id",
                 "c_mind",
             )
-            .localCheckpoint(eager=True)
         )
         pick = nxt.select("c_id", "c_mind").first()
         out.append((r, pick.c_id, pick.c_mind))

@@ -32,8 +32,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum
+from edinet_etl_spark.operators.graph import copurchase_edges, pagerank_over
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 # Count-min sketch geometry: d independent hash rows × w buckets.
@@ -391,23 +392,7 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("u").alias("src"), F.col("t").alias("dst")).unionAll(
         pairs.select(F.col("t").alias("src"), F.col("u").alias("dst"))
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    n = deg.count()  # loop-control constant (graph order)
-    ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("rank"))
-    # Materialize the (edge × src-degree) table once: every iteration
-    # joins against it, and without a cut each unrolled hop would
-    # re-scan events and re-run the distinct (the iterative-loop idiom,
-    # cf. similarity.kmeans_train_step / dedup.neardup_components).
-    ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    for _ in range(_PR_ITERS):
-        contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
-            F.col("dst"), (F.col("rank") / F.col("d")).alias("contrib")
-        )
-        ranks = contribs.groupBy("dst").agg(dsum(F.col("contrib"), "csum")).select(
-            F.col("dst").alias("node"),
-            (F.lit(0.15 / n) + F.lit(_PR_DAMP) * F.col("csum")).alias("rank"),
-        )
-    return ranks.join(deg, ranks["node"] == deg["src"]).select(
+    return pagerank_over(edges, _PR_ITERS, _PR_DAMP).select(
         "node", F.col("d").alias("degree"), "rank"
     )
 
@@ -491,12 +476,9 @@ def triangle_card(pairs: DataFrame) -> DataFrame:
     undirected edge set (columns u < v) — the reusable core of
     `triangle_count_copurchase`, also pinned against a brute-force
     model in tests/test_properties.py."""
-    pairs = (
-        pairs
-        # pairs feeds degrees, orientation and the edge iteration —
-        # materialize the distinct edge set once
-        .localCheckpoint(eager=True)
-    )
+    # pairs feeds degrees, orientation and the edge iteration —
+    # materialize the distinct edge set once
+    pairs = materialize(pairs)
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
@@ -508,15 +490,14 @@ def triangle_card(pairs: DataFrame) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = materialize(
         pairs.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .localCheckpoint(eager=True)  # read by adj build + edge iteration
-    )
+    )  # read by adj build + edge iteration
     adj = oriented.groupBy(F.col("src").alias("node")).agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
@@ -1046,24 +1027,10 @@ def kcore_copurchase_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     from functools import reduce
 
-    li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
+    sym = copurchase_edges(spark, sf_dir).select(
+        F.col("u").alias("a"), F.col("v").alias("b")
     )
-    sym = (
-        edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    alive = sym.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=True)
+    alive = materialize(sym.select(F.col("a").alias("node")).distinct())
 
     def round_count(r: int, df: DataFrame) -> DataFrame:
         return df.agg(F.count("*").cast("bigint").alias("n_alive")).select(
@@ -1074,14 +1041,13 @@ def kcore_copurchase_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(1, _KCORE_ROUNDS + 1):
         x = alive.select(F.col("node").alias("xa"))
         y = alive.select(F.col("node").alias("yb"))
-        alive = (
+        alive = materialize(
             sym.join(x, F.col("a") == F.col("xa"))
             .join(y, F.col("b") == F.col("yb"))
             .groupBy(F.col("a").alias("node"))
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select("node")
-            .localCheckpoint(eager=True)
         )
         counts.append(round_count(r, alive))
     res = reduce(DataFrame.unionByName, counts)
@@ -1425,35 +1391,20 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls; an until-empty loop is the same code with the
     scalar-aggregate stop test."""
     prep(spark)
-    li = parallel_scan(spark, sf_dir, "lineitem")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
+    sym = copurchase_edges(spark, sf_dir).select(
+        F.col("u").alias("ga"), F.col("v").alias("gb")
     )
-    sym = (
-        edges.select(F.col("u").alias("ga"), F.col("v").alias("gb"))
-        .unionByName(edges.select(F.col("v").alias("ga"), F.col("u").alias("gb")))
-        .localCheckpoint(eager=True)
-    )
-    src = sym.agg(F.min("ga").alias("node"))
-    frontier = src.localCheckpoint(eager=True)
+    frontier = sym.agg(F.min("ga").alias("node"))
     reached = frontier
     rows = [(0, 1, 1)]
     for h in range(1, _BFS_HOPS + 1):
-        nxt = (
+        nxt = materialize(
             sym.join(frontier, sym.ga == frontier.node)
             .select(F.col("gb").alias("node"))
             .distinct()
             .join(reached, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        reached = reached.unionByName(nxt).localCheckpoint(eager=True)
+        reached = materialize(reached.unionByName(nxt))
         rows.append((h, nxt.count(), reached.count()))
         frontier = nxt
     return spark.createDataFrame(rows, "hop bigint, n_new bigint, n_reached bigint")
@@ -1532,7 +1483,7 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    pairs = (
+    pairs = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1543,7 +1494,6 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("support") >= _RA_MIN_SUPPORT)
         .select("u", "v")
         # feeds degrees, wedge enumeration and the anti-join
-        .localCheckpoint(eager=True)
     )
     deg = (
         pairs.select(F.col("u").alias("node"))

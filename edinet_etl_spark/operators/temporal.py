@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import _dec_to_double, dec
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 
@@ -1518,14 +1518,12 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table is scanned once; everything after is grid-sized."""
     prep(spark)
     ev = load(spark, sf_dir, "events")
-    grid = (
+    grid = materialize(
         ev.groupBy(
             F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
             .cast("bigint")
             .alias("h")
-        )
-        .agg(F.sum(dec(F.col("value"))).alias("v"))
-        .localCheckpoint(eager=True)
+        ).agg(F.sum(dec(F.col("value"))).alias("v"))
     )
     arms = []
     for lag_h, label in _SNB_SEASONS:

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load
 
 
@@ -371,9 +371,7 @@ def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the segment arrays ONCE: three branches consume them
     # (boiler df, dropped-index list, array-local rebuild); after the
     # eager checkpoint all three read a bound column
-    segd = dw.select("doc_id", segs.alias("segs")).localCheckpoint(
-        eager=True
-    )
+    segd = materialize(dw.select("doc_id", segs.alias("segs")))
     seg = segd.select(
         "doc_id", F.posexplode("segs").alias("seg_idx", "segment")
     )
@@ -1310,10 +1308,9 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rule; ~2x wall measured).  The frame is the ~2/(w+1)-thinned
     # fingerprint set collapsed to (doc, hash) — the same bounded
     # intermediate the iterative dedup ops checkpoint.
-    g = (
+    g = materialize(
         fps.groupBy("doc_id", "fph")
         .agg(F.count("*").alias("n_sel"))
-        .localCheckpoint(eager=True)
     )
     shared = (
         g.groupBy("fph")

@@ -35,7 +35,7 @@ _SCRUB: list[tuple[re.Pattern[str], str]] = [
     (re.compile(r"\[plan_id=\d+\]"), ""),
     (re.compile(r"\[id=#?N?\d*\]"), ""),
     (re.compile(r"(Subquery|ReusedExchange|ReusedSubquery)\s+subquery#?N?\d*"), r"\1 subquery"),
-    # localCheckpoint / parallelize RDD scans carry per-run ids
+    # checkpoint / parallelize RDD scans carry per-run ids
     (re.compile(r"Scan ExistingRDD\[[^\]]*\]"), "Scan ExistingRDD[...]"),
     (re.compile(r"MapPartitionsRDD\[\d+\]"), "MapPartitionsRDD[N]"),
     (re.compile(r"ParallelCollectionRDD\[\d+\]"), "ParallelCollectionRDD[N]"),

@@ -49,6 +49,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from edinet_etl_spark.session import materialize
+
+# Grids at or under this many rows take the serial cumulative window;
+# larger ones the two-level range scan (measured crossover: spearman's
+# ~550k-row sf0.1 price grid was 0.5 s SLOWER serial, decile's 60k
+# grid 0.2 s faster).
+SERIAL_GRID_MAX = 131_072
+
 OrderKey = "Column | str"
 
 
@@ -72,14 +80,11 @@ def range_prefix_sums(
     keys = _cols(order_by)
     spark = df.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    serial_max = int(
-        spark.conf.get("spark.edinet.prefix.serialGridMax", "131072")
-    )
     for out, val in values.items():
         df = df.withColumn(f"_rp_{out}", val)
     # Materialize the collapsed grid ONCE, then pick the spelling by
-    # its MEASURED size (the count reads local blocks) — the same
-    # gate-on-measured-rows pattern as the assortativity broadcast:
+    # its MEASURED size (the count reads the materialized blocks) — the
+    # same gate-on-measured-rows pattern as the assortativity broadcast:
     #  * small grid → the plain serial cumulative window over the
     #    checkpointed blocks.  The round-10 bench caught the flat
     #    machinery cost of always range-partitioning
@@ -87,12 +92,9 @@ def range_prefix_sums(
     #    an extra eager-checkpoint job, a sampling pass, a broadcast
     #    and a second window — all to parallelize a frame one task
     #    scans in milliseconds.
-    #  * past `spark.edinet.prefix.serialGridMax` rows (conf; default
-    #    128k — measured crossover: spearman's ~550k-row sf0.1 price
-    #    grid was 0.5 s SLOWER serial, decile's 60k grid 0.2 s
-    #    faster) →
-    #    the two-level range scan below, whose relative overhead
-    #    vanishes exactly where the serial window cliffs.  Both
+    #  * past `SERIAL_GRID_MAX` rows → the two-level range scan
+    #    below, whose relative overhead vanishes exactly where the
+    #    serial window cliffs.  Both
     #    spellings are the same exact integer algebra; the oracle
     #    differential runs green through either branch.
     # The checkpoint ALSO fixes a cost bug in the big branch:
@@ -100,8 +102,8 @@ def range_prefix_sums(
     # before the shuffle executes it again, so the fact-table collapse
     # every caller feeds used to aggregate TWICE; sampling now reads
     # blocks.
-    df = df.localCheckpoint(eager=True)
-    if df.count() <= serial_max:
+    df = materialize(df)
+    if df.count() <= SERIAL_GRID_MAX:
         w_ser = Window.orderBy(*keys).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -110,10 +112,9 @@ def range_prefix_sums(
         return df.drop(*[f"_rp_{out}" for out in values])
     # eager: ONE materialized bucket assignment for both consumers
     # (see module docstring — boundary sampling is per-execution)
-    base = (
+    base = materialize(
         df.repartitionByRange(p, *keys)
         .withColumn("_rp_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     w_off = Window.orderBy("_rp_pid").rowsBetween(
         Window.unboundedPreceding, -1

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -51,3 +51,19 @@ def prep(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and cut its lineage — the engine's one eager
+    checkpoint.  A call site earns it only as a per-round loop cut, a
+    nondeterminism pin, a measured-size gate, a stream-static side, or
+    a costly frame whose consumers differ (SCALE.md's checkpoint site
+    table).
+
+    Where the blocks land is a setting Spark already owns: with a
+    SparkContext checkpoint dir (``setCheckpointDir``, reliable
+    storage) they survive the loss of an executor; without one they
+    are executor-local."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

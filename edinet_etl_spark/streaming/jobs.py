@@ -36,7 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from edinet_etl_spark.numeric import dsum, sql_dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
+from edinet_etl_spark.session import materialize, prep
 
 def _raw_schema(ts_is_nanos: bool) -> T.StructType:
     """Stream-source schema matching the feed's physical encoding: a
@@ -747,10 +747,9 @@ def make_partitioned_additive_upsert(
         # eager checkpoint: `updates` feeds the touched-bucket probe
         # AND the merge — one computation, and the probe collect is a
         # ≤B-int scalar aggregate (sanctioned loop-control idiom)
-        updates = (
+        updates = materialize(
             build_updates(batch_df)
             .withColumn("bucket", bucket)
-            .localCheckpoint(eager=True)
         )
         touched = sorted(
             r["bucket"] for r in updates.select("bucket").distinct().collect()
@@ -1681,7 +1680,7 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sink: foreachBatch additive snapshot keyed by the enriched
     attribute, counts + decimal-STRING totals (the CDC exactly-once +
     bit-exactness discipline).  Scale (both probe-measured at 10×):
-    the interval table is MATERIALIZED ONCE (`localCheckpoint`)
+    the interval table is MATERIALIZED ONCE (`materialize`)
     before the stream starts — a stream-static join re-evaluates its
     static side every micro-batch, and with maxFilesPerTrigger=1 the
     double window over orders would otherwise re-run per input file
@@ -1698,7 +1697,7 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     and bucketed on user_id so each micro-batch joins co-located."""
     prep(spark)
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_asof_enrich")
-    iv = order_priority_intervals(spark, sf_dir).localCheckpoint(eager=True)
+    iv = materialize(order_priority_intervals(spark, sf_dir))
     # ~40 B/row keeps this comfortably under a 32 MB broadcast build
     iv_small = iv.count() <= 800_000
     ev = read_events_stream(spark, sf_dir)
@@ -1870,7 +1869,7 @@ def make_neardup_upsert(snapshot_dir: str):
         # bucket rank of each new row = accumulated occupancy + rank
         # within the batch (id-ordered feed ⇒ this IS the doc_id rank
         # over the full bucket).  Checkpointed: three consumers below.
-        new_ranked = (
+        new_ranked = materialize(
             lsh_bands(minhash_signatures(batch_df))
             .withColumn("rnk_in", F.row_number().over(w_b))
             .join(occ, ["band_id", "band_hash"], "left")
@@ -1882,7 +1881,6 @@ def make_neardup_upsert(snapshot_dir: str):
                 .cast("bigint")
                 .alias("rnk"),
             )
-            .localCheckpoint(eager=True)
         )
         a_side = (
             base_sigs.select("doc_id", "band_id", "band_hash", "rnk")

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import pytest
 
-from edinet_etl_spark import registry
+from edinet_etl_spark import prefix, registry
 from tests.conftest import SF_DIR
 
 pytestmark = pytest.mark.deep  # inner loop: -m "not deep" (see pytest.ini)
@@ -105,14 +105,10 @@ def test_unpartitioned_windows_are_grid_bounded(spark):
             elif any(n.startswith("_rp_") for n in names):
                 # prefix-helper SERIAL branch (round-10 size gate):
                 # taken only when the helper MEASURED the checkpointed
-                # grid at <= spark.edinet.prefix.serialGridMax rows,
-                # so the frame is runtime-bounded by that dial — the
+                # grid at <= prefix.SERIAL_GRID_MAX rows, so the
+                # frame is runtime-bounded by that constant — the
                 # gate, not this lint, is what enforces it at scale
-                bound = int(
-                    spark.conf.get(
-                        "spark.edinet.prefix.serialGridMax", "131072"
-                    )
-                )
+                bound = prefix.SERIAL_GRID_MAX
             else:
                 bound = _BOUNDS.get(name, _DEFAULT_BOUND)
             h = child.semanticHash()
