@@ -9,8 +9,14 @@ OUTPUT CONTRACT (round-3 postmortem): the driver captures only the last
 Compact separators, 3-decimal timings, and a headline set capped so the
 line stays < MAX_LINE_BYTES (asserted here and in
 tests/test_bench_contract.py).  Everything bulky — per-query plan
-hashes, run-by-run timings — goes to the PLANHASHES.json side file
-instead of stdout.
+hashes, run-by-run timings, each query's Spark statistics (SQL
+executions, shuffle and spill MB, task skew) — goes to the
+PLANHASHES.json side file instead of stdout.
+
+This is the repo's one measurement loop: ``warm`` pays first-call
+costs, ``time_query`` times one query (state dropped and a job group
+set per rep), ``run`` does both for a query list.  The tools under
+``tools/`` that time registered queries call these.
 
 Each query is forced end-to-end with the noop sink (full computation of
 every operator, no driver-side collect, no output I/O skew).  The
@@ -21,23 +27,27 @@ curation, sketches, CDC.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
 import sys
 import time
 
+from pyspark.sql import functions as F
+
 from edinet_etl_spark import registry
 from edinet_etl_spark.planhash import plan_hash
 from edinet_etl_spark.session import get_spark
+from edinet_etl_spark.tables import load
+from perfbench.trace import GroupStats, StageMetrics
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SIDE_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "PLANHASHES.json")
-# Explicit warm-up dir override (tools/bench_sf1.py sets this: its
-# /tmp replica path contains no "sf0.1" so the derived replace()
-# below would no-op and every query would "warm" at full sf1).
-WARM_DIR: str | None = None
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
 MAX_LINE_BYTES = 1900  # driver tail window is 2000 chars; keep margin
 
 # The full round-1/round-2 sets (cross-round per-query continuity),
@@ -166,23 +176,13 @@ def _drop_accumulated_state(spark) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
-def main() -> None:
-    registry.load_all()
-    # measurement JVM gets headroom so GC never dominates timing; the
-    # driver's own sessions are untouched (env override still wins)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark("edinet-etl-spark-bench", cpus=CPUS)
-    sf_match = re.search(r"sf([\d.]+)", SF_DIR)
-    sf = float(sf_match.group(1)) if sf_match else -1.0
-
-    # Warm-up: run every headline query once at the smallest SF so the
-    # JVM JITs each plan's generated code off the clock.  Plan shapes
-    # are identical across SFs, so this measures steady-state execution
+def warm(spark, names, sf_dir: str, warm_dir: str) -> None:
+    """Pay first-call costs off the clock before ``time_query``."""
+    # Warm-up: run every query once at the smallest SF so the JVM JITs
+    # each plan's generated code off the clock.  Plan shapes are
+    # identical across SFs, so this measures steady-state execution
     # (what a long-lived cluster sees), not first-call codegen+JIT.
-    warm_dir = WARM_DIR or (
-        SF_DIR.replace("sf0.1", "sf0.001") if "sf0.1" in SF_DIR else SF_DIR
-    )
-    for name in HEADLINE:
+    for name in names:
         registry.QUERIES[name](spark, warm_dir).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -196,57 +196,96 @@ def main() -> None:
     # the 25% agreement gate stopped before the cold phase ended.  One
     # full-scan + tiny-shuffle pass over every table at the TARGET SF
     # pays those costs off the clock (~3 s at sf0.1).
-    from pyspark.sql import functions as _F
-
-    from edinet_etl_spark.tables import load as _load
-
-    for _t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        _load(spark, SF_DIR, _t).groupBy(_F.spark_partition_id()).count().write.format(
+    for t in TABLES:
+        load(spark, sf_dir, t).groupBy(F.spark_partition_id()).count().write.format(
             "noop"
         ).mode("overwrite").save()
 
-    # best-of-N at the target SF: one timed run still carries GC /
-    # first-shuffle-fetch noise; the min of the reps is the steady-state
-    # figure a resident engine delivers.  Two reps normally; when they
-    # disagree by >25% the number is noise-dominated, so take up to two
-    # more — stabilizes the recorded figure without 2× cost on the
-    # well-behaved majority.
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    plan_hashes: dict[str, str] = {}
-    for name in HEADLINE:
-        _drop_accumulated_state(spark)
-        runs: list[float] = []
+
+def time_query(
+    spark, name: str, sf_dir: str, reps: int | None = None
+) -> tuple[list[float], str, GroupStats]:
+    """Time ``name`` at ``sf_dir``: every rep's wall time, the plan hash
+    and the Spark statistics of the fastest rep.
+
+    With ``reps`` None, best-of-N: one timed run still carries GC /
+    first-shuffle-fetch noise; the min of the reps is the steady-state
+    figure a resident engine delivers.  Two reps normally; when they
+    disagree by >25% the number is noise-dominated, so take up to two
+    more — stabilizes the recorded figure without 2× cost on the
+    well-behaved majority.  Otherwise exactly ``reps`` reps.
+
+    Each rep runs against freshly dropped state under its own job
+    group; its statistics are read after its timer stops."""
+    metrics = StageMetrics(spark)
+    runs: list[float] = []
+    try:
         while True:
+            _drop_accumulated_state(spark)
+            metrics.drain()
+            mark = metrics.sql_exec_count()
+            # the mark keeps the group unique when a query is timed again
+            group = f"{name}@{mark}"
+            metrics.set_group(group)
             # construction inside the timer: iterative operators
             # (eager checkpoints) do real work before the sink runs
             t0 = time.perf_counter()
-            df = registry.QUERIES[name](spark, SF_DIR)
+            df = registry.QUERIES[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-            if len(runs) >= 2 and (
+            if runs[-1] == min(runs):
+                best = metrics.group_stats(group, mark)
+                best.wall_s = runs[-1]
+            if reps is not None:
+                if len(runs) >= reps:
+                    break
+            elif len(runs) >= 2 and (
                 len(runs) >= 4 or max(runs[-2:]) <= 1.25 * min(runs[-2:])
             ):
                 break
-        timings[name] = round(min(runs), 3)
-        all_runs[name] = [round(r, 3) for r in runs]
-        # plan hash from the df just timed (driver-side only, ~ms):
-        # equal across rounds ⇒ a timing delta is environment drift;
-        # unequal ⇒ the plan changed and the delta is attributable.
-        plan_hashes[name] = plan_hash(df)
+    finally:
+        metrics.clear_group()
+    # plan hash from the df just timed (driver-side only, ~ms):
+    # equal across rounds ⇒ a timing delta is environment drift;
+    # unequal ⇒ the plan changed and the delta is attributable.
+    return runs, plan_hash(df), best
 
-    total = round(sum(timings.values()), 3)
+
+def run(spark, names, sf_dir: str, warm_dir: str) -> dict:
+    """Warm, then time every query in ``names``: the stdout line's
+    ``queries`` and ``value`` plus the side file's per-query data."""
+    warm(spark, names, sf_dir, warm_dir)
+    out: dict = {"queries": {}, "runs": {}, "plan_hashes": {}, "stages": {}}
+    for name in names:
+        runs, out["plan_hashes"][name], stats = time_query(spark, name, sf_dir)
+        out["queries"][name] = round(min(runs), 3)
+        out["runs"][name] = [round(r, 3) for r in runs]
+        out["stages"][name] = {
+            **{k: round(v, 3) for k, v in dataclasses.asdict(stats).items()},
+            "task_skew": round(stats.task_skew, 3),
+        }
+    out["value"] = round(sum(out["queries"].values()), 3)
+    return out
+
+
+def main() -> None:
+    registry.load_all()
+    # measurement JVM gets headroom so GC never dominates timing; the
+    # driver's own sessions are untouched (env override still wins)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    spark = get_spark("edinet-etl-spark-bench", cpus=CPUS)
+    sf_match = re.search(r"sf([\d.]+)", SF_DIR)
+    sf = float(sf_match.group(1)) if sf_match else -1.0
+    warm_dir = SF_DIR.replace("sf0.1", "sf0.001") if "sf0.1" in SF_DIR else SF_DIR
+    result = run(spark, HEADLINE, SF_DIR, warm_dir)
     with open(SIDE_FILE, "w") as fh:
         json.dump(
-            {"sf": sf, "plan_hashes": plan_hashes, "runs": all_runs},
+            {"sf": sf, **{k: result[k] for k in ("plan_hashes", "runs", "stages")}},
             fh,
             indent=1,
             sort_keys=True,
         )
-    payload = line_bytes(timings, total, sf)
+    payload = line_bytes(result["queries"], result["value"], sf)
     assert len(payload) <= MAX_LINE_BYTES, (
         f"bench stdout line is {len(payload)}B > {MAX_LINE_BYTES}B: "
         "trim HEADLINE or move data to the side file"

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import random
 import time
+import urllib.error
 from collections.abc import Iterator
 from dataclasses import dataclass
 from datetime import date, timedelta
@@ -134,17 +135,27 @@ class _PartitionLimiter:
         self._last = time.monotonic()
 
 
+def _is_client_error(e: OSError) -> bool:
+    """An HTTP 4xx other than 429 (Too Many Requests)."""
+    return (
+        isinstance(e, urllib.error.HTTPError) and 400 <= e.code < 500 and e.code != 429
+    )
+
+
 def _with_retries(fn, policy: RetryPolicy, limiter: _PartitionLimiter):
     """Reference retry loop (src/extract.py:122-141): exponential
     backoff × jitter; final failure returns None (missing rows, not
     job failure).  Only ``OSError`` — HTTPError, URLError, timeouts —
-    is retried and swallowed; any other exception is a bug and fails
-    the job."""
+    is swallowed; any other exception is a bug and fails the job.  A
+    4xx other than 429 will not change on retry, so it returns None on
+    the first attempt; 429, 5xx and other ``OSError``s are retried."""
     for attempt in range(policy.max_retries + 1):
         try:
             limiter.wait()
             return fn()
-        except OSError:
+        except OSError as e:
+            if _is_client_error(e):
+                return None
             if attempt < policy.max_retries:
                 wait = policy.retry_delay * (2**attempt)
                 time.sleep(wait * (policy.jitter_base + random.random()))

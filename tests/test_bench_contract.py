@@ -6,12 +6,22 @@ line grew past it and the round recorded no performance figure
 bench.py would print with worst-case-width timings and asserts it fits
 with margin, so adding a headline query that would blow the window
 fails CI instead of the round.
+
+It also pins bench.py as the repo's one measurement loop: what
+``bench.time_query`` returns and leaves behind, and that no tool keeps
+its own noop-sink timing loop or session builder.
 """
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import bench
 from edinet_etl_spark import registry
+from edinet_etl_spark.planhash import plan_hash
+
+REPO = Path(bench.__file__).parent
 
 
 def test_bench_line_fits_driver_tail_window():
@@ -54,3 +64,52 @@ def test_registry_priority_rotation_is_well_formed():
     missing = [n for n in prio if n not in registry.QUERIES]
     assert not missing, f"_PRIORITY references unknown queries: {missing}"
     assert len(prio) >= 50, "driver window (50) no longer fully pinned"
+
+
+def test_time_query_contract(spark):
+    """The one measurement loop: bench's adaptive 2-4 reps, the plan hash
+    of the query it timed, Spark statistics read from the rep's job
+    group, and no job group left set on the caller's thread."""
+    registry.load_all()
+    sf = "/root/testdata/sf0.001"
+    runs, digest, stats = bench.time_query(spark, "pricing_summary", sf)
+    assert 2 <= len(runs) <= 4 and all(r > 0 for r in runs)
+    assert digest == plan_hash(registry.QUERIES["pricing_summary"](spark, sf))
+    assert stats.sql_execs >= 1
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def _measurement_sites(path: Path):
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "noop"
+        ):
+            yield "noop", node.lineno
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "builder"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "SparkSession"
+        ):
+            yield "builder", node.lineno
+
+
+def test_one_measurement_loop():
+    """Only bench.py runs queries into the noop sink (warms and times
+    them); only the driver-contract check builds its own SparkSession,
+    since its hostile session is the point.  Every other tool goes
+    through ``bench`` and ``session.get_spark``."""
+    allowed = {"noop": "bench.py", "builder": "tools/verify_driver_contract.py"}
+    offenders = [
+        f"{rel}:{line} {kind}"
+        for path in [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]
+        for rel in [str(path.relative_to(REPO))]
+        for kind, line in _measurement_sites(path)
+        if rel != allowed[kind]
+    ]
+    assert offenders == []

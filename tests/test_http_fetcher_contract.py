@@ -5,8 +5,9 @@ Reference behavior pinned (``/root/reference/src/extract.py``):
   ``date=YYYY-MM-DD``, ``type=2``, ``Subscription-Key`` (``:81-87``);
 - document endpoint GET ``{base_url}/documents/{docID}`` with params
   ``type`` (5=CSV / 1=XBRL per flag dispatch) + key (``:165-190``);
-- HTTP 4xx/5xx raise (``raise_for_status``) → classified as a
-  retryable failure by the caller's retry loop (``:121-141``).
+- HTTP errors raise (``raise_for_status``); the caller's retry loop
+  (``:121-141``) retries 429 and 5xx, and swallows any other 4xx on
+  its first attempt, since a client error does not change on retry.
 
 Previously these were proven only through fake ``Fetcher`` subclasses;
 this pins the real client's URL construction and error classification
@@ -106,6 +107,22 @@ def test_http_error_is_retried_then_swallowed(monkeypatch):
     )
     assert out is None
     assert len(rec.urls) == policy.max_retries + 1
+
+
+def test_client_error_is_not_retried(monkeypatch):
+    """404 → HTTPError with a 4xx code other than 429: one request, no
+    backoff, then None (missing rows, not job failure)."""
+    rec = _Recorder(status=404)
+    monkeypatch.setattr(urllib.request, "urlopen", rec)
+    monkeypatch.setattr("time.sleep", lambda s: pytest.fail("client error backed off"))
+    f = HttpFetcher("https://api.example.test", api_key="K")
+    out = _with_retries(
+        lambda: f.fetch_list("2024-01-01"),
+        RetryPolicy(max_retries=3, retry_delay=0.0),
+        _PartitionLimiter(0),
+    )
+    assert out is None
+    assert len(rec.urls) == 1
 
 
 def test_transient_error_recovers(monkeypatch):

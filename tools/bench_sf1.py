@@ -1,7 +1,7 @@
 """Per-round sf1 bench continuity artifact (VERDICT r8 task 4).
 
-Runs the EXACT bench.py harness (same HEADLINE set, same warm-up /
-best-of-N / state-drop discipline) against the 10× replica that
+Runs the EXACT bench.py harness (``bench.run``: same HEADLINE set, same
+warm-up / best-of-N / state-drop discipline) against the 10× replica that
 tools/scale_probe.py builds, and writes `BENCH_SF1_r{N}.json` at the
 repo root: totals + per-query timings + the sf0.1-vs-sf1 ratio.  The
 sf0.1 bench hides superlinear cliffs (the round-7 winnowing O(n²) trap
@@ -9,30 +9,17 @@ was only visible at 10×); committing this per round makes the 10×
 continuity diffable instead of prose in SCALE.md.
 
 Run: PYTHONPATH=. python tools/bench_sf1.py <round-number>
-The plan-hash side data goes to /tmp/planhashes_sf1.json so the
-committed PLANHASHES.json stays the sf0.1 close-out artifact.
+No side file is written, so the committed PLANHASHES.json stays the
+sf0.1 close-out artifact.
 """
 
 from __future__ import annotations
 
-import io
+import glob
 import json
 import os
+import re
 import sys
-
-
-class _CaptureStdout:
-    """Minimal stdout stand-in exposing the ``.buffer`` bench.main
-    writes its payload line to (StringIO lacks it)."""
-
-    def __init__(self) -> None:
-        self.buffer = io.BytesIO()
-
-    def write(self, s: str) -> int:  # progress noise, discarded
-        return len(s)
-
-    def flush(self) -> None:
-        pass
 
 
 def main() -> None:
@@ -40,49 +27,25 @@ def main() -> None:
     # 32 sf1 task working sets do not fit the 24g bench default
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+    from edinet_etl_spark import registry
+    from edinet_etl_spark.session import get_spark
     from tools.scale_probe import DST, REPLICAS, build_sf1
 
     assert REPLICAS == 10, "bench_sf1 is the 10x rung; unset SPARK_GRAFT_PROBE_REPLICAS"
     build_sf1()
 
-    import bench
-
-    bench.SF_DIR = DST
-    # the replica path has no "sf0.1" substring, so without this the
-    # derived warm dir would no-op onto DST itself (full-sf1 "warm-up")
-    bench.WARM_DIR = "/root/testdata/sf0.001"
-    bench.SIDE_FILE = "/tmp/planhashes_sf1.json"
-    cap = _CaptureStdout()
-    real, sys.stdout = sys.stdout, cap
-    try:
-        bench.main()
-    finally:
-        sys.stdout = real
-    line = [
-        ln
-        for ln in cap.buffer.getvalue().decode().splitlines()
-        if ln.startswith("{")
-    ][-1]
-    payload = json.loads(line)
-    payload["sf"] = 1.0
+    registry.load_all()
+    spark = get_spark("edinet-etl-spark-bench-sf1", cpus=bench.CPUS)
+    result = bench.run(spark, bench.HEADLINE, DST, "/root/testdata/sf0.001")
+    spark.stop()
+    payload = json.loads(bench.line_bytes(result["queries"], result["value"], 1.0))
     # ratio vs the NEWEST committed sf0.1 round artifact (this round's
     # own BENCH_r{N}.json is written by the driver after close-out, so
     # mid-round this picks the previous round's official run)
-    import glob
-
     sf01_candidates = sorted(glob.glob("BENCH_r[0-9][0-9].json"))
-    out = {
-        "round": rnd,
-        "replica_dir": DST,
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "sf": 1.0,
-        "queries": payload["queries"],
-    }
+    out = {"round": rnd, "replica_dir": DST, **payload}
     if sf01_candidates:
-        import re
-
         out["sf01_source"] = sf01_candidates[-1]
         tail = json.load(open(sf01_candidates[-1])).get("tail", "")
         m = re.search(r'\{"metric".*\}', tail)

@@ -1,6 +1,6 @@
-"""Round-10 optimization probe: time queries in a FRESH process with
-the bench's own methodology (sf0.001 warm, noop sink, best-of-N) and
-dump `explain("formatted")` for the plan evidence in plans/r10/.
+"""Optimization probe: time queries in a FRESH process through the
+bench's own loop (``bench.warm`` + ``bench.time_query``) and dump
+`explain("formatted")` for the plan evidence in plans/r10/.
 
 Run: PYTHONPATH=/root/repo python tools/opt_probe.py [--reps N]
      [--explain-dir plans/r10 --suffix before] query [query ...]
@@ -14,8 +14,8 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
+import bench
 from edinet_etl_spark import registry
 from edinet_etl_spark.session import get_spark
 
@@ -35,30 +35,12 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     spark = get_spark("opt-probe")
 
+    bench.warm(spark, args.queries, SF_DIR, WARM_DIR)
     for name in args.queries:
-        fn = registry.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"warm:{name}")
-        fn(spark, WARM_DIR).write.format("noop").mode("overwrite").save()
-
-    results = {}
-    for name in args.queries:
-        fn = registry.QUERIES[name]
-        runs = []
-        for i in range(args.reps):
-            # same state drop the bench applies per query, here per rep:
-            # iterative ops leave localCheckpoint blocks behind that only
-            # a GC-triggered ContextCleaner pass releases
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            spark.sparkContext.setJobDescription(f"time:{name}:{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        results[name] = runs
+        runs, _, _ = bench.time_query(spark, name, SF_DIR, reps=args.reps)
         if args.explain_dir and args.suffix:
             os.makedirs(args.explain_dir, exist_ok=True)
-            df = fn(spark, SF_DIR)
+            df = registry.QUERIES[name](spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )

@@ -6,15 +6,19 @@ plan's cost grow with data (good — the cluster absorbs it) or with
 coordination (bad — a driver/skew bottleneck)?  Findings land in
 SCALE.md.
 
+Each scale is warmed and timed through the bench's own loop
+(``bench.warm`` + ``bench.time_query``, state dropped per rep).
+
 Run: PYTHONPATH=. python tools/scale_probe.py [query ...]
 (default: the probe set below).  The sf1 directory is cached in /tmp.
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` (default 48g) size
+the session.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 import duckdb
 
@@ -119,39 +123,26 @@ def build_sf1() -> None:
 
 def main() -> None:
     build_sf1()
-    from pyspark.sql import SparkSession
-
+    import bench
     from edinet_etl_spark import registry
+    from edinet_etl_spark.session import get_spark
 
     registry.load_all()
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
-        # local-mode executors live in the driver JVM; the 1g default
-        # cannot hold 32 concurrent sf1 task working sets
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    # local-mode executors live in the driver JVM; the 24g bench default
+    # cannot hold 32 concurrent sf1 task working sets
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    spark = get_spark("scale-probe", cpus=bench.CPUS)
     names = sys.argv[1:] or PROBE
     big = f"sf{REPLICAS // 10}"
+    best: dict[str, dict[str, float]] = {}
+    for label, d in (("sf0.1", SRC), (big, SRC if REPLICAS == 1 else DST)):
+        bench.warm(spark, names, d, "/root/testdata/sf0.001")
+        best[label] = {n: min(bench.time_query(spark, n, d)[0]) for n in names}
     print(f"{'query':35s} {'sf0.1':>7s} {big:>8s} {'ratio':>6s}")
     for n in names:
-        fn = registry.QUERIES[n]
-        fn(spark, "/root/testdata/sf0.001").collect()  # warm/JIT
-        times = {}
-        for label, d in (("sf0.1", SRC), (big, SRC if REPLICAS == 1 else DST)):
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            times[label] = best
-        print(
-            f"{n:35s} {times['sf0.1']:7.2f} {times[big]:8.2f}"
-            f" {times[big] / times['sf0.1']:6.1f}×"
-        )
+        small, large = best["sf0.1"][n], best[big][n]
+        print(f"{n:35s} {small:7.2f} {large:8.2f} {large / small:6.1f}×")
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,6 +1,10 @@
 """Measured shuffle-volume audit: run queries at sf0.1 and report the
-ACTUAL bytes/records crossing the wire (SQLAppStatusStore metrics —
-the same numbers the Spark UI shows), not plan-shape guesses.
+ACTUAL bytes crossing the wire, not plan-shape guesses.  The figures
+are ``bench.time_query``'s statistics of each query's fastest rep
+(``perfbench.trace.StageMetrics`` over the rep's job group, read from
+Spark's status stores): shuffle MB written, spill MB, SQL executions
+and task skew (slowest over median task time, summed over multi-task
+stages; 1.0 is balanced).
 
 The point at 100 TB: a query's cost is dominated by what it shuffles,
 not what it scans.  This tool turns "the plan looks right" into
@@ -13,10 +17,7 @@ Run: PYTHONPATH=. python tools/shuffle_audit.py [query ...]
 from __future__ import annotations
 
 import os
-import re
 import sys
-
-_UNITS = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3, "TiB": 1024**4}
 
 DEFAULT = [
     "revenue_by_nation_year",
@@ -34,50 +35,8 @@ DEFAULT = [
 ]
 
 
-def _parse_total(v: str) -> float:
-    """Metric renders as '400', '1,234' or — for multi-task size
-    metrics — as TWO lines: 'total (min, med, max (stageId: taskId))'
-    then '4.9 KiB (1262.0 B, …)'.  The total is the first token(s) of
-    the LAST line; return it in base units (bytes or records)."""
-    head = v.splitlines()[-1].split(" (")[0].strip().replace(",", "")
-    m = re.match(r"^([0-9.]+)\s*([A-Za-z]+)?$", head)
-    if not m:
-        return 0.0
-    n = float(m.group(1))
-    return n * _UNITS.get(m.group(2) or "B", 1)
-
-
-def measure(spark, fn, sf_dir: str) -> dict[str, float]:
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList().size()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    execs = store.executionsList()
-    totals: dict[str, float] = {}
-    seen: set[int] = set()
-    for i in range(before, execs.size()):
-        e = execs.apply(i)
-        metrics = store.executionMetrics(e.executionId())
-        it = e.metrics().iterator()
-        while it.hasNext():
-            m = it.next()
-            acc = m.accumulatorId()
-            if acc in seen:
-                continue
-            seen.add(acc)
-            val = metrics.get(acc)
-            if not val.isDefined():
-                continue
-            name = m.name()
-            if name in (
-                "shuffle bytes written",
-                "shuffle records written",
-                "spill size",
-            ):
-                totals[name] = totals.get(name, 0.0) + _parse_total(val.get())
-    return totals
-
-
 def main() -> None:
+    import bench
     from edinet_etl_spark import registry
     from edinet_etl_spark.session import get_spark
 
@@ -85,15 +44,18 @@ def main() -> None:
     registry.load_all()
     names = sys.argv[1:] or DEFAULT
     spark = get_spark()
-    print(f"{'query':38}{'shuffle MB':>12}{'shuffle rows':>14}{'spill MB':>10}")
+    bench.warm(spark, names, sf_dir, "/root/testdata/sf0.001")
+    print(
+        f"{'query':38}{'shuffle MB':>12}{'spill MB':>10}"
+        f"{'SQL execs':>11}{'task skew':>11}"
+    )
     for n in names:
-        t = measure(spark, registry.QUERIES[n], sf_dir)
+        _, _, t = bench.time_query(spark, n, sf_dir)
         print(
-            f"{n:38}"
-            f"{t.get('shuffle bytes written', 0) / 1e6:>12.2f}"
-            f"{int(t.get('shuffle records written', 0)):>14d}"
-            f"{t.get('spill size', 0) / 1e6:>10.2f}"
+            f"{n:38}{t.shuffle_write_mb:>12.2f}{t.spill_mb:>10.2f}"
+            f"{t.sql_execs:>11d}{t.task_skew:>11.2f}"
         )
+    spark.stop()
 
 
 if __name__ == "__main__":
