@@ -8,18 +8,19 @@ with the company dimension, emit
 ``[year, companyname, industryclassification, geonameen, revenue,
 revenue_unit]``.
 
-Spark-first shape: the per-file Python loop disappears.  Parsing is a
-minimal ``mapInPandas`` island (bytes → positional rows); *everything
-else* — the head-5 limit, the dynamic revenue mask, the fiscal-year
-extract, the year decode, cast-skip, the dimension join — is
-declarative, so one Catalyst plan covers all files at once.
+Spark-first shape: logic that needs one filing runs in the one
+``mapInPandas`` island that holds that filing's bytes — the parse, the
+dynamic revenue mask, the head-5 limit and the fiscal-year extract, with
+a small parser per format.  Logic that needs several filings is
+declarative — the best-filing dedup, the year decode, cast-skip and the
+dimension join — so one Catalyst plan covers all files at once.
 """
 
 from __future__ import annotations
 
 import io
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -34,20 +35,13 @@ YEAR_OFFSETS = {
     "Prior4YearDuration": -4,
 }
 
-FACT_SCHEMA = (
-    "filename string, arrival_idx long, row_pos long, "
-    "element_id string, context_ref string, value string, unit_ref string"
+_FACT_COLUMNS = ["filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year"]
+_FACT_SCHEMA = (
+    "filename string, arrival_idx long, context_ref string, "
+    "value string, unit_ref string, fiscal_year int"
 )
 
-_FACT_COLS = [
-    "filename",
-    "arrival_idx",
-    "row_pos",
-    "element_id",
-    "context_ref",
-    "value",
-    "unit_ref",
-]
+_CSV_FISCAL_DEI = "jpdei_cor:CurrentFiscalYearEndDateDEI"
 
 
 def select_best_filings(filings: DataFrame) -> DataFrame:
@@ -74,157 +68,96 @@ def select_best_filings(filings: DataFrame) -> DataFrame:
     )
 
 
-def parse_filing_csv(filings: DataFrame) -> DataFrame:
-    """S5+P7 prep: decode UTF-16 tab-separated filing bytes into
-    positional rows.  Only the *decode* happens in Python; the
-    reference's row-1 mask (P7), DEI extract (P8) and head-5 (L2) are
-    applied relationally in :func:`csv_revenue_facts`."""
+def _fiscal_year(dei_values: Iterable[str | None]) -> int | None:
+    """P8: the year of the first DEI value that parses as a date, or
+    None — the filing is then skipped, which fixes the reference's
+    unbound-``fiscal_year`` bug (SURVEY §2.11a)."""
+    for value in dei_values:
+        try:
+            ts = pd.to_datetime(value)
+        except (ValueError, OverflowError):
+            continue
+        if not pd.isna(ts):
+            return ts.year
+    return None
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    df = pd.read_csv(
-                        io.BytesIO(r.member_bytes), sep="\t", encoding="utf-16"
-                    )
-                except Exception:  # noqa: BLE001 — unparseable filing → skip
-                    continue
-                for pos, row in enumerate(df.itertuples(index=False)):
-                    vals = dict(zip(df.columns, row))
-                    rows.append(
-                        (
-                            r.filename,
-                            r.arrival_idx,
-                            pos,
-                            str(vals.get("要素ID", "")),
-                            str(vals.get("コンテキストID", "")),
-                            None if pd.isna(vals.get("値")) else str(vals.get("値")),
-                            None
-                            if pd.isna(vals.get("ユニットID"))
-                            else str(vals.get("ユニットID")),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=_FACT_COLS)
 
-    return filings.filter(F.col("file_type") == "csv").mapInPandas(
-        parse, schema=FACT_SCHEMA
+def _text(v) -> str | None:
+    return None if pd.isna(v) else str(v)
+
+
+def _csv_facts(data: bytes) -> tuple[int | None, list[tuple]]:
+    """S5/P7/L2 (``src/transform.py:77-106``): UTF-16 tab-separated
+    filing; revenue rows = the first 5 rows (file order, ``:98``) whose
+    ``要素ID`` equals the one at positional row 1 (pandas ``df.loc[1]``,
+    ``:94``); fiscal year from the DEI rows (``:99-102``)."""
+    try:
+        df = pd.read_csv(io.BytesIO(data), sep="\t", encoding="utf-16")
+    except Exception:  # noqa: BLE001 — unparseable filing → skip
+        return None, []
+    n = len(df)
+    ids = [str(v) for v in df.get("要素ID", [""] * n)]
+    contexts = [str(v) for v in df.get("コンテキストID", [""] * n)]
+    values = [_text(v) for v in df.get("値", [None] * n)]
+    units = [_text(v) for v in df.get("ユニットID", [None] * n)]
+    fiscal_year = _fiscal_year(v for i, v in zip(ids, values) if i == _CSV_FISCAL_DEI)
+    if n < 2:
+        return fiscal_year, []
+    rows = zip(ids, contexts, values, units)
+    return fiscal_year, [(c, v, u) for i, c, v, u in rows if i == ids[1]][:5]
+
+
+def _xbrl_facts(data: bytes) -> tuple[int | None, list[tuple]]:
+    """X1 (``src/transform.py:11-74``): fiscal year from the
+    ``CurrentPeriodEndDateDEI`` elements; revenue rows = those of the 5
+    elements after the first ``NumberOfSubmissionDEI`` marker that carry
+    a contextRef and text; ``unitRef`` defaults to 'JPY' (F13)."""
+    try:
+        root = ET.fromstring(data)
+    except Exception:  # noqa: BLE001 — malformed XML → skip
+        return None, []
+    elements = list(root.iter())
+    fiscal_year = _fiscal_year(
+        e.text for e in elements if e.tag.endswith("CurrentPeriodEndDateDEI") and e.text
     )
-
-
-def csv_revenue_facts(parsed: DataFrame) -> DataFrame:
-    """P7/P8/L2 on the positional rows, all declarative:
-
-    - revenue mask = ``要素ID`` at positional row 1 (pandas
-      ``df.loc[1]``, ``src/transform.py:94``) — a per-file dynamic
-      value, expressed as a window max over ``row_pos == 1``;
-    - fiscal year = year of the DEI row's value (``:99-102``);
-    - first 5 mask rows in file order (``:98``).
-    """
-    w = Window.partitionBy("filename")
-    mask = F.max(F.when(F.col("row_pos") == 1, F.col("element_id"))).over(w)
-    fiscal = F.max(
-        F.when(
-            F.col("element_id") == "jpdei_cor:CurrentFiscalYearEndDateDEI",
-            F.year(F.to_date(F.col("value"))),
-        )
-    ).over(w)
-    wn = Window.partitionBy("filename").orderBy("row_pos")
-    return (
-        parsed.withColumn("revenue_mask", mask)
-        .withColumn("fiscal_year", fiscal)
-        .filter(F.col("element_id") == F.col("revenue_mask"))
-        .withColumn("rev_rn", F.row_number().over(wn))
-        .filter(F.col("rev_rn") <= 5)
-        .filter(F.col("fiscal_year").isNotNull())  # no DEI row → skip file
-        .select(
-            "filename",
-            "arrival_idx",
-            "context_ref",
-            "value",
-            "unit_ref",
-            "fiscal_year",
-        )
+    marker = next(
+        (i for i, e in enumerate(elements) if "NumberOfSubmissionDEI" in e.tag), None
     )
+    if marker is None:
+        return fiscal_year, []
+    return fiscal_year, [
+        (e.get("contextRef"), e.text, e.get("unitRef", "JPY"))
+        for e in elements[marker + 1 : marker + 6]
+        if e.get("contextRef") and e.text
+    ]
 
 
-def parse_filing_xbrl(filings: DataFrame) -> DataFrame:
-    """X1 UDTF (``src/transform.py:11-74``): fiscal year from the first
-    parseable ``CurrentPeriodEndDateDEI``; revenue rows = the 5
-    elements after the first ``NumberOfSubmissionDEI`` marker that
-    carry a contextRef and text; ``unitRef`` defaults to 'JPY' (F13).
-
-    Fixes the reference's unbound-``fiscal_year`` bug (SURVEY §2.11a):
-    a file with no parseable fiscal date emits nothing instead of
-    raising NameError."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    root = ET.fromstring(r.member_bytes)
-                except Exception:  # noqa: BLE001 — malformed XML → skip
-                    continue
-                elements = list(root.iter())
-                fiscal_year = None
-                for elem in elements:
-                    if elem.tag.endswith("CurrentPeriodEndDateDEI") and elem.text:
-                        try:
-                            fiscal_year = pd.to_datetime(elem.text).year
-                            break
-                        except Exception:  # noqa: BLE001 — keep scanning
-                            continue
-                if fiscal_year is None:
-                    continue
-                for i, elem in enumerate(elements):
-                    if "NumberOfSubmissionDEI" in elem.tag:
-                        for j in range(1, 6):
-                            if i + j < len(elements):
-                                rev = elements[i + j]
-                                ctx = rev.get("contextRef")
-                                if ctx and rev.text:
-                                    rows.append(
-                                        (
-                                            r.filename,
-                                            r.arrival_idx,
-                                            fiscal_year,
-                                            ctx,
-                                            rev.text,
-                                            rev.get("unitRef", "JPY"),
-                                        )
-                                    )
-                        break
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "filename",
-                    "arrival_idx",
-                    "fiscal_year",
-                    "context_ref",
-                    "value",
-                    "unit_ref",
-                ],
-            )
-
-    return filings.filter(F.col("file_type") == "xbrl").mapInPandas(
-        parse,
-        schema=(
-            "filename string, arrival_idx long, fiscal_year int, "
-            "context_ref string, value string, unit_ref string"
-        ),
-    )
+_PARSERS = {"csv": _csv_facts, "xbrl": _xbrl_facts}
 
 
 def revenue_facts(filings: DataFrame) -> DataFrame:
-    """P12 format dispatch: CSV and XBRL branches, unioned into one
-    fact stream of (filename, fiscal_year, context_ref, value,
-    unit_ref)."""
-    csv_facts = csv_revenue_facts(parse_filing_csv(filings))
-    xbrl_facts = parse_filing_xbrl(filings).select(
-        "filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year"
+    """P12 format dispatch inside one island: each filing's bytes go to
+    its format's parser, and its revenue rows come out tagged with its
+    fiscal year.  A filing that does not parse or has no fiscal year
+    emits nothing."""
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for name, idx, file_type, data in zip(
+                pdf["filename"], pdf["arrival_idx"], pdf["file_type"], pdf["member_bytes"]
+            ):
+                parser = _PARSERS.get(file_type)
+                if parser is None:
+                    continue
+                fiscal_year, facts = parser(data)
+                if fiscal_year is not None:
+                    rows.extend((name, idx, *fact, fiscal_year) for fact in facts)
+            yield pd.DataFrame(rows, columns=_FACT_COLUMNS)
+
+    return filings.select("filename", "arrival_idx", "file_type", "member_bytes").mapInPandas(
+        parse, schema=_FACT_SCHEMA
     )
-    return csv_facts.unionByName(xbrl_facts)
 
 
 def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:

@@ -12,9 +12,9 @@ partition-parallel reads, pathGlobFilter pushdown, and no bytes read
 for pruned files when only metadata columns are selected.
 
 Downstream is IDENTICAL to the HTTP path: filename-encoded metadata is
-parsed relationally (F5/F6-style regexes), then the same ZIP UDTF +
-largest-member selection (`zip_extract`) feeds the parsers — one code
-path for members regardless of how bytes arrived.
+parsed relationally (F5/F6-style regexes), then the same
+unzip-and-pick island (`zip_extract.extract_filings`) feeds the parser —
+one code path for members regardless of how bytes arrived.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def read_filing_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     """Scan a directory tree of filing ZIPs into the same
     (docID, edinetCode, docTypeCode, submitDateTime, file_type,
     arrival_idx, content) shape `download_documents` produces, so
-    `zip_extract.explode_zip_members` composes unchanged.
+    `zip_extract.extract_filings` composes unchanged.
 
     file_type comes from the fileType component the same way the flag
     dispatch does (P13): type 5 payloads carry CSV members, type 1

@@ -341,36 +341,22 @@ def download_documents(
     if companies_to_get is not None:
         docs = docs.orderBy("arrival_idx").limit(companies_to_get)
 
+    meta = ["docID", "edinetCode", "docTypeCode", "submitDateTime", "file_type", "arrival_idx"]
+
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         limiter = _PartitionLimiter(per_partition_rate)
         for pdf in batches:
-            out = {c: [] for c in OUT_COLS}
-            for row in pdf.itertuples(index=False):
-                raw = _with_retries(
-                    lambda r=row: fetcher.fetch_document(r.docID, r.api_type),
+            content = [
+                _with_retries(
+                    lambda d=doc_id, t=api_type: fetcher.fetch_document(d, t),
                     policy,
                     limiter,
                 )
-                if raw is None:
-                    continue
-                out["docID"].append(row.docID)
-                out["edinetCode"].append(row.edinetCode)
-                out["docTypeCode"].append(row.docTypeCode)
-                out["submitDateTime"].append(row.submitDateTime)
-                out["file_type"].append(row.file_type)
-                out["arrival_idx"].append(row.arrival_idx)
-                out["content"].append(raw)
-            yield pd.DataFrame(out)
+                for doc_id, api_type in zip(pdf["docID"], pdf["api_type"])
+            ]
+            out = pdf[meta].assign(content=content)
+            yield out[out["content"].notna()]
 
-    OUT_COLS = [
-        "docID",
-        "edinetCode",
-        "docTypeCode",
-        "submitDateTime",
-        "file_type",
-        "arrival_idx",
-        "content",
-    ]
     schema = (
         "docID string, edinetCode string, docTypeCode string, "
         "submitDateTime string, file_type string, arrival_idx long, "

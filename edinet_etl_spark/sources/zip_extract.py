@@ -6,10 +6,11 @@ target extension, keep the *largest* match, rename it to
 ``{edinetCode}_{yyyyMMdd}_{docTypeCode}{ext}``, clean up.  Corrupt
 ZIPs and no-match ZIPs are logged and skipped.
 
-Spark-first shape: no filesystem at all — ``zipfile`` over in-memory
-bytes inside a ``mapInPandas`` UDTF (1 ZIP row → N member rows), then
-the *selection* (extension filter + largest-wins argmax A2 + filename
-build F7/F8) is plain relational code Catalyst can see.
+Spark-first shape: no filesystem at all.  Picking the member needs one
+ZIP only, so it runs inside the ``mapInPandas`` island that holds the
+ZIP's bytes: open the archive in memory, keep the largest matching
+member and read only that one (1 ZIP row → 0 or 1 filing row, no
+shuffle).  The filename build (F7/F8) stays a column expression.
 """
 
 from __future__ import annotations
@@ -22,77 +23,58 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEMBER_SCHEMA = (
-    "docID string, edinetCode string, docTypeCode string, "
-    "submitDateTime string, file_type string, arrival_idx long, "
-    "member_name string, member_size long, member_bytes binary"
-)
-
 _META = ["docID", "edinetCode", "docTypeCode", "submitDateTime", "file_type", "arrival_idx"]
 
-
-def explode_zip_members(downloads: DataFrame) -> DataFrame:
-    """X2 UDTF: one row per ZIP member (name, size, bytes).  Corrupt
-    archives emit nothing — the reference's log-and-skip error path
-    (``src/utils/helper.py:64-67``)."""
-
-    def unzip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(row.content))
-                    infos = zf.infolist()
-                except Exception:  # noqa: BLE001 — corrupt zip → skip doc
-                    continue
-                meta = tuple(getattr(row, c) for c in _META)
-                for info in infos:
-                    if info.is_dir():
-                        continue
-                    rows.append(
-                        meta + (info.filename, info.file_size, zf.read(info))
-                    )
-            yield pd.DataFrame(
-                rows, columns=_META + ["member_name", "member_size", "member_bytes"]
-            )
-
-    return downloads.mapInPandas(unzip, schema=MEMBER_SCHEMA)
+_SCHEMA = (
+    "docID string, edinetCode string, docTypeCode string, "
+    "submitDateTime string, file_type string, arrival_idx long, "
+    "member_bytes binary"
+)
 
 
-def select_best_member(members: DataFrame) -> DataFrame:
-    """Extension filter + A2 largest-wins + final-filename build.
-
-    ``max_by(struct, key)``-equivalent via one window: largest
-    ``member_size`` per doc, member name as a total-order tiebreak
-    (the reference's ``max()`` inherits Path ordering on ties —
-    we pin it, SURVEY §2.11d).  Filename: F7 date normalize + F8
-    concat (``src/utils/helper.py:82-85``)."""
-    from pyspark.sql import Window
-
-    ext_ok = F.col("member_name").endswith(
-        F.when(F.col("file_type") == "csv", ".csv").otherwise(".xbrl")
-    )
-    w = Window.partitionBy("docID").orderBy(
-        F.desc("member_size"), F.desc("member_name")
-    )
-    date_str = F.regexp_replace(
-        F.substring_index(F.col("submitDateTime"), " ", 1), "-", ""
-    )
-    filename = F.concat_ws(
-        "_", F.col("edinetCode"), date_str, F.col("docTypeCode")
-    )
-    return (
-        members.filter(ext_ok)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .withColumn(
-            "filename",
-            F.concat(filename, F.lit("."), F.col("file_type")),
-        )
-        .select(*_META, "filename", "member_bytes")
-    )
+def _best_member(content: bytes, ext: str) -> bytes | None:
+    """A2: the bytes of the largest non-directory member ending in
+    ``ext``; the member name breaks size ties (the reference's ``max()``
+    inherits Path ordering on ties — we pin it, SURVEY §2.11d).  A
+    corrupt archive, no matching member or a corrupt chosen member
+    gives None — the reference's log-and-skip error path
+    (``src/utils/helper.py:64-67``).  Other members are never read."""
+    try:
+        zf = zipfile.ZipFile(io.BytesIO(content))
+    except Exception:  # noqa: BLE001 — corrupt zip → skip doc
+        return None
+    matches = [i for i in zf.infolist() if not i.is_dir() and i.filename.endswith(ext)]
+    if not matches:
+        return None
+    best = max(matches, key=lambda i: (i.file_size, i.filename))
+    try:
+        return zf.read(best)
+    except Exception:  # noqa: BLE001 — corrupt member → skip doc
+        return None
 
 
 def extract_filings(downloads: DataFrame) -> DataFrame:
-    """Full S4 stage: unzip → pick target member → canonical filename."""
-    return select_best_member(explode_zip_members(downloads))
+    """Full S4 stage: one island picks each ZIP's target member, then
+    the canonical filename: F7 date normalize + F8 null-skipping concat
+    (``src/utils/helper.py:82-85``)."""
+
+    def pick(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            member = [
+                _best_member(content, ".csv" if file_type == "csv" else ".xbrl")
+                for content, file_type in zip(pdf["content"], pdf["file_type"])
+            ]
+            out = pdf[_META].assign(member_bytes=member)
+            yield out[out["member_bytes"].notna()]
+
+    date_str = F.regexp_replace(
+        F.substring_index(F.col("submitDateTime"), " ", 1), "-", ""
+    )
+    filename = F.concat(
+        F.concat_ws("_", F.col("edinetCode"), date_str, F.col("docTypeCode")),
+        F.lit("."),
+        F.col("file_type"),
+    )
+    return downloads.mapInPandas(pick, schema=_SCHEMA).select(
+        *_META, filename.alias("filename"), "member_bytes"
+    )

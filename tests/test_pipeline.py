@@ -18,8 +18,8 @@ from edinet_etl_spark.pipeline.config import PipelineConfig
 from edinet_etl_spark.pipeline.etl import ingest_filings, run_pipeline
 from edinet_etl_spark.pipeline.load import load_to_csv
 from edinet_etl_spark.pipeline.transform import (
-    parse_filing_xbrl,
     process_financial_documents,
+    revenue_facts,
     select_best_filings,
 )
 from edinet_etl_spark.sources import company_master, edinet_api
@@ -30,6 +30,7 @@ from tests.fixtures.gen import (
     XBRL_VALID,
     FixtureFetcher,
     FlakyFetcher,
+    _filing_csv_bytes,
     build_all,
 )
 
@@ -159,20 +160,52 @@ def test_select_best_filings_tie_rules(spark):
     assert best == {"E00001": 1, "E00002": 4, "E00003": 6}
 
 
-def test_xbrl_parse_semantics(spark):
-    """X1: marker-relative extraction; element without contextRef
-    skipped; unitRef defaults to JPY; no-fiscal-year file emits nothing
-    (fixed §2.11a behavior)."""
+def test_revenue_facts_semantics(spark):
+    """One parse island for both formats.  XBRL (X1): marker-relative
+    extraction; element without contextRef skipped; unitRef defaults to
+    JPY; no-fiscal-year file emits nothing (fixed §2.11a behavior).
+    CSV (S5/P7/L2): the revenue mask is the 要素ID at positional row 1,
+    at most 5 mask rows in file order, a missing unit stays None; a DEI
+    date that does not parse skips the filing instead of failing the
+    job."""
+    good_csv = _filing_csv_bytes(
+        [
+            ["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00003", None],
+            ["jpcrp_cor:NetSales", "CurrentYearDuration", "10", "JPY"],  # mask
+            ["jpcrp_cor:Revenue", "Prior1YearDuration", "99", "JPY"],  # not the mask
+            ["jpcrp_cor:NetSales", "Prior1YearDuration", "9", None],  # no unit
+            ["jpcrp_cor:NetSales", "Prior2YearDuration", "8", "JPY"],
+            ["jpcrp_cor:NetSales", "Prior3YearDuration", "7", "JPY"],
+            ["jpcrp_cor:NetSales", "Prior4YearDuration", "6", "JPY"],
+            ["jpcrp_cor:NetSales", "CurrentYearDuration", "5", "JPY"],  # beyond head-5
+            ["jpdei_cor:CurrentFiscalYearEndDateDEI", "FilingDateInstant",
+             "2025-03-31", None],
+        ]
+    )
+    bad_date_csv = _filing_csv_bytes(
+        [
+            ["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00004", None],
+            ["jpcrp_cor:NetSales", "CurrentYearDuration", "10", "JPY"],
+            ["jpdei_cor:CurrentFiscalYearEndDateDEI", "FilingDateInstant",
+             "not-a-date", None],
+        ]
+    )
     df = spark.createDataFrame(
         [
             ("E00002_20240601_120.xbrl", 1, "xbrl", bytearray(XBRL_VALID)),
             ("E00009_20240601_120.xbrl", 2, "xbrl", bytearray(XBRL_NO_FISCAL)),
+            ("E00003_20240601_120.csv", 3, "csv", bytearray(good_csv)),
+            ("E00004_20240601_120.csv", 4, "csv", bytearray(bad_date_csv)),
         ],
         "filename string, arrival_idx long, file_type string, member_bytes binary",
     )
-    out = parse_filing_xbrl(df).collect()
-    by_ctx = {r["context_ref"]: r for r in out}
-    assert all(r["filename"].startswith("E00002") for r in out)
+    out = revenue_facts(df).collect()
+    assert revenue_facts(df).columns == [
+        "filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year",
+    ]
+    xbrl = [r for r in out if r["filename"].endswith(".xbrl")]
+    by_ctx = {r["context_ref"]: r for r in xbrl}
+    assert all(r["filename"].startswith("E00002") for r in xbrl)
     # 4 of the 5 post-marker elements carry contextRef+text; the bare
     # <Revenue>2222</Revenue> is skipped (src/transform.py:60)
     assert sorted(by_ctx) == [
@@ -180,7 +213,18 @@ def test_xbrl_parse_semantics(spark):
         "Prior2YearDuration", "Prior3YearDuration",
     ]
     assert by_ctx["Prior2YearDuration"]["unit_ref"] == "JPY"  # F13 default
-    assert all(r["fiscal_year"] == 2024 for r in out)
+    assert all(r["fiscal_year"] == 2024 for r in xbrl)
+
+    csv = [r for r in out if r["filename"].endswith(".csv")]
+    assert {r["filename"] for r in csv} == {"E00003_20240601_120.csv"}
+    assert sorted((r["context_ref"], r["value"], r["unit_ref"]) for r in csv) == [
+        ("CurrentYearDuration", "10", "JPY"),
+        ("Prior1YearDuration", "9", None),
+        ("Prior2YearDuration", "8", "JPY"),
+        ("Prior3YearDuration", "7", "JPY"),
+        ("Prior4YearDuration", "6", "JPY"),
+    ]
+    assert all(r["fiscal_year"] == 2025 and r["arrival_idx"] == 3 for r in csv)
 
 
 def test_retry_swallow_and_recover(spark, fixture_root, cfg):
@@ -294,39 +338,55 @@ def test_observed_metrics_multi_partition(spark, tmp_path, caplog):
     assert metrics["revenue_total"] == str(sum(range(1000)))
 
 
-def test_binary_lake_ingestion(spark, tmp_path):
-    """S3's pre-fetched-directory mapping: ZIPs landed on storage by an
-    upstream collector, read via the `binaryFile` source, explode
-    through the SAME ZIP UDTF as the HTTP path, members intact."""
+def _zip_bytes(members: dict[str, bytes], corrupt: bytes | None = None) -> bytes:
+    """An uncompressed ZIP; the member holding ``corrupt`` gets its
+    stored data altered in place, so its CRC check fails on read while
+    the directory still lists it."""
     import io
     import zipfile
 
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+        for name, data in members.items():
+            zf.writestr(name, data)
+    raw = buf.getvalue()
+    if corrupt is not None:
+        assert raw.count(corrupt) == 1
+        raw = raw.replace(corrupt, bytes(len(corrupt)))
+    return raw
+
+
+def test_binary_lake_ingestion(spark, tmp_path):
+    """S3's pre-fetched-directory mapping: ZIPs landed on storage by an
+    upstream collector, read via the `binaryFile` source, go through the
+    SAME member-picking island as the HTTP path.  Only the chosen member
+    is read: a corrupt member nobody uses does not lose the filing, a
+    corrupt chosen member skips it."""
     from edinet_etl_spark.sources.binary_lake import read_filing_lake
-    from edinet_etl_spark.sources.zip_extract import explode_zip_members
+    from edinet_etl_spark.sources.zip_extract import extract_filings
 
     lake = tmp_path / "lake" / "dt=2024-06-01"
     lake.mkdir(parents=True)
 
-    def zip_bytes(members: dict[str, bytes]) -> bytes:
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w") as zf:
-            for name, data in members.items():
-                zf.writestr(name, data)
-        return buf.getvalue()
-
     # full 4-part names carry the EDINET form code (docTypeCode)
     (lake / "D001_E00001_120_5.zip").write_bytes(
-        zip_bytes({"a/main.csv": b"x" * 10, "a/side.csv": b"y" * 99})
+        _zip_bytes({"a/main.csv": b"x" * 10, "a/side.csv": b"y" * 99})
     )
     (lake / "D002_E00002_130_1.zip").write_bytes(
-        zip_bytes({"b/report.xbrl": b"<xbrl/>"})
+        _zip_bytes({"b/report.xbrl": b"<xbrl/>"})
+    )
+    (lake / "D003_E00003_120_5.zip").write_bytes(
+        _zip_bytes({"c/main.csv": b"z" * 50, "c/notes.txt": b"q" * 20}, corrupt=b"q" * 20)
+    )
+    (lake / "D004_E00004_120_5.zip").write_bytes(
+        _zip_bytes({"d/main.csv": b"w" * 30}, corrupt=b"w" * 30)
     )
     # legacy 3-part name: file type only, docTypeCode honestly NULL
     (lake / "broken_E9_1.zip").write_bytes(b"not a zip")
 
     filings = read_filing_lake(spark, str(tmp_path / "lake"))
     rows = {r["docID"]: r for r in filings.collect()}
-    assert set(rows) == {"D001", "D002", "broken"}
+    assert set(rows) == {"D001", "D002", "D003", "D004", "broken"}
     assert rows["D001"]["file_type"] == "csv"
     assert rows["D001"]["docTypeCode"] == "120"
     assert rows["D001"]["submitDateTime"] == "2024-06-01"
@@ -337,11 +397,48 @@ def test_binary_lake_ingestion(spark, tmp_path):
     assert rows["broken"]["docTypeCode"] is None
     assert rows["broken"]["file_type"] == "xbrl"
 
-    members = explode_zip_members(filings).collect()
-    got = {(m["docID"], m["member_name"]): m["member_size"] for m in members}
-    # corrupt zip skipped; real members exploded with true sizes
-    assert got == {
-        ("D001", "a/main.csv"): 10,
-        ("D001", "a/side.csv"): 99,
-        ("D002", "b/report.xbrl"): 7,
+    got = {
+        r["docID"]: (r["filename"], bytes(r["member_bytes"]))
+        for r in extract_filings(filings).collect()
     }
+    # corrupt zip and corrupt chosen member skipped; largest member wins
+    assert got == {
+        "D001": ("E00001_20240601_120.csv", b"y" * 99),
+        "D002": ("E00002_20240601_130.xbrl", b"<xbrl/>"),
+        "D003": ("E00003_20240601_120.csv", b"z" * 50),
+    }
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_filing_islands_plan_shape(spark):
+    """Per-filing logic runs inside the islands that hold the filing's
+    bytes: unzip-and-pick is one island with no shuffle, and parsing is
+    one island for both formats (no per-format branches to union)."""
+    from edinet_etl_spark.sources.zip_extract import extract_filings
+
+    downloads = spark.createDataFrame(
+        [("D1", "E00001", "120", "2024-06-01 09:00", "csv", 1,
+          bytearray(_zip_bytes({"a.csv": b"x"})))],
+        "docID string, edinetCode string, docTypeCode string, "
+        "submitDateTime string, file_type string, arrival_idx long, "
+        "content binary",
+    )
+    plan = _physical_plan(extract_filings(downloads))
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+    filings = spark.createDataFrame(
+        [("E00001_20240601_120.csv", 1, "csv", bytearray(b"")),
+         ("E00002_20240601_120.xbrl", 2, "xbrl", bytearray(b""))],
+        "filename string, arrival_idx long, file_type string, member_bytes binary",
+    )
+    companies = spark.createDataFrame(
+        [("E00001", "Alpha Corp", "Manufacturing")],
+        "`EDINET Code` string, `Submitter Name（alphabetic）` string, "
+        "`Submitter's industry` string",
+    )
+    plan = _physical_plan(process_financial_documents(filings, companies))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan, plan
