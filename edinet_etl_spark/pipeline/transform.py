@@ -90,18 +90,19 @@ def _csv_facts(data: bytes) -> tuple[int | None, list[tuple]]:
     """S5/P7/L2 (``src/transform.py:77-106``): UTF-16 tab-separated
     filing; revenue rows = the first 5 rows (file order, ``:98``) whose
     ``要素ID`` equals the one at positional row 1 (pandas ``df.loc[1]``,
-    ``:94``); fiscal year from the DEI rows (``:99-102``)."""
+    ``:94``) — none when that ID is missing, since NaN equals nothing;
+    fiscal year from the DEI rows (``:99-102``)."""
     try:
         df = pd.read_csv(io.BytesIO(data), sep="\t", encoding="utf-16")
     except Exception:  # noqa: BLE001 — unparseable filing → skip
         return None, []
     n = len(df)
-    ids = [str(v) for v in df.get("要素ID", [""] * n)]
+    ids = [_text(v) for v in df.get("要素ID", [""] * n)]
     contexts = [str(v) for v in df.get("コンテキストID", [""] * n)]
     values = [_text(v) for v in df.get("値", [None] * n)]
     units = [_text(v) for v in df.get("ユニットID", [None] * n)]
     fiscal_year = _fiscal_year(v for i, v in zip(ids, values) if i == _CSV_FISCAL_DEI)
-    if n < 2:
+    if n < 2 or ids[1] is None:
         return fiscal_year, []
     rows = zip(ids, contexts, values, units)
     return fiscal_year, [(c, v, u) for i, c, v, u in rows if i == ids[1]][:5]

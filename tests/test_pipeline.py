@@ -167,7 +167,8 @@ def test_revenue_facts_semantics(spark):
     CSV (S5/P7/L2): the revenue mask is the 要素ID at positional row 1,
     at most 5 mask rows in file order, a missing unit stays None; a DEI
     date that does not parse skips the filing instead of failing the
-    job."""
+    job; a missing 要素ID at row 1 masks nothing (pandas' NaN equals no
+    other NaN)."""
     good_csv = _filing_csv_bytes(
         [
             ["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00003", None],
@@ -190,12 +191,22 @@ def test_revenue_facts_semantics(spark):
              "not-a-date", None],
         ]
     )
+    no_id_csv = _filing_csv_bytes(
+        [
+            ["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00005", None],
+            [None, "CurrentYearDuration", "10", "JPY"],
+            [None, "Prior1YearDuration", "9", "JPY"],
+            ["jpdei_cor:CurrentFiscalYearEndDateDEI", "FilingDateInstant",
+             "2025-03-31", None],
+        ]
+    )
     df = spark.createDataFrame(
         [
             ("E00002_20240601_120.xbrl", 1, "xbrl", bytearray(XBRL_VALID)),
             ("E00009_20240601_120.xbrl", 2, "xbrl", bytearray(XBRL_NO_FISCAL)),
             ("E00003_20240601_120.csv", 3, "csv", bytearray(good_csv)),
             ("E00004_20240601_120.csv", 4, "csv", bytearray(bad_date_csv)),
+            ("E00005_20240601_120.csv", 5, "csv", bytearray(no_id_csv)),
         ],
         "filename string, arrival_idx long, file_type string, member_bytes binary",
     )
@@ -427,6 +438,7 @@ def test_filing_islands_plan_shape(spark):
         "content binary",
     )
     plan = _physical_plan(extract_filings(downloads))
+    assert plan.count("MapInPandas") == 1, plan
     assert "Window" not in plan and "Exchange" not in plan, plan
 
     filings = spark.createDataFrame(

@@ -162,7 +162,8 @@ def test_minhash_signature_order_and_duplicate_invariance(spark, texts):
 
 def test_zip_member_tie_breaks_deterministically(spark):
     """A2 argmax with EQUAL member sizes: the name tiebreak must pick
-    the same member regardless of input order (SURVEY §2.11d)."""
+    the same member regardless of input order (SURVEY §2.11d).  The
+    members differ in content, so the bytes show which one was picked."""
     import io
     import zipfile
 
@@ -172,7 +173,7 @@ def test_zip_member_tie_breaks_deterministically(spark):
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w") as zf:
             for n in names:
-                zf.writestr(n, b"x" * 100)  # identical sizes
+                zf.writestr(n, n[0].encode() * 100)  # identical sizes
         return buf.getvalue()
 
     for order in (["a.csv", "b.csv", "c.csv"], ["c.csv", "b.csv", "a.csv"]):
@@ -187,7 +188,7 @@ def test_zip_member_tie_breaks_deterministically(spark):
         assert len(rows) == 1
         # desc(member_name) tiebreak → 'c.csv' wins in either order
         assert rows[0]["filename"] == "E00001_20240601_120.csv"
-        assert rows[0]["member_bytes"] == bytearray(b"x" * 100)
+        assert rows[0]["member_bytes"] == bytearray(b"c" * 100)
 
 
 # ------------------------------------------------- TWA vs Decimal model
