@@ -1,12 +1,14 @@
 """End-to-end EDINET ETL on Spark (SURVEY.md §3 lifecycle).
 
 The reference's five eager stages (``/root/reference/main.py:13-40``)
-become two Spark jobs:
+become one lazy plan, run by one Spark action — the sink's observed
+write:
 
 1. **Ingestion** (UDF islands, executor-side HTTP): company master →
    date range → list fetch → semi-join filter → download → unzip.
-2. **Analytics** (one Catalyst plan): best-filing dedup → parse →
-   year decode → dimension join → final table → CSV sink.
+2. **Analytics** (relational around one parse island): best-filing
+   dedup → parse → year decode → dimension join → final table → CSV
+   sink.
 
 Injection of ``Fetcher`` keeps every test offline (FIXTURES.md §B).
 """

@@ -165,13 +165,10 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
     """J3+P11 year decode, P10 cast-skip, F13 unit default, J1
     broadcast company join, final schema (``src/transform.py:187-213``).
 
-    The 5-key year map is a literal broadcast-joined DataFrame —
-    unknown contexts drop out of the inner join exactly like the
+    The 5-key year map is a literal ``create_map`` lookup — unknown
+    contexts look up null and are filtered out, exactly like the
     reference's ``year_mapping.get(...) is None: continue``."""
-    spark = facts.sparkSession
-    offsets = spark.createDataFrame(
-        list(YEAR_OFFSETS.items()), "context_ref string, year_offset int"
-    )
+    offsets = F.create_map(*[F.lit(x) for pair in YEAR_OFFSETS.items() for x in pair])
     dim = companies.select(
         F.col("EDINET Code").alias("company_code"),
         F.col("Submitter Name（alphabetic）").alias("companyname"),
@@ -180,7 +177,8 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
     code = F.split(F.col("filename"), "_")[0]  # F5 (src/transform.py:161)
     return (
         facts.withColumn("company_code", code)
-        .join(F.broadcast(offsets), "context_ref", "inner")  # J3 + P11
+        .withColumn("year_offset", offsets[F.col("context_ref")])  # J3
+        .filter(F.col("year_offset").isNotNull())  # P11
         .withColumn("revenue", F.col("value").try_cast("long"))  # F10
         .filter(F.col("revenue").isNotNull())  # P10
         .join(F.broadcast(dim), "company_code", "inner")  # J1 + P9

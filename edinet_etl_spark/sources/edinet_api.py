@@ -192,10 +192,12 @@ def _iso_dates(start_date: str, end_date: str) -> list[str]:
 
 
 def date_range(spark: SparkSession, start_date: str, end_date: str) -> DataFrame:
-    """F2: the date range as a DataFrame — column ``date_str``."""
-    return spark.createDataFrame(
-        [(d,) for d in _iso_dates(start_date, end_date)], "date_str string"
-    )
+    """F2: the date range as a DataFrame — column ``date_str``, the rows
+    of ``_iso_dates``.  Built in the JVM (``range`` + ``date_add``), so
+    the plan holds no Python-side rows; an empty range is 0 rows."""
+    n_days = (date.fromisoformat(end_date) - date.fromisoformat(start_date)).days + 1
+    day = F.date_add(F.lit(start_date).cast("date"), F.col("id").cast("int"))
+    return spark.range(max(n_days, 0)).select(day.cast("string").alias("date_str"))
 
 
 def list_documents(
@@ -290,8 +292,10 @@ def filter_documents(
 ) -> DataFrame:
     """P6/J2: keep docs whose edinetCode is a target company (left-semi
     against the broadcast master — the reference's hash-set membership,
-    ``src/extract.py:149-162``) and whose docTypeCode is targeted."""
-    codes = companies.select(F.col("EDINET Code").alias("edinetCode")).distinct()
+    ``src/extract.py:149-162``) and whose docTypeCode is targeted.  A
+    semi join emits each left row at most once, so the master needs no
+    ``distinct``."""
+    codes = companies.select(F.col("EDINET Code").alias("edinetCode"))
     return docs.join(F.broadcast(codes), "edinetCode", "left_semi").filter(
         F.col("docTypeCode").isin(doc_types)
     )

@@ -11,6 +11,8 @@ error paths, empty-input sink guard, and retry swallow semantics.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +93,25 @@ def test_list_and_filter_documents(spark, fixture_root, cfg):
     assert sorted(r["docID"] for r in kept.collect()) == [
         "D001", "D002", "D003", "D006", "D007", "D009",
     ]
+
+
+@pytest.mark.parametrize(
+    "start,end,n_days",
+    [
+        ("2024-06-01", "2024-06-01", 1),
+        ("2024-06-02", "2024-06-01", 0),  # end before start
+        ("2024-02-27", "2024-03-02", 5),  # over a leap day
+        ("2023-12-30", "2024-01-02", 4),  # over a year boundary
+    ],
+)
+def test_date_range_matches_iso_dates(spark, start, end, n_days):
+    """F2: the JVM-built date axis has exactly the rows of the
+    reference's day-step loop (``_iso_dates``), in one string column."""
+    dates = edinet_api.date_range(spark, start, end)
+    assert dates.dtypes == [("date_str", "string")]
+    got = sorted(r["date_str"] for r in dates.collect())
+    assert got == edinet_api._iso_dates(start, end)
+    assert len(got) == n_days
 
 
 def test_end_to_end_golden(spark, fixture_root, cfg):
@@ -300,6 +321,96 @@ def test_empty_sink_guard(spark, tmp_path, caplog):
     assert result is None
     assert not (tmp_path / "nothing").exists()
     assert any("empty" in r.message.lower() for r in caplog.records)
+
+
+def _staging_dirs(root) -> list[str]:
+    """Hidden entries the sink may leave under its ``output_path``."""
+    return [p.name for p in root.iterdir() if p.name.startswith((".", "_"))]
+
+
+def _tree_bytes(path) -> dict[str, bytes]:
+    return {str(p.relative_to(path)): p.read_bytes() for p in path.rglob("*") if p.is_file()}
+
+
+def test_fetcher_bug_fails_run_pipeline(spark, fixture_root, cfg, tmp_path):
+    """The sink's single action evaluates the whole pipeline, so a bug in
+    a download island must fail ``run_pipeline``, not be logged away as
+    a write error."""
+    from pyspark.errors import PythonException
+
+    class BrokenFetcher(FixtureFetcher):
+        def fetch_document(self, doc_id: str, file_type: str) -> bytes:
+            raise TypeError("fetcher bug")
+
+    bug_cfg = replace(cfg, output_dir=str(tmp_path))
+    with pytest.raises(PythonException, match="TypeError: fetcher bug"):
+        run_pipeline(spark, bug_cfg, BrokenFetcher(fixture_root))
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_sink_failed_evaluation_keeps_old_output(spark, tmp_path):
+    """An error raised while the frame is evaluated propagates, and the
+    previous output stays byte-identical."""
+    assert load_to_csv(spark.range(3).toDF("revenue"), str(tmp_path), "t") is not None
+    before = _tree_bytes(tmp_path / "t")
+    bad = spark.range(5).select(F.assert_true(F.col("id") < 3).alias("revenue"))
+    with pytest.raises(Exception, match="is not true"):
+        load_to_csv(bad, str(tmp_path), "t")
+    assert _tree_bytes(tmp_path / "t") == before
+    assert _staging_dirs(tmp_path) == []
+
+
+def test_sink_output_path_is_a_file(spark, tmp_path, caplog):
+    """A filesystem error in the sink's own directory work is logged and
+    returns None, as the reference does (tests/test_load.py:48-59)."""
+    import logging
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("not a directory")
+    with caplog.at_level(logging.ERROR, logger="edinet_etl_spark.pipeline.load"):
+        assert load_to_csv(spark.range(3).toDF("revenue"), str(blocker), "t") is None
+    assert any("Failed to save data" in r.message for r in caplog.records)
+    assert blocker.read_text() == "not a directory"
+    assert _staging_dirs(tmp_path) == []
+
+
+def test_empty_frame_keeps_old_output(spark, tmp_path):
+    """S8 reads the write's own observed row count: an empty frame leaves
+    an earlier output untouched."""
+    assert load_to_csv(spark.range(3).toDF("revenue"), str(tmp_path), "t") is not None
+    before = _tree_bytes(tmp_path / "t")
+    assert load_to_csv(spark.range(0).toDF("revenue"), str(tmp_path), "t") is None
+    assert _tree_bytes(tmp_path / "t") == before
+    assert _staging_dirs(tmp_path) == []
+
+
+def _sql_execution_ids(spark) -> set[int]:
+    """Ids in the SQL status store (the store ``StageMetrics`` counts),
+    once every event posted so far has been processed.  Ids, not the
+    store's size: the store drops its oldest entries past a cap."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def test_run_pipeline_is_one_sql_execution(spark, fixture_root, cfg, tmp_path):
+    """The whole pipeline is one SQL execution: the observed write.  No
+    probe action runs the pipeline first."""
+    before = _sql_execution_ids(spark)
+    out_cfg = replace(cfg, output_dir=str(tmp_path))
+    assert run_pipeline(spark, out_cfg, FixtureFetcher(fixture_root)) is not None
+    assert len(_sql_execution_ids(spark) - before) == 1
+    assert _staging_dirs(tmp_path) == []
+
+
+def test_pipeline_plan_has_no_python_rows(spark, fixture_root, cfg):
+    """The literal side tables (date axis, year map) are JVM expressions:
+    no ``ExistingRDD`` scan, which would start a Python worker just to
+    unpickle the rows."""
+    companies, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
+    plan = _physical_plan(process_financial_documents(filings, companies))
+    assert "ExistingRDD" not in plan, plan
 
 
 def _write_metrics(caplog) -> list[dict]:
