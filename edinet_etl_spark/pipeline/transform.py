@@ -14,6 +14,12 @@ dynamic revenue mask, the head-5 limit and the fiscal-year extract, with
 a small parser per format.  Logic that needs several filings is
 declarative — the best-filing dedup, the year decode, cast-skip and the
 dimension join — so one Catalyst plan covers all files at once.
+
+The reference identifies a filing by the name it wrote to disk and
+splits that name back into company code and doc type.  Here every row
+carries the document's key (``date_str``, ``docID``, ``edinetCode``,
+``docTypeCode``) from the list to the join: A1 orders by it, and the
+company join reads ``edinetCode`` itself.
 """
 
 from __future__ import annotations
@@ -25,6 +31,9 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from edinet_etl_spark.sources.edinet_api import ARRIVAL
 
 # J3: relative-year decode (src/transform.py:171-177).
 YEAR_OFFSETS = {
@@ -35,10 +44,10 @@ YEAR_OFFSETS = {
     "Prior4YearDuration": -4,
 }
 
-_FACT_COLUMNS = ["filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year"]
-_FACT_SCHEMA = (
-    "filename string, arrival_idx long, context_ref string, "
-    "value string, unit_ref string, fiscal_year int"
+# One row per revenue fact: the filing's key, then the parsed fact.
+_FACT_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ["docID", "edinetCode", "context_ref", "value"]]
+    + [T.StructField("unit_ref", T.StringType()), T.StructField("fiscal_year", T.IntegerType())]
 )
 
 _CSV_FISCAL_DEI = "jpdei_cor:CurrentFiscalYearEndDateDEI"
@@ -49,22 +58,22 @@ def select_best_filings(filings: DataFrame) -> DataFrame:
     company; any type-'130' filing beats non-130; among 130s the
     reference's ``company_files[code] = path`` overwrite means the
     *last-seen* 130 wins, while among non-130s the dict-insert guard
-    means the *first-seen* wins.  Pinned with the explicit arrival
-    index (SURVEY §2.11d)."""
-    code = F.regexp_extract("filename", r"(E\d+)_\d+_(\d+)\.(csv|xbrl)", 1)
-    dtype = F.regexp_extract("filename", r"(E\d+)_\d+_(\d+)\.(csv|xbrl)", 2)
-    is_130 = (F.col("doc_type_f") == "130").cast("int")
-    tie = F.when(F.col("doc_type_f") == "130", -F.col("arrival_idx")).otherwise(
-        F.col("arrival_idx")
+    means the *first-seen* wins — both in ``ARRIVAL`` order (SURVEY
+    §2.11d).  The reference skips names its pattern does not match
+    (``:127-128``); here the carried key must have that shape: a lake
+    name comes from outside the program."""
+    is_130 = F.col("docTypeCode") == "130"
+    arrival = F.struct(*ARRIVAL)
+    w = Window.partitionBy("edinetCode").orderBy(
+        F.desc(is_130), F.desc(F.when(is_130, arrival)), F.asc(arrival)
     )
-    w = Window.partitionBy("company_code").orderBy(F.desc(is_130), F.asc(tie))
     return (
-        filings.withColumn("company_code", code)
-        .withColumn("doc_type_f", dtype)
-        .filter(F.col("company_code") != "")  # non-matching names dropped (:127-128)
+        filings.filter(
+            F.col("edinetCode").rlike(r"^E\d+$") & F.col("docTypeCode").rlike(r"^\d+$")
+        )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .drop("rn", "doc_type_f")
+        .drop("rn")
     )
 
 
@@ -145,18 +154,18 @@ def revenue_facts(filings: DataFrame) -> DataFrame:
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for name, idx, file_type, data in zip(
-                pdf["filename"], pdf["arrival_idx"], pdf["file_type"], pdf["member_bytes"]
+            for doc_id, code, file_type, data in zip(
+                pdf["docID"], pdf["edinetCode"], pdf["file_type"], pdf["member_bytes"]
             ):
                 parser = _PARSERS.get(file_type)
                 if parser is None:
                     continue
                 fiscal_year, facts = parser(data)
                 if fiscal_year is not None:
-                    rows.extend((name, idx, *fact, fiscal_year) for fact in facts)
-            yield pd.DataFrame(rows, columns=_FACT_COLUMNS)
+                    rows.extend((doc_id, code, *fact, fiscal_year) for fact in facts)
+            yield pd.DataFrame(rows, columns=_FACT_SCHEMA.fieldNames())
 
-    return filings.select("filename", "arrival_idx", "file_type", "member_bytes").mapInPandas(
+    return filings.select("docID", "edinetCode", "file_type", "member_bytes").mapInPandas(
         parse, schema=_FACT_SCHEMA
     )
 
@@ -170,18 +179,16 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
     reference's ``year_mapping.get(...) is None: continue``."""
     offsets = F.create_map(*[F.lit(x) for pair in YEAR_OFFSETS.items() for x in pair])
     dim = companies.select(
-        F.col("EDINET Code").alias("company_code"),
+        F.col("EDINET Code").alias("edinetCode"),
         F.col("Submitter Name（alphabetic）").alias("companyname"),
         F.col("Submitter's industry").alias("industryclassification"),
     )
-    code = F.split(F.col("filename"), "_")[0]  # F5 (src/transform.py:161)
     return (
-        facts.withColumn("company_code", code)
-        .withColumn("year_offset", offsets[F.col("context_ref")])  # J3
+        facts.withColumn("year_offset", offsets[F.col("context_ref")])  # J3
         .filter(F.col("year_offset").isNotNull())  # P11
         .withColumn("revenue", F.col("value").try_cast("long"))  # F10
         .filter(F.col("revenue").isNotNull())  # P10
-        .join(F.broadcast(dim), "company_code", "inner")  # J1 + P9
+        .join(F.broadcast(dim), "edinetCode", "inner")  # J1 + P9
         .select(
             (F.col("fiscal_year") + F.col("year_offset")).alias("year"),  # F11
             "companyname",

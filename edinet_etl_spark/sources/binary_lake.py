@@ -11,10 +11,12 @@ rows with the same scan machinery as any other file source —
 partition-parallel reads, pathGlobFilter pushdown, and no bytes read
 for pruned files when only metadata columns are selected.
 
-Downstream is IDENTICAL to the HTTP path: filename-encoded metadata is
-parsed relationally (F5/F6-style regexes), then the same
-unzip-and-pick island (`zip_extract.extract_filings`) feeds the parser —
-one code path for members regardless of how bytes arrived.
+Downstream is IDENTICAL to the HTTP path: the scan emits the same key
+columns (date_str, docID, edinetCode, docTypeCode) and file_type, each
+a column expression over the path, so arrival order is the same
+``(date_str, docID)`` sort key and no window ranks the files.  The same
+unzip-and-pick island (`zip_extract.extract_filings`) then feeds the
+parser — one code path for members regardless of how bytes arrived.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from pyspark.sql import functions as F
 # Lake layout convention:
 #   {docID}_{edinetCode}_{docTypeCode}_{fileType}.zip   (full form)
 #   {docID}_{edinetCode}_{fileType}.zip                 (legacy form)
-# with the submit date as the parent directory (dt=YYYY-MM-DD/).
+# with the list date as the parent directory (dt=YYYY-MM-DD/).
 # docTypeCode is the EDINET form code ('120' annual, '130' amendment —
 # the key the A1 amendment-priority dedup selects on); fileType is the
 # API payload type ('5' CSV, '1' XBRL).  They are DIFFERENT codes: an
@@ -40,35 +42,30 @@ _DT_RE = r"dt=(\d{4}-\d{2}-\d{2})"
 
 def read_filing_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     """Scan a directory tree of filing ZIPs into the same
-    (docID, edinetCode, docTypeCode, submitDateTime, file_type,
-    arrival_idx, content) shape `download_documents` produces, so
+    (date_str, docID, edinetCode, docTypeCode, file_type, content)
+    shape `download_documents` produces, so
     `zip_extract.extract_filings` composes unchanged.
 
-    file_type comes from the fileType component the same way the flag
-    dispatch does (P13): type 5 payloads carry CSV members, type 1
-    XBRL.  The arrival index (load-bearing order at L1, SURVEY
-    §2.11d) is the lake's modificationTime ordered rank — stable
-    because object stores version by write time.
+    ``date_str`` is the ``dt=`` directory, so lake arrival order is
+    ``(dt, docID)`` — the HTTP path's rule.  file_type comes from the
+    fileType component the same way the flag dispatch does (P13): type
+    5 payloads carry CSV members, type 1 XBRL.
     """
-    from pyspark.sql import Window
-
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.zip")
         .load(lake_dir)
     )
-    w = Window.orderBy("modificationTime", "path")
     return files.select(
+        F.regexp_extract("path", _DT_RE, 1).alias("date_str"),
         F.regexp_extract("path", _NAME_RE, 1).alias("docID"),
         F.regexp_extract("path", _NAME_RE, 2).alias("edinetCode"),
         # optional group: legacy 3-part names extract "" → NULL
         F.nullif(F.regexp_extract("path", _NAME_RE, 3), F.lit("")).alias(
             "docTypeCode"
         ),
-        F.regexp_extract("path", _DT_RE, 1).alias("submitDateTime"),
         F.when(F.regexp_extract("path", _NAME_RE, 4) == "5", "csv")
         .otherwise("xbrl")
         .alias("file_type"),
-        F.row_number().over(w).cast("long").alias("arrival_idx"),
         "content",
     )

@@ -21,6 +21,12 @@ the dates ``_iso_dates`` enumerates.  ``list_documents`` is the batch
 form; ``stream_documents`` is the reference's daily polling loop as a
 streaming read, one day per micro-batch.
 
+Arrival order — the list date, then docID (SURVEY §2.11d) — is the
+one rule ``ARRIVAL`` names.  It drives the head-N (L1) here and the
+first-seen/last-seen A1 rule in ``pipeline.transform``; both sort by
+the key columns themselves, so no stage materializes a rank, and no
+global window puts every document in one task.
+
 The HTTP client is injected (``Fetcher``) so tests run entirely
 offline against recorded fixtures; ``HttpFetcher`` (stdlib urllib) is
 the live implementation.  Rate limiting is per-partition: the global
@@ -42,8 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Metadata fields consumed downstream (src/extract.py:158,173-186;
-# src/utils/helper.py:82-85).  Booleans are the API's string flags.
+# Metadata fields consumed downstream (src/extract.py:158,173-186); the
+# reference's ``submitDateTime`` only names the file it writes
+# (src/utils/helper.py:82-85).  Booleans are the API's string flags.
 DOC_META_SCHEMA = T.StructType(
     [
         T.StructField("docID", T.StringType()),
@@ -51,13 +58,15 @@ DOC_META_SCHEMA = T.StructType(
         T.StructField("docTypeCode", T.StringType()),
         T.StructField("csvFlag", T.StringType()),
         T.StructField("xbrlFlag", T.StringType()),
-        T.StructField("submitDateTime", T.StringType()),
     ]
 )
 
 LIST_RESPONSE_SCHEMA = T.StructType(
     [T.StructField("results", T.ArrayType(DOC_META_SCHEMA))]
 )
+
+# Arrival order (SURVEY §2.11d): list date, then result order (= docID).
+ARRIVAL = ["date_str", "docID"]
 
 
 class Fetcher:
@@ -317,17 +326,6 @@ def dispatch_file_type(docs: DataFrame) -> DataFrame:
     )
 
 
-def with_arrival_index(docs: DataFrame) -> DataFrame:
-    """Pin the reference's load-bearing *arrival order* (list order =
-    date order, then API result order ≈ docID) with an explicit index
-    so `limit` and first-seen-wins dedup are deterministic
-    (SURVEY §2.11d)."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("date_str", "docID")
-    return docs.withColumn("arrival_idx", F.row_number().over(w))
-
-
 def download_documents(
     docs: DataFrame,
     fetcher: Fetcher,
@@ -336,16 +334,16 @@ def download_documents(
     num_partitions: int = 8,
 ) -> DataFrame:
     """S3: head-N in arrival order (L1, ``src/extract.py:204-205``)
-    then per-doc ZIP fetch.  Output: doc metadata + ``content`` binary.
-    Failed downloads emit nothing (reference swallows after retries)."""
+    then per-doc ZIP fetch.  Output: the doc's key columns and
+    ``file_type``, plus ``content`` binary.  Failed downloads emit
+    nothing (reference swallows after retries)."""
     policy = policy or RetryPolicy(jitter_base=0.5)
     per_partition_rate = policy.requests_per_second / max(num_partitions, 1)
 
-    docs = dispatch_file_type(with_arrival_index(docs))
+    docs = dispatch_file_type(docs)
     if companies_to_get is not None:
-        docs = docs.orderBy("arrival_idx").limit(companies_to_get)
-
-    meta = ["docID", "edinetCode", "docTypeCode", "submitDateTime", "file_type", "arrival_idx"]
+        docs = docs.orderBy(*ARRIVAL).limit(companies_to_get)
+    meta = [*ARRIVAL, "edinetCode", "docTypeCode", "file_type"]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         limiter = _PartitionLimiter(per_partition_rate)
@@ -361,9 +359,9 @@ def download_documents(
             out = pdf[meta].assign(content=content)
             yield out[out["content"].notna()]
 
-    schema = (
-        "docID string, edinetCode string, docTypeCode string, "
-        "submitDateTime string, file_type string, arrival_idx long, "
-        "content binary"
+    schema = [*docs.select(*meta).schema, T.StructField("content", T.BinaryType())]
+    return (
+        docs.select(*meta, "api_type")
+        .repartition(num_partitions)
+        .mapInPandas(fetch, schema=T.StructType(schema))
     )
-    return docs.repartition(num_partitions).mapInPandas(fetch, schema=schema)

@@ -10,7 +10,9 @@ Spark-first shape: no filesystem at all.  Picking the member needs one
 ZIP only, so it runs inside the ``mapInPandas`` island that holds the
 ZIP's bytes: open the archive in memory, keep the largest matching
 member and read only that one (1 ZIP row → 0 or 1 filing row, no
-shuffle).  The filename build (F7/F8) stays a column expression.
+shuffle).  There is no rename: the reference names the file only to
+read its metadata back later, and here the metadata columns ride along
+on the row — whatever arrives passes through untouched.
 """
 
 from __future__ import annotations
@@ -21,15 +23,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_META = ["docID", "edinetCode", "docTypeCode", "submitDateTime", "file_type", "arrival_idx"]
-
-_SCHEMA = (
-    "docID string, edinetCode string, docTypeCode string, "
-    "submitDateTime string, file_type string, arrival_idx long, "
-    "member_bytes binary"
-)
+from pyspark.sql import types as T
 
 
 def _best_member(content: bytes, ext: str) -> bytes | None:
@@ -54,9 +48,8 @@ def _best_member(content: bytes, ext: str) -> bytes | None:
 
 
 def extract_filings(downloads: DataFrame) -> DataFrame:
-    """Full S4 stage: one island picks each ZIP's target member, then
-    the canonical filename: F7 date normalize + F8 null-skipping concat
-    (``src/utils/helper.py:82-85``)."""
+    """Full S4 stage: one island picks each ZIP's target member.  The
+    output is the input minus ``content``, plus ``member_bytes``."""
 
     def pick(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -64,17 +57,9 @@ def extract_filings(downloads: DataFrame) -> DataFrame:
                 _best_member(content, ".csv" if file_type == "csv" else ".xbrl")
                 for content, file_type in zip(pdf["content"], pdf["file_type"])
             ]
-            out = pdf[_META].assign(member_bytes=member)
+            out = pdf.drop(columns="content").assign(member_bytes=member)
             yield out[out["member_bytes"].notna()]
 
-    date_str = F.regexp_replace(
-        F.substring_index(F.col("submitDateTime"), " ", 1), "-", ""
-    )
-    filename = F.concat(
-        F.concat_ws("_", F.col("edinetCode"), date_str, F.col("docTypeCode")),
-        F.lit("."),
-        F.col("file_type"),
-    )
-    return downloads.mapInPandas(pick, schema=_SCHEMA).select(
-        *_META, filename.alias("filename"), "member_bytes"
-    )
+    meta = [f for f in downloads.schema if f.name != "content"]
+    schema = T.StructType([*meta, T.StructField("member_bytes", T.BinaryType())])
+    return downloads.mapInPandas(pick, schema=schema)

@@ -11,6 +11,7 @@ error paths, empty-input sink guard, and retry swallow semantics.
 
 from __future__ import annotations
 
+import re
 from dataclasses import replace
 
 import pytest
@@ -25,7 +26,12 @@ from edinet_etl_spark.pipeline.transform import (
     select_best_filings,
 )
 from edinet_etl_spark.sources import company_master, edinet_api
-from edinet_etl_spark.sources.edinet_api import RetryPolicy, _PartitionLimiter, _with_retries
+from edinet_etl_spark.sources.edinet_api import (
+    ARRIVAL,
+    RetryPolicy,
+    _PartitionLimiter,
+    _with_retries,
+)
 from tests.fixtures.gen import (
     GOLDEN,
     XBRL_NO_FISCAL,
@@ -35,6 +41,10 @@ from tests.fixtures.gen import (
     _filing_csv_bytes,
     build_all,
 )
+
+
+# The document key every stage carries, in stage column order.
+FILING_KEY = [*ARRIVAL, "edinetCode", "docTypeCode"]
 
 
 @pytest.fixture(scope="module")
@@ -152,33 +162,60 @@ def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path, caplog):
 
 def test_zip_error_paths(spark, fixture_root, cfg):
     """B5: corrupt ZIP (D009) and no-matching-member ZIP (D007) emit no
-    filings; D001's largest .csv member wins (A2)."""
+    filings; D001's largest .csv member wins (A2).  Each filing carries
+    its document's key columns, and no filename is built."""
     _, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
-    got = {r["docID"]: r["filename"] for r in filings.collect()}
-    assert set(got) == {"D001", "D002", "D003"}
-    assert got["D001"] == "E00001_20240601_120.csv"
-    assert got["D002"] == "E00002_20240601_120.xbrl"
+    assert filings.columns == [*FILING_KEY, "file_type", "member_bytes"]
+    got = {
+        r["docID"]: (r["date_str"], r["edinetCode"], r["docTypeCode"], r["file_type"])
+        for r in filings.collect()
+    }
+    assert got == {
+        "D001": ("2024-06-01", "E00001", "120", "csv"),
+        "D002": ("2024-06-01", "E00002", "120", "xbrl"),
+        "D003": ("2024-06-02", "E00002", "130", "csv"),
+    }
+
+
+def test_download_head_n_in_arrival_order(spark, fixture_root, cfg):
+    """L1 (``src/extract.py:204-205``): ``companies_to_get`` keeps the
+    first N dispatched docs in ``(date_str, docID)`` order.  D006 has
+    no flag set, so it is dispatched out before the head-N."""
+    fetcher = FixtureFetcher(fixture_root)
+    dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
+    docs = edinet_api.list_documents(dates, fetcher, num_partitions=2)
+    companies = company_master.extract_companies(spark, cfg.csv_file)
+    targeted = edinet_api.filter_documents(docs, companies, ["120", "130"])
+    for n, want in [(3, {"D001", "D002", "D003"}), (2, {"D001", "D002"})]:
+        dl = edinet_api.download_documents(
+            targeted, fetcher, companies_to_get=n, num_partitions=2
+        )
+        assert {r["docID"] for r in dl.collect()} == want
 
 
 def test_select_best_filings_tie_rules(spark):
     """A1 exact dict-semantics: any 130 beats non-130; LAST-seen 130
     wins among 130s (reference overwrites on every 130); FIRST-seen
-    wins among non-130s (dict-insert guard).  src/transform.py:133."""
+    wins among non-130s (dict-insert guard).  src/transform.py:133.
+    Arrival is ``(date_str, docID)``: the date decides first, the docID
+    breaks a same-day tie."""
     rows = [
-        ("E00001_20240101_120.csv", 1, "csv", b""),
-        ("E00001_20240102_120.csv", 2, "csv", b""),   # first 120 wins → idx 1
-        ("E00002_20240101_130.csv", 3, "csv", b""),
-        ("E00002_20240102_130.csv", 4, "csv", b""),   # last 130 wins → idx 4
-        ("E00003_20240101_120.csv", 5, "csv", b""),
-        ("E00003_20240102_130.csv", 6, "csv", b""),   # 130 beats earlier 120
-        ("not-a-filing.txt", 7, "csv", b""),          # regex miss → dropped
+        ("2024-01-01", "D2", "E00001", "120"),   # first 120 (same day) wins
+        ("2024-01-01", "D3", "E00001", "120"),
+        ("2024-01-01", "D5", "E00002", "130"),
+        ("2024-01-02", "D4", "E00002", "130"),   # last 130 (next day) wins
+        ("2024-01-01", "D6", "E00003", "120"),
+        ("2024-01-02", "D1", "E00003", "130"),   # 130 beats earlier 120
+        ("2024-01-03", "D7", "XE00001", "130"),  # malformed code → dropped
+        ("2024-01-03", "D8", "E00004", None),    # no doc type → dropped
     ]
     df = spark.createDataFrame(
-        rows, "filename string, arrival_idx long, file_type string, member_bytes binary"
+        [(*r, "csv", b"") for r in rows],
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, member_bytes binary",
     )
-    best = {r["company_code"]: r["arrival_idx"]
-            for r in select_best_filings(df).collect()}
-    assert best == {"E00001": 1, "E00002": 4, "E00003": 6}
+    best = {r["edinetCode"]: r["docID"] for r in select_best_filings(df).collect()}
+    assert best == {"E00001": "D2", "E00002": "D4", "E00003": "D1"}
 
 
 def test_revenue_facts_semantics(spark):
@@ -223,21 +260,22 @@ def test_revenue_facts_semantics(spark):
     )
     df = spark.createDataFrame(
         [
-            ("E00002_20240601_120.xbrl", 1, "xbrl", bytearray(XBRL_VALID)),
-            ("E00009_20240601_120.xbrl", 2, "xbrl", bytearray(XBRL_NO_FISCAL)),
-            ("E00003_20240601_120.csv", 3, "csv", bytearray(good_csv)),
-            ("E00004_20240601_120.csv", 4, "csv", bytearray(bad_date_csv)),
-            ("E00005_20240601_120.csv", 5, "csv", bytearray(no_id_csv)),
+            ("2024-06-01", "D1", "E00002", "120", "xbrl", bytearray(XBRL_VALID)),
+            ("2024-06-01", "D2", "E00009", "120", "xbrl", bytearray(XBRL_NO_FISCAL)),
+            ("2024-06-01", "D3", "E00003", "120", "csv", bytearray(good_csv)),
+            ("2024-06-01", "D4", "E00004", "120", "csv", bytearray(bad_date_csv)),
+            ("2024-06-01", "D5", "E00005", "120", "csv", bytearray(no_id_csv)),
         ],
-        "filename string, arrival_idx long, file_type string, member_bytes binary",
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, member_bytes binary",
     )
     out = revenue_facts(df).collect()
     assert revenue_facts(df).columns == [
-        "filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year",
+        "docID", "edinetCode", "context_ref", "value", "unit_ref", "fiscal_year",
     ]
-    xbrl = [r for r in out if r["filename"].endswith(".xbrl")]
+    xbrl = [r for r in out if r["docID"] in ("D1", "D2")]
     by_ctx = {r["context_ref"]: r for r in xbrl}
-    assert all(r["filename"].startswith("E00002") for r in xbrl)
+    assert all(r["docID"] == "D1" and r["edinetCode"] == "E00002" for r in xbrl)
     # 4 of the 5 post-marker elements carry contextRef+text; the bare
     # <Revenue>2222</Revenue> is skipped (src/transform.py:60)
     assert sorted(by_ctx) == [
@@ -247,8 +285,8 @@ def test_revenue_facts_semantics(spark):
     assert by_ctx["Prior2YearDuration"]["unit_ref"] == "JPY"  # F13 default
     assert all(r["fiscal_year"] == 2024 for r in xbrl)
 
-    csv = [r for r in out if r["filename"].endswith(".csv")]
-    assert {r["filename"] for r in csv} == {"E00003_20240601_120.csv"}
+    csv = [r for r in out if r["docID"] not in ("D1", "D2")]
+    assert {r["docID"] for r in csv} == {"D3"}
     assert sorted((r["context_ref"], r["value"], r["unit_ref"]) for r in csv) == [
         ("CurrentYearDuration", "10", "JPY"),
         ("Prior1YearDuration", "9", None),
@@ -256,7 +294,7 @@ def test_revenue_facts_semantics(spark):
         ("Prior3YearDuration", "7", "JPY"),
         ("Prior4YearDuration", "6", "JPY"),
     ]
-    assert all(r["fiscal_year"] == 2025 and r["arrival_idx"] == 3 for r in csv)
+    assert all(r["fiscal_year"] == 2025 and r["edinetCode"] == "E00003" for r in csv)
 
 
 def test_retry_swallow_and_recover(spark, fixture_root, cfg):
@@ -507,11 +545,12 @@ def test_binary_lake_ingestion(spark, tmp_path):
     (lake / "broken_E9_1.zip").write_bytes(b"not a zip")
 
     filings = read_filing_lake(spark, str(tmp_path / "lake"))
+    assert filings.columns == [*FILING_KEY, "file_type", "content"]
     rows = {r["docID"]: r for r in filings.collect()}
     assert set(rows) == {"D001", "D002", "D003", "D004", "broken"}
     assert rows["D001"]["file_type"] == "csv"
     assert rows["D001"]["docTypeCode"] == "120"
-    assert rows["D001"]["submitDateTime"] == "2024-06-01"
+    assert rows["D001"]["date_str"] == "2024-06-01"
     assert rows["D002"]["file_type"] == "xbrl"
     # the amendment-priority key survives lake ingestion (the A1
     # '130'-beats-'120' rule depends on it)
@@ -520,19 +559,86 @@ def test_binary_lake_ingestion(spark, tmp_path):
     assert rows["broken"]["file_type"] == "xbrl"
 
     got = {
-        r["docID"]: (r["filename"], bytes(r["member_bytes"]))
+        r["docID"]: (
+            r["date_str"], r["edinetCode"], r["docTypeCode"], r["file_type"],
+            bytes(r["member_bytes"]),
+        )
         for r in extract_filings(filings).collect()
     }
     # corrupt zip and corrupt chosen member skipped; largest member wins
     assert got == {
-        "D001": ("E00001_20240601_120.csv", b"y" * 99),
-        "D002": ("E00002_20240601_130.xbrl", b"<xbrl/>"),
-        "D003": ("E00003_20240601_120.csv", b"z" * 50),
+        "D001": ("2024-06-01", "E00001", "120", "csv", b"y" * 99),
+        "D002": ("2024-06-01", "E00002", "130", "xbrl", b"<xbrl/>"),
+        "D003": ("2024-06-01", "E00003", "120", "csv", b"z" * 50),
     }
+
+
+def test_lake_arrival_is_dt_then_doc_id(spark, tmp_path):
+    """Lake arrival order is the HTTP path's ``(date_str, docID)``, with
+    the date from the ``dt=`` directory, not the files' mtimes (here the
+    reverse of the date order) and not the docID alone (here also the
+    reverse).  A1 keeps the first-seen 120 and the last-seen 130."""
+    import os
+
+    from edinet_etl_spark.sources.binary_lake import read_filing_lake
+    from edinet_etl_spark.sources.zip_extract import extract_filings
+
+    landed = {  # dt → (file name, mtime): the later dt is the older file
+        "2024-06-01": [("D20_E00001_120_5.zip", 2_000_000_000),
+                       ("D40_E00002_130_5.zip", 2_000_000_000)],
+        "2024-06-02": [("D10_E00001_120_5.zip", 1_000_000_000),
+                       ("D30_E00002_130_5.zip", 1_000_000_000)],
+    }
+    for dt, files in landed.items():
+        part = tmp_path / "lake" / f"dt={dt}"
+        part.mkdir(parents=True)
+        for name, mtime in files:
+            (part / name).write_bytes(_zip_bytes({"m.csv": name.encode()}))
+            os.utime(part / name, (mtime, mtime))
+
+    filings = extract_filings(read_filing_lake(spark, str(tmp_path / "lake")))
+    best = {r["edinetCode"]: r["docID"] for r in select_best_filings(filings).collect()}
+    assert best == {"E00001": "D20", "E00002": "D30"}
 
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _window_nodes(plan: str) -> list[str]:
+    """The plan's ``Window`` operators (``WindowGroupLimit`` excluded)."""
+    return [line for line in plan.splitlines() if re.search(r"\bWindow \[", line)]
+
+
+def test_ingestion_has_no_global_window(spark, fixture_root, cfg, tmp_path):
+    """Arrival order is a sort key, never a global rank: neither
+    ingestion path plans a ``Window`` or a single-partition exchange,
+    and A1's window, partitioned by company, is the pipeline's only
+    ``Window``."""
+    from edinet_etl_spark.sources.binary_lake import read_filing_lake
+    from edinet_etl_spark.sources.zip_extract import extract_filings
+
+    fetcher = FixtureFetcher(fixture_root)
+    dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
+    docs = edinet_api.list_documents(dates, fetcher, num_partitions=2)
+    companies = company_master.extract_companies(spark, cfg.csv_file)
+    targeted = edinet_api.filter_documents(docs, companies, ["120", "130"])
+    lake = tmp_path / "lake" / "dt=2024-06-01"
+    lake.mkdir(parents=True)
+    (lake / "D001_E00001_120_5.zip").write_bytes(_zip_bytes({"a.csv": b"x"}))
+    for ingest in (
+        edinet_api.download_documents(targeted, fetcher, companies_to_get=None),
+        extract_filings(read_filing_lake(spark, str(tmp_path / "lake"))),
+    ):
+        plan = _physical_plan(ingest)
+        assert "SinglePartition" not in plan, plan
+        assert _window_nodes(plan) == [], plan
+
+    plan = _physical_plan(
+        process_financial_documents(*reversed(ingest_filings(spark, cfg, fetcher)))
+    )
+    [a1] = _window_nodes(plan)
+    assert re.search(r"\], \[edinetCode#\d+\], \[", a1), a1
 
 
 def test_filing_islands_plan_shape(spark):
@@ -542,20 +648,20 @@ def test_filing_islands_plan_shape(spark):
     from edinet_etl_spark.sources.zip_extract import extract_filings
 
     downloads = spark.createDataFrame(
-        [("D1", "E00001", "120", "2024-06-01 09:00", "csv", 1,
+        [("2024-06-01", "D1", "E00001", "120", "csv",
           bytearray(_zip_bytes({"a.csv": b"x"})))],
-        "docID string, edinetCode string, docTypeCode string, "
-        "submitDateTime string, file_type string, arrival_idx long, "
-        "content binary",
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, content binary",
     )
     plan = _physical_plan(extract_filings(downloads))
     assert plan.count("MapInPandas") == 1, plan
     assert "Window" not in plan and "Exchange" not in plan, plan
 
     filings = spark.createDataFrame(
-        [("E00001_20240601_120.csv", 1, "csv", bytearray(b"")),
-         ("E00002_20240601_120.xbrl", 2, "xbrl", bytearray(b""))],
-        "filename string, arrival_idx long, file_type string, member_bytes binary",
+        [("2024-06-01", "D1", "E00001", "120", "csv", bytearray(b"")),
+         ("2024-06-01", "D2", "E00002", "120", "xbrl", bytearray(b""))],
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, member_bytes binary",
     )
     companies = spark.createDataFrame(
         [("E00001", "Alpha Corp", "Manufacturing")],

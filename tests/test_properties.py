@@ -38,6 +38,7 @@ _SETTINGS = dict(
 
 # ---------------------------------------------------------------- A1
 _filing = st.tuples(
+    st.sampled_from(["2024-01-01", "2024-01-02", "2024-01-03"]),  # list date
     st.sampled_from(["E01", "E02", "E03"]),          # company
     st.sampled_from(["120", "130", "140"]),          # doc type
 )
@@ -46,23 +47,23 @@ _filing = st.tuples(
 @given(st.lists(_filing, min_size=1, max_size=12))
 @settings(**_SETTINGS)
 def test_select_best_filings_matches_reference_dict_model(spark, filings):
+    # docIDs follow generation order, dates are drawn: arrival order
+    # (date_str, docID) then crosses days in any pattern
     rows = [
-        (f"{company}_20240101_{dtype}.csv", idx, "csv", b"")
-        for idx, (company, dtype) in enumerate(filings, start=1)
+        (date_str, f"D{i:02d}", company, dtype, "csv", b"")
+        for i, (date_str, company, dtype) in enumerate(filings)
     ]
     df = spark.createDataFrame(
         rows,
-        "filename string, arrival_idx long, file_type string, member_bytes binary",
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, member_bytes binary",
     )
-    got = {
-        r["company_code"]: r["arrival_idx"]
-        for r in select_best_filings(df).collect()
-    }
-    # the reference's loop, verbatim semantics
-    model: dict[str, int] = {}
-    for idx, (company, dtype) in enumerate(filings, start=1):
+    got = {r["edinetCode"]: r["docID"] for r in select_best_filings(df).collect()}
+    # the reference's loop, verbatim semantics, in arrival order
+    model: dict[str, str] = {}
+    for date_str, doc_id, company, dtype, _, _ in sorted(rows):
         if company not in model or dtype == "130":
-            model[company] = idx
+            model[company] = doc_id
     assert got == model
 
 
@@ -178,16 +179,15 @@ def test_zip_member_tie_breaks_deterministically(spark):
 
     for order in (["a.csv", "b.csv", "c.csv"], ["c.csv", "b.csv", "a.csv"]):
         df = spark.createDataFrame(
-            [("D1", "E00001", "120", "2024-06-01 09:00", "csv", 1,
+            [("2024-06-01", "D1", "E00001", "120", "csv",
               bytearray(zip_bytes(order)))],
-            "docID string, edinetCode string, docTypeCode string, "
-            "submitDateTime string, file_type string, arrival_idx long, "
-            "content binary",
+            "date_str string, docID string, edinetCode string, docTypeCode string, "
+            "file_type string, content binary",
         )
         rows = extract_filings(df).collect()
         assert len(rows) == 1
         # desc(member_name) tiebreak → 'c.csv' wins in either order
-        assert rows[0]["filename"] == "E00001_20240601_120.csv"
+        assert rows[0][:5] == ("2024-06-01", "D1", "E00001", "120", "csv")
         assert rows[0]["member_bytes"] == bytearray(b"c" * 100)
 
 
