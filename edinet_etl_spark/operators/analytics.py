@@ -1696,6 +1696,38 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _segment_price_counts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Order totalprice per customer market segment, collapsed to its
+    distinct values: ``byval`` (segment, price, cnt), and ``cum`` adds
+    each value's running count ``cumcnt`` and the segment total ``n``
+    — one shuffle to (segment, price), one bounded per-segment window.
+    The shared front of the exact per-segment order statistics."""
+    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    seg = o.join(c, o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("segment"), F.col("o_totalprice").alias("price")
+    )
+    byval = seg.groupBy("segment", "price").agg(
+        F.count("*").cast("bigint").alias("cnt")
+    )
+    wcum = (
+        Window.partitionBy("segment")
+        .orderBy("price")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wtot = Window.partitionBy("segment")
+    cum = byval.select(
+        "segment",
+        "price",
+        "cnt",
+        F.sum("cnt").over(wcum).alias("cumcnt"),
+        F.sum("cnt").over(wtot).alias("n"),
+    )
+    return byval, cum
+
+
 @query(
     "exact_group_percentiles",
     oracle="""
@@ -1752,26 +1784,7 @@ def exact_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     set ever outgrew a partition, the binned two-pass sketch is the
     documented fallback."""
     prep(spark)
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    seg = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"), F.col("o_totalprice").alias("price")
-    )
-    byval = seg.groupBy("segment", "price").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    wcum = (
-        Window.partitionBy("segment")
-        .orderBy("price")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("segment")
-    cum = byval.select(
-        "segment",
-        "price",
-        F.sum("cnt").over(wcum).alias("cumcnt"),
-        F.sum("cnt").over(wtot).alias("n"),
-    )
+    _byval, cum = _segment_price_counts(spark, sf_dir)
     return (
         cum.groupBy("segment")
         .agg(
@@ -1949,27 +1962,7 @@ def winsorized_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed grid that selected the thresholds; the threshold table
     (|segments| rows) broadcasts back."""
     prep(spark)
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    seg = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"), F.col("o_totalprice").alias("price")
-    )
-    byval = seg.groupBy("segment", "price").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    wcum = (
-        Window.partitionBy("segment")
-        .orderBy("price")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("segment")
-    cum = byval.select(
-        "segment",
-        "price",
-        "cnt",
-        F.sum("cnt").over(wcum).alias("cumcnt"),
-        F.sum("cnt").over(wtot).alias("n"),
-    )
+    byval, cum = _segment_price_counts(spark, sf_dir)
     thr = cum.groupBy("segment").agg(
         F.min(F.when(100 * F.col("cumcnt") >= F.col("n"), F.col("price"))).alias(
             "p01"
@@ -2240,27 +2233,7 @@ def interpolated_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-value collapse, bounded per-segment window, constant
     output."""
     prep(spark)
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    seg = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"), F.col("o_totalprice").alias("price")
-    )
-    byval = seg.groupBy("segment", "price").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    wcum = (
-        Window.partitionBy("segment")
-        .orderBy("price")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wtot = Window.partitionBy("segment")
-    cum = byval.select(
-        "segment",
-        "price",
-        "cnt",
-        F.sum("cnt").over(wcum).alias("cumcnt"),
-        F.sum("cnt").over(wtot).alias("n"),
-    )
+    _byval, cum = _segment_price_counts(spark, sf_dir)
     aggs = [F.max("n").cast("bigint").alias("n_orders")]
     parts = {}
     for p_num, name in ((1, "q1"), (2, "median"), (3, "q3")):

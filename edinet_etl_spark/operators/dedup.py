@@ -707,10 +707,22 @@ def jaccard_verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     cand = candidate_pairs(lsh_bands(minhash_signatures(docs)))
     # round-10: same array-local verify as
-    # `containment_verify_candidates` — per-doc DISTINCT token sets
-    # stay in one row (no exploded-token joins, no (doc, token)
-    # re-shuffle), and the exact intersection is
-    # size(array_intersect(...)) per candidate pair
+    # `containment_verify_candidates`
+    nc = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
+    jaccard = nc / (F.col("sa_n") + F.col("sb_n") - nc)
+    return (
+        _with_token_sets(cand, docs)
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.8)
+    )
+
+
+def _with_token_sets(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) with each side's DISTINCT token
+    set (toks_a, toks_b) and its size (sa_n, sb_n) in the row: token
+    sets stay one row per doc (no exploded-token joins, no (doc, token)
+    re-shuffle), so the exact intersection is
+    size(array_intersect(...)) per candidate pair."""
     toksets = docs.select(
         "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
     )
@@ -724,13 +736,8 @@ def jaccard_verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("toks").alias("toks_b"),
         F.size("toks").alias("sb_n"),
     )
-    nc = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    jaccard = nc / (F.col("sa_n") + F.col("sb_n") - nc)
-    return (
-        cand.join(ta, F.col("ta_id") == F.col("doc_a"))
-        .join(tb, F.col("tb_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
+    return cand.join(ta, F.col("ta_id") == F.col("doc_a")).join(
+        tb, F.col("tb_id") == F.col("doc_b")
     )
 
 
@@ -820,23 +827,9 @@ def containment_verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     cand = candidate_pairs(lsh_bands(minhash_signatures(canon)))
-    toksets = canon.select(
-        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
-    )
-    ta = toksets.select(
-        F.col("doc_id").alias("ta_id"),
-        F.col("toks").alias("toks_a"),
-        F.size("toks").alias("sa_n"),
-    )
-    tb = toksets.select(
-        F.col("doc_id").alias("tb_id"),
-        F.col("toks").alias("toks_b"),
-        F.size("toks").alias("sb_n"),
-    )
     nc = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
     return (
-        cand.join(ta, F.col("ta_id") == F.col("doc_a"))
-        .join(tb, F.col("tb_id") == F.col("doc_b"))
+        _with_token_sets(cand, canon)
         .select(
             "doc_a",
             "doc_b",
@@ -896,29 +889,16 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hence no DISTINCT).  One explode + one aggregate — a single
     shuffle on doc_id."""
     prep(spark)
-    docs = load(spark, sf_dir, "documents")
-    # same unsplittable-input parallelization as _shingles: repartition
-    # on doc_id so token hashing uses every core and the groupBy(doc_id)
-    # needs no second shuffle
-    docs = docs.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
-    )
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).select("doc_id", F.md5("tok").alias("tok_md5"))
-    sums = tok.groupBy("doc_id").agg(
-        *[F.sum(_simhash_bit(j)).alias(f"s{j}") for j in range(_SIMHASH_BITS)]
-    )
-    bits = [
-        F.when(F.col(f"s{j}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for j in range(_SIMHASH_BITS)
-    ]
-    return sums.select("doc_id", F.concat(*bits).alias("simhash"))
+    return _simhash_sigs(spark, load(spark, sf_dir, "documents"))
 
 
 def _simhash_sigs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """16-bit simhash signatures for an arbitrary (doc_id, text) frame
-    — the body of `simhash_signatures`, reusable over canonical docs."""
+    — `simhash_signatures` over the documents table, reused over
+    canonical docs."""
+    # same unsplittable-input parallelization as _shingles: repartition
+    # on doc_id so token hashing uses every core and the groupBy(doc_id)
+    # needs no second shuffle
     docs = docs.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
     )
@@ -1232,8 +1212,10 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     while cedges.count() > 0:
         # one min-label round at component level, then path-halving
-        # (adopt the target's own mapping) — collapses chains in
-        # O(log n) rounds instead of O(diameter)
+        # (adopt the target's own mapping).  Rounds still grow with the
+        # diameter: an id-ordered 64-node path takes 31, the star
+        # alternation (graph.largestar_smallstar_over) 7.  Near-dup
+        # components are shallow, and on them min-label is the faster.
         m = (
             cedges.groupBy("u")
             .agg(F.least(F.col("u"), F.min("v")).alias("c"))

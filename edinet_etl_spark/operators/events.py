@@ -43,7 +43,14 @@ def tumbling_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time window: ``F.window(ts, '1 hour')`` — epoch-
     aligned, identical semantics in batch and streaming."""
     prep(spark)
-    ev = load(spark, sf_dir, "events")
+    return hourly_stats(load(spark, sf_dir, "events")).orderBy(
+        "window_start", "event_type"
+    )
+
+
+def hourly_stats(ev: DataFrame) -> DataFrame:
+    """Per-(1-hour tumbling window, event_type) count and exact value
+    total over an events frame, batch or streaming."""
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum(F.col("value"), "total_value"))
@@ -54,7 +61,6 @@ def tumbling_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -126,7 +132,12 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic gaps-and-islands SQL.  session_window's end = last event +
     gap, matching MAX(ts) + gap."""
     prep(spark)
-    ev = load(spark, sf_dir, "events")
+    return sessions(load(spark, sf_dir, "events")).orderBy("user_id", "session_start")
+
+
+def sessions(ev: DataFrame) -> DataFrame:
+    """Per-user 5-minute-gap sessions with event count and exact value
+    total over an events frame, batch or streaming."""
     return (
         ev.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), dsum(F.col("value"), "session_value"))
@@ -137,7 +148,6 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "session_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 

@@ -66,6 +66,20 @@ _SQL_COPURCHASE = """
 """
 
 
+def copurchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase self-join: lineitem aliased ``a`` and ``b``,
+    joined on l_orderkey with ``a.l_partkey < b.l_partkey``."""
+    li = parallel_scan(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    a, b = li.alias("a"), li.alias("b")
+    return a.join(
+        b,
+        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    )
+
+
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAZY distinct co-purchase pairs (u < v), the Spark twin of
     ``_SQL_COPURCHASE``'s ``pairs`` CTE: one self-join on l_orderkey +
@@ -73,18 +87,29 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate (bucket lineitem by l_orderkey) and the distinct is the
     dedup shuffle.  Single-pass consumers (degree_stats) read this
     directly; multi-pass consumers go through `copurchase_edges`."""
-    li = parallel_scan(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
+        copurchase_join(spark, sf_dir)
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
+    )
+
+
+def copurchase_support_pairs(
+    spark: SparkSession, sf_dir: str, min_support: int
+) -> DataFrame:
+    """LAZY support-filtered co-purchase pairs (u < v): pairs bought
+    together in >= ``min_support`` DISTINCT orders.  The support
+    aggregate is the first shuffle and the shrink (115k -> 3.4k edges
+    at sf0.01 for support 2).  Each caller passes its own module's
+    dial (``graph._STAR_SUPPORT``, ``sketches._RA_MIN_SUPPORT``)."""
+    return (
+        copurchase_join(spark, sf_dir)
+        .groupBy(
+            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+        )
+        .agg(F.countDistinct("a.l_orderkey").alias("support"))
+        .filter(F.col("support") >= min_support)
+        .select("u", "v")
     )
 
 
@@ -731,29 +756,6 @@ _STAR_SUPPORT = 2
 _STAR_MAX_ROUNDS = 50  # guard only; measured 5 rounds at sf0.01
 
 
-def star_support_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct support-filtered co-purchase pairs (u < v) — the same
-    backbone `sketches.copurchase_link_prediction` mines, re-spelled
-    here so the family's dial stays module-local."""
-    li = parallel_scan(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .agg(F.countDistinct("a.l_orderkey").alias("support"))
-        .filter(F.col("support") >= _STAR_SUPPORT)
-        .select("u", "v")
-    )
-
-
 def largestar_smallstar_over(
     pairs: DataFrame, max_rounds: int = _STAR_MAX_ROUNDS
 ) -> tuple[DataFrame, int]:
@@ -775,12 +777,13 @@ def largestar_smallstar_over(
 
     Kiveris et al. prove the alternation preserves components and
     converges in O(log n) rounds on ANY graph — unlike min-label
-    propagation, whose round count is the component diameter (the
-    pointer-jumping variant in `neardup_components` gets O(log d),
-    still diameter-dependent).  At convergence the edge set is a
-    disjoint star forest rooted at each component's minimum node, so
-    the labels read off relationally: members from the edges, roots
-    from the distinct targets.
+    propagation, whose round count grows with the component diameter:
+    `neardup_components`' variant (one path-halving jump per round)
+    takes 31 rounds on the id-ordered 64-node path, where this takes 7
+    (SCALE.md).  At convergence the edge set is a disjoint star forest
+    rooted at each component's minimum node, so the labels read off
+    relationally: members from the edges, roots from the distinct
+    targets.
 
     Convergence detection is the documented bounded-fixpoint idiom
     (CLAUDE.md: 1-row scalar pulls): the edge multiset is compared by
@@ -887,12 +890,13 @@ def largestar_smallstar_components(
     not the giant blob the raw co-purchase graph collapses to.
 
     Why a second components algorithm when `neardup_components`
-    exists: min-label propagation needs rounds proportional to the
-    component DIAMETER (O(log d) with pointer jumping) — fine for
-    near-dup clusters whose diameter is tiny, but unbounded on
-    path-shaped graphs; the star alternation (Kiveris et al. 2014)
-    converges in O(log n) rounds on ANY topology and is the published
-    100 TB-scale form.  Measured on this backbone both take 3 rounds
+    exists: min-label propagation needs rounds that grow with the
+    component DIAMETER, path halving included (31 rounds on an
+    id-ordered 64-node path, against the star's 7) — fine for near-dup
+    clusters whose diameter is tiny, but unbounded on path-shaped
+    graphs; the star alternation (Kiveris et al. 2014) converges in
+    O(log n) rounds on ANY topology and is the published 100 TB-scale
+    form.  Measured on this backbone both take 3 rounds
     (SCALE.md has the side-by-side).
 
     Exactness: all-integer throughout (part keys, min reductions,
@@ -912,7 +916,7 @@ def largestar_smallstar_components(
     BY component (lint-bounded)."""
     prep(spark)
     labels, _rounds = largestar_smallstar_over(
-        star_support_pairs(spark, sf_dir)
+        copurchase_support_pairs(spark, sf_dir, _STAR_SUPPORT)
     )
     w_sz = Window.partitionBy("component")
     return labels.select(

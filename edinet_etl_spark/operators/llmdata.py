@@ -864,6 +864,29 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TEMP_TAU = 0.5
 
 
+def _temperature_probs(docs: DataFrame) -> DataFrame:
+    """Per-source keep probability (source, n_docs, p_sample) of
+    temperature sampling: min(1, τ·N·√n / (Σ√n · n)), a |sources|-row
+    table built from one map-side-combined aggregate and a one-row
+    broadcast of the corpus-global (total, Σ√n) pair."""
+    stats = docs.groupBy("source").agg(F.count("*").cast("bigint").alias("n_docs"))
+    tot = stats.agg(
+        F.sum("n_docs").cast("bigint").alias("total_docs"),
+        dsum(F.sqrt(F.col("n_docs").cast("double")), "sum_w"),
+    )
+    return stats.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "n_docs",
+        F.least(
+            F.lit(1.0),
+            F.lit(_TEMP_TAU)
+            * F.col("total_docs").cast("double")
+            * F.sqrt(F.col("n_docs").cast("double"))
+            / (F.col("sum_w") * F.col("n_docs").cast("double")),
+        ).alias("p_sample"),
+    )
+
+
 @query(
     "source_temperature_sampling",
     oracle=f"""
@@ -917,22 +940,7 @@ def source_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows but the linear scan."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    stats = docs.groupBy("source").agg(F.count("*").cast("bigint").alias("n_docs"))
-    tot = stats.agg(
-        F.sum("n_docs").cast("bigint").alias("total_docs"),
-        dsum(F.sqrt(F.col("n_docs").cast("double")), "sum_w"),
-    )
-    probs = stats.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        F.least(
-            F.lit(1.0),
-            F.lit(_TEMP_TAU)
-            * F.col("total_docs").cast("double")
-            * F.sqrt(F.col("n_docs").cast("double"))
-            / (F.col("sum_w") * F.col("n_docs").cast("double")),
-        ).alias("p_sample"),
-    )
+    probs = _temperature_probs(docs)
     u = (
         F.conv(
             F.substring(
@@ -1395,21 +1403,7 @@ def training_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (split, shard) — composition adds selectivity, not passes."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    stats = docs.groupBy("source").agg(F.count("*").cast("bigint").alias("n_docs"))
-    tot = stats.agg(
-        F.sum("n_docs").cast("bigint").alias("total_docs"),
-        dsum(F.sqrt(F.col("n_docs").cast("double")), "sum_w"),
-    )
-    probs = stats.crossJoin(F.broadcast(tot)).select(
-        "source",
-        F.least(
-            F.lit(1.0),
-            F.lit(_TEMP_TAU)
-            * F.col("total_docs").cast("double")
-            * F.sqrt(F.col("n_docs").cast("double"))
-            / (F.col("sum_w") * F.col("n_docs").cast("double")),
-        ).alias("p_sample"),
-    )
+    probs = _temperature_probs(docs)
     sid = F.col("doc_id").cast("string")
     u = (
         F.conv(F.substring(F.md5(F.concat(F.lit("temp:"), sid)), 1, 8), 16, 10)

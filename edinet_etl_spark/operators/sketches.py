@@ -32,7 +32,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum
-from edinet_etl_spark.operators.graph import copurchase_edges, pagerank_over
+from edinet_etl_spark.operators.graph import (
+    copurchase_edges,
+    copurchase_join,
+    copurchase_pairs,
+    copurchase_support_pairs,
+    pagerank_over,
+)
 from edinet_etl_spark.registry import query
 from edinet_etl_spark.session import materialize, prep
 from edinet_etl_spark.tables import load, parallel_scan
@@ -456,19 +462,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σ C(d⁺,2)); closure_rate = triangles / wedges is one exact
     integer division."""
     prep(spark)
-    li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    return triangle_card(pairs)
+    return triangle_card(copurchase_pairs(spark, sf_dir))
 
 
 def triangle_card(pairs: DataFrame) -> DataFrame:
@@ -589,14 +583,8 @@ def copurchase_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered over the surviving pairs."""
     prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
     pair_n = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
+        copurchase_join(spark, sf_dir)
         .select(
             F.col("a.l_orderkey").alias("ok"),
             F.col("a.l_partkey").alias("u"),
@@ -1481,20 +1469,8 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     center), one groupBy (u,v) for the score, one anti-join against
     the existing edges."""
     prep(spark)
-    li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = materialize(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.countDistinct("a.l_orderkey").alias("support"))
-        .filter(F.col("support") >= _RA_MIN_SUPPORT)
-        .select("u", "v")
-        # feeds degrees, wedge enumeration and the anti-join
-    )
+    # feeds degrees, wedge enumeration and the anti-join
+    pairs = materialize(copurchase_support_pairs(spark, sf_dir, _RA_MIN_SUPPORT))
     deg = (
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))

@@ -252,10 +252,13 @@ def gapfill_locf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gapfill_locf(ev, users, "2024-01-01 00:00:00", "2024-01-08 00:00:00")
 
 
-def gapfill_locf(ev: DataFrame, users: DataFrame, start: str, end: str) -> DataFrame:
-    """Core of gapfill_locf_hourly over any events-shaped frame
-    (user_id, ts, value, event_id): dense (users x hours) grid,
-    per-hour last observation, LOCF forward fill."""
+def _hourly_grid(
+    ev: DataFrame, users: DataFrame, start: str, end: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the gap-fill join over [start, end): the dense
+    (user_id, grid_hour) grid of ``users`` x hours, and each user's
+    last observation per hour (ties to the larger event_id) as
+    ``hour_value``."""
     spark = ev.sparkSession
     ev = ev.filter(
         (F.col("ts") >= F.lit(start).cast("timestamp"))
@@ -286,6 +289,14 @@ def gapfill_locf(ev: DataFrame, users: DataFrame, start: str, end: str) -> DataF
         .filter(F.col("rn") == 1)
         .select("user_id", "grid_hour", "hour_value")
     )
+    return grid, hourly
+
+
+def gapfill_locf(ev: DataFrame, users: DataFrame, start: str, end: str) -> DataFrame:
+    """Core of gapfill_locf_hourly over any events-shaped frame
+    (user_id, ts, value, event_id): dense (users x hours) grid,
+    per-hour last observation, LOCF forward fill."""
+    grid, hourly = _hourly_grid(ev, users, start, end)
     w_locf = (
         Window.partitionBy("user_id")
         .orderBy("grid_hour")
@@ -627,36 +638,7 @@ def gapfill_interp(
     """Linear-interpolation gap-fill core over any events-shaped frame
     (user_id, ts, value, event_id) — factored like `gapfill_locf` so
     the hypothesis model test can drive it."""
-    spark = ev.sparkSession
-    ev = ev.filter(
-        (F.col("ts") >= F.lit(start).cast("timestamp"))
-        & (F.col("ts") < F.lit(end).cast("timestamp"))
-    )
-    hours = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(start).cast("timestamp"),
-                F.lit(end).cast("timestamp"),
-                F.expr("interval 1 hour"),
-            )
-        ).alias("grid_hour")
-    )
-    grid = users.crossJoin(F.broadcast(hours))
-    w_pick = Window.partitionBy("user_id", "grid_hour").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    hourly = (
-        ev.select(
-            "user_id",
-            F.date_trunc("hour", "ts").alias("grid_hour"),
-            F.col("value").alias("hour_value"),
-            "ts",
-            "event_id",
-        )
-        .withColumn("rn", F.row_number().over(w_pick))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "grid_hour", "hour_value")
-    )
+    grid, hourly = _hourly_grid(ev, users, start, end)
     h = (
         (
             F.col("grid_hour").cast("long")

@@ -103,7 +103,7 @@ def _csv_facts(data: bytes) -> tuple[int | None, list[tuple]]:
     fiscal year from the DEI rows (``:99-102``)."""
     try:
         df = pd.read_csv(io.BytesIO(data), sep="\t", encoding="utf-16")
-    except Exception:  # noqa: BLE001 — unparseable filing → skip
+    except ValueError:  # bad UTF-16 or unparseable table → skip
         return None, []
     n = len(df)
     ids = [_text(v) for v in df.get("要素ID", [""] * n)]
@@ -124,7 +124,9 @@ def _xbrl_facts(data: bytes) -> tuple[int | None, list[tuple]]:
     a contextRef and text; ``unitRef`` defaults to 'JPY' (F13)."""
     try:
         root = ET.fromstring(data)
-    except Exception:  # noqa: BLE001 — malformed XML → skip
+    except (ET.ParseError, LookupError, ValueError):
+        # malformed XML, or a declared encoding that is unknown
+        # (LookupError) or multi-byte (ValueError) → skip
         return None, []
     elements = list(root.iter())
     fiscal_year = _fiscal_year(

@@ -37,9 +37,10 @@ the reference's single *global* limiter semantics when summed.
 from __future__ import annotations
 
 import random
+import re
 import time
 import urllib.error
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 from datetime import date, timedelta
 
@@ -326,6 +327,47 @@ def dispatch_file_type(docs: DataFrame) -> DataFrame:
     )
 
 
+def arrow_batch_bytes(spark: SparkSession) -> int:
+    """The session's ``spark.sql.execution.arrow.maxBytesPerBatch`` in
+    bytes.  Spark prints the conf as a byte string (``67108864b`` on
+    Spark 4.1); a bare number, ``k``/``m``/``g``/``t``/``p`` and an
+    optional trailing ``b`` all parse, binary multiples as in Spark."""
+    raw = spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
+    if m is None:
+        raise ValueError(f"maxBytesPerBatch is not a byte size: {raw!r}")
+    return int(m.group(1)) * 1024 ** "_kmgtp".index(m.group(2) or "_")
+
+
+def bounded_frames(
+    pdf: pd.DataFrame, column: str, values: Iterable[bytes | None], budget: int
+) -> Iterator[pd.DataFrame]:
+    """``pdf`` with ``values`` as its binary ``column``, without the
+    rows whose value is None, yielded in frames whose ``column`` bytes
+    stay within ``budget``; a single larger value gets a frame of its
+    own.  ``values`` is consumed lazily, one row at a time.
+
+    PySpark turns each frame an island yields into one Arrow batch,
+    and one Arrow ``binary`` array holds at most 2 GiB, so an island
+    that yields one frame per input batch fails once the bytes of
+    that batch's rows pass 2 GiB.  Flushing by bytes also bounds the
+    bytes the Python worker holds at once."""
+    rows: list[int] = []
+    blobs: list[bytes] = []
+    size = 0
+    for i, blob in enumerate(values):
+        if blob is None:
+            continue
+        if rows and size + len(blob) > budget:
+            yield pdf.iloc[rows].assign(**{column: blobs})
+            rows, blobs, size = [], [], 0
+        rows.append(i)
+        blobs.append(blob)
+        size += len(blob)
+    if rows:
+        yield pdf.iloc[rows].assign(**{column: blobs})
+
+
 def download_documents(
     docs: DataFrame,
     fetcher: Fetcher,
@@ -345,19 +387,20 @@ def download_documents(
         docs = docs.orderBy(*ARRIVAL).limit(companies_to_get)
     meta = [*ARRIVAL, "edinetCode", "docTypeCode", "file_type"]
 
+    budget = arrow_batch_bytes(docs.sparkSession)
+
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         limiter = _PartitionLimiter(per_partition_rate)
         for pdf in batches:
-            content = [
+            content = (
                 _with_retries(
                     lambda d=doc_id, t=api_type: fetcher.fetch_document(d, t),
                     policy,
                     limiter,
                 )
                 for doc_id, api_type in zip(pdf["docID"], pdf["api_type"])
-            ]
-            out = pdf[meta].assign(content=content)
-            yield out[out["content"].notna()]
+            )
+            yield from bounded_frames(pdf[meta], "content", content, budget)
 
     schema = [*docs.select(*meta).schema, T.StructField("content", T.BinaryType())]
     return (

@@ -19,11 +19,23 @@ from __future__ import annotations
 
 import io
 import zipfile
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from edinet_etl_spark.sources.edinet_api import arrow_batch_bytes, bounded_frames
+
+
+# What zipfile raises on corrupt outside bytes: BadZipFile (bad magic,
+# CRC, truncation), zlib.error and EOFError (bad or short deflate
+# data), RuntimeError (an encrypted member; NotImplementedError, an
+# unsupported compression, is a subclass) and ValueError (a negative
+# seek from a corrupt offset, an undecodable member name).  Anything
+# else, a MemoryError or a bug, fails the job.
+_ZIP_ERRORS = (zipfile.BadZipFile, zlib.error, EOFError, RuntimeError, ValueError)
 
 
 def _best_member(content: bytes, ext: str) -> bytes | None:
@@ -35,15 +47,17 @@ def _best_member(content: bytes, ext: str) -> bytes | None:
     (``src/utils/helper.py:64-67``).  Other members are never read."""
     try:
         zf = zipfile.ZipFile(io.BytesIO(content))
-    except Exception:  # noqa: BLE001 — corrupt zip → skip doc
+    except _ZIP_ERRORS:  # corrupt zip → skip doc
         return None
-    matches = [i for i in zf.infolist() if not i.is_dir() and i.filename.endswith(ext)]
+    # endswith first: a corrupt directory can hold an empty member
+    # name, on which ZipInfo.is_dir raises IndexError
+    matches = [i for i in zf.infolist() if i.filename.endswith(ext) and not i.is_dir()]
     if not matches:
         return None
     best = max(matches, key=lambda i: (i.file_size, i.filename))
     try:
         return zf.read(best)
-    except Exception:  # noqa: BLE001 — corrupt member → skip doc
+    except _ZIP_ERRORS:  # corrupt member → skip doc
         return None
 
 
@@ -51,14 +65,16 @@ def extract_filings(downloads: DataFrame) -> DataFrame:
     """Full S4 stage: one island picks each ZIP's target member.  The
     output is the input minus ``content``, plus ``member_bytes``."""
 
+    budget = arrow_batch_bytes(downloads.sparkSession)
+
     def pick(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            member = [
+            member = (
                 _best_member(content, ".csv" if file_type == "csv" else ".xbrl")
                 for content, file_type in zip(pdf["content"], pdf["file_type"])
-            ]
-            out = pdf.drop(columns="content").assign(member_bytes=member)
-            yield out[out["member_bytes"].notna()]
+            )
+            rest = pdf.drop(columns="content")
+            yield from bounded_frames(rest, "member_bytes", member, budget)
 
     meta = [f for f in downloads.schema if f.name != "content"]
     schema = T.StructType([*meta, T.StructField("member_bytes", T.BinaryType())])

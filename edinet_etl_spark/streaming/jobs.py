@@ -25,7 +25,7 @@ watermarks bound state; session/window state lives in the state store
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -34,9 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from edinet_etl_spark.numeric import dsum, sql_dsum
+from edinet_etl_spark.numeric import dec, dsum, sql_dsum
+from edinet_etl_spark.operators.events import hourly_stats, sessions
 from edinet_etl_spark.registry import query
 from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.tables import decode_events, load
 
 def _raw_schema(ts_is_nanos: bool) -> T.StructType:
     """Stream-source schema matching the feed's physical encoding: a
@@ -105,21 +107,24 @@ def _feed_dir(sf_dir: str) -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet; same columns and
     instants as the batch loader."""
-    from edinet_etl_spark.tables import events_ts_is_nanos
+    return _events_stream(spark, sf_dir, lambda _nanos: _feed_dir(sf_dir))
 
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, feed_dir: Callable[[bool], str]
+) -> DataFrame:
+    """The events stream over the directory ``feed_dir(ts_is_nanos)``
+    stages, one file per micro-batch, decoded by `tables.decode_events`."""
     prep(spark)
-    nanos = events_ts_is_nanos(sf_dir, spark)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts = F.timestamp_micros(F.expr("ts div 1000")).alias("ts")
-    else:
-        ts = F.col("ts")
-    raw = (
-        spark.readStream.schema(_raw_schema(nanos))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_feed_dir(sf_dir))
+    return decode_events(
+        spark,
+        sf_dir,
+        lambda nanos: (
+            spark.readStream.schema(_raw_schema(nanos))
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed_dir(nanos))
+        ),
     )
-    return raw.select("event_id", ts, "user_id", "event_type", "value", "props")
 
 
 def run_available_now(
@@ -143,37 +148,16 @@ def run_available_now(
 # ------------------------------------------------------------------
 
 def tumbling_hourly_stream(events: DataFrame) -> DataFrame:
-    """Watermarked tumbling window — identical expression to the batch
-    ``tumbling_hourly_stats``; the 1-hour watermark bounds state."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value"), "total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    """Watermarked tumbling window — the batch ``tumbling_hourly_stats``
+    aggregation; the 1-hour watermark bounds state."""
+    return hourly_stats(events.withWatermark("ts", "1 hour"))
 
 
 def user_sessions_stream(events: DataFrame) -> DataFrame:
-    """Watermarked session windows (5-minute gap), merged in the state
-    store as events arrive."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), dsum(F.col("value"), "session_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
+    """Watermarked session windows (5-minute gap) — the batch
+    ``user_sessions`` aggregation, merged in the state store as events
+    arrive."""
+    return sessions(events.withWatermark("ts", "1 hour"))
 
 
 def dedup_stream(events: DataFrame) -> DataFrame:
@@ -819,10 +803,18 @@ def make_totals_upsert(snapshot_dir: str):
     Uses the PARTITIONED snapshot layout: per-batch work is
     proportional to the key-buckets the batch touched, not the
     snapshot size (see `make_partitioned_additive_upsert`)."""
-    from edinet_etl_spark.numeric import dec
+    return make_partitioned_additive_upsert(
+        snapshot_dir, *_decimal_totals("user_id"), key="user_id"
+    )
+
+
+def _decimal_totals(key: str):
+    """The ``(build_updates, merge)`` pair of a per-``key`` count plus
+    exact decimal-string value total: each batch aggregates ``value``
+    as a decimal, and partials merge by summing the decimal strings."""
 
     def build_updates(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy("user_id").agg(
+        return batch_df.groupBy(key).agg(
             F.count("*").alias("n_events"),
             F.sum(dec(F.col("value"))).cast("string").alias("total_dec"),
         )
@@ -830,7 +822,7 @@ def make_totals_upsert(snapshot_dir: str):
     def merge(base: DataFrame, updates: DataFrame) -> DataFrame:
         return (
             base.unionByName(updates)
-            .groupBy("user_id")
+            .groupBy(key)
             .agg(
                 F.sum("n_events").alias("n_events"),
                 # exact decimal merge of the string partials
@@ -840,9 +832,7 @@ def make_totals_upsert(snapshot_dir: str):
             )
         )
 
-    return make_partitioned_additive_upsert(
-        snapshot_dir, build_updates, merge, key="user_id"
-    )
+    return build_updates, merge
 
 
 def read_totals_snapshot(spark, snapshot_dir: str) -> DataFrame:
@@ -881,8 +871,6 @@ def streaming_nation_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     side shuffle-free — at 100 TB/day of events the only stateful
     shuffle is the windowed aggregate, with state bounded by the
     watermark."""
-    from edinet_etl_spark.tables import load
-
     prep(spark)
     ev = read_events_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -907,6 +895,37 @@ def streaming_nation_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_available_now(agg, "stream_nation_hourly_result", "complete")
+
+
+def _click_attribution(ev: DataFrame, how: str) -> DataFrame:
+    """Purchases joined (``how``) to the same user's clicks in the 10
+    minutes up to the purchase, both sides watermarked by 1 hour — the
+    stream-stream interval join of the two attribution queries."""
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    return purchases.join(
+        clicks,
+        (F.col("user_id") == F.col("c_user_id"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("click_ts") <= F.col("purchase_ts")),
+        how,
+    )
 
 
 @query(
@@ -939,31 +958,9 @@ def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     At 100 TB/day: per-key state lives in the state store partitioned
     by user_id; the 10-minute interval keeps resident state to minutes
     of traffic regardless of corpus age."""
-    ev = read_events_stream(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
+    joined = _click_attribution(read_events_stream(spark, sf_dir), "inner").select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
     )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     return run_available_now(
         joined, "stream_purchase_attribution_result", "append"
     )
@@ -1188,21 +1185,9 @@ def read_events_stream_with_horizon(spark: SparkSession, sf_dir: str) -> DataFra
     post-join filter down into the parquet scan, which would skip the
     horizon rows entirely and leave the watermark stuck (measured: the
     4 tail purchases never flushed)."""
-    from edinet_etl_spark.tables import events_ts_is_nanos
-
-    prep(spark)
-    nanos = events_ts_is_nanos(sf_dir, spark)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts = F.timestamp_micros(F.expr("ts div 1000")).alias("ts")
-    else:
-        ts = F.col("ts")
-    raw = (
-        spark.readStream.schema(_raw_schema(nanos))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_feed_dir_with_horizon(sf_dir, nanos))
+    return _events_stream(
+        spark, sf_dir, lambda nanos: _feed_dir_with_horizon(sf_dir, nanos)
     )
-    return raw.select("event_id", ts, "user_id", "event_type", "value", "props")
 
 
 @query(
@@ -1241,31 +1226,9 @@ def streaming_attribution_left_outer(spark: SparkSession, sf_dir: str) -> DataFr
     "emit-on-eviction" rows; unmatched-purchase latency is the
     watermark delay — the price of proving absence."""
     ev = read_events_stream_with_horizon(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
+    joined = _click_attribution(ev, "leftOuter").select(
+        "purchase_id", "user_id", "purchase_ts", "click_id", "click_ts"
     )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "leftOuter",
-    ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
     return run_available_now(
         joined, "stream_attribution_outer_result", "append"
     ).filter(F.col("user_id") >= 0)
@@ -1375,8 +1338,6 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    from edinet_etl_spark.tables import load
-
     cms = read_snapshot(spark, snap)
     events = load(spark, sf_dir, "events")
     truth = events.groupBy(F.col("user_id").cast("string").alias("key")).agg(
@@ -1582,8 +1543,6 @@ def order_priority_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderdate) keeps its highest-key order (the as-of tie rule), and
     LEAD(valid_from) closes the version — the static side of the
     point-in-time join."""
-    from edinet_etl_spark.tables import load
-
     od = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
         F.col("o_orderdate").alias("valid_from"),
@@ -1609,27 +1568,7 @@ def make_priority_upsert(snapshot_dir: str):
     """Additive merge closure for the as-of enrichment sink: per
     enriched-priority counts + decimal-string value totals (the CDC
     totals discipline, keyed by the joined dimension attribute)."""
-    from edinet_etl_spark.numeric import dec
-
-    def build_updates(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy("priority").agg(
-            F.count("*").alias("n_events"),
-            F.sum(dec(F.col("value"))).cast("string").alias("total_dec"),
-        )
-
-    def merge(base: DataFrame, updates: DataFrame) -> DataFrame:
-        return (
-            base.unionByName(updates)
-            .groupBy("priority")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum(F.col("total_dec").cast("decimal(38,8)"))
-                .cast("string")
-                .alias("total_dec"),
-            )
-        )
-
-    return make_additive_upsert(snapshot_dir, build_updates, merge)
+    return make_additive_upsert(snapshot_dir, *_decimal_totals("priority"))
 
 
 @query(
@@ -1770,8 +1709,6 @@ def _docs_feed_dir(
     import shutil
     import tempfile
     import time
-
-    from edinet_etl_spark.tables import load
 
     app = spark.sparkContext.applicationId
     tag = hashlib.md5(f"{sf_dir}|{app}".encode()).hexdigest()[:12]

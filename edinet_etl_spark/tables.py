@@ -11,6 +11,8 @@ when a 100 TB lake has thousands of files written by many producers.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -123,18 +125,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     declared schema would silently null columns; instead `validate`
     compares post-hoc.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return decode_events(spark, sf_dir, lambda _nanos: spark.read.parquet(path))
+    return spark.read.parquet(path)
 
 
 def events_ts_is_nanos(sf_dir: str, spark: SparkSession | None = None) -> bool:
     """True when ``events.parquet`` stores ``ts`` as TIMESTAMP(NANOS)
     (or raw int64 nanos) — the one encoding Spark's vectorized reader
     can't ingest natively.  Probed from the parquet footer so batch
-    (`_load_events`) and streaming (`streaming.jobs.read_events_stream`)
-    apply the *same* rule to the *same* file; the two paths previously
-    duplicated the rule and drifted when the fixture switched ns → µs.
+    and streaming (both through `decode_events`) apply the *same* rule
+    to the *same* file; the two paths previously duplicated the rule
+    and drifted when the fixture switched ns → µs.
 
     Local paths read the footer directly (pyarrow).  Non-local URIs
     (hdfs://, s3a://, ... — local pyarrow I/O can't resolve them) fall
@@ -181,22 +184,27 @@ def events_ts_is_nanos(sf_dir: str, spark: SparkSession | None = None) -> bool:
     return pa.types.is_int64(t) or (pa.types.is_timestamp(t) and t.unit == "ns")
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """An events feed written with parquet TIMESTAMP(NANOS) is rejected
+def decode_events(
+    spark: SparkSession, sf_dir: str, read: Callable[[bool], DataFrame]
+) -> DataFrame:
+    """The events columns over ``read(ts_is_nanos)``, the one ``ts``
+    decode shared by the batch loader and the streams.
+
+    An events feed written with parquet TIMESTAMP(NANOS) is rejected
     outright by Spark's vectorized reader.  When the footer says nanos,
-    read them as raw longs (``spark.sql.legacy.parquet.nanosAsLong``)
-    and floor-divide to microseconds — the same truncation DuckDB
-    applies when it narrows ns → µs, so both engines see identical
-    instants.  A regular TIMESTAMP(MICROS) file passes through.
+    ``read`` runs with the nanos read as raw longs
+    (``spark.sql.legacy.parquet.nanosAsLong``), and they are
+    floor-divided to microseconds — the same truncation DuckDB applies
+    when it narrows ns → µs, so both engines see identical instants.  A
+    regular TIMESTAMP(MICROS) file passes through.
     """
-    if events_ts_is_nanos(sf_dir, spark):
+    nanos = events_ts_is_nanos(sf_dir, spark)
+    if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
         ts = F.timestamp_micros(F.expr("ts div 1000")).alias("ts")
     else:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
         ts = F.col("ts")
-    return df.select("event_id", ts, "user_id", "event_type", "value", "props")
+    return read(nanos).select("event_id", ts, "user_id", "event_type", "value", "props")
 
 
 def parallel_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -68,6 +68,15 @@ def canon_value(v) -> str:
     return str(v)
 
 
+def query_rows(spark, name: str, sf_dir: str | None = None) -> list:
+    """Collect one registered query at ``sf_dir`` (default: the test
+    scale)."""
+    from edinet_etl_spark import registry
+
+    registry.load_all()
+    return registry.QUERIES[name](spark, sf_dir or SF_DIR).collect()
+
+
 def frame_digest(cols: list[str], rows: list[tuple]) -> tuple[str, int]:
     """Order-insensitive digest: sort columns by name, canonicalize every
     cell, sort row strings, sha256."""

@@ -160,6 +160,34 @@ def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path, caplog):
     ]
 
 
+def test_small_arrow_byte_cap_keeps_the_csv(spark, fixture_root, cfg, tmp_path):
+    """The fetch and extract islands flush their frames by
+    ``spark.sql.execution.arrow.maxBytesPerBatch``.  A 16-byte cap, below
+    every fixture ZIP and member, gives each of them a frame of its
+    own, and the CSV does not change."""
+    import glob
+
+    def csv_lines(out: str) -> list[str]:
+        [path] = glob.glob(f"{out}/*.csv")
+        with open(path, encoding="utf-8") as f:
+            return sorted(f)
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    base = run_pipeline(
+        spark, replace(cfg, output_dir=str(tmp_path / "base")), FixtureFetcher(fixture_root)
+    )
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16b")
+    try:
+        capped = run_pipeline(
+            spark, replace(cfg, output_dir=str(tmp_path / "capped")), FixtureFetcher(fixture_root)
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert len(csv_lines(base)) == len(GOLDEN) + 1  # header
+    assert csv_lines(capped) == csv_lines(base)
+
+
 def test_zip_error_paths(spark, fixture_root, cfg):
     """B5: corrupt ZIP (D009) and no-matching-member ZIP (D007) emit no
     filings; D001's largest .csv member wins (A2).  Each filing carries

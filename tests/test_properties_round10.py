@@ -9,6 +9,7 @@ engine-pair divergence in one glance.
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 
 import pyarrow.parquet as pq
@@ -19,8 +20,8 @@ from hypothesis import strategies as st
 from edinet_etl_spark import registry
 from edinet_etl_spark.operators.graph import (
     _STAR_SUPPORT,
+    copurchase_support_pairs,
     largestar_smallstar_over,
-    star_support_pairs,
 )
 
 pytestmark = pytest.mark.deep  # inner loop: -m "not deep" (see pytest.ini)
@@ -87,9 +88,23 @@ def test_star_round_count_is_logarithmic(spark):
     at sf0.001 AND sf0.01 — the bound here is loose on purpose; the
     lint is that rounds don't grow with data)."""
     _labels, rounds = largestar_smallstar_over(
-        star_support_pairs(spark, MODEL_SF)
+        copurchase_support_pairs(spark, MODEL_SF, _STAR_SUPPORT)
     )
     assert 1 <= rounds <= 10
+
+
+def test_star_rounds_on_id_ordered_path_are_logarithmic(spark):
+    """The guarantee that keeps the star kernel next to
+    `neardup_components`' min-label loop: on the 64-node path
+    0-1-...-63 (ids in path order) one path-halving jump per min-label
+    round shrinks the contracted path by only 2 edges (31 rounds),
+    while the star alternation stays within 2*ceil(log2 n) rounds."""
+    n = 64
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "u bigint, v bigint")
+    labels, rounds = largestar_smallstar_over(pairs)
+    assert rounds <= 2 * math.ceil(math.log2(n))
+    got = {r["node"]: r["component"] for r in labels.collect()}
+    assert got == dict.fromkeys(range(n), 0)
 
 
 _rand_edges = st.sets(

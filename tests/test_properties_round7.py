@@ -9,15 +9,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from edinet_etl_spark import registry
 from edinet_etl_spark.operators.text import _WINNOW_K, _WINNOW_W
-from tests.conftest import SF_DIR
-
-registry.load_all()
-
-
-def _rows(spark, name, sf_dir=None):
-    return registry.QUERIES[name](spark, sf_dir or SF_DIR).collect()
+from tests.conftest import SF_DIR, query_rows
 
 
 # ---------------------------------------------------------------- winnowing
@@ -53,7 +46,7 @@ def test_winnowing_coverage_guarantee(spark, winnow_sf_dir):
     MUST produce a shared selected fingerprint in both documents;
     disjoint-vocabulary docs must share none."""
     assert len(_SHARED_RUN.split()) == _WINNOW_K + _WINNOW_W - 1
-    rows = {r["doc_id"]: r.asDict() for r in _rows(spark, "winnowing_fingerprints", winnow_sf_dir)}
+    rows = {r["doc_id"]: r.asDict() for r in query_rows(spark, "winnowing_fingerprints", winnow_sf_dir)}
     assert rows[1]["n_shared_fp"] >= 1
     assert rows[2]["n_shared_fp"] >= 1
     assert rows[3]["n_shared_fp"] == 0
@@ -63,7 +56,7 @@ def test_winnowing_coverage_guarantee(spark, winnow_sf_dir):
 def test_winnowing_density_bounds(spark):
     """Every window selects one fingerprint and a fingerprint covers
     at most w windows: n_windows/w <= n_selected <= n_windows."""
-    for r in _rows(spark, "winnowing_fingerprints"):
+    for r in query_rows(spark, "winnowing_fingerprints"):
         if r["n_kgrams"] == 0:
             assert r["n_selected"] == 0 and r["winnow_density"] is None
             continue
@@ -80,7 +73,7 @@ def test_column_stats_histogram_partitions_the_table(spark):
     from edinet_etl_spark.tables import load
 
     n_table = load(spark, SF_DIR, "lineitem").count()
-    rows = _rows(spark, "column_stats_histogram")
+    rows = query_rows(spark, "column_stats_histogram")
     by_col: dict[str, list] = {}
     for r in rows:
         by_col.setdefault(r["col_name"], []).append(r)
@@ -101,7 +94,7 @@ def test_column_stats_histogram_partitions_the_table(spark):
 def test_decile_lift_table_conserves_population(spark):
     from edinet_etl_spark.tables import load
 
-    rows = _rows(spark, "decile_lift_table")
+    rows = query_rows(spark, "decile_lift_table")
     n_cust = load(spark, SF_DIR, "customer").count()
     assert sum(r["n_customers"] for r in rows) == n_cust
     tot_conv = sum(r["n_converters"] for r in rows)
@@ -121,7 +114,7 @@ def test_rrf_fusion_shape_and_score_bounds(spark):
         _RRF_TOP,
     )
 
-    rows = _rows(spark, "rrf_fusion_topk")
+    rows = query_rows(spark, "rrf_fusion_topk")
     per_q: dict[int, list] = {}
     for r in rows:
         per_q.setdefault(r["query_id"], []).append(r)
@@ -138,7 +131,7 @@ def test_rrf_fusion_shape_and_score_bounds(spark):
 def test_embedding_covariance_matrix_is_psd_ish(spark):
     """Diagonal nonnegative (up to the 1e-8 decimal quantization),
     |corr| <= 1 + eps, and cov(i,i) consistent with corr = 1."""
-    rows = _rows(spark, "embedding_covariance_matrix")
+    rows = query_rows(spark, "embedding_covariance_matrix")
     diag = {r["dim_i"]: r for r in rows if r["dim_i"] == r["dim_j"]}
     for r in rows:
         if r["dim_i"] == r["dim_j"]:
@@ -155,7 +148,7 @@ def test_embedding_covariance_matrix_is_psd_ish(spark):
 # ---------------------------------------------------------------- drawdown
 
 def test_max_drawdown_invariants(spark):
-    rows = _rows(spark, "max_drawdown_per_user")
+    rows = query_rows(spark, "max_drawdown_per_user")
     assert rows
     for r in rows:
         assert r["max_drawdown"] >= 0.0
@@ -167,7 +160,7 @@ def test_mutual_nn_matching_is_one_to_one(spark):
     """Mutual-NN output is a partial matching: every a_id and b_id
     appears at most once, sides are disjoint parities, distances
     nonnegative."""
-    rows = _rows(spark, "mutual_nn_matching")
+    rows = query_rows(spark, "mutual_nn_matching")
     assert rows
     a_ids = [r["a_id"] for r in rows]
     b_ids = [r["b_id"] for r in rows]

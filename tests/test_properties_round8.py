@@ -9,20 +9,13 @@ from __future__ import annotations
 
 import pytest
 
-from edinet_etl_spark import registry
-from tests.conftest import SF_DIR
-
-registry.load_all()
-
-
-def _rows(spark, name, sf_dir=None):
-    return registry.QUERIES[name](spark, sf_dir or SF_DIR).collect()
+from tests.conftest import SF_DIR, query_rows
 
 
 # ------------------------------------------------------------- isotonic PAV
 
 def test_isotonic_fit_is_monotone_and_pools_correctly(spark):
-    rows = sorted(_rows(spark, "isotonic_calibration_pav"), key=lambda r: r["bin"])
+    rows = sorted(query_rows(spark, "isotonic_calibration_pav"), key=lambda r: r["bin"])
     fits = [r["isotonic_rate"] for r in rows]
     # monotone non-decreasing by construction
     assert all(a <= b for a, b in zip(fits, fits[1:]))
@@ -47,7 +40,7 @@ def test_isotonic_fit_is_monotone_and_pools_correctly(spark):
 # ------------------------------------------------------------ t-closeness
 
 def test_t_closeness_emd_bounds_and_global_cell(spark):
-    rows = _rows(spark, "t_closeness_audit")
+    rows = query_rows(spark, "t_closeness_audit")
     assert rows
     for r in rows:
         assert 0.0 <= r["emd"] <= 1.0
@@ -73,7 +66,7 @@ def test_scd2_pit_matches_direct_case_derivation(spark):
 
     got = {
         r["segment_at_order"]: (r["n_orders"], r["revenue"])
-        for r in _rows(spark, "scd2_point_in_time_join")
+        for r in query_rows(spark, "scd2_point_in_time_join")
     }
     orders = load(spark, SF_DIR, "orders")
     cust = load(spark, SF_DIR, "customer").select("c_custkey", "c_mktsegment")
@@ -107,7 +100,7 @@ def test_image_ahash_families_pair_up(spark):
     )
     from edinet_etl_spark.tables import load
 
-    rows = _rows(spark, "image_ahash_neardup")
+    rows = query_rows(spark, "image_ahash_neardup")
     assert rows
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
     assert all(r["hamming"] <= _AHASH_MAXHAM for r in rows)
@@ -142,11 +135,11 @@ def test_ngram_production_equals_allpairs_eval(spark):
     other)."""
     prod = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in _rows(spark, "ngram_jaccard_pairs")
+        for r in query_rows(spark, "ngram_jaccard_pairs")
     }
     base = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in _rows(spark, "ngram_jaccard_allpairs_eval")
+        for r in query_rows(spark, "ngram_jaccard_allpairs_eval")
     }
     assert prod == base
 
@@ -154,7 +147,7 @@ def test_ngram_production_equals_allpairs_eval(spark):
 # ------------------------------------------------- bucketed join audit
 
 def test_bucketed_audit_reports_zero_exchanges(spark):
-    rows = _rows(spark, "bucketed_colocated_join_audit")
+    rows = query_rows(spark, "bucketed_colocated_join_audit")
     assert rows and all(r["n_exchanges_under_join"] == 0 for r in rows)
 
 
@@ -218,7 +211,7 @@ def test_bitmap_distinct_equals_count_distinct(spark):
 
     from edinet_etl_spark.tables import load
 
-    rows = _rows(spark, "bitmap_distinct_rollup")
+    rows = query_rows(spark, "bitmap_distinct_rollup")
     ev = load(spark, SF_DIR, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
@@ -265,7 +258,7 @@ def test_bitmap_word_bit_mapping_injective_for_negatives(spark):
 def test_nelson_aalen_invariants_and_km_grid_parity(spark):
     from decimal import ROUND_HALF_UP, Decimal
 
-    rows = sorted(_rows(spark, "nelson_aalen_hazard"), key=lambda r: r["time_days"])
+    rows = sorted(query_rows(spark, "nelson_aalen_hazard"), key=lambda r: r["time_days"])
     assert rows
     # increments are d/n; cumulative hazard is the quantized running sum
     q = Decimal("1e-8")
@@ -278,7 +271,7 @@ def test_nelson_aalen_invariants_and_km_grid_parity(spark):
         assert r["cum_hazard"] >= prev
         prev = r["cum_hazard"]
     # same event grid as the KM estimator (shared risk CTE)
-    km = {r["time_days"]: r for r in _rows(spark, "kaplan_meier_conversion")}
+    km = {r["time_days"]: r for r in query_rows(spark, "kaplan_meier_conversion")}
     assert set(km) == {r["time_days"] for r in rows}
     for r in rows:
         assert km[r["time_days"]]["n_at_risk"] == r["n_at_risk"]
@@ -289,11 +282,11 @@ def test_rolling_bitmap_matches_user_grain_variant(spark):
     the (user, day) contribution-explode plan agree row-for-row."""
     a = sorted(
         (r["day"], r["active_users_7d"])
-        for r in _rows(spark, "rolling_7d_active_bitmap")
+        for r in query_rows(spark, "rolling_7d_active_bitmap")
     )
     b = sorted(
         (r["day"], r["active_users_7d"])
-        for r in _rows(spark, "rolling_7d_active_users")
+        for r in query_rows(spark, "rolling_7d_active_users")
     )
     assert a == b
 
