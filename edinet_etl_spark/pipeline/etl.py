@@ -5,10 +5,13 @@ become one lazy plan, run by one Spark action — the sink's observed
 write:
 
 1. **Ingestion** (UDF islands, executor-side HTTP): company master →
-   date range → list fetch → semi-join filter → download → unzip.
-2. **Analytics** (relational around one parse island): best-filing
-   dedup → parse → year decode → dimension join → final table → CSV
-   sink.
+   date range → list fetch → semi-join filter → flag dispatch and
+   head-N (metadata only).
+2. **Analytics**: one island per fetch task walks each company's docs
+   in best-filing (A1) order and fetches, unzips and parses only the
+   first doc that yields a filing (``transform.best_filing_facts``);
+   then relational year decode → dimension join → final table → CSV
+   sink.  No filing bytes cross a shuffle.
 
 Injection of ``Fetcher`` keeps every test offline (FIXTURES.md §B).
 """
@@ -21,15 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from edinet_etl_spark.pipeline.config import PipelineConfig
 from edinet_etl_spark.pipeline.load import load_to_csv
-from edinet_etl_spark.pipeline.transform import process_financial_documents
-from edinet_etl_spark.sources import company_master, edinet_api, zip_extract
+from edinet_etl_spark.pipeline.transform import best_filing_facts, decode_and_enrich
+from edinet_etl_spark.sources import company_master, edinet_api
 from edinet_etl_spark.sources.edinet_api import Fetcher, RetryPolicy
 
 
-def ingest_filings(
-    spark: SparkSession, cfg: PipelineConfig, fetcher: Fetcher
-) -> tuple[DataFrame, DataFrame]:
-    """Stages 1-4 (``main.py:15-28``): returns (companies, filings)."""
+def revenue_table(spark: SparkSession, cfg: PipelineConfig, fetcher: Fetcher) -> DataFrame:
+    """Stages 1-5 (``main.py:15-31``) as one lazy plan: the final
+    revenue table, before the sink."""
     companies = company_master.extract_companies(spark, cfg.csv_file)
     dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
     policy = RetryPolicy(
@@ -41,14 +43,13 @@ def ingest_filings(
         dates, fetcher, policy, num_partitions=cfg.fetch_partitions
     )
     targeted = edinet_api.filter_documents(docs, companies, cfg.target_doc_types)
-    downloads = edinet_api.download_documents(
-        targeted,
+    facts = best_filing_facts(
+        edinet_api.dispatch_head(targeted, cfg.companies_to_get),
         fetcher,
-        companies_to_get=cfg.companies_to_get,
-        policy=replace(policy, jitter_base=0.5),
-        num_partitions=cfg.fetch_partitions,
+        replace(policy, jitter_base=0.5),
+        cfg.fetch_partitions,
     )
-    return companies, zip_extract.extract_filings(downloads)
+    return decode_and_enrich(facts, companies)
 
 
 def run_pipeline(
@@ -56,9 +57,7 @@ def run_pipeline(
 ) -> str | None:
     """Full pipeline (``main.py:13-40``): returns the output dir, or
     None when no data survived (S8 guard)."""
-    companies, filings = ingest_filings(spark, cfg, fetcher)
-    final = process_financial_documents(filings, companies)
-    return load_to_csv(final, cfg.output_dir, "japan_company_data")
+    return load_to_csv(revenue_table(spark, cfg, fetcher), cfg.output_dir, "japan_company_data")
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -11,9 +11,18 @@ revenue_unit]``.
 Spark-first shape: logic that needs one filing runs in the one
 ``mapInPandas`` island that holds that filing's bytes — the parse, the
 dynamic revenue mask, the head-5 limit and the fiscal-year extract, with
-a small parser per format.  Logic that needs several filings is
-declarative — the best-filing dedup, the year decode, cast-skip and the
-dimension join — so one Catalyst plan covers all files at once.
+a small parser per format (``_filing_facts``).  Logic that needs several
+filings is declarative — the year decode, cast-skip and the dimension
+join — so one Catalyst plan covers all files at once.
+
+The best-filing dedup (A1) is one order, ``a1_order``, over metadata
+only, applied two ways.  On the HTTP path ``best_filing_facts`` ranks
+each company's docs *before* any download and walks them in that
+order: it fetches, unzips and parses the first doc that yields a
+filing and fetches none after it, so only metadata is shuffled.  On
+the lake path the bytes are already landed, so
+``select_best_filings`` ranks the filing rows with a window and
+``revenue_facts`` parses the winners.
 
 The reference identifies a filing by the name it wrote to disk and
 splits that name back into company code and doc type.  Here every row
@@ -29,11 +38,18 @@ import xml.etree.ElementTree as ET
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from edinet_etl_spark.sources.edinet_api import ARRIVAL
+from edinet_etl_spark.sources.edinet_api import (
+    ARRIVAL,
+    Fetcher,
+    RetryPolicy,
+    _PartitionLimiter,
+    fetch_zip,
+)
+from edinet_etl_spark.sources.zip_extract import filing_member
 
 # J3: relative-year decode (src/transform.py:171-177).
 YEAR_OFFSETS = {
@@ -53,24 +69,31 @@ _FACT_SCHEMA = T.StructType(
 _CSV_FISCAL_DEI = "jpdei_cor:CurrentFiscalYearEndDateDEI"
 
 
-def select_best_filings(filings: DataFrame) -> DataFrame:
-    """A1 priority dedup (``src/transform.py:109-145``): one filing per
-    company; any type-'130' filing beats non-130; among 130s the
-    reference's ``company_files[code] = path`` overwrite means the
-    *last-seen* 130 wins, while among non-130s the dict-insert guard
-    means the *first-seen* wins — both in ``ARRIVAL`` order (SURVEY
-    §2.11d).  The reference skips names its pattern does not match
-    (``:127-128``); here the carried key must have that shape: a lake
-    name comes from outside the program."""
+# A1 reads only filings whose carried key has the shape the reference's
+# name pattern accepts (``src/transform.py:120,127-128``): a lake name
+# comes from outside the program.
+FILING_KEY_SHAPE = "edinetCode RLIKE '^E[0-9]+$' AND docTypeCode RLIKE '^[0-9]+$'"
+
+
+def a1_order() -> list[Column]:
+    """A1's rank of one company's filings, best first
+    (``src/transform.py:109-145``): any type-'130' filing beats non-130;
+    among 130s the reference's ``company_files[code] = path`` overwrite
+    means the *last-seen* 130 wins, while among non-130s the dict-insert
+    guard means the *first-seen* wins — both in ``ARRIVAL`` order
+    (SURVEY §2.11d).  The order reads metadata only."""
     is_130 = F.col("docTypeCode") == "130"
     arrival = F.struct(*ARRIVAL)
-    w = Window.partitionBy("edinetCode").orderBy(
-        F.desc(is_130), F.desc(F.when(is_130, arrival)), F.asc(arrival)
-    )
+    return [F.desc(is_130), F.desc(F.when(is_130, arrival)), F.asc(arrival)]
+
+
+def select_best_filings(filings: DataFrame) -> DataFrame:
+    """A1 priority dedup over filing rows: per company, the first
+    filing in ``a1_order``.  The lake path ranks with this window; the
+    HTTP path ranks before it fetches (``best_filing_facts``)."""
+    w = Window.partitionBy("edinetCode").orderBy(*a1_order())
     return (
-        filings.filter(
-            F.col("edinetCode").rlike(r"^E\d+$") & F.col("docTypeCode").rlike(r"^\d+$")
-        )
+        filings.filter(FILING_KEY_SHAPE)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
@@ -147,28 +170,80 @@ def _xbrl_facts(data: bytes) -> tuple[int | None, list[tuple]]:
 _PARSERS = {"csv": _csv_facts, "xbrl": _xbrl_facts}
 
 
+def _filing_facts(doc_id: str, code: str, file_type: str, data: bytes) -> list[tuple]:
+    """One filing's ``_FACT_SCHEMA`` rows: its bytes go to its format's
+    parser, and its revenue rows come out tagged with its fiscal year.
+    A filing that does not parse or has no fiscal year gives none."""
+    parser = _PARSERS.get(file_type)
+    if parser is None:
+        return []
+    fiscal_year, facts = parser(data)
+    if fiscal_year is None:
+        return []
+    return [(doc_id, code, *fact, fiscal_year) for fact in facts]
+
+
 def revenue_facts(filings: DataFrame) -> DataFrame:
-    """P12 format dispatch inside one island: each filing's bytes go to
-    its format's parser, and its revenue rows come out tagged with its
-    fiscal year.  A filing that does not parse or has no fiscal year
-    emits nothing."""
+    """P12 format dispatch inside one island: ``_filing_facts`` for
+    each filing row."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, code, file_type, data in zip(
-                pdf["docID"], pdf["edinetCode"], pdf["file_type"], pdf["member_bytes"]
-            ):
-                parser = _PARSERS.get(file_type)
-                if parser is None:
-                    continue
-                fiscal_year, facts = parser(data)
-                if fiscal_year is not None:
-                    rows.extend((doc_id, code, *fact, fiscal_year) for fact in facts)
+            for row in zip(pdf["docID"], pdf["edinetCode"], pdf["file_type"], pdf["member_bytes"]):
+                rows.extend(_filing_facts(*row))
             yield pd.DataFrame(rows, columns=_FACT_SCHEMA.fieldNames())
 
     return filings.select("docID", "edinetCode", "file_type", "member_bytes").mapInPandas(
         parse, schema=_FACT_SCHEMA
+    )
+
+
+def best_filing_facts(
+    docs: DataFrame, fetcher: Fetcher, policy: RetryPolicy, num_partitions: int
+) -> DataFrame:
+    """S3 + S4 + A1 + parse for dispatched docs (``dispatch_head``'s
+    output) in one island that fetches only what A1 can keep.
+
+    ``a1_order`` reads metadata only, and its one other input is
+    whether a doc yields a filing: the download succeeds and
+    ``filing_member`` finds a member.  So walking a company's docs in
+    that order and stopping at the first one that yields a filing
+    picks the filing ``select_best_filings`` picks after fetching all
+    of them.  A winner that does not parse still wins and emits
+    nothing, as it does there.
+
+    Only metadata crosses the shuffle: ``num_partitions`` tasks by
+    ``edinetCode``, each sorted by company then ``a1_order``.  A
+    repartition to a fixed count keeps exactly that many fetch tasks
+    (AQE does not coalesce it), so the per-task rate limits still sum
+    to the global budget.  The island emits ``_FACT_SCHEMA`` rows and
+    holds one ZIP at a time."""
+    per_partition_rate = policy.requests_per_second / max(num_partitions, 1)
+
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        limiter = _PartitionLimiter(per_partition_rate)
+        won = None  # the last company whose filing was found; its rows are contiguous
+        for pdf in batches:  # a company's rows may span two batches
+            rows = []
+            for doc_id, code, file_type, api_type in zip(
+                pdf["docID"], pdf["edinetCode"], pdf["file_type"], pdf["api_type"]
+            ):
+                if code == won:
+                    continue
+                content = fetch_zip(fetcher, doc_id, api_type, policy, limiter)
+                member = None if content is None else filing_member(content, file_type)
+                if member is not None:
+                    won = code
+                    rows.extend(_filing_facts(doc_id, code, file_type, member))
+            yield pd.DataFrame(rows, columns=_FACT_SCHEMA.fieldNames())
+
+    return (
+        docs.filter(FILING_KEY_SHAPE)
+        .select(*ARRIVAL, "edinetCode", "docTypeCode", "file_type", "api_type")
+        .repartition(num_partitions, "edinetCode")
+        .sortWithinPartitions("edinetCode", *a1_order())
+        .mapInPandas(walk, schema=_FACT_SCHEMA)
     )
 
 
@@ -204,5 +279,6 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
 
 def process_financial_documents(filings: DataFrame, companies: DataFrame) -> DataFrame:
     """The reference's ``process_financial_documents`` as one lazy
-    plan: A1 best-filing dedup → parse → decode → enrich."""
+    plan over filing rows (the lake path): A1 best-filing dedup →
+    parse → decode → enrich."""
     return decode_and_enrich(revenue_facts(select_best_filings(filings)), companies)

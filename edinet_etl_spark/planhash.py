@@ -39,6 +39,9 @@ _SCRUB: list[tuple[re.Pattern[str], str]] = [
     (re.compile(r"Scan ExistingRDD\[[^\]]*\]"), "Scan ExistingRDD[...]"),
     (re.compile(r"MapPartitionsRDD\[\d+\]"), "MapPartitionsRDD[N]"),
     (re.compile(r"ParallelCollectionRDD\[\d+\]"), "ParallelCollectionRDD[N]"),
+    # per-session catalog database (analytics' bucketed join audit
+    # names it edinet_bucketed_audit_<md5(sf_dir|applicationId)[:12]>)
+    (re.compile(r"\b(edinet_bucketed_audit)_[0-9a-f]{12}\b"), r"\1_H"),
     # file listing: paths, counts, sizes
     (re.compile(r"/[\w./-]*testdata/sf[\d.]+"), "SF"),
     (re.compile(r"/tmp/[\w./-]+"), "TMP"),

@@ -2,7 +2,7 @@
 (SURVEY.md §2.1 S3's second mapping — "pre-fetched dir +
 spark.read.format('binaryFile')").
 
-The HTTP path (`edinet_api.download_documents`) is right when Spark
+The HTTP path (`edinet_api`'s fetcher) is right when Spark
 itself polls the API; this path is right when an upstream collector
 already landed the ZIPs on shared storage (the usual shape at scale:
 ingestion and compute decoupled, the lake is the interface).  The
@@ -11,12 +11,15 @@ rows with the same scan machinery as any other file source —
 partition-parallel reads, pathGlobFilter pushdown, and no bytes read
 for pruned files when only metadata columns are selected.
 
-Downstream is IDENTICAL to the HTTP path: the scan emits the same key
-columns (date_str, docID, edinetCode, docTypeCode) and file_type, each
-a column expression over the path, so arrival order is the same
-``(date_str, docID)`` sort key and no window ranks the files.  The same
-unzip-and-pick island (`zip_extract.extract_filings`) then feeds the
-parser — one code path for members regardless of how bytes arrived.
+The scan emits the HTTP path's key columns (date_str, docID,
+edinetCode, docTypeCode) and file_type, each a column expression over
+the path, so arrival order is the same ``(date_str, docID)`` sort key
+with no global rank.  Downstream differs in where A1 ranks:
+the HTTP path ranks docs before it fetches them
+(``transform.best_filing_facts``), while here the bytes are already
+landed, so the unzip-and-pick island (``zip_extract.extract_filings``)
+runs on every file and A1's window (``transform.select_best_filings``)
+ranks the filings by the same ``a1_order``.
 """
 
 from __future__ import annotations

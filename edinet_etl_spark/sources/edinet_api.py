@@ -368,6 +368,28 @@ def bounded_frames(
         yield pdf.iloc[rows].assign(**{column: blobs})
 
 
+def dispatch_head(docs: DataFrame, companies_to_get: int | None) -> DataFrame:
+    """P13 flag dispatch (``dispatch_file_type``), then L1: the first
+    ``companies_to_get`` dispatched docs in arrival order
+    (``src/extract.py:204-205``); None keeps them all."""
+    docs = dispatch_file_type(docs)
+    if companies_to_get is not None:
+        docs = docs.orderBy(*ARRIVAL).limit(companies_to_get)
+    return docs
+
+
+def fetch_zip(
+    fetcher: Fetcher,
+    doc_id: str,
+    api_type: str,
+    policy: RetryPolicy,
+    limiter: _PartitionLimiter,
+) -> bytes | None:
+    """One doc's ZIP through the retry loop, or None once retries run
+    out (``src/extract.py:211-231``)."""
+    return _with_retries(lambda: fetcher.fetch_document(doc_id, api_type), policy, limiter)
+
+
 def download_documents(
     docs: DataFrame,
     fetcher: Fetcher,
@@ -375,16 +397,14 @@ def download_documents(
     policy: RetryPolicy | None = None,
     num_partitions: int = 8,
 ) -> DataFrame:
-    """S3: head-N in arrival order (L1, ``src/extract.py:204-205``)
-    then per-doc ZIP fetch.  Output: the doc's key columns and
-    ``file_type``, plus ``content`` binary.  Failed downloads emit
-    nothing (reference swallows after retries)."""
+    """S3: head-N in arrival order (``dispatch_head``) then per-doc ZIP
+    fetch.  Output: the doc's key columns and ``file_type``, plus
+    ``content`` binary.  Failed downloads emit nothing (reference
+    swallows after retries)."""
     policy = policy or RetryPolicy(jitter_base=0.5)
     per_partition_rate = policy.requests_per_second / max(num_partitions, 1)
 
-    docs = dispatch_file_type(docs)
-    if companies_to_get is not None:
-        docs = docs.orderBy(*ARRIVAL).limit(companies_to_get)
+    docs = dispatch_head(docs, companies_to_get)
     meta = [*ARRIVAL, "edinetCode", "docTypeCode", "file_type"]
 
     budget = arrow_batch_bytes(docs.sparkSession)
@@ -393,11 +413,7 @@ def download_documents(
         limiter = _PartitionLimiter(per_partition_rate)
         for pdf in batches:
             content = (
-                _with_retries(
-                    lambda d=doc_id, t=api_type: fetcher.fetch_document(d, t),
-                    policy,
-                    limiter,
-                )
+                fetch_zip(fetcher, doc_id, api_type, policy, limiter)
                 for doc_id, api_type in zip(pdf["docID"], pdf["api_type"])
             )
             yield from bounded_frames(pdf[meta], "content", content, budget)

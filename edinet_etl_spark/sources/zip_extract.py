@@ -61,6 +61,12 @@ def _best_member(content: bytes, ext: str) -> bytes | None:
         return None
 
 
+def filing_member(content: bytes, file_type: str) -> bytes | None:
+    """``_best_member`` for a doc dispatched as ``file_type``: a 'csv'
+    doc's target is a ``.csv`` member, any other an ``.xbrl`` one."""
+    return _best_member(content, ".csv" if file_type == "csv" else ".xbrl")
+
+
 def extract_filings(downloads: DataFrame) -> DataFrame:
     """Full S4 stage: one island picks each ZIP's target member.  The
     output is the input minus ``content``, plus ``member_bytes``."""
@@ -69,10 +75,7 @@ def extract_filings(downloads: DataFrame) -> DataFrame:
 
     def pick(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            member = (
-                _best_member(content, ".csv" if file_type == "csv" else ".xbrl")
-                for content, file_type in zip(pdf["content"], pdf["file_type"])
-            )
+            member = map(filing_member, pdf["content"], pdf["file_type"])
             rest = pdf.drop(columns="content")
             yield from bounded_frames(rest, "member_bytes", member, budget)
 

@@ -18,14 +18,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.pipeline.config import PipelineConfig
-from edinet_etl_spark.pipeline.etl import ingest_filings, run_pipeline
+from edinet_etl_spark.pipeline.etl import revenue_table, run_pipeline
 from edinet_etl_spark.pipeline.load import load_to_csv
 from edinet_etl_spark.pipeline.transform import (
     process_financial_documents,
     revenue_facts,
     select_best_filings,
 )
-from edinet_etl_spark.sources import company_master, edinet_api
+from edinet_etl_spark.sources import company_master, edinet_api, zip_extract
 from edinet_etl_spark.sources.edinet_api import (
     ARRIVAL,
     RetryPolicy,
@@ -45,6 +45,25 @@ from tests.fixtures.gen import (
 
 # The document key every stage carries, in stage column order.
 FILING_KEY = [*ARRIVAL, "edinetCode", "docTypeCode"]
+
+
+def _filings(spark, cfg, fetcher):
+    """The lake path's stage functions over the HTTP source: list →
+    filter → download every dispatched doc → unzip.  Returns
+    (companies, filings)."""
+    companies = company_master.extract_companies(spark, cfg.csv_file)
+    dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
+    policy = RetryPolicy(retry_delay=cfg.retry_delay)
+    docs = edinet_api.list_documents(dates, fetcher, policy, cfg.fetch_partitions)
+    targeted = edinet_api.filter_documents(docs, companies, cfg.target_doc_types)
+    downloads = edinet_api.download_documents(
+        targeted, fetcher, cfg.companies_to_get, policy, cfg.fetch_partitions
+    )
+    return companies, zip_extract.extract_filings(downloads)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
 
 
 @pytest.fixture(scope="module")
@@ -127,16 +146,15 @@ def test_date_range_matches_iso_dates(spark, start, end, n_days):
 def test_end_to_end_golden(spark, fixture_root, cfg):
     """The full offline pipeline reproduces the hand-computed B6 rows:
     A1 dedup discards D002's XBRL (5555 must not appear), bad casts and
-    unknown contexts are skipped, missing unit defaults to JPY."""
-    companies, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
-    final = process_financial_documents(filings, companies)
-    rows = sorted(
-        (r["year"], r["companyname"], r["industryclassification"],
-         r["geonameen"], r["revenue"], r["revenue_unit"])
-        for r in final.collect()
-    )
+    unknown contexts are skipped, missing unit defaults to JPY.  The
+    stage functions the lake path chains (download all, unzip, rank,
+    parse) give the same rows."""
+    fetcher = FixtureFetcher(fixture_root)
+    rows = _rows(revenue_table(spark, cfg, fetcher))
     assert rows == GOLDEN
     assert all(r[4] != 5555 for r in rows)  # deduped XBRL never parsed
+    companies, filings = _filings(spark, cfg, fetcher)
+    assert _rows(process_financial_documents(filings, companies)) == GOLDEN
 
 
 def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path, caplog):
@@ -152,47 +170,45 @@ def test_run_pipeline_writes_csv(spark, fixture_root, cfg, tmp_path, caplog):
     assert metrics["n_rows"] == len(GOLDEN)
     files = glob.glob(f"{out_dir}/*.csv")
     assert len(files) == 1  # coalesce(1) single-file parity
-    back = spark.read.option("header", True).csv(out_dir)
-    assert back.count() == len(GOLDEN)
+    back = spark.read.option("header", True).option("inferSchema", True).csv(out_dir)
     assert back.columns == [
         "year", "companyname", "industryclassification",
         "geonameen", "revenue", "revenue_unit",
     ]
+    assert _rows(back) == GOLDEN
 
 
 def test_small_arrow_byte_cap_keeps_the_csv(spark, fixture_root, cfg, tmp_path):
-    """The fetch and extract islands flush their frames by
+    """The download and extract islands flush their frames by
     ``spark.sql.execution.arrow.maxBytesPerBatch``.  A 16-byte cap, below
     every fixture ZIP and member, gives each of them a frame of its
-    own, and the CSV does not change."""
+    own, and the written CSV does not change."""
     import glob
 
-    def csv_lines(out: str) -> list[str]:
-        [path] = glob.glob(f"{out}/*.csv")
+    def csv_lines(name: str) -> list[str]:
+        final = process_financial_documents(*reversed(_filings(spark, cfg, fetcher)))
+        [path] = glob.glob(f"{load_to_csv(final, str(tmp_path), name)}/*.csv")
         with open(path, encoding="utf-8") as f:
             return sorted(f)
 
+    fetcher = FixtureFetcher(fixture_root)
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
-    base = run_pipeline(
-        spark, replace(cfg, output_dir=str(tmp_path / "base")), FixtureFetcher(fixture_root)
-    )
+    base = csv_lines("base")
     prev = spark.conf.get(key)
     spark.conf.set(key, "16b")
     try:
-        capped = run_pipeline(
-            spark, replace(cfg, output_dir=str(tmp_path / "capped")), FixtureFetcher(fixture_root)
-        )
+        capped = csv_lines("capped")
     finally:
         spark.conf.set(key, prev)
-    assert len(csv_lines(base)) == len(GOLDEN) + 1  # header
-    assert csv_lines(capped) == csv_lines(base)
+    assert len(base) == len(GOLDEN) + 1  # header
+    assert capped == base
 
 
 def test_zip_error_paths(spark, fixture_root, cfg):
     """B5: corrupt ZIP (D009) and no-matching-member ZIP (D007) emit no
     filings; D001's largest .csv member wins (A2).  Each filing carries
     its document's key columns, and no filename is built."""
-    _, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
+    _, filings = _filings(spark, cfg, FixtureFetcher(fixture_root))
     assert filings.columns == [*FILING_KEY, "file_type", "member_bytes"]
     got = {
         r["docID"]: (r["date_str"], r["edinetCode"], r["docTypeCode"], r["file_type"])
@@ -207,8 +223,9 @@ def test_zip_error_paths(spark, fixture_root, cfg):
 
 def test_download_head_n_in_arrival_order(spark, fixture_root, cfg):
     """L1 (``src/extract.py:204-205``): ``companies_to_get`` keeps the
-    first N dispatched docs in ``(date_str, docID)`` order.  D006 has
-    no flag set, so it is dispatched out before the head-N."""
+    first N dispatched docs in ``(date_str, docID)`` order, on the
+    download stage and in the pipeline.  D006 has no flag set, so it is
+    dispatched out before the head-N."""
     fetcher = FixtureFetcher(fixture_root)
     dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
     docs = edinet_api.list_documents(dates, fetcher, num_partitions=2)
@@ -219,6 +236,11 @@ def test_download_head_n_in_arrival_order(spark, fixture_root, cfg):
             targeted, fetcher, companies_to_get=n, num_partitions=2
         )
         assert {r["docID"] for r in dl.collect()} == want
+    # the pipeline takes the same head before A1: with 2 docs, E00002's
+    # 130 (D003) is no candidate, so its 120 (D002, XBRL) wins
+    head2 = revenue_table(spark, replace(cfg, companies_to_get=2), fetcher)
+    revenues = {r["revenue"] for r in head2.collect()}
+    assert 5555 in revenues and 2000 not in revenues
 
 
 def test_select_best_filings_tie_rules(spark):
@@ -474,8 +496,7 @@ def test_pipeline_plan_has_no_python_rows(spark, fixture_root, cfg):
     """The literal side tables (date axis, year map) are JVM expressions:
     no ``ExistingRDD`` scan, which would start a Python worker just to
     unpickle the rows."""
-    companies, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
-    plan = _physical_plan(process_financial_documents(filings, companies))
+    plan = _physical_plan(revenue_table(spark, cfg, FixtureFetcher(fixture_root)))
     assert "ExistingRDD" not in plan, plan
 
 
@@ -640,11 +661,10 @@ def _window_nodes(plan: str) -> list[str]:
 
 def test_ingestion_has_no_global_window(spark, fixture_root, cfg, tmp_path):
     """Arrival order is a sort key, never a global rank: neither
-    ingestion path plans a ``Window`` or a single-partition exchange,
-    and A1's window, partitioned by company, is the pipeline's only
-    ``Window``."""
+    ingestion path plans a ``Window`` or a single-partition exchange.
+    On the lake path A1's window, partitioned by company, is the only
+    ``Window``; the HTTP pipeline ranks by a sort and has none."""
     from edinet_etl_spark.sources.binary_lake import read_filing_lake
-    from edinet_etl_spark.sources.zip_extract import extract_filings
 
     fetcher = FixtureFetcher(fixture_root)
     dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
@@ -654,19 +674,34 @@ def test_ingestion_has_no_global_window(spark, fixture_root, cfg, tmp_path):
     lake = tmp_path / "lake" / "dt=2024-06-01"
     lake.mkdir(parents=True)
     (lake / "D001_E00001_120_5.zip").write_bytes(_zip_bytes({"a.csv": b"x"}))
+    lake_filings = zip_extract.extract_filings(read_filing_lake(spark, str(tmp_path / "lake")))
     for ingest in (
         edinet_api.download_documents(targeted, fetcher, companies_to_get=None),
-        extract_filings(read_filing_lake(spark, str(tmp_path / "lake"))),
+        lake_filings,
+        revenue_table(spark, cfg, fetcher),
     ):
         plan = _physical_plan(ingest)
         assert "SinglePartition" not in plan, plan
         assert _window_nodes(plan) == [], plan
 
-    plan = _physical_plan(
-        process_financial_documents(*reversed(ingest_filings(spark, cfg, fetcher)))
-    )
+    plan = _physical_plan(process_financial_documents(lake_filings, companies))
     [a1] = _window_nodes(plan)
     assert re.search(r"\], \[edinetCode#\d+\], \[", a1), a1
+
+
+def test_run_pipeline_plan_fetches_winners_only(spark, fixture_root, cfg):
+    """The HTTP pipeline is two islands, list fetch and the A1 walker,
+    with one metadata shuffle between them: a repartition by company to
+    exactly ``fetch_partitions`` tasks, each sorted by company, then A1.
+    No filing bytes are in the plan, and no window ranks them."""
+    plan = _physical_plan(revenue_table(spark, cfg, FixtureFetcher(fixture_root)))
+    assert plan.count("MapInPandas") == 2, plan
+    assert _window_nodes(plan) == [], plan
+    assert not re.search(r"\b(content|member_bytes)#", plan), plan
+    [by_company] = re.findall(r"Exchange hashpartitioning\(([^)]*)\), (\w+)", plan)
+    assert re.fullmatch(rf"edinetCode#\d+, {cfg.fetch_partitions}", by_company[0]), plan
+    assert by_company[1] == "REPARTITION_BY_NUM", plan
+    assert re.search(r"Sort \[edinetCode#\d+ ASC NULLS FIRST, \(docTypeCode#\d+ = 130\) DESC", plan), plan
 
 
 def test_filing_islands_plan_shape(spark):

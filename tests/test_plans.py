@@ -427,6 +427,23 @@ def test_plan_hash_normalizes_session_counters():
     assert normalize_plan(a) == normalize_plan(b)
 
 
+def test_plan_hash_normalizes_session_database_names():
+    """bucketed_colocated_join_audit reads catalog tables in a database
+    named per session (``edinet_bucketed_audit_<12 hex>``, from the
+    application id), so two sessions print two names for one plan."""
+    from edinet_etl_spark.planhash import normalize_plan
+
+    def scan(tag: str) -> str:
+        return (
+            f"FileScan parquet spark_catalog.edinet_bucketed_audit_{tag}.orders_bucketed"
+            "[o_orderkey#12L,o_orderpriority#17] Batched: true, Bucketed: true, "
+            f"Location: InMemoryFileIndex(1 paths)[file:/tmp/edinet_bucketed_audit_{tag}/orders_bucketed]"
+        )
+
+    assert normalize_plan(scan("3f2a9c0d1e4b")) == normalize_plan(scan("c0ffee123456"))
+    assert "orders_bucketed" in normalize_plan(scan("3f2a9c0d1e4b"))
+
+
 def test_plan_hash_normalizes_core_count_tokens():
     """normalize_plan must scrub core-count-derived tokens so the SAME
     query code hashes identically at local[32] and local[8]: the driver

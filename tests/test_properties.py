@@ -4,7 +4,9 @@ over hypothesis-generated inputs.
 
 - A1 best-filing dedup == the reference's literal dict semantics
   (``/root/reference/src/transform.py:133``: overwrite on every '130',
-  insert-if-absent otherwise) for ANY arrival sequence.
+  insert-if-absent otherwise) for ANY arrival sequence — both the
+  window over filing rows and the winners-first walker over docs, some
+  of which fail to download or hold no filing.
 - the generic as-of join == a quadratic-scan Python model for ANY
   (events, orders) shape, including empty sides and heavy key ties.
 - ``dsum`` is bit-identical under row reorder + repartition and equals
@@ -24,7 +26,9 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum
 from edinet_etl_spark.operators.temporal import asof_join
-from edinet_etl_spark.pipeline.transform import select_best_filings
+from edinet_etl_spark.pipeline.transform import best_filing_facts, select_best_filings
+from edinet_etl_spark.sources.edinet_api import Fetcher, RetryPolicy
+from tests.fixtures.gen import _filing_csv_bytes, _zip_bytes
 import pytest
 
 pytestmark = pytest.mark.deep  # inner loop: -m "not deep" (see pytest.ini)
@@ -65,6 +69,85 @@ def test_select_best_filings_matches_reference_dict_model(spark, filings):
         if company not in model or dtype == "130":
             model[company] = doc_id
     assert got == model
+
+
+class _OutcomeFetcher(Fetcher):
+    """Serves each doc by its drawn outcome and counts every call in
+    ``calls`` (a Spark accumulator): 'ok' is a filing with one revenue
+    fact, 'no_parse' a filing without a fiscal year, 'no_member' a ZIP
+    with no .csv member, and 'fail' raises OSError on every attempt."""
+
+    def __init__(self, outcomes: dict[str, str], calls):
+        self.outcomes = outcomes
+        self.calls = calls
+
+    def fetch_document(self, doc_id: str, file_type: str) -> bytes:
+        self.calls.add(1)
+        outcome = self.outcomes[doc_id]
+        if outcome == "fail":
+            raise OSError(f"permanent failure for {doc_id}")
+        if outcome == "no_member":
+            return _zip_bytes({"notes.txt": b"no filing"})
+        rows = [["jpcrp_cor:NetSales", "CurrentYearDuration", "1", "JPY"]] * 2
+        if outcome == "ok":
+            rows.append(["jpdei_cor:CurrentFiscalYearEndDateDEI", "FilingDateInstant", "2024-03-31", None])
+        return _zip_bytes({"filing.csv": _filing_csv_bytes(rows)})
+
+
+_outcome = st.sampled_from(["ok", "ok", "no_parse", "no_member", "fail"])
+
+
+@given(st.lists(st.tuples(_filing, _outcome), min_size=1, max_size=12))
+@settings(**_SETTINGS)
+def test_best_filing_facts_matches_reference_dict_model(spark, docs):
+    """The walker keeps the reference's winner among the docs that yield
+    a filing, emits facts only for a winner that parses, and fetches
+    each company's docs in A1 order up to its winner and none after.
+    Two-row Arrow batches split companies across batches."""
+    rows = [
+        (date_str, f"D{i:02d}", company, dtype, "csv", "5")
+        for i, ((date_str, company, dtype), _) in enumerate(docs)
+    ]
+    outcomes = {f"D{i:02d}": outcome for i, (_, outcome) in enumerate(docs)}
+    df = spark.createDataFrame(
+        rows,
+        "date_str string, docID string, edinetCode string, docTypeCode string, "
+        "file_type string, api_type string",
+    )
+    calls = spark.sparkContext.accumulator(0)
+    policy = RetryPolicy(max_retries=1, retry_delay=0.0001, requests_per_second=0)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        facts = best_filing_facts(df, _OutcomeFetcher(outcomes, calls), policy, 2).collect()
+    finally:
+        spark.conf.set(key, prev)
+
+    # the reference's loop over the docs that yield a filing, in arrival order
+    model: dict[str, str] = {}
+    for date_str, doc_id, company, dtype, *_ in sorted(rows):
+        if outcomes[doc_id] in ("ok", "no_parse") and (company not in model or dtype == "130"):
+            model[company] = doc_id
+    assert {(r["edinetCode"], r["docID"]) for r in facts} == {
+        (c, d) for c, d in model.items() if outcomes[d] == "ok"
+    }
+    # calls: each company's docs best first (130s latest first, then the
+    # rest earliest first) up to its first filing; a failing doc is
+    # tried once per attempt
+    by_company: dict[str, list] = {}
+    for row in sorted(rows):
+        by_company.setdefault(row[2], []).append(row)
+    expected_calls = 0
+    for company_rows in by_company.values():
+        ranked = [r for r in reversed(company_rows) if r[3] == "130"]
+        ranked += [r for r in company_rows if r[3] != "130"]
+        for row in ranked:
+            outcome = outcomes[row[1]]
+            expected_calls += policy.max_retries + 1 if outcome == "fail" else 1
+            if outcome in ("ok", "no_parse"):
+                break
+    assert calls.value == expected_calls
 
 
 # ------------------------------------------------------------- as-of
