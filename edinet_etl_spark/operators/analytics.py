@@ -22,7 +22,7 @@ from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.prefix import range_prefix_sum, range_row_number
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 
@@ -42,7 +42,6 @@ from edinet_etl_spark.tables import load
 def customer_rank_in_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking trio; row_number gets a total order (tiebreak c_custkey)
     so it is deterministic, rank/dense_rank share ties by design."""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"))
     w_total = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
@@ -71,7 +70,6 @@ def customer_rank_in_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def order_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over a total per-customer order (the distributed form of
     the reference's positional "next elements after marker" F18)."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_totalprice").over(w)
@@ -106,7 +104,6 @@ def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running-total frame (rowsBetween).  The frame sum is exact
     decimal: prefix sums are order-sensitive by definition, so the
     ordering is total and the arithmetic exact."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -148,7 +145,6 @@ def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def yearly_spend_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range frame over a numeric ordering column: trailing-2-year spend
     per customer (rangeBetween -1..0 on the year axis)."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     yearly = (
         orders.withColumn("order_year", F.year("o_orderdate").cast("bigint"))
@@ -182,7 +178,6 @@ def top3_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group: the distributed replacement for the reference's
     per-group head-N idiom; Spark runs it as a windowed rank with
     partial top-k pushdown (WindowGroupLimit) before the shuffle."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
@@ -204,7 +199,6 @@ def top3_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers=["W-extended"],
 )
 def customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), "c_custkey")
     return customer.select(
@@ -226,7 +220,6 @@ def customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sales_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all 4 grouping sets in one Expand+Aggregate (no re-scan)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"), dsum(F.col("l_quantity"), "sum_qty")
@@ -244,7 +237,6 @@ def sales_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers=["A-extended"],
 )
 def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.rollup("l_returnflag", "l_linestatus").agg(
@@ -264,7 +256,6 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def order_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via Spark SQL (same Catalyst plan as the DF API)."""
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
     return spark.sql(
         """
@@ -292,7 +283,6 @@ def order_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-column distinct aggregation (Expand-based plan)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -362,7 +352,6 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-taking the k smallest of a union; the shuffle carries distinct
     hashes only (the ``.distinct()`` map-side combines), and the
     final window sorts ≤ k rows per group."""
-    prep(spark)
     k = _kmv_k()
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_partkey"
@@ -406,7 +395,6 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quantity_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an explicit value list (never let Spark scan for pivot
     values at 100 TB — pass them)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -434,7 +422,6 @@ def quantity_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median + min/max.  (percentile_approx is the 100 TB path;
     exact median here so the oracle comparison is well-defined.)"""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderpriority")
@@ -469,7 +456,6 @@ def salted_returnflag_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The salt must be a *deterministic* function of row identity — a
     rand() salt breaks retry/speculative-execution idempotence.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     salt = F.crc32(
         F.concat_ws("|", F.col("l_orderkey"), F.col("l_linenumber"))
@@ -503,7 +489,6 @@ def lineitem_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics store wants one row per (entity, metric).  Spark's
     ``unpivot`` is a single Expand node: one scan, row count ×4, no
     shuffle; raw values pass through bit-exact (no aggregation)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
@@ -546,7 +531,6 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps pair work linear in block size; cross-sub-block pairs are
     the documented recall trade (no-op at test scale: sf0.1 blocks
     max out under the cap, results identical)."""
-    prep(spark)
     part = load(spark, sf_dir, "part").withColumn(
         "salt", ranked_salt(["p_brand", "p_size"], "p_partkey", 64)
     )
@@ -586,7 +570,6 @@ def deterministic_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry semantics and an external oracle.  It also pushes down as an
     ordinary predicate, and the same key always lands in (or out of)
     the sample, so samples of joinable tables stay joinable."""
-    prep(spark)
     od = load(spark, sf_dir, "orders")
     sampled = od.filter(
         F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 2) <= "14"
@@ -609,7 +592,6 @@ def nations_per_region_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String aggregation (listagg): collect_list has no deterministic
     order under distribution, so sort the array before joining —
     the only portable listagg (matches ORDER BY inside string_agg)."""
-    prep(spark)
     nation = load(spark, sf_dir, "nation")
     return nation.groupBy("n_regionkey").agg(
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations")
@@ -642,7 +624,6 @@ def price_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     as decimals and finishing the closed form in double is
     deterministic everywhere; the products carry ≤4 intrinsic decimal
     digits, so DECIMAL(28,8) holds them exactly."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
 
     def dsum_to_double(c, alias):
@@ -680,7 +661,6 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram via arithmetic bucketing — floor((x-lo)/w)
     is engine-portable (unlike width_bucket variants) and the groupBy
     shuffles only |buckets| partial rows."""
-    prep(spark)
     part = load(spark, sf_dir, "part")
     bucket = F.floor((F.col("p_retailprice") - 900.0) / 10.0).cast("int")
     return (
@@ -715,7 +695,6 @@ def orders_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the merged values hash-match the SQL formulation."""
     from edinet_etl_spark.layout import merge_upsert
 
-    prep(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -753,7 +732,6 @@ def order_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit whole-partition frame.  Total ORDER BY (o_orderkey ties)
     makes all three deterministic; rank/dist are (int-1)/(int-1) and
     int/int divisions — portable.  One window shuffle."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -800,7 +778,6 @@ def salted_hotkey_join_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit form works for aggregations-after-join and stateful
     streaming joins where AQE can't help.)  The salt is deterministic —
     rand() would break task-retry idempotence."""
-    prep(spark)
     n_salts = 8
     li = load(spark, sf_dir, "lineitem")
     supplier = load(spark, sf_dir, "supplier")
@@ -872,7 +849,6 @@ def scd2_customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     The no-op-update guard is exercised: the update batch contains
     EVERY customer (unchanged segments for 6/7 of them), and only real
     changes version."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     base = (
         cust.withColumn("valid_from", F.lit("2024-01-01").cast("date"))
@@ -930,7 +906,6 @@ def zorder_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     win over a single-key sort is measured in tests/test_layout.py.
     Pure codegen bit algebra + ONE aggregate exchange; the same
     expression Z-orders a 100 TB fact at write time."""
-    prep(spark)
     from edinet_etl_spark.layout import zorder_value
 
     od = load(spark, sf_dir, "orders")
@@ -992,7 +967,6 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     AVG — the standard mergeable-aggregate trick.  Compare
     `streaming_cdc_snapshot` (row-level upsert maintenance);
     this is the aggregate-level analogue."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     split = F.lit(_INC_SPLIT).cast("timestamp")
 
@@ -1068,7 +1042,6 @@ def customer_spend_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-merge at scale — no forced hint per the growth-law audit),
     ONE shuffle for the (nation, year) partial-agg rollup, then a
     25-row second aggregate.  Shuffle bytes ~ group count, not rows."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     y_milli = (
@@ -1149,7 +1122,6 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti join + union — snapshot-side cost is a single hash join
     regardless of history length.  Balances are copied, not
     aggregated, so every value compares bit-exact."""
-    prep(spark)
     from edinet_etl_spark.layout import apply_changes
 
     customers = load(spark, sf_dir, "customer").select(
@@ -1202,7 +1174,6 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ordinary partial-agg shuffle.  The oracle models the same read
     as a typed UNION with NULL for the missing column — the relational
     definition of schema-evolved scan."""
-    prep(spark)
     import hashlib
     import os
     import shutil
@@ -1275,7 +1246,6 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-price date maxima over the candidate union equal those over
     the full table for every surviving group.  At 100 TB the global
     stage sees a few thousand rows regardless of input size."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -1380,7 +1350,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     7.9x; after the collapse the same probe is ~1x — recorded in
     SCALE.md.)  `binned_quantile_sketch` remains the constant-state
     fallback if distinct values themselves blow up."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("price"),
@@ -1467,7 +1436,6 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     never joined in bulk; only its (suppkey -> nationkey) projection
     rides the fact-side shuffle.  At 100 TB this is the same two-level
     agg shape as `revenue_by_nation_year` (SCALE.md's flagship law)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -1557,7 +1525,6 @@ def segment_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     `weighted_median_price`; the binned sketch is the constant-state
     fallback), then a 5-row reduce.  Never a global un-partitioned
     window."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cents = (
@@ -1654,7 +1621,6 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies need >= k(k+1)/2 underlying rows), so the partition-less
     ordered window over it is bounded regardless of fact size; the three
     one-row legs broadcast-cross-join into the single output row."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     counts = li.groupBy(F.col("l_partkey").alias("key")).agg(
         F.count("*").cast("bigint").alias("cnt")
@@ -1783,7 +1749,6 @@ def exact_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle to (segment, price).  If one segment's distinct-value
     set ever outgrew a partition, the binned two-pass sketch is the
     documented fallback."""
-    prep(spark)
     _byval, cum = _segment_price_counts(spark, sf_dir)
     return (
         cum.groupBy("segment")
@@ -1850,7 +1815,6 @@ def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the defining property that makes this plan safe at 100 TB.  The
     plan's output feeds `layout.overwrite_one_day`-style rewrites
     bin by bin."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     files = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.sum(
@@ -1961,7 +1925,6 @@ def winsorized_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     second fact scan because Σ clip(v)·cnt is computable from the same
     collapsed grid that selected the thresholds; the threshold table
     (|segments| rows) broadcasts back."""
-    prep(spark)
     byval, cum = _segment_price_counts(spark, sf_dir)
     thr = cum.groupBy("segment").agg(
         F.min(F.when(100 * F.col("cumcnt") >= F.col("n"), F.col("price"))).alias(
@@ -2048,7 +2011,6 @@ def region_nation_revenue_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the heavy work is the same broadcast-star fact aggregate as
     `revenue_by_nation_year`; both share windows run on the constant
     25-row result — the denominators never touch the fact table."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load(spark, sf_dir, "nation")
@@ -2127,7 +2089,6 @@ def spend_quartile_mobility(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade as every grouped exact selection here), and a self-join on
     custkey that AQE plans as a normal hash join on the collapsed
     per-customer table, never the fact table."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     spend = o.groupBy(
         F.col("o_custkey").alias("custkey"),
@@ -2232,7 +2193,6 @@ def interpolated_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical two-collapse shape as the nearest-rank family —
     distinct-value collapse, bounded per-segment window, constant
     output."""
-    prep(spark)
     _byval, cum = _segment_price_counts(spark, sf_dir)
     aggs = [F.max("n").cast("bigint").alias("n_orders")]
     parts = {}
@@ -2320,7 +2280,6 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined moment aggregate.  DECIMAL(38,0) holds the
     moments to ~10^31 — beyond sf1000; the headroom law is documented
     rather than assumed."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_extendedprice", "l_quantity")
 
     def rank2(col: str) -> DataFrame:
@@ -2397,7 +2356,6 @@ def modal_quantity_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: value-collapse map-side (the same first stage as every
     selection here), then all logic on the |flags|×|distinct qty|
     grid; the per-group max joins back on the collapsed grid only."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     counts = li.groupBy(
         "l_returnflag", F.col("l_quantity").cast("bigint").alias("qty")
@@ -2467,7 +2425,6 @@ def nation_revenue_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact aggregate (the flagship star shape filtered to two
     years), then all ranking on the 25×2 grid; the self-join matches
     on the grid only."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -2573,7 +2530,6 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two map-side-combinable aggregates + a broadcast join of
     the |segments|-row encoder table back to rows — the encode pass is
     one scan; at 100 TB the encoder table is still 5 rows."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     od = load(spark, sf_dir, "orders")
     y = (
@@ -2652,7 +2608,6 @@ def ab_assignment_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-collapse aggregate, one 2-cell reduction; the
     arm hash is codegen md5 — the same single-scan shape at any
     corpus size."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     arm = (
         F.conv(
@@ -2743,7 +2698,6 @@ def split_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction + coverage is a broadcast-join scan.
     The hash-split (parity) is the same deterministic assignment the
     A/B and train/test splits use."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     od = load(spark, sf_dir, "orders")
     y = (
@@ -2879,7 +2833,6 @@ def poisson_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (combinable); the unpivot + rank run on a 16-row frame.  B scales
     to hundreds before the aggregate row width matters; no fan-out,
     no explode, no per-resample pass."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("event_id", "value")
 
     def w(b: int):
@@ -2979,7 +2932,6 @@ def ece_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one combinable scan → 10-row grid; everything after is
     constant-size.  The same shape holds for any bin count or model
     score column at 100 TB."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
     h = F.conv(
         F.substring(
@@ -3084,7 +3036,6 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     the j x k segment enumeration and the minimax joins are
     O(bins^3) = 1000 rows on CONSTANT-size frames (broadcast,
     checkpointed once) — the same cost at any corpus size."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
     h = F.conv(
         F.substring(
@@ -3210,7 +3161,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     days-of-history, bounded by time, not by data volume (10× the
     rows is the same ~30-row grid).  The broadcast side is the tiny
     grid, never a fact table."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     daily = materialize(
         ev.groupBy(F.to_date("ts").alias("day")).agg(dsum(F.col("value"), "total"))
@@ -3313,7 +3263,6 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same law as `mann_kendall_trend` — collapse to the
     day grid first, O(D²) only on the bounded calendar grid, pair
     generation against the broadcast grid copy."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     daily = materialize(
         ev.groupBy(F.to_date("ts").alias("day")).agg(dsum(F.col("value"), "total"))
@@ -3405,7 +3354,6 @@ def epsilon_greedy_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed shuffle (the first-event window and the
     conversion MAX share it) → a 4-row arm grid; the best-arm pick and allocation math are constant-size.
     The same shape serves any K at 100 TB."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     arm = F.pmod(
         F.conv(
@@ -3549,7 +3497,6 @@ def zorder_data_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only that constant-size stats table against a broadcast
     literal predicate set.  The single one-row max-aggregate feeding
     the grid scale is catalog metadata at 100 TB."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     mx = o.agg(
         F.max("o_custkey").alias("mx"),
@@ -3677,7 +3624,6 @@ def column_stats_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     column whose NDV itself is data-sized, production ANALYZE runs
     this same plan over a deterministic hash-sample (the repo's
     `priority_weighted_sample` discipline) — the shape is unchanged."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     stacked = li.selectExpr(
         f"stack({len(_COLSTATS_COLS)}, "
@@ -3827,7 +3773,6 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand totals come from a plain aggregate off the shared grid
     exchange; the final rollup is {_GAINS_B} rows.  (Oracle keeps the textbook LEFT JOIN spelling; orders
     referential integrity makes the two equivalent.)"""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").select("c_custkey")
     zero_spend = F.lit(0).cast("decimal(18,8)")
@@ -3943,7 +3888,6 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     A₀⋈B₀ term is NEVER recomputed (its partials are the stored
     view, represented here by one term so the audit covers the merge).
     History is joined exactly once over the view's lifetime."""
-    prep(spark)
     cut = F.to_timestamp(F.lit(_IVMJ_SPLIT))
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderdate"
@@ -4028,7 +3972,6 @@ def bucketed_colocated_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     conversion.  At 100 TB this is the difference between re-shuffling
     the lake per query and reading co-located buckets; the bucket
     count is the write-time parallelism dial (`layout.N_BUCKETS`)."""
-    prep(spark)
     import hashlib
     import os
     import tempfile
@@ -4124,7 +4067,6 @@ def quantity_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable aggregate carrying four decimal
     sums — the same single-pass shape as the covariance matrix; no
     second pass, no join, one shuffle of 3 x 5 partials."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     q = F.col("l_quantity")
     sums = li.groupBy("l_returnflag").agg(

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 N_HASHES = 8
@@ -269,7 +269,6 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on a content fingerprint, keeping the
     lowest doc_id per group.  At 100 TB: group on the 128-bit hash (not
     the text) so the shuffle carries 16 bytes/row, not documents."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5("text").alias("fingerprint"))
@@ -307,7 +306,6 @@ def exact_duplicate_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the shuffle carries (doc_id, 16-byte md5), never document
     text; one hash-partitioned window, no join."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("fingerprint")
     keeper = F.min("doc_id").over(w)
@@ -337,7 +335,6 @@ def bag_of_words_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive near-exact dedup: fingerprint = md5 of the
     sorted distinct token set (catches shuffled/duplicated-word copies
     that byte-exact dedup misses).  Pure higher-order array fns."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     bow = F.md5(
         F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("text"), " "))))
@@ -364,7 +361,6 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path: O(n) bucket build instead of O(n²) pair scan, and
     `salted_buckets` caps per-bucket pair fan-out at _MAX_BUCKET²/2 so
     a pathological bucket costs linear, not quadratic, work."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     bands = lsh_bands(minhash_signatures(docs))
     # Bucket-group instead of self-join: a self-join would execute the
@@ -410,7 +406,6 @@ def canonical_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output pairs are over canonical doc_ids (the dedup ledger for
     near-dup decisions once exact copies are already folded)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     bands = lsh_bands(minhash_signatures(canon))
@@ -446,7 +441,6 @@ def lsh_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'logged drop count' a production dedup run reports so salting
     is a measured trade, not a silent one.  Pure aggregate over the
     band table: one (band,hash) shuffle + one tiny per-band rollup."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     bands = lsh_bands(minhash_signatures(docs))
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("n"))
@@ -544,7 +538,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on doc_id; candidate generation joins PREFIX tokens only,
     keyed (source, tok); verification is linear in candidates.  No
     all-pairs stage anywhere."""
-    prep(spark)
     tok, sizes = _doc_tokens(load(spark, sf_dir, "documents"))
     df = tok.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
@@ -627,7 +620,6 @@ def ngram_jaccard_allpairs_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     36.8x) — kept only to measure the production form's filters
     against ground truth on corpora small enough to brute-force.
     Never the scale path."""
-    prep(spark)
     tok, sizes = _doc_tokens(load(spark, sf_dir, "documents"))
     a = tok.alias("a")
     b = tok.alias("b")
@@ -703,7 +695,6 @@ def jaccard_verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, AQE broadcasts while it fits) and scores
     size(array_intersect(...)) inline — no exploded-token fan-out
     anywhere, per-pair cost bounded by document token count."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     cand = candidate_pairs(lsh_bands(minhash_signatures(docs)))
     # round-10: same array-local verify as
@@ -823,7 +814,6 @@ def containment_verify_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcasts it while it fits), zero explode anywhere, and the
     containment denominators ride in the same row.  Exact string-set
     intersection, same output."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     cand = candidate_pairs(lsh_bands(minhash_signatures(canon)))
@@ -888,7 +878,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     at small Hamming distance; token multiplicity weights the vote
     (hence no DISTINCT).  One explode + one aggregate — a single
     shuffle on doc_id."""
-    prep(spark)
     return _simhash_sigs(spark, load(spark, sf_dir, "documents"))
 
 
@@ -993,7 +982,6 @@ def simhash_hamming_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise _SIMHASH_BITS (64-bit sigs, 4×16-bit bands at radius 3) to
     keep buckets bounded; the pigeonhole guarantee holds for any
     (bands, radius) with radius < bands."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     sigs = _simhash_sigs(spark, canon)
@@ -1158,7 +1146,6 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeling is stable, so no confirmation round.  Component diameters
     in a near-dup graph are tiny, so few iterations.  Oracle: the
     identical fixpoint as a recursive CTE."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     wmin = Window.partitionBy(F.md5("text"))
     # one shuffle on the 16-byte text hash serves both window aggs
@@ -1289,7 +1276,6 @@ def neardup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries (component, doc_id, n_chars) triples, not text.
     Lengths are exact ints: the argmax has no float ties (byte-equal
     copies tie on n_chars and resolve to the lowest doc_id)."""
-    prep(spark)
     comp = neardup_components(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     w = Window.partitionBy("component").orderBy(F.desc("n_chars"), "doc_id")
@@ -1377,7 +1363,6 @@ def delta_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     same salted sub-bucket split as `salted_buckets`, so a
     self-similar batch (replicated crawl) costs linear, not quadratic,
     work.  Measured on the 10× replicated-corpus probe: 13.2× → ~2×."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     # Scalar batch threshold: one narrow MAX scan of doc_id collected
     # driver-side (like the neardup loop controls; in production the
@@ -1487,7 +1472,6 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str) -> DataFram
     signature pass); candidates come from the salted bucket-group; the
     intersection join is O(Σ_candidates |shingles|) — linear in
     candidate count, the same cost law as `jaccard_verify_candidates`."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     sigs = materialize(minhash_signatures(canon))
@@ -1625,7 +1609,6 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query is for.  (mod raised 2→4 in round 9 per the production
     guidance above — the curve reads identically on the smaller
     sample; VERDICT r8 task 5.)"""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs, "n_chars")
     parity = (
@@ -1782,7 +1765,6 @@ def duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix-array shards, and the canonical collapse is what keeps a
     crawl's exact-copy mass out of the explode (measured at the ×100
     replica: 45.6 → ~3 s)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", F.md5("text").alias("fp"))
     wfp = Window.partitionBy("fp")
@@ -2019,7 +2001,6 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets k-fold and candidates k-squared.  The reference's only dedup is
     exact row-level `drop_duplicates` (/root/reference/src/transform.py:109-145);
     this is the scalable superset a lake-scale curation pipeline needs."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     # canonical collapse FIRST (the pair-generator checklist rule):
     # byte-equal copies share the whole shingle set, so raw-doc prefix
@@ -2118,7 +2099,6 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNM_KEY_LEN = 24  # blocking key: first 24 normalized chars
 _SNM_BLOCK_LEN = 2  # window-partition prefix (scale unit)
-_SNM_W = 3  # sliding window size => each record pairs with w-1 successors
 
 
 @query(
@@ -2175,7 +2155,6 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall cost is the ≤ w-1 pairs lost at each block boundary,
     recovered in practice by a second pass under a rotated key — the
     standard multi-pass SNM remedy."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     k = F.substring(
         F.lower(F.regexp_replace(F.col("text"), "[^a-z ]", "")), 1, _SNM_KEY_LEN
@@ -2326,7 +2305,6 @@ def edit_distance_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     `test_levenshtein_cross_engine_parity`); a multilingual corpus
     would need a byte-cast on the Spark side before hashing.
     ``rel_edit`` adds one correctly-rounded division."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     canon = canonical_docs(docs)
     bands = lsh_bands(minhash_signatures(canon))

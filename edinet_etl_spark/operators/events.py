@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.numeric import davg, dsum, sql_dsum
 from edinet_etl_spark.prefix import range_prefix_sum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 
@@ -42,7 +41,6 @@ from edinet_etl_spark.tables import load
 def tumbling_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time window: ``F.window(ts, '1 hour')`` — epoch-
     aligned, identical semantics in batch and streaming."""
-    prep(spark)
     return hourly_stats(load(spark, sf_dir, "events")).orderBy(
         "window_start", "event_type"
     )
@@ -80,7 +78,6 @@ def hourly_stats(ev: DataFrame) -> DataFrame:
 def sliding_30m_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (30 min length, 10 min slide): each event lands in
     3 windows.  Oracle expresses the same assignment arithmetically."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "30 minutes", "10 minutes").alias("w"))
@@ -131,7 +128,6 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     intervals per key.  The oracle derives identical sessions with the
     classic gaps-and-islands SQL.  session_window's end = last event +
     gap, matching MAX(ts) + gap."""
-    prep(spark)
     return sessions(load(spark, sf_dir, "events")).orderBy("user_id", "session_start")
 
 
@@ -169,7 +165,6 @@ def first_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed dedup keeping the earliest event — the deterministic batch
     analogue of streaming ``dropDuplicates([...])`` (which keeps an
     arbitrary first-seen row; we pin event-time order)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -195,7 +190,6 @@ def first_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def props_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14 JSON decode (``src/extract.py:87,126``): get_json_object on
     the props column; integer sum is exact."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.select(
@@ -224,7 +218,6 @@ def props_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def eventtype_hourly_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily conditional counts (pivot-style) over the event feed."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
 
     def cnt(t: str, alias: str):
@@ -259,7 +252,6 @@ def multires_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per resolution; ``grouping_id`` disambiguates rollup nulls
     from genuine nulls.  At 100 TB this is the pattern for maintaining
     downsample tables: one shuffle keyed by the finest bucket."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     day = F.date_trunc("day", F.col("ts")).alias("day_start")
     hour = F.date_trunc("hour", F.col("ts")).alias("hour_start")
@@ -297,7 +289,6 @@ def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, then the cohort×offset count-distinct); the first-day
     aggregate joins back keyed on user_id, co-partitioned with the
     event stream."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("cohort_day")
@@ -340,7 +331,6 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict time-ordering tests.  One shuffle on user_id + a singleton
     reduce; never a self-join per step (the naive N-way join blows up
     at event-log scale)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     def first_of(t: str):
         return F.min(F.when(F.col("event_type") == t, F.col("ts"))).alias(f"t_{t}")
@@ -383,7 +373,6 @@ def event_type_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (user, type) aggregate shuffle, one user-level
     `collect_list` reaggregate, per-row map ops in codegen — the map
     never crosses a shuffle wider than its packed struct entries."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     per_type = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
     packed = per_type.groupBy("user_id").agg(
@@ -429,7 +418,6 @@ def event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered pass); the transition matrix is |types|² rows — the
     aggregate output is tiny regardless of corpus size, so partial
     aggregation collapses everything map-side."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -472,7 +460,6 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's JSON functions — the value surface is identical, the
     storage encoding is each engine's own.  All aggregates integer →
     exact."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     k = F.try_variant_get(F.parse_json(F.col("props")), "$.k", "bigint")
     return (
@@ -530,7 +517,6 @@ def seasonal_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats pattern (SCALE.md): the fact stream is never shuffled for
     the baseline; the final per-bucket rollup's shuffle payload is
     bounded by group count per task, not input rows."""
-    prep(spark)
     from edinet_etl_spark.numeric import dec
 
     ev = load(spark, sf_dir, "events").select(
@@ -588,7 +574,6 @@ def event_sequence_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     per task.  Window order (ts, event_id) is a total order per user,
     so LEAD is deterministic; top-10 carries the full (n DESC, trigram)
     tie-break per the LIMIT discipline."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -637,7 +622,6 @@ def rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     The output keeps only window days that are themselves event days
     (the as-of-each-active-day convention), via a broadcast semi-join
     against the tiny distinct-day set."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     ud = ev.select(F.to_date("ts").alias("d"), "user_id").distinct()
     days = ud.select("d").distinct()
@@ -725,7 +709,6 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-bin counts locate the median bin, a second filtered pass
     selects exactly within it); this query is the exact-semantics
     form the sketch is validated against."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("event_type", "event_id", "value")
     two = F.lit(2).cast("double")
 
@@ -840,7 +823,6 @@ def value_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type over that tiny series (days*24 rows per type at any
     corpus size — bounded by the time range, not the data volume);
     the final ACF table is |event_types|*3 rows."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
@@ -940,7 +922,6 @@ def linear_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     component ((user, day) ∈ {d, d-1}) so each click co-locates with
     only the purchases it can touch — the banded-range-join idiom of
     `price_neighbor_pairs_binned`."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -1038,7 +1019,6 @@ def user_profile_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, so the exchange carries one in-flight profile per
     (user, partition) — never raw events.  Exact distinct-type count
     rides the same agg via Expand (|types| = 5 lanes)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -1125,7 +1105,6 @@ def event_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to distinct (type, gap) values map-side before the per-type
     cumulative selection (the same two-collapse law as
     `exact_group_percentiles`)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -1228,7 +1207,6 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id; per-task work is linear in the
     largest user's history, state is one float — at 100 TB this runs
     as a streaming stateful op with the identical per-key fold."""
-    prep(spark)
     import pandas as pd
 
     ev = load(spark, sf_dir, "events").select(
@@ -1312,7 +1290,6 @@ def funnel_7d_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (click agg sees only view-reaching users).  At 100 TB this is the
     standard two-pass funnel; the single-pass alternative (collect
     per-user event lists) trades shuffle count for state size."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -1402,7 +1379,6 @@ def mannwhitney_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct-value collapse map-side, one ordered window over
     the collapsed values (the same O(distinct) bound as the selection
     family), one-row output."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -1501,7 +1477,6 @@ def longest_purchase_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed days (bounded by active days per user, not events), two
     more map-side aggregates — the anchor trick is what makes streaks
     linear where the naive self-join is quadratic per user."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     epoch = F.lit("1970-01-01").cast("date")
     days = ev.select(
@@ -1585,7 +1560,6 @@ def session_entry_exit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the same ONE user-keyed window shuffle as sessionization
     itself, then two map-side-combined aggregates — the matrix is
     constant-size output."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.select(
@@ -1666,7 +1640,6 @@ def hourly_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the collapse bounds the per-hour window by distinct values,
     not events; hour-of-day extraction is deterministic under prep()'s
     pinned UTC session."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     byval = ev.groupBy(
         F.hour("ts").cast("bigint").alias("hod"), "value"
@@ -1734,7 +1707,6 @@ def daily_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both inputs collapse map-side before the user-keyed join
     (bounded by users × active-days, not events); the join key is the
     user — the same co-partitionable shape as the retention triangle."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day")
@@ -1818,7 +1790,6 @@ def session_eventtype_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     with |types| = 5 the per-session fan-out is ≤ C(5,2), so the
     self-join is linear in sessions, never in events; singles and the
     one-row total broadcast back onto the 10-row pair grid."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = ev.select(
@@ -1934,7 +1905,6 @@ def value_anova_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sufficient statistics are mergeable — this is sketch-shaped), a
     G-row second collapse, zero joins.  The same two-level shape
     computes ANOVA over any corpus size; G is the only state."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -2023,7 +1993,6 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed aggregate (map-side combinable), one 5-value
     collapse; sufficient statistics again — mergeable across shards,
     no second scan, no join."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     split = F.lit(f"{_CUPED_SPLIT} 00:00:00").cast("timestamp")
     zero = F.lit(0).cast("decimal(18,8)")
@@ -2103,7 +2072,6 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single map-side-combinable scan to a 4-row grid; the 2×2
     pivot is a MAX-CASE over four rows.  Mergeable across shards like
     every sufficient-statistic query here."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     arm = (
         F.conv(

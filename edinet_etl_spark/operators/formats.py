@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 
@@ -56,7 +55,6 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, aggregate per order status.  A value changed by the ORC
     writer/reader or its type mapping breaks the hash against the
     parquet-truth oracle."""
-    prep(spark)
     path = _scratch("orc", sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -97,7 +95,6 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an EXPLICIT schema (inference is banned in a deterministic
     pipeline — it type-flips on content), aggregate per segment.
     String escaping round-trips are exercised by the name-bytes sum."""
-    prep(spark)
     path = _scratch("jsonl", sf_dir)
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
@@ -145,7 +142,6 @@ def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is row-local StAX — heavier per byte than parquet, which is why
     the lake stays parquet and XML is an EDGE format (ingest/export),
     exactly how the pipeline layer treats it."""
-    prep(spark)
     path = _scratch("xml", sf_dir)
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type", "p_size")
     (

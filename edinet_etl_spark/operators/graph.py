@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum, sql_dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load, parallel_scan
 
 # Synchronous label-propagation rounds.  A label spreads ≤ R hops in R
@@ -240,7 +240,6 @@ def label_propagation_communities(
     synchronization beyond the shuffles themselves.  The edge list is
     checkpointed once and re-read per round instead of re-deriving the
     self-join ``_LPA_ROUNDS`` times."""
-    prep(spark)
     edges, labels = _lpa_labels(spark, sf_dir)
     w_sz = Window.partitionBy("lab")
     return labels.select(
@@ -281,7 +280,6 @@ def copurchase_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of paying `copurchase_edges`' eager 2m-row checkpoint +
     mirror union (which exist for multi-pass consumers only) — one
     less materialization, same degrees."""
-    prep(spark)
     pairs = copurchase_pairs(spark, sf_dir)
     deg = (
         pairs.select(F.explode(F.array("u", "v")).alias("node"))
@@ -361,7 +359,6 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables broadcast comfortably to ~5 M rows; beyond that, fall back
     to planner joins.  The one `.count()` is a bounded scalar pull on
     an already-materialized checkpoint."""
-    prep(spark)
     edges = copurchase_edges(spark, sf_dir)
     deg = materialize(edges.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
@@ -448,7 +445,6 @@ def copurchase_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one edges⋈labels⋈labels hash join (labels checkpointed once,
     O(n), broadcast when it fits), one map-side-combinable aggregate
     to O(#communities) rows, and windows over that tiny frame."""
-    prep(spark)
     edges, labels = _lpa_labels(spark, sf_dir)
     # labels feeds BOTH endpoint joins — constant-size (one row per
     # node) output of the expensive loop, so materialize it once
@@ -546,7 +542,6 @@ def embedding_cluster_assignments(
     orders smaller than the corpus (only candidate-linked vectors).
     At 100 TB the blocking is IVF cells or hyperplane buckets — the
     same composition with the candidate CTE swapped."""
-    prep(spark)
     from edinet_etl_spark.operators.similarity import (
         embedding_neardup_blocked,
     )
@@ -681,7 +676,6 @@ def textrank_corpus_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges⋈ranks hash join + one map-side-combinable decimal sum over
     a vocabulary-sized rank table.  The driver-side `.count()` is
     loop-control only (the documented iterative idiom)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # both sides of the offset self-join read this explode, and they
     # differ (one side fans out the offsets), so reuse cannot share it
@@ -914,7 +908,6 @@ def largestar_smallstar_components(
     eager checkpoint keeps lineage flat; the only driver traffic is
     the 1-row convergence signature.  The final size window partitions
     BY component (lint-bounded)."""
-    prep(spark)
     labels, _rounds = largestar_smallstar_over(
         copurchase_support_pairs(spark, sf_dir, _STAR_SUPPORT)
     )

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.numeric import sql_dsum, dsum
 from edinet_etl_spark.tables import load, parallel_scan
 
@@ -41,7 +41,6 @@ def stratified_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample must be re-derivable (audits, incremental refreshes).  One
     window shuffle on the stratum key; WindowGroupLimit prunes each
     partition to its top rows before the sort completes."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
@@ -75,7 +74,6 @@ def train_test_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of doc_id: adding documents never reassigns existing
     ones (stable splits under incremental ingest), and any engine can
     recompute the cohort.  Plain groupBy — one shuffle."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     digit = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     split = (
@@ -139,7 +137,6 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on the shingle — at 100 TB the benchmark side is tiny and
     broadcasts, so the training corpus is never shuffled.  Emits the
     contaminated doc ids (the pipeline would anti-join them away)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     with_sh = _word_shingles(docs)
     bench = with_sh.filter(F.col("source") == "src0").select("shingle")
@@ -174,7 +171,6 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports.  Single scan, single aggregate; the rule cascade is one
     CASE expression.  All ratios are int/int divisions in double —
     deterministic across engines."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
@@ -227,7 +223,6 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python, embarrassingly parallel at any corpus size.  The dup
     fraction is one exact int subtraction and one correctly-rounded
     division, portable bit-for-bit."""
-    prep(spark)
     return repetition_frames(load(spark, sf_dir, "documents"))
 
 
@@ -297,7 +292,6 @@ def corpus_common_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact count for a count-min sketch feeding a threshold filter —
     the exact corpus-frequency pass here is the oracle-checkable
     baseline.  Ties broken (n_docs, gram) so LIMIT is deterministic."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     docs = docs.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
@@ -361,7 +355,6 @@ def weighted_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source), but the rank filter drops rows before anything wide
     happens.  At 100 TB quotas are usually expressed as token budgets —
     same plan with SUM(n_tokens) running totals instead of row ranks."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     caps = spark.createDataFrame(
         sorted(_MIX_CAPS.items()), "source: string, cap: int"
@@ -398,7 +391,6 @@ def source_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy shuffle; the grand total is a window over the (tiny)
     aggregate result, not a second scan.  Integer char sums are exact;
     the share is two deterministic float ops on identical operands."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     agg = docs.groupBy("source", "lang").agg(
         F.count("*").alias("n_docs"),
@@ -454,7 +446,6 @@ def token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     global order, same expression inside each bucket), trading exact
     global boundaries for full parallelism.  All arithmetic is exact
     ints; FLOOR(x/5000.0) on values ≪ 2^53 is one correctly-rounded op."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
@@ -511,7 +502,6 @@ def token_budget_pack_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     are exact within each source; the trade is no cross-source shards,
     which real mixtures want anyway (shards stay homogeneous and the
     mixture ratio is enforced at the shard level)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -578,7 +568,6 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     every chunk derives from its own row the operator is embarrassingly
     parallel at any scale; downstream packing (`token_budget_pack`)
     consumes exactly this shape."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     starts = toks.select(
@@ -637,7 +626,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back at the end (K² output rows).  At 100 TB the only big
     shuffle is the distinct — hash-partitioned on shingle, partial
     aggregation upstream.  Jaccard is int/int in double: exact."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _word_shingles(docs).select("source", "shingle").distinct()
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
@@ -702,7 +690,6 @@ def bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-ish per task at any corpus scale — the same mergeable-
     summary property as the CMS sketch.  Top-20 is a TakeOrdered over
     the tiny aggregate, never a full sort of the pair table."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word")).filter(
         F.length("word") >= 2
@@ -796,7 +783,6 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (left-semi for the flag), so the training corpus is never shuffled
     for decontamination; the final card aggregate's payload is
     |sources x 4| rows.  Per-stage counts use map-side combine."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
@@ -938,7 +924,6 @@ def source_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero extra shuffle of document rows.  The corpus-global
     (total, Σ√n) pair is a one-row broadcast.  At 100 TB nothing here
     grows but the linear scan."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     probs = _temperature_probs(docs)
     u = (
@@ -1011,7 +996,6 @@ def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale the same layout is `repartition(N, shard)` +
     `sortWithinPartitions(h_order)` streamed straight to shard files,
     no collect at all."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     sid = F.col("doc_id").cast("string")
     shard = F.pmod(
@@ -1174,7 +1158,6 @@ def bpe_train_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom); vocabulary lineage is checkpoint-truncated each round.
 
     Oracle: the identical unrolled fixed iteration as chained CTEs."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     rows = _bpe_learn_merges(spark, docs)
     return spark.createDataFrame(
@@ -1300,7 +1283,6 @@ def bpe_apply_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Zipf-bounded); encoding touches per-(source, word) counts, again
     vocabulary-sized, never the raw corpus; the final readout is a
     |sources|-row aggregate.  All pure codegen string work, no UDF."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     merges = [(r[1], r[2]) for r in _bpe_learn_merges(spark, docs)]
     sw = (
@@ -1401,7 +1383,6 @@ def training_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: every stage is a pure hash function of doc_id, so the chain
     is ONE corpus scan (probability table broadcast back) + ONE shuffle
     on (split, shard) — composition adds selectivity, not passes."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     probs = _temperature_probs(docs)
     sid = F.col("doc_id").cast("string")
@@ -1489,7 +1470,6 @@ def length_rebalance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: bin counts are one map-side-combined aggregate; the
     probability table is |bins| rows broadcast back; selection is the
     one corpus scan.  Nothing grows at 100 TB but the scan."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     u = (
         F.conv(
@@ -1583,7 +1563,6 @@ def priority_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     k+1 rows.  At 100 TB this is the exact shape of a weighted
     data-mix probe: no RNG state, no second pass, re-runs byte-equal.
     """
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     w = F.greatest(F.col("n_chars"), F.lit(1)).alias("w")
     h = F.conv(
@@ -1704,7 +1683,6 @@ def sample_budget_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast); the partition-less window is over |sources| rows, a
     constant.  The downstream sampler would consume `alloc` as its
     per-source deterministic-hash threshold k."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count("*").cast("bigint").alias("n_docs"))
     return apportion(counts, _APPORTION_BUDGET)
@@ -1818,7 +1796,6 @@ def maxmin_fair_token_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — same constant-small control-plane shape as the other
     allocators.  Proven against an independent Python water-filling
     model in `tests/test_properties.py`."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.groupBy("source").agg(
         F.sum(F.size(F.split(F.col("text"), " "))).cast("bigint").alias("t")
@@ -1931,7 +1908,6 @@ def vocab_coverage_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source collapse combines map-side).  Both corpus passes are
     full scans; at 100 TB, fold this onto the same token stream the
     tf-idf/BPE queries already materialize."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -2023,7 +1999,6 @@ def skipgram_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Precondition: ``documents.doc_id`` is unique — the in-row build
     pairs tokens within one ROW, the oracle's self-join within one
     doc_id, and the two agree only when each id names one row."""
-    prep(spark)
     # Co-occurrence WITHOUT the corpus self-join: the whole (center,
     # context) pair list of a document is built in-row from the word
     # array and exploded ONCE — same multiplicity as the doc-keyed
@@ -2171,7 +2146,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum is Σ c·quantize(w) — c an exact integer multiplier of
     the same quantized bucket weight the per-occurrence sum added c
     times, so the oracle hash is unchanged."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n = F.size(words)
@@ -2293,7 +2267,6 @@ def quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; sources ≪ docs, and a skewed giant source is exactly
     what the rank cut handles — the window is per-source sorted, the
     standard partitioned-sort shape."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     score = F.col("n_chars").cast("double") / F.size(
         F.split(F.col("text"), " ")
@@ -2379,7 +2352,6 @@ def leakage_safe_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER dedup and BEFORE sharding — the operator that turns
     `exact_duplicate_mapping`/`neardup_canonical_docs` cluster info
     into a leak-free train/test boundary."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     digit = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     naive = (

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 FEATURE_DIM = 8
@@ -146,7 +146,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` decode stage → typed features.  The oracle checks
     the metadata/byte-length path (texts are ascii, so utf-8 bytes ==
     n_chars); the float feature column is exercised by unit tests."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     decoded = media.mapInPandas(_decode_batches, schema=_DECODE_SCHEMA)
@@ -184,7 +183,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-for-byte, not rows-only.  The float normalization itself
     (count / n_bytes) is covered by unit tests; the array<float>
     column rides the same kernel (multimodal_decode schema)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     decoded = media.mapInPandas(_decode_batches, schema=_DECODE_SCHEMA)
@@ -243,7 +241,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-extraction shape).  Payloads are ascii here, so the oracle
     replays the identical slicing+md5 on the text column — proving the
     Python fan-out stage byte-for-byte."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     return media.mapInPandas(
@@ -323,7 +320,6 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel is proven bit-for-bit, not just shape-checked.  Plan: one
     Python island, per-doc work linear in payload bytes, no shuffle
     (summaries computed inside the kernel)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     return media.mapInPandas(
@@ -414,7 +410,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one Python island, per-doc work linear in payload bytes,
     zero shuffle (pooling is payload-local); Arrow batches amortize
     the JVM<->Python hop exactly as in `multimodal_decode`."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     return media.mapInPandas(
@@ -492,7 +487,6 @@ def png_roundtrip_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle (the group-by lives in the oracle only; the kernel
     emits one row per doc).  Swapping the synthetic payload for a real
     binary column changes the input select, not the plumbing."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(
         _png_roundtrip_batches,
@@ -639,7 +633,6 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup families (the within-bucket quadratic IS the workload),
     O(1) verify per pair.  Swapping the synthetic image for a real
     binary payload column changes the kernel's input line only."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id")
     sig = materialize(docs.mapInPandas(
         _ahash_batches,
@@ -834,7 +827,6 @@ def audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     with executors; the relational alternative would explode
     samples×rows through a shuffle first (what the ORACLE does,
     fine at sf0.01, fatal at scale)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     media = with_media_columns(docs)
     return media.mapInPandas(

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 # Ordered most-specific → least-specific: earlier detectors consume
@@ -114,7 +114,6 @@ def pii_scrub_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a chain of codegen regexp expressions — no shuffle, no Python; at
     100 TB this pass is scan-bound and embarrassingly parallel, and
     the detector list extends without changing the plan shape."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     scanned = cust.select(
         "c_custkey",
@@ -157,7 +156,6 @@ def pii_redaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     masking (negative when tokens are longer than the spans they
     replace).  One partial-aggregated group-by over the scrubbed
     scan — the report a compliance reviewer signs off on."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     scanned = cust.select(
         "c_mktsegment",
@@ -226,7 +224,6 @@ def fuzzy_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate set (always true by construction: the dirty string
     IS one of its own source's deletions).  matched_id is the
     deterministic min.  Every column is integer/string/bool — exact."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
     pos = (
         F.conv(
@@ -317,7 +314,6 @@ def pii_pseudonymize_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-row hashing is embarrassingly parallel; the audit
     window shuffles on name_token — the profile `join_key_skew_profile`
     would run first if tokens could be hot (they cannot: md5)."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
 
     def token(prefix: str, salt: str, col: str) -> Column:
@@ -391,7 +387,6 @@ def kanon_release_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nation decode; the filter removes rows, never reads
     more.  At 100 TB the k-threshold maths is identical — suppression
     cost is zero because it happens after the collapse."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cells = (
@@ -456,7 +451,6 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell collapse) — both map-side combinable, no distinct-heavy
     shuffle of raw rows; the nation decode is a broadcast.  The audit
     reads each individual exactly once at any corpus size."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     tagged = cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey).select(
@@ -556,7 +550,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a dense cells x bands grid (|cells| * m rows — audit-sized, not
     data-sized), prefix windows on that grid.  The individuals are
     read exactly once at any corpus size."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     tagged = cust.join(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.prefix import range_prefix_sums
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load, parallel_scan
 
 # orders columns profiled: (name, cast-for-display)
@@ -60,7 +60,6 @@ def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver loop.  At 100 TB profile cost equals one pass over the
     table, the floor for exact distinct counts (`approx_distinct_parts`
     is the sketch alternative when exactness isn't required)."""
-    prep(spark)
     orders = parallel_scan(spark, sf_dir, "orders")
     aggs = []
     for c, t in _PROFILE_COLS:
@@ -129,7 +128,6 @@ def data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans;
     the rule rows union at the end.  Violations COUNT, never collect —
     the gate reads 5 rows however big the batch is."""
-    prep(spark)
     orders = parallel_scan(spark, sf_dir, "orders")
     lineitem = parallel_scan(spark, sf_dir, "lineitem")
     customer = load(spark, sf_dir, "customer")
@@ -209,7 +207,6 @@ def observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics channel is bit-exact.  At 100 TB this is how the engine
     self-reports per-job data-quality gauges to a metrics store with
     ZERO extra passes."""
-    prep(spark)
     from pyspark.sql import Observation
 
     od = load(spark, sf_dir, "orders")
@@ -277,7 +274,6 @@ def csv_corrupt_records_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the job; DROPMALFORMED silently loses data — the worst option for
     a training corpus); the quarantined rows write to a dead-letter
     path for reprocessing."""
-    prep(spark)
     import hashlib
     import os
     import shutil
@@ -392,7 +388,6 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined aggregate over it, so the whole report is the explode
     job + two aggregate jobs + one doc-stats scan — not six
     re-executions of the corpus scan."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     side = (F.col("doc_id") % 2 == 0)
 
@@ -511,7 +506,6 @@ def value_distribution_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     same sup-gap over the mergeable binned histogram
     (`binned_quantile_sketch`'s bins), trading ≤ bin-width error for
     constant-size state."""
-    prep(spark)
     ev = parallel_scan(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -589,7 +583,6 @@ def dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame
     contains `dynamicpruning`; files actually read < partitions on
     disk).  The oracle replays the same join relationally — DPP is
     pure execution strategy, so results match bit-exact."""
-    prep(spark)
     import hashlib
     import os
     import tempfile
@@ -679,7 +672,6 @@ def value_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (type, hour) aggregate, a broadcast of per-type means,
     one per-type ordered window (series length = hours — thousands,
     not rows), one argmax."""
-    prep(spark)
     from pyspark.sql import Window
 
     ev = parallel_scan(spark, sf_dir, "events")
@@ -793,7 +785,6 @@ def value_distribution_ks_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: bin = clamp(floor(value / width)) — one correctly-
     rounded division, exact floor/clamp; every downstream ratio is one
     int/int division, so the statistic hash-compares bit-exact."""
-    prep(spark)
     from pyspark.sql import Window
 
     ev = parallel_scan(spark, sf_dir, "events").filter(
@@ -900,7 +891,6 @@ def fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB scan budget as any count: adding candidate FDs on the same
     table shares the scan under Spark's cache or a multi-agg rewrite
     when it matters."""
-    prep(spark)
     out = None
     for t, a, b in _FD_CANDIDATES:
         pairs = (
@@ -974,7 +964,6 @@ def eventmix_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     are windows OVER THAT TABLE, not the corpus; the min-date scalar
     broadcasts. Nothing grows with the event volume but the first
     aggregate's scan."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     lo = ev.agg(F.min(F.col("ts").cast("date")).alias("d0"))
     counts = (
@@ -1077,7 +1066,6 @@ def table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined aggregate per table, zero joins, zero
     windows; the three one-row legs union.  10^15 max per row digest x
     10^23 rows of headroom in DECIMAL(38,0) — no overflow at any SF."""
-    prep(spark)
 
     def leg(name: str, df: DataFrame, cols: list) -> DataFrame:
         digest = F.conv(F.substring(F.md5(F.concat_ws("|", *cols)), 1, 13), 16, 10)
@@ -1179,7 +1167,6 @@ def dictionary_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same zero-join shape as `table_checksum_audit`; at 100 TB this is
     the profile a table-format OPTIMIZE advisor runs per column
     chunk."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
 
@@ -1255,7 +1242,6 @@ def order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined per-order aggregate, one equi-join on
     the order key (co-partitionable / bucketable), one status rollup —
     the canonical fact-vs-fact reconciliation shape at any SF."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     per_order = li.groupBy("l_orderkey").agg(
@@ -1347,7 +1333,6 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side digit count (9 groups), a one-row total
     broadcast back — constant-size output at any SF."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     # explicit FLOOR: Spark's double->bigint cast truncates while
     # DuckDB's ROUNDS -- floor first so both engines agree on the digit

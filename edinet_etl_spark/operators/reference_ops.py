@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import dsum, sql_dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 
@@ -47,7 +46,6 @@ def best_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a single hash-partitioned window over o_custkey — one
     shuffle, no driver involvement, works at any cardinality.
     """
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     prio = F.when(F.col("o_orderpriority") == "1-URGENT", 0).otherwise(1)
     w = Window.partitionBy("o_custkey").orderBy(prio, "o_orderdate", "o_orderkey")
@@ -77,7 +75,6 @@ def largest_lineitem_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 argmax-by-size (``src/utils/helper.py:76-77``: pick the largest
     ZIP member): ``max_by`` with a struct ordering key whose second
     component makes the order total (deterministic under ties)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     key = F.struct(F.col("l_quantity"), F.col("l_linenumber"))
     return li.groupBy("l_orderkey").agg(
@@ -107,7 +104,6 @@ def year_offset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys.  Spark form: a literal ``create_map`` lookup; unknown keys
     null out and are filtered — exactly the reference's skip semantics.
     A 5-entry map is a codegen'd expression: no join, no shuffle."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     mapping = F.create_map(
         *[F.lit(x) for pair in [(1, 0), (2, -1), (3, -2), (4, -3), (5, -4)] for x in pair]
@@ -143,7 +139,6 @@ def cast_failure_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10/F10 (``src/transform.py:196-202``): the reference wraps
     ``int(row['値'])`` in try/except and skips failing rows.  Spark
     form: ``try_cast`` → null → filter (ANSI-mode safe)."""
-    prep(spark)
     part = load(spark, sf_dir, "part")
     raw = F.when(F.col("p_size") % 2 == 0, F.split(F.col("p_brand"), "#")[1]).otherwise(
         F.col("p_type")
@@ -175,7 +170,6 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5-F9 string surface (``src/transform.py:120,161-162``,
     ``src/utils/helper.py:82-85``): split-index, regex group extract,
     replace, concat, suffix/contains tests — all codegen'd, no UDFs."""
-    prep(spark)
     part = load(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -210,7 +204,6 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F4/F7 date surface (``src/extract.py:101-110``,
     ``src/transform.py:44-46``): parse/format/extract/arithmetic."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -242,7 +235,6 @@ def date_range_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop becomes ``explode(sequence(...))`` — the date axis of the
     ingestion job is itself a DataFrame, partitionable across executors
     (this is what distributes the EDINET fetch, SURVEY §3)."""
-    prep(spark)
     days = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -273,7 +265,6 @@ def deterministic_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas' positional head depends on arrival order; the Spark analogue
     pins a total order first.  TakeOrderedAndProject = per-partition
     top-N then merge — no global sort materialization."""
-    prep(spark)
     return (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -292,7 +283,6 @@ def deterministic_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_nation_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U3 distinct-set build (``src/extract.py:151``) — hash aggregate,
     partial dedup map-side before the shuffle."""
-    prep(spark)
     return load(spark, sf_dir, "customer").select("c_nationkey", "c_mktsegment").distinct()
 
 
@@ -306,7 +296,6 @@ def distinct_nation_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers=["U-extended"],
 )
 def segment_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     a = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_nationkey")
     b = customer.filter(F.col("c_mktsegment") == "MACHINERY").select("c_nationkey")
@@ -328,7 +317,6 @@ def fulfilled_only_customers_except(spark: SparkSession, sf_dir: str) -> DataFra
     the difference is density-structural and stays non-empty at every
     SF (an earlier nation-level EXCEPT saturated: by sf0.1 every nation
     had a qualifying supplier, making the check vacuous)."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -353,7 +341,6 @@ def dynamic_value_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered from the data itself (the reference pulls row 1's 要素ID
     then masks on it).  Spark form: 1-row DF cross-joined in — stays a
     broadcast nested-loop with a 1-row build side; no collect()."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     marker = (
         orders.orderBy("o_orderkey")
@@ -383,7 +370,6 @@ def flag_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P12/P13 flag-dispatch (``src/extract.py:177-184``): csvFlag='1'
     → type 5, else xbrlFlag='1' → type 1, else drop — a when/when/
     otherwise cascade plus null filter."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     fetch_type = (
         F.when(F.col("o_orderstatus") == "F", F.lit("5"))
@@ -431,7 +417,6 @@ def returnflag_multiset_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplicity) — one shuffle per side on the value, no join blowup;
     at scale prefer the explicit two-count aggregate if the
     multiplicities are the end goal, as here."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     r = li.filter(F.col("l_returnflag") == "R").select("l_quantity")
     a = li.filter(F.col("l_returnflag") == "A").select("l_quantity")

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.numeric import davg, dec, dsum, sql_davg, sql_dsum
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 
@@ -55,7 +54,6 @@ from edinet_etl_spark.tables import load, parallel_scan
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: wide multi-aggregate scan with map-side combine."""
-    prep(spark)
     # 8 decimal aggregates per row: compute-bound, so an unsplittable
     # scan serializes the whole query — parallel_scan lifts it
     li = parallel_scan(spark, sf_dir, "lineitem")
@@ -114,7 +112,6 @@ def revenue_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join when it outgrows the threshold.  The fact shuffles
     once, on l_orderkey.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
@@ -172,7 +169,6 @@ def top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join strategy is AQE's call — broadcast at small SF, shuffle
     join once the filtered dimension outgrows the threshold.
     """
-    prep(spark)
     cutoff = F.lit("1998-03-15").cast("timestamp")
     customer = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
@@ -208,7 +204,6 @@ def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS as a left-semi join with a non-equi term
     (the reference's membership guards P6/P9 are this join in disguise,
     ``src/extract.py:157-159``)."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -246,7 +241,6 @@ def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join with a two-column join predicate."""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -291,7 +285,6 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate; all four predicates
     push into the parquet scan (PushedFilters), so at 100 TB this reads
     only row groups whose min/max straddle the ranges."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -317,7 +310,6 @@ def filtered_customer_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference P1/P2/P4 (``src/extract.py:37-50``): project 4 of 5
     columns, equality + range filter, NOT-NULL guard.  Column pruning +
     predicate pushdown reach the scan."""
-    prep(spark)
     return (
         load(spark, sf_dir, "customer")
         .filter(
@@ -344,7 +336,6 @@ def part_membership_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference P5/P6 (``src/extract.py:53-60,157-159``): isin /
     not-isin membership predicates (small literal sets stay as scan
     filters; large sets become semi-joins — see supplier_semi_join)."""
-    prep(spark)
     return (
         load(spark, sf_dir, "part")
         .filter(
@@ -372,7 +363,6 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the fixture, so an unfiltered anti join would return zero rows —
     a vacuous check; the status filter keeps the result non-empty at
     every SF.)"""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return customer.join(
@@ -392,7 +382,6 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def suppliers_with_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join (reference J2 hash-set membership, ``src/extract.py:150-159``):
     the big side streams; no duplicate explosion, no distinct needed."""
-    prep(spark)
     supplier = load(spark, sf_dir, "supplier")
     li = load(spark, sf_dir, "lineitem")
     return supplier.join(li, supplier.s_suppkey == li.l_suppkey, "left_semi").select(
@@ -410,7 +399,6 @@ def suppliers_with_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def region_nation_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join of two broadcast-sized dims (125 rows)."""
-    prep(spark)
     region = load(spark, sf_dir, "region")
     nation = load(spark, sf_dir, "nation")
     return region.crossJoin(nation).select("r_name", "n_name")
@@ -429,7 +417,6 @@ def order_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-all (reference U1/U2 accumulate/concat,
     ``src/extract.py:126-127`` / ``src/transform.py:241-252``) — in
     Spark a zero-copy logical union, not a driver-side concat."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") == "F")
     b = orders.filter(F.col("o_totalprice") > 100000)
@@ -447,7 +434,6 @@ def order_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagnostic counts (reference A3, ``src/extract.py:35,63-65``)."""
-    prep(spark)
 
     def one(name: str) -> DataFrame:
         return load(spark, sf_dir, name).agg(F.count("*").alias("n")).select(
@@ -479,7 +465,6 @@ def nullsafe_segment_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop.  Some customers' segments are nulled (key % 7) to make the
     difference observable; still a hash join (null-safe equality is a
     valid equi-key, nulls hash together)."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer").filter(F.col("c_custkey") < 40)
     seg = F.when(F.col("c_custkey") % 7 == 0, F.lit(None)).otherwise(
         F.col("c_mktsegment")
@@ -522,7 +507,6 @@ def nation_balance_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans a sort-merge join on the aggregate outputs — which
     are already tiny post-aggregation; at 100 TB the pre-aggregation is
     what keeps this cheap, not the join strategy."""
-    prep(spark)
     c = (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 9900)

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.numeric import _dec_to_double, dec, dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load, parallel_scan
 
 def dot_exact(a: Column, b: Column) -> Column:
@@ -89,7 +89,6 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the queries, scan the corpus once, window-rank per query.
     The fixed-fold dot makes the ranking key deterministic, so top-k
     is stable across plans (ties broken by neighbor_id)."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -156,7 +155,6 @@ def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-block only, making pair work linear in block size (probe:
     14.0× → 3.0×).  Cross-sub-block pairs are the documented recall
     trade."""
-    prep(spark)
     # precompute each vector's norm ONCE before the join: computing it
     # per pair does O(pairs) folds instead of O(n) — at B-sized blocks
     # that is a 2B/3 reduction of all array work (6.1s → ~1.9s at
@@ -229,7 +227,6 @@ def lsh_hyperplane_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes only its bucket (plus neighbors for multi-probe).  The plane
     constants are literal arrays (broadcast with the plan); projection
     is zip_with/aggregate — no UDF, no shuffle."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     bits = [
         F.when(dot_exact(F.col("embedding"), _plane_array(p)) > 0, F.lit("1")).otherwise(
@@ -261,7 +258,6 @@ def lsh_bucket_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN candidate retrieval: queries (vec_id < 20) probe their LSH
     bucket via a hash equi-join on the bucket signature — the O(bucket)
     replacement for the O(n) brute-force scan."""
-    prep(spark)
     # both join sides read the bucketing (8 hyperplane dots per
     # vector) and differ (the query side filters), so reuse can't help
     buckets = materialize(lsh_hyperplane_buckets(spark, sf_dir))
@@ -404,7 +400,6 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing the p nearest cells instead of 1 (nprobe) — same plan,
     wider `_assign_cells(p)` slice.
     """
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     # NO repartition("sid") here (r11 revert of the r10 clustering):
     # with K=10 cells the sid hash occupies ~4 of 32 buckets, so every
@@ -491,7 +486,6 @@ def kmeans_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: K and dims are fixed, so shuffle volume is
     per-partition partials only; the dominant cost (n·K dots) is
     embarrassingly parallel."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     cells = _assign_cells(emb).select(
         F.col("cells")[0].alias("cell_id"), "embedding"
@@ -552,7 +546,6 @@ def ivf_ann_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n)).  This is the production knob: recall misses in IVF come
     from the query's true neighbors landing one cell over, and probing
     p cells recovers them without touching index build cost."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     assigned = _assign_cells(emb, p=2)
     cells = assigned.select("vec_id", "embedding", F.col("cells")[0].alias("sid"))
@@ -643,7 +636,6 @@ def ivf_recall_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost note: ground truth is the O(n·q) brute-force pass — that's
     inherent to recall evaluation and is run over a SAMPLE of queries
     (5 here); the index path stays O(cell)."""
-    prep(spark)
     bf = cosine_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     ivf = ivf_ann_topk(spark, sf_dir).select(
         F.col("query_id").alias("i_query_id"),
@@ -738,7 +730,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     are folded upstream by exact dedup).  τ=0.4 sits just under this
     corpus's max within-cell cosine (0.483) so the prune is
     non-vacuous."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     cells = materialize(
         _assign_cells(emb)
@@ -832,7 +823,6 @@ def embedding_sq8_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Degenerate dims (min=max) code to 0 with zero error and are
     EXCLUDED from n_saturated — a constant dimension isn't an
     out-of-range clip, and counting it would inflate the metric."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     flat = emb.select("vec_id", F.posexplode("embedding").alias("dim_idx", "xf")).select(
         "vec_id", "dim_idx", F.col("xf").cast("double").alias("x")
@@ -1058,7 +1048,6 @@ def pq_codebook_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     filing lake treats large payloads as opaque compressed blobs
     (/root/reference/src/utils/helper.py:35-101); PQ is that idea for
     vector payloads."""
-    prep(spark)
     _, _, _, codes = _pq_codes(spark, sf_dir)
     cpiv = [
         F.max(F.when(F.col("sub_id") == s, F.col("cid"))).alias(f"c{s}")
@@ -1169,7 +1158,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combine caps the shuffle at |Q| rows per neighbor).
     Composable with the IVF cell filter (`ivf_ann_topk`) to prune the
     scan itself."""
-    prep(spark)
     return _pq_adc_top(spark, sf_dir)
 
 
@@ -1204,7 +1192,6 @@ def pq_recall_at3(spark: SparkSession, sf_dir: str) -> DataFrame:
     index without its recall number).  Ground truth is a broadcast
     query×corpus scan (|Q| = 5), the ADC side reuses the code path of
     `pq_adc_topk`; the comparison is a 15-row broadcast join."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     adc_top = _pq_adc_top(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 5).select(
@@ -1274,7 +1261,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN cell probe (`ivf_ann_topk`) filtered to foreign labels; the
     ranking and determinism discipline (fixed-fold dot, ties by id)
     stay the same."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("anchor_id"),
@@ -1422,7 +1408,6 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched ONLY via the candidate id join (two hash joins of
     |queries|·10 rows) — the fetch-on-candidate shape every production
     reranker uses."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     norm = F.sqrt(dot_exact(F.col("embedding"), F.col("embedding")))
     proj = materialize(emb.select(
@@ -1568,7 +1553,6 @@ def matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  These synthetic near-random embeddings do NOT front-load
     information (no MRL training), so measured recall is the honest
     adversarial floor, like the JL leg's."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     pre = materialize(emb.select(
         "vec_id", "embedding", F.slice(F.col("embedding"), 1, _MRL_DIMS).alias("pre")
@@ -1684,7 +1668,6 @@ def ivf_partitioned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters on the index scan).  At 100 TB the same layout
     is the bucketed/partitioned ANN shard map: route each query to its
     cells' files, fan out, rerank — no full-index pass anywhere."""
-    prep(spark)
     import hashlib
     import os
     import shutil
@@ -1818,7 +1801,6 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels x dims grid (~640 rows here, constant in corpus size).  The
     argmax join-back is a broadcast of the per-label max row.  This is
     the same collapse-then-tiny-grid shape as `eventmix_chi2_drift`."""
-    prep(spark)
     emb = load(spark, sf_dir, "embeddings")
     expl = emb.select(
         "label",
@@ -1924,7 +1906,6 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's own candidate rows.  Cost is NQ·N dot products of
     codegen-local array math — per-core-divisible, no shuffle beyond
     the rank repartition."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _MRR_NQ).select(
         F.col("vec_id").alias("query_id"),
@@ -2029,7 +2010,6 @@ def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFr
     iterations add plan depth, not data movement.  More iterations or
     deflation for PC2+ compose the same step; at 100 TB the scan
     dominates and the step count is the only multiplier."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     v_df = spark.range(1).select(
         F.array(*[F.lit(_PC_V0) for _ in range(_PC_DIM)]).alias("v")
@@ -2115,7 +2095,6 @@ def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     table BROADCAST back, so the scoring pass is one scan with
     array-local codegen math and the only full shuffle is the final
     top-k (TakeOrdered — no global sort materialization)."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     sums = (
         emb.select("label", F.posexplode("embedding").alias("pos", "x"))
@@ -2204,7 +2183,6 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots; the vote is a (query × ≤k)-row aggregate.  Swap the
     brute-force candidate stage for the IVF probe at 100 TB — the
     vote/accuracy stages are unchanged."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"),
@@ -2321,7 +2299,6 @@ def rank_biased_overlap_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms; both rankings come from ONE pass (two window ranks over the
     same candidate rows); the RBO collapse is a ≤D-row-per-query
     aggregate riding the decimal discipline."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _RBO_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -2471,7 +2448,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.  Scores stay hash-exact: cosine = fixed-fold dot /
     (sqrt·sqrt), the MMR combination is two literal products and one
     subtraction, all correctly rounded identically in both engines."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -2616,7 +2592,6 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     K scans of the corpus with array-local codegen math and zero
     data shuffles is the plan you'd run at 100 TB (K is fixed, cost
     is K·n·dims flops)."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
 
     def sqdist(center: Column) -> Column:
@@ -2768,7 +2743,6 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB you'd run IT over the full corpus and the exact arm only
     over its candidates (`matryoshka_prefix_recall` closes that loop);
     fusing both ranks hedges the scout's misses."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _RRF_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -2916,7 +2890,6 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size; the pair fan-out happens AFTER reduction, on a 1-row
     frame.  d²-in-the-aggregate (not d²-per-row explode) is what keeps
     the 100 TB covariance within one scan."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
 
     def x(i: int) -> Column:
@@ -3024,7 +2997,6 @@ def mutual_nn_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-block quadratic stays bounded — the `lsh_bucket_ann`
     discipline), then ONE shuffle per ranking side over the blocked
     pairs.  The corpus-level all-pairs matrix is never formed."""
-    prep(spark)
     emb = parallel_scan(spark, sf_dir, "embeddings")
     bits = [
         F.when(

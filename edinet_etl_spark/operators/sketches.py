@@ -40,7 +40,7 @@ from edinet_etl_spark.operators.graph import (
     pagerank_over,
 )
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load, parallel_scan
 
 # Count-min sketch geometry: d independent hash rows × w buckets.
@@ -129,7 +129,6 @@ def cms_sketch_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix.  The output IS the mergeable sketch — union two corpora's
     matrices and `SUM(cnt)` per cell to get the combined sketch, which
     is how 100 TB shards combine without ever exchanging raw words."""
-    prep(spark)
     return _cms_sketch(_words(_repartitioned_docs(spark, sf_dir)))
 
 
@@ -164,7 +163,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and candidate words probe the tiny broadcast sketch directly —
     here both sides are kept so the query itself measures sketch
     quality."""
-    prep(spark)
     words = _words(_repartitioned_docs(spark, sf_dir))
     sketch = _cms_sketch(words)
     truth = words.groupBy("word").agg(F.count(F.lit(1)).alias("true_cnt"))
@@ -239,7 +237,6 @@ def bloom_filter_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable (`bit_or` per word across shards) and deterministic, so
     building it distributed and comparing it to a single-node build is
     exact."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     keys = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     return _bloom_bitmap(keys, "c_custkey")
@@ -282,7 +279,6 @@ def bloom_prejoin_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dim — only `bloom_candidates` rows reach the join exchange,
     and the query itself quantifies that reduction (plus the false-
     positive cost, which the exact join then discards)."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     keys = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     bloom = _bloom_bitmap(keys, "c_custkey")
@@ -389,7 +385,6 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned and the graph bucketed on src.  The driver-side
     `.count()` is loop-control only (the documented iterative idiom,
     cf. `dedup.neardup_components`)."""
-    prep(spark)
     events = load(spark, sf_dir, "events")
     pairs = events.select(
         F.concat(F.lit("u:"), F.col("user_id").cast("string")).alias("u"),
@@ -461,7 +456,6 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     blows up a task.  Wedge count comes free from the out-degrees
     (Σ C(d⁺,2)); closure_rate = triangles / wedges is one exact
     integer division."""
-    prep(spark)
     return triangle_card(copurchase_pairs(spark, sf_dir))
 
 
@@ -581,7 +575,6 @@ def copurchase_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     attaches two |parts|-row sides (AQE broadcasts them) and the
     min-support filter prunes BEFORE the join fan-in.  Top-20 is a
     TakeOrdered over the surviving pairs."""
-    prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pair_n = (
         copurchase_join(spark, sf_dir)
@@ -677,7 +670,6 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per task, and the estimate is one exactly-rounded division.
     Where the window rank here is per-group fine-grained, a production
     build map-side combines via sorted top-k arrays."""
-    prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem").select("l_returnflag", "l_partkey")
     return kmv_estimate(li, "l_returnflag", "l_partkey")
 
@@ -790,7 +782,6 @@ def binned_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 1.43 → 0.50 s at sf0.1, §2.3 aggregate before you
     shuffle).  Contrast pricing_summary, where 8 exact-decimal
     aggregates per row ARE compute-bound and the spread wins 1.9×."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
@@ -886,7 +877,6 @@ def kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled-up estimate is bit-identical to the from-scratch one.  The
     shuffle after sketching carries ≤ k·substreams rows per group —
     constant, not data-sized."""
-    prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     hashed = li.select(
         "l_returnflag",
@@ -1012,7 +1002,6 @@ def kcore_copurchase_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join to the partitioned form — same semantics.  Monotonicity
     guarantees a peeled node never returns, so no per-round edge
     rewrite is needed."""
-    prep(spark)
     from functools import reduce
 
     sym = copurchase_edges(spark, sf_dir).select(
@@ -1129,7 +1118,6 @@ def kmv_jaccard_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a k-row-per-group rank) answer overlap for ANY pair of
     substreams, and stay mergeable across days/partitions.  All joins
     after sketching touch ≤ 2k rows."""
-    prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     modes = li.filter(F.col("l_returnflag").isin("A", "R"))
     # Round-10 restructure (guide §2.3/§2.4): the sketch arm used to
@@ -1288,7 +1276,6 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     two 100 TB tables' join size prices out from two broadcastable
     matrices; the matrices merge across shards by cell-SUM like every
     CMS here."""
-    prep(spark)
     li = parallel_scan(spark, sf_dir, "lineitem")
     keyed = li.groupBy(F.col("l_partkey").alias("key")).agg(
         F.count("*").cast("bigint").alias("cnt")
@@ -1378,7 +1365,6 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the `neardup_components` idiom).  Hop count is FIXED so the
     oracle unrolls; an until-empty loop is the same code with the
     scalar-aggregate stop test."""
-    prep(spark)
     sym = copurchase_edges(spark, sf_dir).select(
         F.col("u").alias("ga"), F.col("v").alias("gb")
     )
@@ -1468,7 +1454,6 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair), then one groupBy z (the capped self-join co-locates by
     center), one groupBy (u,v) for the score, one anti-join against
     the existing edges."""
-    prep(spark)
     # feeds degrees, wedge enumeration and the anti-join
     pairs = materialize(copurchase_support_pairs(spark, sf_dir, _RA_MIN_SUPPORT))
     deg = (
@@ -1566,7 +1551,6 @@ def bloom_semijoin_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFram
     count, so the sf0.1 run also demonstrates the UNDERSIZED-filter
     regime (fill → 1, fp_rate → 1) an operator sizing its real filter
     must avoid."""
-    prep(spark)
     members = (
         load(spark, sf_dir, "supplier")
         .filter(F.col("s_nationkey") < 5)
@@ -1681,7 +1665,6 @@ def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's only distinct-count is a driver-side dict of
     unique companies, `/root/reference/src/transform.py:143`; this is
     the cluster-scale, re-aggregable form of that question)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
@@ -1752,7 +1735,6 @@ def rolling_7d_active_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bitmap_distinct_rollup` (calendar rollup) and
     `streaming_bitmap_distinct` (live merge): one partial layout
     serves all three consumption patterns."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.select(F.to_date("ts").alias("d"), "user_id").groupBy(
         "d", F.shiftright("user_id", 6).alias("word")
@@ -1840,7 +1822,6 @@ def bitmap_retention_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     users/day the retention table is maintained from word partials the
     raw-events join could never afford (that join is the ORACLE's
     shape — fine at sf0.01, quadratic-ish pressure at lake scale)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )

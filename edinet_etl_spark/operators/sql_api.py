@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load, parallel_scan
 
 # sql_dsum's exact-decimal discipline, spelled in the dialect common to
@@ -53,7 +52,6 @@ def sql_top_nation_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CTEs + 5-way join + window).  The exact same string runs in
     DuckDB as the oracle — SQL-level engine interchangeability, the
     strongest form of the parity contract."""
-    prep(spark)
     # the lineitem view carries the whole stage's work (4 broadcast
     # probes + the per-row decimal revenue term pipelined onto the
     # scan): on a one-row-group layout that is a single task, so the
@@ -96,7 +94,6 @@ def sql_lateral_top2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop the syntax implies never executes; the inner ORDER BY +
     LIMIT is total (o_orderkey tiebreak), keeping results
     deterministic.  The identical string is the DuckDB oracle."""
-    prep(spark)
     for t in ("customer", "orders"):
         load(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_LATERAL_SQL)
@@ -143,6 +140,5 @@ def sql_recursive_paydown(spark: SparkSession, sf_dir: str) -> DataFrame:
     law as `pagerank_event_graph`, via SQL instead of a driver loop.
     The 50-order cap keeps the anchor deterministic (total ORDER BY
     before LIMIT, per CLAUDE.md)."""
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_RECURSIVE_SQL)

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.numeric import dec, dsum, sql_dsum
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 
@@ -67,7 +66,6 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-side co-partitioning — never a per-row re-scan).  The per-part
     average is exact (decimal sum / count) so the `<` threshold is
     bit-identical in both engines."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#13")
     # Correlation-key filter pushdown: the subquery's AVG is only ever
@@ -120,7 +118,6 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN against a HAVING subquery ≡ left-semi join on
     the pre-aggregated key set.  Quantities sum in exact decimal so the
     >300 cut is partitioning-independent."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
@@ -161,7 +158,6 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (filter belongs to the join condition, NOT the WHERE — moving it
     would silently drop the zero-order customers), then a distribution
     over the per-customer counts.  Two shuffles total: custkey, c_count."""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     per_cust = (
@@ -199,7 +195,6 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator are both exact decimal sums; the two float ops that
     remain (×100, ÷) are single correctly-rounded operations on
     identical operands, hence portable."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -238,7 +233,6 @@ def top_supplier_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back (a cross join of a singleton — no shuffle of the
     aggregate).  Exact decimal revenue makes the MAX and the equality
     deterministic."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -279,7 +273,6 @@ def inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS anti join.  49 qualifying customers at sf0.01 — the
     status filter keeps the anti join non-vacuous (cf. the
     customers_without_orders lesson)."""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     avg_bal = customer.filter(F.col("c_acctbal") > 0).agg(
         (_exact_sum_double(F.col("c_acctbal")) / F.count("c_acctbal")).alias("avg_bal")
@@ -317,7 +310,6 @@ def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar is one exact sum / distinct count from the same scan
     (broadcast back), NOT a re-sum of the per-group doubles — re-summing
     doubles would be order-dependent."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     value = F.col("l_extendedprice") * F.col("l_quantity")
     per_part = li.groupBy("l_partkey").agg(dsum(value, "part_value"))
@@ -369,7 +361,6 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusterings), so the plan is 2 scans + 1 fact shuffle at any scale.
     numwait stays lineitem-granular (sum of per-pair late-item counts =
     the oracle's COUNT(*))."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     supplier = load(spark, sf_dir, "supplier")
@@ -430,7 +421,6 @@ def min_price_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back on partkey (raw stored doubles compared for equality:
     no arithmetic, so exact).  DISTINCT collapses equal-price repeats
     of the same (part, supplier)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_size") <= 5)
     supplier = load(spark, sf_dir, "supplier")
@@ -472,7 +462,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     year.  Numerator and denominator aggregate in the same pass (one
     shuffle on the group key); the final division is one rounding on
     exact operands."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     supplier = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.numeric import _dec_to_double, dec
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 
@@ -105,7 +105,6 @@ def asof_latest_order_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same shape Flink/kdb temporal joins use); the SQL oracle states
     the same semantics declaratively.
     """
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     od = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -157,7 +156,6 @@ def part_price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the fact table; the aggregation then shuffles |bands|
     partial rows.  (min/max are exact doubles — no sum → no decimal
     discipline needed.)"""
-    prep(spark)
     part = load(spark, sf_dir, "part")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     return (
@@ -192,7 +190,6 @@ def lineitem_ship_lag_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     half keeps it a hash join (range applied as a post-join filter in
     the same stage) — the shape to prefer over pure range joins
     whenever any equality key exists."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     od = load(spark, sf_dir, "orders")
     j = li.join(od, li.l_orderkey == od.o_orderkey).filter(
@@ -246,7 +243,6 @@ def gapfill_locf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Leading hours before a user's first observation stay NULL — no
     fabricated data.
     """
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     return gapfill_locf(ev, users, "2024-01-01 00:00:00", "2024-01-08 00:00:00")
@@ -343,7 +339,6 @@ def time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is a single rounding on identical operands in both
     engines.
     """
-    prep(spark)
     return time_weighted_avg(load(spark, sf_dir, "events"))
 
 
@@ -408,7 +403,6 @@ def hourly_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalable plan.  Open/close/high/low are raw values (no float
     accumulation), so portability is free; the (ts, event_id) struct
     makes simultaneous events deterministic."""
-    prep(spark)
     return ohlc_bars(load(spark, sf_dir, "events"))
 
 
@@ -461,7 +455,6 @@ def trailing_hour_user_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood, which is the naive O(n·k) formulation.  The frame sum
     is an exact decimal (ties in frame membership are value-exact), the
     average one correctly-rounded division."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -521,7 +514,6 @@ def price_neighbor_pairs_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct quadratic join: values must be identical, only the plan
     differs.  (Same technique generalizes to interval overlap and
     proximity joins on time or geohash.)"""
-    prep(spark)
     part = load(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
     a = part.select(
         F.col("p_partkey").alias("a_key"),
@@ -624,7 +616,6 @@ def gapfill_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction costs no extra exchange.  At 100 TB the horizon is
     bounded (a week here); per-user state is the window frame, never
     the corpus."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     return gapfill_interp(
@@ -733,7 +724,6 @@ def business_day_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the equi-join is the same hash shape as the raw-lag query;
     the histogram collapses map-side to ≤ a few thousand lag values."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     od = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     epoch = F.lit("1970-01-01").cast("date")
@@ -815,7 +805,6 @@ def peak_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     is constant-size regardless of order volume.  The naive
     alternative (self-join orders against days) is quadratic; the
     sweep line is linear plus a bounded scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     epoch = F.lit("1970-01-01").cast("date")
@@ -912,7 +901,6 @@ def ewma_user_value_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed inside codegen.  The K cap both bounds the integer
     weights (2^19·value < 10^10, inside DECIMAL(18,8)) and is the
     semantic dial: lag-K contributions are < 2^-19 of the score."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     recent = (
@@ -1077,7 +1065,6 @@ def km_grid_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-free epoch-day integer arithmetic (round 9, see
     ``_KM_RISK_CTE``).  A green row exonerates every integer stage;
     `km_obs_probe` sits one grain earlier if it ever reds again."""
-    prep(spark)
     return _km_risk_frame(spark, sf_dir).select(
         F.col("t").alias("time_days"),
         F.col("d").alias("n_events_at"),
@@ -1104,7 +1091,6 @@ def km_obs_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagrees on the timestamp→epoch-day integer itself (fixture
     decode or µs truncation); a green row plus a red grid row would
     pin any residual divergence on grid arithmetic alone."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
@@ -1147,7 +1133,6 @@ def km_factor_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survival-product fold; red here means the driver's engine pair
     disagrees on a single IEEE division (which would be new physics —
     division is correctly rounded everywhere)."""
-    prep(spark)
     risk = _km_risk_frame(spark, sf_dir)
     return (
         risk.filter(F.col("d") > 0)
@@ -1234,7 +1219,6 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid bounded by the observation span (~30 rows) -- the cumulative
     risk and product windows run on that constant-size grid, never on
     data.  10x the events is the same grid."""
-    prep(spark)
     risk = _km_risk_frame(spark, sf_dir)
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1311,7 +1295,6 @@ def asof_tolerance_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to `asof_latest_order_per_event` (one hash
     shuffle on the key); the mask is a codegen'd comparison, free."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     od = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
@@ -1394,7 +1377,6 @@ def max_drawdown_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     same (user_id, ts, event_id) sort order — Spark reuses the single
     sort for all of them (one Exchange, one Sort in the plan); no
     driver loops, no self-joins.  Per-user state is O(1) per row."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
@@ -1498,7 +1480,6 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable collapse to the hour grid (constant
     size per day of data), then two self-equi-joins ON THE GRID — the
     fact table is scanned once; everything after is grid-sized."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     grid = materialize(
         ev.groupBy(
@@ -1581,7 +1562,6 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup of a naive range join, and no broadcast assumption (the dim
     grows with SF).  Values match bit-for-bit because the join is
     row-exact and revenue rides the decimal discipline."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     change = F.to_timestamp(F.lit(_PIT_CHANGE))
     v1 = cust.select(
@@ -1656,7 +1636,6 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to KM -- one user-keyed combinable aggregate
     collapses the corpus to per-user rows, then a calendar-bounded
     ~30-row grid; every window runs on the grid, never on data."""
-    prep(spark)
     risk = _km_risk_frame(spark, sf_dir)
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1797,7 +1776,6 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic.  (First cut windowed the raw (supplier, order) grain
     and probed 6.2x at the 10x rung -- the cell collapse is what makes
     the sweep data-volume-free.)"""
-    prep(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )

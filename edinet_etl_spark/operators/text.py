@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize
 from edinet_etl_spark.tables import load
 
 
@@ -47,7 +47,6 @@ def _sql_occurrences(text: str, needle: str) -> str:
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document surface statistics: word/char counts, lexical
     diversity, average word length."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_words = F.size(words).cast("bigint")
@@ -97,7 +96,6 @@ def language_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax with a fixed priority order (en > de > fr > es) so ties are
     deterministic.  (A production version swaps markers for character
     n-gram profiles — same dataflow: score columns + argmax.)"""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     scores = {
@@ -135,7 +133,6 @@ def token_count_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristic).  Computed as an array-local transform+fold: no explode,
     no shuffle — each document's count is finished inside its own scan
     partition (the only sane shape for per-doc stats at 100 TB)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     bpe = F.aggregate(
@@ -164,7 +161,6 @@ def token_count_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def document_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: exact content hash, order-insensitive
     bag-of-words hash, and a short prefix fingerprint for sharding."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     bow = F.md5(
         F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("text"), " "))))
@@ -196,7 +192,6 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: length credit (saturating), average-
     word-length plausibility band, lexical-diversity credit — the
     standard pretraining-filter shape, as one codegen'd expression."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
@@ -258,7 +253,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     long — partial aggregation keeps the shuffle proportional to
     distinct terms per partition.
     """
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     docs = docs.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
@@ -346,7 +340,6 @@ def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — semantics unchanged.  Threshold >{_SEG_MAX_DOCS} docs keeps
     the op non-vacuous on the fixtures (183 segments stripped at
     sf0.01)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     # r10: the word array is materialized behind an exchange BEFORE
     # the segmentation lambda reads it — the checkpoint (below) kept
@@ -462,7 +455,6 @@ def bigram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc distinct), one bigram-keyed df aggregate, join back
     (AQE broadcasts small vocabularies; term-salting applies at web
     scale), one doc-keyed aggregate."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n = F.size(words)
@@ -536,7 +528,6 @@ def doc_rarity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the vocabulary is small — here 10² terms; at web scale the
     vocab join is the classic skew case and term salting applies),
     then one doc-keyed aggregate.  n_docs is a broadcast scalar."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -620,7 +611,6 @@ def hashed_tf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans vectors once, and any of the ANN ladder's index stages
     (LSH buckets, IVF cells) drops in unchanged on top of these
     vectors when the corpus outgrows brute force."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
     )
@@ -758,7 +748,6 @@ def gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined shuffles total, all keyed so a pathological
     document spreads its grams across partitions instead of
     hot-spotting one.  State per doc is a handful of integers."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
     )
@@ -901,7 +890,6 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-10 is TakeOrdered — no global sort materialization.  At
     100 TB: one doc-keyed shuffle of query-term hits, everything else
     broadcast — the textbook sparse-retrieval scatter-gather."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     terms = list(_BM25_TERMS)
     dl = docs.select(
@@ -1001,7 +989,6 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     object — production would segment postings into fixed-size blocks
     per (term, block_id), the standard blocked-postings layout, before
     hashing; df and the block structure shuffle identically."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     posting = (
         docs.select(
@@ -1063,7 +1050,6 @@ def doc_top_token_arrayonly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-row work is O(distinct × tokens) but strictly row-local
     — zero shuffle, embarrassingly parallel; output bounded by the
     doc_id filter exactly like `udtf_char_ngrams`."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     toks = F.split(F.col("text"), " ")
     pairs = F.transform(
@@ -1121,7 +1107,6 @@ def token_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable, doc-keyed, no joins.  Same plan family as
     `repetition_scores`, orthogonal signal (repetition looks at ngram
     re-occurrence, this at distribution concentration)."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents")
     tc = (
         docs.select(
@@ -1246,7 +1231,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite brought it back to seconds.  Nested array lambdas over a
     free-variable array are a re-evaluation trap; explode + frame
     aggregate is the scalable spelling (mirrors the oracle exactly)."""
-    prep(spark)
     # split BEFORE the repartition: the exchange materializes the words
     # array, so `_ngram_array`'s lambda reads a bound column instead of
     # re-evaluating split(text) per position (the same re-evaluation

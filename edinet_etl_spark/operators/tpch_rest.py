@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.numeric import dec, dsum, sql_dsum
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 _revenue = revenue  # shared definition (edinet_etl_spark/exprs.py)
@@ -71,7 +70,6 @@ def bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem is cut to the two nations' suppliers at the first
     (broadcast) join and only qualifying rows reach the o_orderkey
     shuffle."""
-    prep(spark)
     pair = ("NATION_1", "NATION_2")
     nation = load(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
     sup = (
@@ -134,7 +132,6 @@ def parttype_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFram
     written with the identical operator tree in both engines (IEEE
     double ops are deterministic given the same tree) and summed in
     exact decimal."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
     sup = load(spark, sf_dir, "supplier")
@@ -181,7 +178,6 @@ def returned_item_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_custkey so LIMIT is deterministic).  The date filter cuts orders
     before its o_orderkey shuffle; the returnflag filter cuts lineitem
     at the scan."""
-    prep(spark)
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
@@ -230,7 +226,6 @@ def late_shipment_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     DuckDB's `date_diff('day', a, b)` ≡ Spark's `datediff(b, a)` for
     midnight-aligned timestamps (both count day boundaries)."""
-    prep(spark)
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -274,7 +269,6 @@ def supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers (negative account balance) via NOT IN.  s_suppkey is
     non-null so NOT IN ≡ left-anti join — never a collected set, and
     the anti side is a broadcast (it's a filtered dim)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#13")
@@ -325,7 +319,6 @@ def bracketed_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     bracket also needs l_quantity; Catalyst still derives the
     brand-IN-list filter for the part side via constraint propagation
     (visible as a PushedFilters IN on the scan)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     bracket = (
@@ -388,7 +381,6 @@ def heavy_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi broadcast join into supplier.  Both engines compute the
     threshold as (1.2 × total)/n from identical exact-decimal
     operands."""
-    prep(spark)
     sup = load(spark, sf_dir, "supplier")
     part = load(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     li = load(spark, sf_dir, "lineitem").filter(

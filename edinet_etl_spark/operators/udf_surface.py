@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import prep
 from edinet_etl_spark.tables import load
 
 
@@ -58,7 +57,6 @@ def pandas_udf_clipped_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scalar-pandas_udf path vs the equivalent SQL expression:
     clipping is exact (returns one of the inputs), so the Arrow
     round-trip must be bit-transparent."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     clip_balance = _clip_balance_udf()
     return cust.select(
@@ -90,7 +88,6 @@ def udaf_median_acctbal_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame
     """Custom aggregation beyond the built-in set, grouped-agg
     pandas_udf form: one shuffle on the group key, each group's values
     stream to Python as a single Arrow batch."""
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     median_agg = _median_agg_udf()
     return cust.groupBy("c_nationkey").agg(
@@ -128,7 +125,6 @@ def udtf_char_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaratively.  (Query capped to doc_id<25: UDTF row generation is
     the slow path by design; the M6 text operators do this same
     expansion in codegen.)"""
-    prep(spark)
     spark.udtf.register(
         "char_ngrams", F.udtf(CharNgrams, returnType="ngram string, pos int")
     )
@@ -212,7 +208,6 @@ def grouped_map_user_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     group crosses to Python once as an Arrow batch.  The oracle derives
     the same scores relationally from decimal moment sums — proving
     the Python frame transform row-for-row."""
-    prep(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id", "value")
     return ev.groupBy("user_id").applyInPandas(
         _zscore_fn(),
@@ -247,7 +242,6 @@ def sql_udf_band_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike the Python UDF boundary the other udf_surface queries
     deliberately exercise.  The oracle inlines the same expression —
     results compare, mechanism differs by design."""
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION price_band(p DOUBLE) "
@@ -314,7 +308,6 @@ def udtf_dynamic_word_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver at planning.  The oracle derives the identical table with
     declarative list indexing (out-of-range → NULL matches the
     kernel's padding)."""
-    prep(spark)
     spark.udtf.register("word_columns", F.udtf(_WordColumns))
     load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
@@ -372,7 +365,6 @@ def cogrouped_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus; inside the island merge_asof is O(n log n) per
     user.  Purchases with no prior click survive with NULLs (left
     semantics)."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_event_id"), F.col("ts").alias("pts")
@@ -444,7 +436,6 @@ def arrow_token_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-to-Arrow means even the Python-side copy of mapInPandas is
     avoided — the cheapest possible custom stage when you don't need
     pandas."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
 
     def count_tokens(batches):

@@ -21,9 +21,11 @@ happens next:
 So the whole lazy pipeline — HTTP fetch islands included — runs
 exactly once, and an earlier output survives both an empty frame and
 a failed write.  A shuffle to one partition, not a coalesce: a
-coalesce would pull the upstream stage (dedup window and parse island)
-into the single write task; the shuffle keeps that stage parallel and
-only the small final table is gathered.
+coalesce would pull the upstream stage (in ``run_pipeline``, the A1
+walker island of ``transform.best_filing_facts``, which fetches,
+unzips and parses each company's winning filing) into the single
+write task; the shuffle keeps that stage parallel and only the small
+final table is gathered.
 
 The reference's monitoring is log lines with hand-computed counts
 re-scanning the frame (``src/extract.py:35,63-65``,

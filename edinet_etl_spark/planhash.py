@@ -19,10 +19,32 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-_SCRUB: list[tuple[re.Pattern[str], str]] = [
+# One column of a distinct-aggregate group key, after id scrubbing:
+# o_custkey#NL, a float key's NaN/-0.0 normalization, either one as a
+# sort key.
+_GID_KEY = (
+    r"(?:knownfloatingpointnormalized\(normalizenanandzero\(\w+#NL?\)\) AS )?"
+    r"\w+#NL?(?: ASC NULLS FIRST)?"
+)
+
+
+def _sorted_keys(m: re.Match[str]) -> str:
+    return ", ".join(sorted(m.group(1)[:-2].split(", "))) + ", "
+
+
+def _sorted_expand_rows(m: re.Match[str]) -> str:
+    rows = []
+    for row in re.findall(r"\[([^\[\]]*)\]", m.group(1)):
+        items = (re.sub(r"^[1-9]\d*$", "G", x) for x in row.split(", ") if x != "null")
+        rows.append(f"[{', '.join(items)}]")
+    return f"Expand [{', '.join(sorted(rows))}], ["
+
+
+_SCRUB: list[tuple[re.Pattern[str], str | Callable[[re.Match[str]], str]]] = [
     # higher-order-function lambda variables carry a SESSION-GLOBAL
     # counter (lambda x_1 in a fresh session, lambda x_28 after other
     # queries ran) — normalize the counter, keep the variable letter
@@ -64,6 +86,20 @@ _SCRUB: list[tuple[re.Pattern[str], str]] = [
     (re.compile(r"RoundRobinPartitioning\(\d+\)"), "RoundRobinPartitioning(P)"),
     # Range(...) leaf splits default to defaultParallelism (same class)
     (re.compile(r"(Range \([^)]*?splits=)\d+\)"), r"\1P)"),
+    # distinct aggregates over different columns (COUNT DISTINCT per
+    # column) are rewritten to an Expand with one gid per distinct
+    # group, and Catalyst orders the groups by expression hash codes,
+    # which carry the session's expression ids: the same query prints
+    # its group columns, gid numbers and Expand rows in another order
+    # after other queries ran (table_profile_orders).  Sort the group
+    # columns in front of gid, number every group G, and drop the nulls
+    # of each Expand row before sorting the rows
+    (re.compile(rf"(?<=[\[(])((?:{_GID_KEY}, )+)(?=gid#N\b)"), _sorted_keys),
+    (re.compile(r"\bgid#N = [1-9]\d*"), "gid#N = G"),
+    (
+        re.compile(r"Expand \[(\[[^\[\]]*\](?:, \[[^\[\]]*\])*)\], \[(?=[^\]]*\bgid#N\b)"),
+        _sorted_expand_rows,
+    ),
     # AQE wrapper flag flips once executed; hash the static shape only
     (re.compile(r"isFinalPlan=(true|false)"), "isFinalPlan=_"),
     # trailing whitespace differences

@@ -57,8 +57,6 @@ from edinet_etl_spark.session import materialize
 # grid 0.2 s faster).
 SERIAL_GRID_MAX = 131_072
 
-OrderKey = "Column | str"
-
 
 def _cols(order_by: list) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]

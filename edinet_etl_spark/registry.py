@@ -13,14 +13,25 @@ Contract discipline (BASELINE.md t2):
 - any LIMIT is preceded by a total ORDER BY;
 - queries whose semantics aren't SQL-expressible register with
   ``oracle=None`` → the driver records a rows-only check.
+
+Session policy: the driver may hand a query any session (another
+timezone, AQE off), so ``@query`` registers a wrapper that applies
+``session.prep`` (UTC + AQE) before the body on every call — query
+bodies never call ``prep`` themselves.  The wrapper keeps the body's
+``__module__``, ``__doc__`` and ``__wrapped__`` (``functools.wraps``),
+so the driver order, per-module metrics and ``inspect.getsource`` all
+still see the body.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from edinet_etl_spark.session import prep
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -34,11 +45,17 @@ def query(name: str, oracle: str | None = None, covers: list[str] | None = None)
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            prep(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = pinned
         if oracle is not None:
             ORACLES[name] = oracle
         COVERS[name] = covers or []
-        return fn
+        return pinned
 
     return deco
 

@@ -46,7 +46,10 @@ def prep(spark: SparkSession) -> SparkSession:
     """Pin session confs the query surface depends on, idempotently.
 
     The driver may hand us an arbitrary session; queries assume UTC
-    timestamps (oracle comparability) and benefit from AQE.
+    timestamps (oracle comparability) and benefit from AQE.  The
+    ``registry.query`` wrapper applies this before every registered
+    query; the only other callers are the two public stream readers
+    in ``streaming.jobs``.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

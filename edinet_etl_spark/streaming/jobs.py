@@ -143,6 +143,29 @@ def run_available_now(
     return sdf.sparkSession.table(name)
 
 
+def drain(stream: DataFrame, upsert, checkpoint_dir: str) -> None:
+    """Drive ``stream`` to completion (availableNow) through the
+    ``foreachBatch`` sink ``upsert`` — the one driver of every
+    snapshot-maintaining stream (the ``make_*_upsert`` closures).
+
+    foreachBatch delivery is AT-LEAST-once (a crash between snapshot
+    swap and checkpoint commit re-delivers the batch), so an additive
+    merge alone is NOT idempotent; the batch-id marker stamped inside
+    the snapshot (atomic with the swap, see `_swap_snapshot`) turns
+    re-delivery into a no-op — that pair is what makes the end state
+    exactly-once.  Parquet cannot be read and overwritten in one job,
+    so each merge materializes to a staging dir and swaps (Delta/
+    Iceberg make this an atomic commit; the orchestration is
+    identical)."""
+    (
+        stream.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 # ------------------------------------------------------------------
 # Jobs (streaming DataFrames)
 # ------------------------------------------------------------------
@@ -632,33 +655,6 @@ def _snapshot_workdir(spark, sf_dir: str, prefix: str) -> tuple[str, str]:
     return os.path.join(base, "snapshot"), os.path.join(base, "ckpt")
 
 
-def stream_upsert_to_snapshot(
-    events: DataFrame, snapshot_dir: str, checkpoint_dir: str
-):
-    """CDC-style sink: each micro-batch merge-ADDS per-user totals
-    into a parquet snapshot via ``foreachBatch`` — the pattern for
-    maintaining a queryable serving table from a stream without a
-    table format.  foreachBatch delivery is AT-LEAST-once (a crash
-    between snapshot swap and checkpoint commit re-delivers the
-    batch), so the additive merge alone is NOT idempotent; the
-    batch-id marker stamped inside the snapshot (atomic with the
-    swap, see `_swap_snapshot`) turns re-delivery into a no-op —
-    that pair is what makes the end state exactly-once.
-
-    Note the overwrite staging: parquet cannot be read and overwritten
-    in one job, so the merge materializes to a staging dir and swaps.
-    (Delta/Iceberg make this an atomic commit; the orchestration is
-    identical.)
-    """
-    upsert = make_totals_upsert(snapshot_dir)
-    return (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def make_additive_upsert(snapshot_dir: str, build_updates, merge):
     """Shared foreachBatch skeleton for additive snapshot sinks:
     replay guard (skip batch ids ≤ the committed marker) → build this
@@ -790,8 +786,11 @@ def make_partitioned_additive_upsert(
 
 
 def make_totals_upsert(snapshot_dir: str):
-    """The CDC merge closure, exposed so tests can re-deliver a batch
-    id and pin replay idempotence.
+    """CDC-style sink: each micro-batch merge-ADDS per-user totals
+    into a parquet snapshot — the pattern for maintaining a queryable
+    serving table from a stream without a table format (exactly-once
+    end state: `drain`).  Exposed so tests can re-deliver a batch id
+    and pin replay idempotence.
 
     Numeric discipline: the snapshot stores the running total as an
     exact DECIMAL STRING (`total_dec`), converted to double only by
@@ -871,7 +870,6 @@ def streaming_nation_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     side shuffle-free — at 100 TB/day of events the only stateful
     shuffle is the windowed aggregate, with state bounded by the
     watermark."""
-    prep(spark)
     ev = read_events_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -977,20 +975,18 @@ def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFram
 def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end CDC maintenance: the event stream merge-upserts
     per-user totals into a parquet serving snapshot via ``foreachBatch``
-    (`stream_upsert_to_snapshot`), and the FINAL SNAPSHOT ON DISK must
-    equal the batch group-by — proving the whole loop (micro-batch
-    aggregation → merge → atomic staging swap → checkpointed
-    exactly-once) ends at the same answer as one declarative query.
+    (`make_totals_upsert` under `drain`), and the FINAL SNAPSHOT ON
+    DISK must equal the batch group-by — proving the whole loop
+    (micro-batch aggregation → merge → atomic staging swap →
+    checkpointed exactly-once) ends at the same answer as one
+    declarative query.
 
     Each call starts from an empty checkpoint + snapshot, so the run
     is deterministic; with a multi-file feed the merge genuinely runs
     once per micro-batch and the decimal-exact ``dsum`` discipline
     makes re-merged totals bit-identical to the single-pass sum."""
-    prep(spark)
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_cdc")
-    ev = read_events_stream(spark, sf_dir)
-    q = stream_upsert_to_snapshot(ev, snap, ckpt)
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir), make_totals_upsert(snap), ckpt)
     return read_totals_snapshot(spark, snap)
 
 
@@ -1015,27 +1011,15 @@ _QUALITY_RULES: list[tuple[str, str]] = [
 ]
 
 
-def stream_quality_monitor(events: DataFrame, snapshot_dir: str, checkpoint_dir: str):
-    """foreachBatch quality monitor: each micro-batch counts its rule
-    violations (one conditional-sum pass, no per-rule rescans) and
-    merge-adds them into a parquet metrics snapshot — the live
-    dashboard table an on-call reads.  Counts are additive, and the
-    batch-id marker inside the snapshot makes at-least-once
-    foreachBatch re-delivery a no-op, so the monitor's final state
-    equals the one-shot batch scan no matter how the feed was chopped
-    into batches or where a restart landed."""
-    upsert = make_quality_upsert(snapshot_dir)
-    return (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def make_quality_upsert(snapshot_dir: str):
-    """The monitor merge closure, exposed so tests can re-deliver a
-    batch id and pin replay idempotence."""
+    """The quality monitor's foreachBatch sink: each micro-batch counts
+    its rule violations (one conditional-sum pass, no per-rule
+    rescans) and merge-adds them into a parquet metrics snapshot — the
+    live dashboard table an on-call reads.  Counts are additive and
+    replay is a no-op (`drain`), so the final state equals the one-shot
+    batch scan no matter how the feed was chopped into batches or where
+    a restart landed.  Exposed so tests can re-deliver a batch id and
+    pin replay idempotence."""
 
     def build_updates(batch_df: DataFrame) -> DataFrame:
         # count(when) not sum(when): COUNT of zero rows is 0 while SUM
@@ -1076,14 +1060,11 @@ _QMON_ORACLE = "\n    UNION ALL\n    ".join(
 def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming observability: the event stream maintains
     a rule-violation metrics snapshot via ``foreachBatch``
-    (`stream_quality_monitor`), and the FINAL snapshot must equal the
-    one-shot batch scan — additivity + exactly-once replay proven the
-    same way as `streaming_cdc_snapshot`."""
-    prep(spark)
+    (`make_quality_upsert` under `drain`), and the FINAL snapshot must
+    equal the one-shot batch scan — additivity + exactly-once replay
+    proven the same way as `streaming_cdc_snapshot`."""
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_qmon")
-    ev = read_events_stream(spark, sf_dir)
-    q = stream_quality_monitor(ev, snap, ckpt)
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir), make_quality_upsert(snap), ckpt)
     return read_snapshot(spark, snap)
 
 
@@ -1326,18 +1307,10 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d·w counters (constant, broadcastable), each micro-batch adds its
     partial matrix — no per-key streaming state at all, which is the
     entire point of sketching the stream instead of counting it."""
-    prep(spark)
     from edinet_etl_spark.operators.sketches import _CMS_D, _CMS_W, _hash32
 
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_cmsstream")
-    ev = read_events_stream(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(make_cms_upsert(snap))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir), make_cms_upsert(snap), ckpt)
     cms = read_snapshot(spark, snap)
     events = load(spark, sf_dir, "events")
     truth = events.groupBy(F.col("user_id").cast("string").alias("key")).agg(
@@ -1427,16 +1400,8 @@ def streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bitmap_distinct_rollup`); the readout never touches raw events.
     10^9 dense users × 5 types ≈ 625 MB of words — a small serving
     table maintained by pure column ops."""
-    prep(spark)
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_bitmapstream")
-    ev = read_events_stream(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(make_bitmap_upsert(snap))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir), make_bitmap_upsert(snap), ckpt)
     bm = read_snapshot(spark, snap)
     return (
         bm.groupBy("event_type")
@@ -1634,7 +1599,6 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-batch state touched is |priorities| rows.  At 100 TB the
     interval table would be maintained incrementally by the CDC path
     and bucketed on user_id so each micro-batch joins co-located."""
-    prep(spark)
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_asof_enrich")
     iv = materialize(order_priority_intervals(spark, sf_dir))
     # ~40 B/row keeps this comfortably under a 32 MB broadcast build
@@ -1650,13 +1614,7 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("o_orderpriority", F.lit("NONE")).alias("priority"),
         "value",
     )
-    q = (
-        enriched.writeStream.foreachBatch(make_priority_upsert(snap))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(enriched, make_priority_upsert(snap), ckpt)
     return (
         read_snapshot(spark, snap)
         .select(
@@ -1927,16 +1885,8 @@ def streaming_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus signature index); the snapshot commit is the versioned
     atomic protocol shared with the CDC sink (partitioned-bucket form
     for 100 TB noted on `make_neardup_upsert`)."""
-    prep(spark)
     snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_neardup")
-    docs = read_documents_stream(spark, sf_dir)
-    q = (
-        docs.writeStream.foreachBatch(make_neardup_upsert(snap))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_documents_stream(spark, sf_dir), make_neardup_upsert(snap), ckpt)
     return (
         read_snapshot(spark, snap)
         .filter(F.col("kind") == "pair")

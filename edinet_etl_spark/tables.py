@@ -112,10 +112,6 @@ SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-# Small dimensions that should always ride the broadcast path in joins.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table as a DataFrame (columnar parquet scan).
 

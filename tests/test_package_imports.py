@@ -1,13 +1,18 @@
 """Static guards over the package source: every module under
 ``edinet_etl_spark/`` is parsed and checked — production code never
-imports test code, and eager checkpoints go through one helper."""
+imports test code, eager checkpoints go through one helper, and the
+session policy (``session.prep``) is applied only by the registry."""
 
 from __future__ import annotations
 
 import ast
+import inspect
 from pathlib import Path
 
 import edinet_etl_spark
+from edinet_etl_spark import registry
+
+from tests.conftest import SF_DIR
 
 PACKAGE = Path(edinet_etl_spark.__file__).parent
 
@@ -57,3 +62,57 @@ def test_checkpoints_only_through_materialize():
         and not (path.name == "session.py" and node.lineno in allowed)
     ]
     assert offenders == []
+
+
+def _prep_call_sites(tree: ast.AST, scope: str = ""):
+    """(enclosing function, line) of every ``prep(...)`` call."""
+    for node in ast.iter_child_nodes(tree):
+        inner = scope
+        if isinstance(node, ast.FunctionDef | ast.AsyncFunctionDef):
+            inner = node.name if not scope else f"{scope}.{node.name}"
+        if isinstance(node, ast.Call) and (
+            getattr(node.func, "id", None) == "prep"
+            or getattr(node.func, "attr", None) == "prep"
+        ):
+            yield scope, node.lineno
+        yield from _prep_call_sites(node, inner)
+
+
+def test_session_policy_only_in_registry():
+    """One session policy: ``registry.query`` wraps every query so it
+    applies ``prep`` on each call; no query body calls it.  The only
+    other callers are the two public stream readers, which tests call
+    directly."""
+    sites = sorted(
+        (str(path.relative_to(PACKAGE)), fn)
+        for path in PACKAGE.rglob("*.py")
+        for fn, _ in _prep_call_sites(ast.parse(path.read_text(), str(path)))
+    )
+    assert sites == [
+        ("registry.py", "query.deco.pinned"),
+        ("streaming/jobs.py", "_events_stream"),
+        ("streaming/jobs.py", "read_documents_stream"),
+    ]
+
+
+def test_registered_query_repins_hostile_session(spark):
+    """A session with another timezone and AQE off is repinned to UTC +
+    AQE by the registered callable itself (building the DataFrame runs
+    no action), and every registered callable is the wrapper around a
+    body that keeps its own module."""
+    registry.load_all()
+    tz, aqe = "spark.sql.session.timeZone", "spark.sql.adaptive.enabled"
+    saved = {k: spark.conf.get(k) for k in (tz, aqe)}
+    try:
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(aqe, "false")
+        registry.QUERIES["pricing_summary"](spark, SF_DIR)
+        assert spark.conf.get(tz) == "UTC"
+        assert spark.conf.get(aqe) == "true"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    for name, fn in registry.QUERIES.items():
+        body = inspect.unwrap(fn)
+        assert body is not fn, name
+        assert fn.__module__ == body.__module__ != registry.__name__, name

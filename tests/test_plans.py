@@ -444,6 +444,34 @@ def test_plan_hash_normalizes_session_database_names():
     assert "orders_bucketed" in normalize_plan(scan("3f2a9c0d1e4b"))
 
 
+def test_plan_hash_normalizes_distinct_group_order():
+    """table_profile_orders' multi-column COUNT DISTINCT is rewritten to
+    an Expand with one gid per distinct column, and Catalyst orders the
+    groups by expression hash codes, which carry session expression
+    ids: a fresh session and one that ran other queries first print the
+    group columns, gid numbers and Expand rows in different orders."""
+    from edinet_etl_spark.planhash import normalize_plan
+
+    fresh = (
+        "HashAggregate(keys=[], functions=[partial_count(o_custkey#11L) FILTER (WHERE (gid#20 = 1)), "
+        "partial_count(o_orderstatus#12) FILTER (WHERE (gid#20 = 2))])\n"
+        "+- Exchange hashpartitioning(o_custkey#21L, o_orderstatus#22, gid#20, 4), ENSURE_REQUIREMENTS, [plan_id=3]\n"
+        "   +- Expand [[null, null, 0], [o_custkey#11L, null, 1], [null, o_orderstatus#12, 2]], "
+        "[o_custkey#21L, o_orderstatus#22, gid#20]"
+    )
+    later = (
+        "HashAggregate(keys=[], functions=[partial_count(o_custkey#511L) FILTER (WHERE (gid#520 = 2)), "
+        "partial_count(o_orderstatus#512) FILTER (WHERE (gid#520 = 1))])\n"
+        "+- Exchange hashpartitioning(o_orderstatus#522, o_custkey#521L, gid#520, 4), ENSURE_REQUIREMENTS, [plan_id=97]\n"
+        "   +- Expand [[null, null, 0], [o_orderstatus#512, null, 1], [null, o_custkey#511L, 2]], "
+        "[o_orderstatus#522, o_custkey#521L, gid#520]"
+    )
+    assert fresh != later
+    assert normalize_plan(fresh) == normalize_plan(later)
+    other = fresh.replace("o_orderstatus", "o_orderdate")
+    assert normalize_plan(other) != normalize_plan(fresh)
+
+
 def test_plan_hash_normalizes_core_count_tokens():
     """normalize_plan must scrub core-count-derived tokens so the SAME
     query code hashes identically at local[32] and local[8]: the driver

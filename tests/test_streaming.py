@@ -243,8 +243,7 @@ def test_foreachbatch_upsert_snapshot(spark, tmp_path):
     snap = str(tmp_path / "snapshot")
     ckpt = str(tmp_path / "ckpt")
     ev = jobs.read_events_stream(spark, SF_DIR)
-    q = jobs.stream_upsert_to_snapshot(ev, snap, ckpt)
-    q.awaitTermination()
+    jobs.drain(ev, jobs.make_totals_upsert(snap), ckpt)
     got = jobs.read_totals_snapshot(spark, snap)
     batch = (
         load(spark, SF_DIR, "events")

@@ -8,8 +8,9 @@ Env: SPARK_GRAFT_VERIFY_SF_DIR (default /root/testdata/sf0.01).
 
 This mirrors the harness's CORRECTNESS gate (row count + schema +
 order-insensitive value hash, floats by bit pattern) but runs under a
-deliberately HOSTILE session (America/New_York timezone) so `prep()`'s
-conf pinning is exercised, not assumed.
+deliberately HOSTILE session (America/New_York timezone) so the
+registry's conf pinning (`session.prep` on every query call) is
+exercised, not assumed.
 """
 
 from __future__ import annotations
@@ -64,7 +65,7 @@ def main() -> None:
         SparkSession.builder.master("local[8]")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "8")
-        # hostile on purpose: prep() must repin UTC
+        # hostile on purpose: the registry's prep() must repin UTC
         .config("spark.sql.session.timeZone", "America/New_York")
         .getOrCreate()
     )
