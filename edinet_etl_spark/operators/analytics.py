@@ -22,7 +22,7 @@ from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.exprs import SQL_REVENUE, revenue
 from edinet_etl_spark.prefix import range_prefix_sum, range_row_number
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize
+from edinet_etl_spark.session import materialize, scratch_dir
 from edinet_etl_spark.tables import load
 
 
@@ -1174,16 +1174,11 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ordinary partial-agg shuffle.  The oracle models the same read
     as a typed UNION with NULL for the missing column — the relational
     definition of schema-evolved scan."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     od = load(spark, sf_dir, "orders")
-    tag = hashlib.md5(
-        (sf_dir + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"edinet_schevo_{tag}")
+    base = scratch_dir(spark, sf_dir, "schevo")
     shutil.rmtree(base, ignore_errors=True)
     od.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -3938,10 +3933,6 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
-# Bucketed co-located join audit.  Dials prefixed per CLAUDE.md.
-_BKT_PREFIX = "edinet_bucketed_audit"
-
-
 @query(
     "bucketed_colocated_join_audit",
     oracle=f"""
@@ -3972,16 +3963,12 @@ def bucketed_colocated_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     conversion.  At 100 TB this is the difference between re-shuffling
     the lake per query and reading co-located buckets; the bucket
     count is the write-time parallelism dial (`layout.N_BUCKETS`)."""
-    import hashlib
     import os
-    import tempfile
 
     from edinet_etl_spark import layout
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{sf_dir}|{app}".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"{_BKT_PREFIX}_{tag}")
-    db = f"{_BKT_PREFIX}_{tag}"
+    out = scratch_dir(spark, sf_dir, "bucketed_audit")
+    db = os.path.basename(out)
     layout.write_bucketed_join_tables(spark, sf_dir, out, db=db)
     li = spark.table(f"{db}.lineitem_bucketed").select(
         "l_orderkey", "l_extendedprice", "l_discount"

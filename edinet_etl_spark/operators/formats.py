@@ -13,27 +13,20 @@ format) and are covered by the rest of the suite.
 
 Scale notes: both writers partition like any other Spark write (one
 file per task); the read-back is a normal distributed scan.  Writes
-land under /tmp keyed by the input directory, overwrite mode, so
-re-runs are idempotent (same discipline as the snapshot sinks).
+land in the session's `session.scratch_dir`, overwrite mode, so
+re-runs are idempotent and two sessions on one input directory never
+overwrite each other's files under a pending lazy read-back (same
+discipline as the snapshot sinks).
 """
 
 from __future__ import annotations
-
-import hashlib
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.registry import query
+from edinet_etl_spark.session import scratch_dir
 from edinet_etl_spark.tables import load
-
-
-def _scratch(kind: str, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"edinet_fmt_{kind}_{tag}")
-
 
 _ORC_ORACLE = """
     SELECT o_orderstatus AS orderstatus,
@@ -55,7 +48,7 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, aggregate per order status.  A value changed by the ORC
     writer/reader or its type mapping breaks the hash against the
     parquet-truth oracle."""
-    path = _scratch("orc", sf_dir)
+    path = scratch_dir(spark, sf_dir, "fmt_orc")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -95,7 +88,7 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an EXPLICIT schema (inference is banned in a deterministic
     pipeline — it type-flips on content), aggregate per segment.
     String escaping round-trips are exercised by the name-bytes sum."""
-    path = _scratch("jsonl", sf_dir)
+    path = scratch_dir(spark, sf_dir, "fmt_jsonl")
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
@@ -142,7 +135,7 @@ def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is row-local StAX — heavier per byte than parquet, which is why
     the lake stays parquet and XML is an EDGE format (ingest/export),
     exactly how the pipeline layer treats it."""
-    path = _scratch("xml", sf_dir)
+    path = scratch_dir(spark, sf_dir, "fmt_xml")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type", "p_size")
     (
         p.write.mode("overwrite")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from edinet_etl_spark.prefix import range_prefix_sums
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize
+from edinet_etl_spark.session import materialize, scratch_dir, staged_dir
 from edinet_etl_spark.tables import load, parallel_scan
 
 # orders columns profiled: (name, cast-for-display)
@@ -274,18 +274,12 @@ def csv_corrupt_records_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the job; DROPMALFORMED silently loses data — the worst option for
     a training corpus); the quarantined rows write to a dead-letter
     path for reprocessing."""
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
     od = load(spark, sf_dir, "orders")
-    tag = hashlib.md5(
-        (sf_dir + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"edinet_corrupt_{tag}")
+    base = scratch_dir(spark, sf_dir, "corrupt")
     shutil.rmtree(base, ignore_errors=True)
     # price field becomes non-numeric garbage for orderkeys ≡ 3 (mod 10)
     feed = od.select(
@@ -583,18 +577,14 @@ def dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame
     contains `dynamicpruning`; files actually read < partitions on
     disk).  The oracle replays the same join relationally — DPP is
     pure execution strategy, so results match bit-exact."""
-    import hashlib
-    import os
-    import tempfile
+    from edinet_etl_spark import layout
 
-    from edinet_etl_spark.layout import write_date_partitioned_events
-
-    tag = hashlib.md5(
-        (sf_dir + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    lake = os.path.join(tempfile.gettempdir(), f"edinet_dpplake_{tag}")
-    if not os.path.isdir(lake):
-        write_date_partitioned_events(spark, sf_dir, lake)
+    lake = staged_dir(
+        spark,
+        sf_dir,
+        "dpplake",
+        lambda out: layout.write_date_partitioned_events(spark, sf_dir, out),
+    )
     fact = spark.read.parquet(lake)
     dim = (
         load(spark, sf_dir, "events")

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
 from edinet_etl_spark.numeric import _dec_to_double, dec, dsum
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize
+from edinet_etl_spark.session import materialize, scratch_dir
 from edinet_etl_spark.tables import load, parallel_scan
 
 def dot_exact(a: Column, b: Column) -> Column:
@@ -1668,10 +1668,7 @@ def ivf_partitioned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters on the index scan).  At 100 TB the same layout
     is the bucketed/partitioned ANN shard map: route each query to its
     cells' files, fan out, rerank — no full-index pass anywhere."""
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     emb = parallel_scan(spark, sf_dir, "embeddings")
     # The write's clustering exchange keys on (sid, deterministic salt)
@@ -1690,10 +1687,7 @@ def ivf_partitioned_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", F.col("cells")[0].alias("sid"))
         .repartition(F.col("sid"), F.pmod(F.xxhash64("vec_id"), F.lit(salt_l)))
     )
-    tag = hashlib.md5(
-        (sf_dir + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    idx_dir = os.path.join(tempfile.gettempdir(), f"edinet_ivfidx_{tag}")
+    idx_dir = scratch_dir(spark, sf_dir, "ivfidx")
     shutil.rmtree(idx_dir, ignore_errors=True)
     cells.write.partitionBy("sid").parquet(idx_dir)
     # probed cells: the query vectors' own cell ids — |queries| scalars

@@ -61,8 +61,8 @@ _SCRUB: list[tuple[re.Pattern[str], str | Callable[[re.Match[str]], str]]] = [
     (re.compile(r"Scan ExistingRDD\[[^\]]*\]"), "Scan ExistingRDD[...]"),
     (re.compile(r"MapPartitionsRDD\[\d+\]"), "MapPartitionsRDD[N]"),
     (re.compile(r"ParallelCollectionRDD\[\d+\]"), "ParallelCollectionRDD[N]"),
-    # per-session catalog database (analytics' bucketed join audit
-    # names it edinet_bucketed_audit_<md5(sf_dir|applicationId)[:12]>)
+    # per-session catalog database: analytics' bucketed join audit
+    # names it after its session.scratch_dir(..., "bucketed_audit")
     (re.compile(r"\b(edinet_bucketed_audit)_[0-9a-f]{12}\b"), r"\1_H"),
     # file listing: paths, counts, sizes
     (re.compile(r"/[\w./-]*testdata/sf[\d.]+"), "SF"),

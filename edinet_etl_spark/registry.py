@@ -97,61 +97,53 @@ def load_all() -> None:
 # llmdata head) sort last; within unlisted queries, family order below
 # then registration order.  Names here that stop existing raise at
 # lookup time (guarded in _ordered_names).
-# Round-11 rotation (VERDICT r10 task 1: the round-10 optimization
-# rewrites landed AFTER the r10 window froze, so the heaviest semantic
-# rewrites — minhash bigint lanes (12-consumer blast radius), the
-# canonical-docs min(struct) collapse, the array_intersect verify, the
-# IVF in-row ranking, span scrub, kmv shared pass, BPE job folding —
-# carry no driver correctness row on their new plans.  The r11 head is
-# exactly those driver-unproven rewritten paths, dedup/LSH family
-# first, then this round's own optimization targets, then backfill
-# from the oldest-evidence (r3) cohort up to the 50-name window.
+# Round-12 rotation: the head is every query whose per-session working
+# dir moved to `session.scratch_dir` / `session.staged_dir` (the 14
+# streaming queries, the three format round-trips and the five batch
+# queries that write scratch data), then the backfill from the
+# oldest-evidence cohorts: all of r3, then r4 in name order up to the
+# 50-name window and behind it.  The r11 head (the r10-rewritten
+# dedup/LSH/IVF paths) was driver-green in r11 and sorts by module.
 _PRIORITY: tuple[str, ...] = (
-    # ---- r10-rewritten, driver-unproven: dedup/LSH family ----
-    "minhash_lsh_candidates", "canonical_minhash_candidates",
-    "jaccard_verify_candidates", "containment_verify_candidates",
-    "simhash_hamming_near_pairs", "neardup_components",
-    "minhash_jaccard_estimate_error", "lsh_recall_curve",
-    "prefix_filter_jaccard_join", "edit_distance_near_pairs",
-    "duplicate_span_scrub", "lsh_band_bucket_stats",
-    "delta_dedup_against_corpus", "neardup_canonical_docs",
-    # ---- r10-rewritten: IVF/PQ family (in-row coarse quantizer,
-    # min(struct) code assignment) ----
-    "ivf_ann_topk", "ivf_ann_nprobe2", "kmeans_train_step",
-    "semdedup_prune", "ivf_partitioned_index_topk", "ivf_recall_at3",
-    "pq_codebook_recon_error",
-    # ---- r10-rewritten: the rest ----
-    "kmv_jaccard_intersection", "dsir_importance_weights",
-    "bpe_train_steps", "bpe_apply_per_source",
-    "boilerplate_segment_removal", "hashed_tf_cosine_topk",
-    "copurchase_degree_stats", "image_ahash_neardup",
-    # ---- round-11 optimization targets (VERDICT r10 task 4) ----
-    "fuzzy_name_linkage", "skipgram_training_pairs",
-    "repetition_scores",
-    # ---- backfill: oldest-evidence (r3) cohort, continuing the r10
-    # rotation order (copurchase_lift_pairs was cut at the r10
-    # boundary) ----
-    "copurchase_lift_pairs", "customer_order_distribution",
-    "customer_spend_trend", "embedding_neardup_blocked",
-    "grouped_map_user_zscore", "hard_negative_mining",
-    "heavy_promo_suppliers", "important_part_value",
-    "inactive_rich_customers", "jl_projection_recall",
-    "kcore_copurchase_peel", "kmv_distinct_estimate",
-    "kmv_sketch_merge", "large_volume_customers",
-    "min_price_supplier_per_part", "nation_market_share",
-    "pagerank_event_graph", "part_price_band_join",
-    # ---- behind the window: the rest of the round-3 cohort, so a
-    # wider sweep (or the r12 head) picks them up first ----
+    # ---- paths whose scratch dirs moved to session.scratch_dir ----
+    "streaming_attribution_left_outer", "streaming_cdc_snapshot",
+    "streaming_dedup_events", "streaming_tumbling_hourly",
+    "streaming_user_sessions", "streaming_user_totals",
+    "streaming_join_view_maintenance", "streaming_nation_hourly",
+    "streaming_purchase_attribution", "streaming_quality_monitor",
+    "streaming_cms_heavy_hitters", "streaming_bitmap_distinct",
+    "streaming_asof_enrich", "streaming_neardup_dedup",
+    "orc_roundtrip_stats", "jsonl_roundtrip_stats", "xml_roundtrip_stats",
+    "csv_corrupt_records_audit", "dynamic_partition_pruned_join",
+    "schema_evolution_read", "bucketed_colocated_join_audit",
+    "ivf_partitioned_index_topk",
+    # ---- backfill: the rest of the r3 cohort ----
     "parttype_profit_by_nation_year", "pq_recall_at3",
     "promo_revenue_share", "returned_item_top_customers",
-    "seasonal_hourly_anomalies",
-    "small_quantity_revenue", "sql_recursive_paydown",
-    "sql_udf_band_totals", "streaming_attribution_left_outer",
-    "streaming_cdc_snapshot", "streaming_dedup_events",
+    "seasonal_hourly_anomalies", "small_quantity_revenue",
+    "sql_recursive_paydown", "sql_udf_band_totals",
     "supplier_count_by_part", "time_weighted_avg_value",
     "top_supplier_by_revenue", "trailing_hour_user_avg",
     "udaf_median_acctbal_by_nation", "udtf_dynamic_word_columns",
     "zorder_locality_stats",
+    # ---- backfill: the r4 cohort up to the window ----
+    "bigram_novelty_scores", "bpe_top_merges", "cdc_apply_changes",
+    "cms_join_size_estimate", "doc_chunk_windows", "doc_rarity_scores",
+    "document_fingerprints", "embedding_sq8_recon_error",
+    "event_sequence_trigrams", "fulfilled_only_customers_except",
+    "incremental_agg_maintenance", "language_id_heuristic",
+    "lsh_hyperplane_buckets",
+    # ---- behind the window: the rest of the r4 cohort, so a wider
+    # sweep (or the next head) picks them up first ----
+    "matryoshka_prefix_recall", "multimodal_audio_energy",
+    "multimodal_features", "multimodal_frame_sample",
+    "pii_redaction_report", "props_variant_stats", "quality_scores",
+    "rolling_7d_active_users", "source_overlap_matrix",
+    "source_temperature_sampling", "suppliers_with_shipments",
+    "table_profile_orders", "tfidf_top_terms",
+    "token_budget_pack_partitioned", "token_count_estimate",
+    "training_mix_manifest", "training_shard_assignment",
+    "value_distribution_ks_binned",
 )
 
 # Tail order for queries not in _PRIORITY: still-unproven families

@@ -15,7 +15,11 @@ coalescing/skew-join left on.  Every conf here is scale-motivated:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,3 +74,49 @@ def materialize(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def scratch_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """The engine's one name for a per-session working directory:
+    ``{tempdir}/edinet_{kind}_{md5(sf_dir|applicationId)[:12]}``.  Pure:
+    it creates nothing.  Keying on the application id as well as the
+    input directory keeps two sessions on the same data from
+    overwriting each other's dirs while a lazy read-back is pending.
+
+    Precondition: the path is driver-local, but Spark tasks write into
+    it (and read it back).  That holds in local mode, where executors
+    share the driver's file system; on a cluster the temp dir must be
+    shared storage every executor sees."""
+    tag = hashlib.md5(f"{sf_dir}|{spark.sparkContext.applicationId}".encode())
+    return os.path.join(tempfile.gettempdir(), f"edinet_{kind}_{tag.hexdigest()[:12]}")
+
+
+def staged_dir(
+    spark: SparkSession, sf_dir: str, kind: str, build: Callable[[str], None]
+) -> str:
+    """``scratch_dir(spark, sf_dir, kind)``, built once per session.
+
+    If the dir exists it is complete: return it.  Otherwise
+    ``build(staging)`` fills a fresh sibling dir, which is renamed into
+    place, so a build that fails or is cancelled leaves nothing a later
+    call would take for complete.  A concurrent builder that renamed
+    first wins; this call drops its own staging dir and returns the
+    winner's."""
+    final = scratch_dir(spark, sf_dir, kind)
+    if os.path.isdir(final):
+        return final
+    staging = tempfile.mkdtemp(
+        prefix=f"{os.path.basename(final)}.staging-", dir=os.path.dirname(final)
+    )
+    try:
+        build(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    try:
+        os.rename(staging, final)
+    except OSError:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.isdir(final):  # a lost race is the only benign failure
+            raise
+    return final

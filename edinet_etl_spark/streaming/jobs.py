@@ -37,7 +37,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from edinet_etl_spark.numeric import dec, dsum, sql_dsum
 from edinet_etl_spark.operators.events import hourly_stats, sessions
 from edinet_etl_spark.registry import query
-from edinet_etl_spark.session import materialize, prep
+from edinet_etl_spark.session import materialize, prep, scratch_dir, staged_dir
 from edinet_etl_spark.tables import decode_events, load
 
 def _raw_schema(ts_is_nanos: bool) -> T.StructType:
@@ -59,26 +59,21 @@ def _raw_schema(ts_is_nanos: bool) -> T.StructType:
     )
 
 
-def _feed_dir(sf_dir: str) -> str:
+def _feed_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events parquet data into a directory the file stream
     source can monitor (a feed IS a directory files land in).  The
     fixture is one file; a multi-file lake layout (e.g. the 10× probe's
     output directory) symlinks each data file individually, so the
     stream sees them as successive arrivals under maxFilesPerTrigger —
-    i.e. a real multi-batch feed.  Symlink, no copy; idempotent."""
-    import hashlib
+    i.e. a real multi-batch feed.  Symlink, no copy; idempotent.
+
+    Per-session dir (`session.scratch_dir`): two concurrent sessions
+    must not race on each other's symlink reconciliation — one session
+    unlinking a stale layout would break a stream the other is
+    mid-read on."""
     import os
-    import tempfile
 
-    from pyspark.sql import SparkSession
-
-    # session-scoped tag (same rationale as _snapshot_workdir): two
-    # concurrent sessions must not race on each other's symlink
-    # reconciliation — one session unlinking a stale layout would
-    # break a stream the other is mid-read on
-    app = SparkSession.active().sparkContext.applicationId
-    tag = hashlib.md5(f"{sf_dir}|{app}".encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"edinet_stream_feed_{tag}")
+    d = scratch_dir(spark, sf_dir, "stream_feed")
     os.makedirs(d, exist_ok=True)
     src = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(src):
@@ -107,7 +102,7 @@ def _feed_dir(sf_dir: str) -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet; same columns and
     instants as the batch loader."""
-    return _events_stream(spark, sf_dir, lambda _nanos: _feed_dir(sf_dir))
+    return _events_stream(spark, sf_dir, lambda _nanos: _feed_dir(spark, sf_dir))
 
 
 def _events_stream(
@@ -638,19 +633,14 @@ def _gc_versions(snapshot_dir: str, referenced: set[int]) -> None:
             shutil.rmtree(os.path.join(snapshot_dir, d), ignore_errors=True)
 
 
-def _snapshot_workdir(spark, sf_dir: str, prefix: str) -> tuple[str, str]:
-    """Fresh (snapshot, checkpoint) pair under a tag unique to BOTH
-    the data dir and this session — two sessions running the same
-    query concurrently must not clobber each other."""
-    import hashlib
+def _snapshot_workdir(spark, sf_dir: str, kind: str) -> tuple[str, str]:
+    """Fresh (snapshot, checkpoint) pair in this session's
+    `session.scratch_dir` — two sessions running the same query
+    concurrently must not clobber each other."""
     import os
     import shutil
-    import tempfile
 
-    tag = hashlib.md5(
-        (sf_dir + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    base = scratch_dir(spark, sf_dir, kind)
     shutil.rmtree(base, ignore_errors=True)
     return os.path.join(base, "snapshot"), os.path.join(base, "ckpt")
 
@@ -985,7 +975,7 @@ def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic; with a multi-file feed the merge genuinely runs
     once per micro-batch and the decimal-exact ``dsum`` discipline
     makes re-merged totals bit-identical to the single-pass sum."""
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_cdc")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "cdc")
     drain(read_events_stream(spark, sf_dir), make_totals_upsert(snap), ckpt)
     return read_totals_snapshot(spark, snap)
 
@@ -1063,7 +1053,7 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`make_quality_upsert` under `drain`), and the FINAL snapshot must
     equal the one-shot batch scan — additivity + exactly-once replay
     proven the same way as `streaming_cdc_snapshot`."""
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_qmon")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "qmon")
     drain(read_events_stream(spark, sf_dir), make_quality_upsert(snap), ckpt)
     return read_snapshot(spark, snap)
 
@@ -1075,12 +1065,16 @@ def streaming_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HORIZON_US = (32503680000000000, 32506358400000000)
 
 
-def _feed_dir_with_horizon(sf_dir: str, nanos: bool) -> str:
+def _feed_dir_with_horizon(spark: SparkSession, sf_dir: str, nanos: bool) -> str:
     """A PRIVATE stream-feed directory (never the shared `_feed_dir` —
     horizon rows must not leak into other streaming queries' feeds):
     the real event file(s) copied with ascending mtimes, then two
     horizon files whose mtimes sort last, so the file source delivers
     real data first and the horizon markers as trailing micro-batches.
+    Built once per session by `session.staged_dir`: a crash mid-copy
+    leaves no partial feed a retry would take for complete (a feed
+    missing the horizon files silently stalls the watermark and tail
+    state never flushes).
 
     Why horizons: outer-join results only emit when the GLOBAL
     watermark passes a row's join window.  An availableNow replay of a
@@ -1091,72 +1085,50 @@ def _feed_dir_with_horizon(sf_dir: str, nanos: bool) -> str:
     horizon batch N only takes effect in batch N+1 (the one-batch
     delay pinned by `test_watermark_drops_late_events`), so the second
     horizon batch is what flushes state swept by the first."""
-    import hashlib
     import os
     import shutil
-    import tempfile
     import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyspark.sql import SparkSession
+    def build(staging: str) -> None:
+        src = os.path.join(sf_dir, "events.parquet")
+        if os.path.isdir(src):
+            data_files = sorted(
+                os.path.join(src, f)
+                for f in os.listdir(src)
+                if not f.startswith(("_", "."))
+            )
+        else:
+            data_files = [src]
+        now = time.time()
+        # real files first (ascending mtimes, all in the past)
+        for i, f in enumerate(data_files):
+            dst = os.path.join(staging, f"data_{i:05d}.parquet")
+            shutil.copy(f, dst)
+            os.chmod(dst, 0o644)
+            os.utime(dst, (now - 600 + i, now - 600 + i))
+        ts_type = pa.timestamp("ns") if nanos else pa.timestamp("us")
+        for h, us in enumerate(_HORIZON_US):
+            ids = [-(2 * h + 1), -(2 * h + 2)]
+            t = pa.table(
+                {
+                    "event_id": pa.array(ids, pa.int64()),
+                    "ts": pa.array(
+                        [us * 1000 if nanos else us] * 2, ts_type
+                    ),
+                    "user_id": pa.array(ids, pa.int64()),
+                    "event_type": pa.array(["purchase", "click"]),
+                    "value": pa.array([0.0, 0.0], pa.float64()),
+                    "props": pa.array(["{}", "{}"]),
+                }
+            )
+            path = os.path.join(staging, f"zz_horizon_{h}.parquet")
+            pq.write_table(t, path)
+            os.utime(path, (now - 100 + h, now - 100 + h))
 
-    app = SparkSession.active().sparkContext.applicationId
-    tag = hashlib.md5(f"horizon|{sf_dir}|{app}".encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"edinet_stream_horizon_{tag}")
-    if os.path.isdir(d):
-        return d  # session-scoped dir already fully staged (idempotent)
-    # Stage into a scratch sibling and atomically rename at the end: a
-    # crash mid-copy must not leave a partial feed that a same-session
-    # retry would treat as complete (the horizon files land last — a
-    # feed missing them silently stalls the watermark and tail state
-    # never flushes).
-    staging = f"{d}.staging-{os.getpid()}"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    os.makedirs(staging)
-    src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src):
-        data_files = sorted(
-            os.path.join(src, f)
-            for f in os.listdir(src)
-            if not f.startswith(("_", ".")) 
-        )
-    else:
-        data_files = [src]
-    now = time.time()
-    # real files first (ascending mtimes, all in the past)
-    for i, f in enumerate(data_files):
-        dst = os.path.join(staging, f"data_{i:05d}.parquet")
-        shutil.copy(f, dst)
-        os.chmod(dst, 0o644)
-        os.utime(dst, (now - 600 + i, now - 600 + i))
-    ts_type = pa.timestamp("ns") if nanos else pa.timestamp("us")
-    for h, us in enumerate(_HORIZON_US):
-        ids = [-(2 * h + 1), -(2 * h + 2)]
-        t = pa.table(
-            {
-                "event_id": pa.array(ids, pa.int64()),
-                "ts": pa.array(
-                    [us * 1000 if nanos else us] * 2, ts_type
-                ),
-                "user_id": pa.array(ids, pa.int64()),
-                "event_type": pa.array(["purchase", "click"]),
-                "value": pa.array([0.0, 0.0], pa.float64()),
-                "props": pa.array(["{}", "{}"]),
-            }
-        )
-        path = os.path.join(staging, f"zz_horizon_{h}.parquet")
-        pq.write_table(t, path)
-        os.utime(path, (now - 100 + h, now - 100 + h))
-    try:
-        os.rename(staging, d)  # atomic: d appears fully staged or not at all
-    except OSError:
-        if not os.path.isdir(d):  # lost a benign race only if d now exists
-            raise
-        shutil.rmtree(staging, ignore_errors=True)
-    return d
+    return staged_dir(spark, sf_dir, "stream_horizon", build)
 
 
 def read_events_stream_with_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,7 +1139,7 @@ def read_events_stream_with_horizon(spark: SparkSession, sf_dir: str) -> DataFra
     horizon rows entirely and leave the watermark stuck (measured: the
     4 tail purchases never flushed)."""
     return _events_stream(
-        spark, sf_dir, lambda nanos: _feed_dir_with_horizon(sf_dir, nanos)
+        spark, sf_dir, lambda nanos: _feed_dir_with_horizon(spark, sf_dir, nanos)
     )
 
 
@@ -1309,7 +1281,7 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire point of sketching the stream instead of counting it."""
     from edinet_etl_spark.operators.sketches import _CMS_D, _CMS_W, _hash32
 
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_cmsstream")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "cmsstream")
     drain(read_events_stream(spark, sf_dir), make_cms_upsert(snap), ckpt)
     cms = read_snapshot(spark, snap)
     events = load(spark, sf_dir, "events")
@@ -1400,7 +1372,7 @@ def streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bitmap_distinct_rollup`); the readout never touches raw events.
     10^9 dense users × 5 types ≈ 625 MB of words — a small serving
     table maintained by pure column ops."""
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_bitmapstream")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "bitmapstream")
     drain(read_events_stream(spark, sf_dir), make_bitmap_upsert(snap), ckpt)
     bm = read_snapshot(spark, snap)
     return (
@@ -1599,7 +1571,7 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-batch state touched is |priorities| rows.  At 100 TB the
     interval table would be maintained incrementally by the CDC path
     and bucketed on user_id so each micro-batch joins co-located."""
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_asof_enrich")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "asof_enrich")
     iv = materialize(order_priority_intervals(spark, sf_dir))
     # ~40 B/row keeps this comfortably under a 32 MB broadcast build
     iv_small = iv.count() <= 800_000
@@ -1651,53 +1623,41 @@ _SND_SCHEMA = (
 )
 
 
-def _docs_feed_dir(
-    spark: SparkSession, sf_dir: str, n_chunks: int = _SND_CHUNKS
-) -> str:
-    """Stage the documents table as ``n_chunks`` id-ordered parquet
+def _docs_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the documents table as ``_SND_CHUNKS`` id-ordered parquet
     chunk files with ascending mtimes, so the file stream source
     (maxFilesPerTrigger=1) delivers them as successive micro-batches
     in doc_id order — a real incremental feed, not one big batch.
     Id-ordered arrival is what makes state rank == doc_id rank (see
     `make_neardup_upsert`); a production feed would use arrival
-    sequence for the same rank.  Session-scoped and idempotent, like
-    `_feed_dir`."""
-    import hashlib
+    sequence for the same rank.  Built once per session by
+    `session.staged_dir`."""
     import os
-    import shutil
-    import tempfile
     import time
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{sf_dir}|{app}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"edinet_docs_feed_{tag}")
-    feed = os.path.join(base, "feed")
-    done = os.path.join(base, "DONE")
-    if os.path.exists(done):
-        return feed
-    shutil.rmtree(base, ignore_errors=True)
-    build = os.path.join(base, "build")
-    (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartitionByRange(n_chunks, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(build)
-    )
-    os.makedirs(feed, exist_ok=True)
-    # part-00000 is range partition 0 = the smallest doc_ids; name
-    # order == id order.  Distinct ascending mtimes pin the file
-    # source's processing order.
-    parts = sorted(f for f in os.listdir(build) if f.startswith("part-"))
-    t0 = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        dst = os.path.join(feed, f"chunk-{i:03d}.parquet")
-        os.replace(os.path.join(build, f), dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    with open(done, "w") as fh:
-        fh.write(str(len(parts)))
-    return feed
+    def build(base: str) -> None:
+        out = os.path.join(base, "build")
+        (
+            load(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .repartitionByRange(_SND_CHUNKS, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+        feed = os.path.join(base, "feed")
+        os.makedirs(feed)
+        # part-00000 is range partition 0 = the smallest doc_ids; name
+        # order == id order.  Distinct ascending mtimes pin the file
+        # source's processing order.
+        parts = sorted(f for f in os.listdir(out) if f.startswith("part-"))
+        t0 = time.time() - len(parts) - 10
+        for i, f in enumerate(parts):
+            dst = os.path.join(feed, f"chunk-{i:03d}.parquet")
+            os.replace(os.path.join(out, f), dst)
+            os.utime(dst, (t0 + i, t0 + i))
+
+    return os.path.join(staged_dir(spark, sf_dir, "docs_feed", build), "feed")
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1885,7 +1845,7 @@ def streaming_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus signature index); the snapshot commit is the versioned
     atomic protocol shared with the CDC sink (partitioned-bucket form
     for 100 TB noted on `make_neardup_upsert`)."""
-    snap, ckpt = _snapshot_workdir(spark, sf_dir, "edinet_neardup")
+    snap, ckpt = _snapshot_workdir(spark, sf_dir, "neardup")
     drain(read_documents_stream(spark, sf_dir), make_neardup_upsert(snap), ckpt)
     return (
         read_snapshot(spark, snap)

@@ -248,19 +248,13 @@ def test_ivf_partitioned_index_prunes(spark):
     """The persisted IVF index actually prunes at the STORAGE level: a
     cell-filtered read lists strictly fewer parquet files than the
     full index, and exactly the probed cell's directory."""
-    import hashlib
-    import os
-    import tempfile
-
     from edinet_etl_spark import registry
+    from edinet_etl_spark.session import scratch_dir
 
     registry.load_all()
     # build the index (query fn writes the session-scoped dir)
     registry.QUERIES["ivf_partitioned_index_topk"](spark, SF_DIR).collect()
-    tag = hashlib.md5(
-        (SF_DIR + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    idx_dir = os.path.join(tempfile.gettempdir(), f"edinet_ivfidx_{tag}")
+    idx_dir = scratch_dir(spark, SF_DIR, "ivfidx")
     full = spark.read.parquet(idx_dir)
     cells = sorted(r["sid"] for r in full.select("sid").distinct().collect())
     assert len(cells) > 1
@@ -285,21 +279,17 @@ def test_dpp_plan_and_files(spark):
     carries a dynamicpruning subquery filter, and execution touches
     only the dim-matched date directories — fewer files than the lake
     holds."""
-    import hashlib
     import os
-    import tempfile
 
     from edinet_etl_spark import registry
+    from edinet_etl_spark.session import scratch_dir
 
     registry.load_all()
     df = registry.QUERIES["dynamic_partition_pruned_join"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan
     matched_days = {str(r["event_date"]) for r in df.collect()}
-    tag = hashlib.md5(
-        (SF_DIR + "|" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:8]
-    lake = os.path.join(tempfile.gettempdir(), f"edinet_dpplake_{tag}")
+    lake = scratch_dir(spark, SF_DIR, "dpplake")
     all_days = {d.split("=")[1] for d in os.listdir(lake) if d.startswith("event_date=")}
     assert len(matched_days) < len(all_days)
     # input_file_name() rejects multi-source plans: tag the fact side
@@ -372,3 +362,33 @@ def test_bucketed_copurchase_edge_build_is_exchange_free(warehouse):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_dpp_lake_rebuilt_after_failed_build(spark, oracle, tmp_path, monkeypatch):
+    """A lake build that fails after creating its output dir leaves
+    nothing a later call takes for complete: the next call rebuilds the
+    lake and matches the oracle."""
+    import os
+
+    from edinet_etl_spark import registry
+    from tests.conftest import SF_DIR as ORACLE_SF_DIR
+    from tests.conftest import assert_matches_oracle
+
+    registry.load_all()
+    # a fresh sf_dir key, so no lake an earlier test built applies
+    sf = tmp_path / "sf"
+    sf.symlink_to(ORACLE_SF_DIR)
+    real = layout.write_date_partitioned_events
+
+    def fail_once(spark, sf_dir, out_dir):
+        monkeypatch.setattr(layout, "write_date_partitioned_events", real)
+        os.makedirs(out_dir, exist_ok=True)
+        raise RuntimeError("lake build cancelled")
+
+    monkeypatch.setattr(layout, "write_date_partitioned_events", fail_once)
+    name = "dynamic_partition_pruned_join"
+    with pytest.raises(RuntimeError, match="lake build cancelled"):
+        registry.QUERIES[name](spark, str(sf))
+    assert_matches_oracle(
+        registry.QUERIES[name](spark, str(sf)), oracle, registry.ORACLES[name], name
+    )

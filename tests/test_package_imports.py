@@ -1,16 +1,24 @@
 """Static guards over the package source: every module under
 ``edinet_etl_spark/`` is parsed and checked — production code never
-imports test code, eager checkpoints go through one helper, and the
-session policy (``session.prep``) is applied only by the registry."""
+imports test code, eager checkpoints go through one helper, scratch
+space is named by one helper, and the session policy
+(``session.prep``) is applied only by the registry."""
 
 from __future__ import annotations
 
 import ast
+import glob
 import inspect
+import os
+import shutil
 from pathlib import Path
+from urllib.parse import urlparse
+
+import pytest
 
 import edinet_etl_spark
 from edinet_etl_spark import registry
+from edinet_etl_spark.session import scratch_dir, staged_dir
 
 from tests.conftest import SF_DIR
 
@@ -62,6 +70,77 @@ def test_checkpoints_only_through_materialize():
         and not (path.name == "session.py" and node.lineno in allowed)
     ]
     assert offenders == []
+
+
+def test_scratch_space_only_through_session():
+    """One scratch policy: ``session.scratch_dir`` names every
+    per-session working dir, so no other module may import
+    ``tempfile``."""
+    offenders = [
+        str(path.relative_to(PACKAGE.parent))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.name != "session.py"
+        and "tempfile" in _imported_modules(ast.parse(path.read_text(), str(path)))
+    ]
+    assert offenders == []
+
+
+def test_staged_dir_failed_build_leaves_nothing(spark):
+    final = scratch_dir(spark, SF_DIR, "staged_fail_test")
+
+    def build(staging):
+        open(os.path.join(staging, "part"), "w").close()
+        raise RuntimeError("build cancelled")
+
+    with pytest.raises(RuntimeError, match="build cancelled"):
+        staged_dir(spark, SF_DIR, "staged_fail_test", build)
+    assert not os.path.exists(final)
+    assert glob.glob(f"{final}.staging-*") == []
+
+
+def test_staged_dir_builds_once(spark):
+    builds = []
+
+    def build(staging):
+        builds.append(staging)
+        open(os.path.join(staging, "part"), "w").close()
+
+    first = staged_dir(spark, SF_DIR, "staged_once_test", build)
+    try:
+        assert staged_dir(spark, SF_DIR, "staged_once_test", build) == first
+        assert first == scratch_dir(spark, SF_DIR, "staged_once_test")
+        assert len(builds) == 1 and os.listdir(first) == ["part"]
+    finally:
+        shutil.rmtree(first, ignore_errors=True)
+
+
+def test_staged_dir_keeps_a_concurrent_winner(spark):
+    """A builder whose rename loses to one that finished first drops its
+    own staging dir and returns the winner's dir unchanged."""
+    final = scratch_dir(spark, SF_DIR, "staged_race_test")
+
+    def build(staging):
+        os.makedirs(final)
+        open(os.path.join(final, "winner"), "w").close()
+        open(os.path.join(staging, "loser"), "w").close()
+
+    try:
+        assert staged_dir(spark, SF_DIR, "staged_race_test", build) == final
+        assert os.listdir(final) == ["winner"]
+        assert glob.glob(f"{final}.staging-*") == []
+    finally:
+        shutil.rmtree(final, ignore_errors=True)
+
+
+def test_formats_scratch_is_per_session(spark):
+    """The format round-trips write and read back inside this session's
+    scratch dir, so another session on the same input directory never
+    overwrites files under a pending lazy read-back."""
+    registry.load_all()
+    files = registry.QUERIES["orc_roundtrip_stats"](spark, SF_DIR).inputFiles()
+    root = scratch_dir(spark, SF_DIR, "fmt_orc")
+    assert files
+    assert all(urlparse(f).path.startswith(f"{root}/") for f in files), files
 
 
 def _prep_call_sites(tree: ast.AST, scope: str = ""):
