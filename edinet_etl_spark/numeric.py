@@ -28,15 +28,27 @@ DECIMAL(18,8) per-value with DECIMAL(38,8) accumulation still leaves
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC_SCALE = 8
+_Q8 = Decimal(1).scaleb(-DEC_SCALE)
 
 
 def dec(c: Column, scale: int = DEC_SCALE) -> Column:
     """Cast a double column to exact fixed-point for associative math."""
     return c.cast(f"decimal(18,{scale})")
+
+
+def dec8(x: float) -> Decimal:
+    """Python-side mirror of ``dec``: the exact decimal Spark's HALF_UP
+    cast of the double ``x`` to scale 8 yields (repr → shortest decimal
+    → setScale).  Summing these is exact and order-free, so Python
+    kernels match the engine's ``dsum`` bit-for-bit.  NaN raises
+    (``InvalidOperation``): callers skip it, as SQL SUM skips NULL."""
+    return Decimal(repr(x)).quantize(_Q8, rounding=ROUND_HALF_UP)
 
 
 def _dec_to_double(c: Column) -> Column:

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from edinet_etl_spark.blocks import ranked_salt, sql_ranked_salt
-from edinet_etl_spark.numeric import _dec_to_double, dec, dsum
+from edinet_etl_spark.numeric import _dec_to_double, dec, dec8, dsum
 from edinet_etl_spark.registry import query
 from edinet_etl_spark.session import materialize, scratch_dir
 from edinet_etl_spark.tables import load, parallel_scan
@@ -2227,15 +2227,8 @@ _RBO_HALF = 32  # MRL prefix length under comparison
 # decimal midpoint where round-half modes differ — measured 1e-8
 # flips), then injected as identical literals into both engines (the
 # _RECALL_ANALYTIC precedent + the numeric.py scale doctrine).
-from decimal import ROUND_HALF_UP as _RHU
-from decimal import Decimal as _Dec
-
 _RBO_W = tuple(
-    float(
-        _Dec(repr(sum(0.5 ** (d - 1) / d for d in range(m, _RBO_D + 1)))).quantize(
-            _Dec("1E-8"), _RHU
-        )
-    )
+    float(dec8(sum(0.5 ** (d - 1) / d for d in range(m, _RBO_D + 1))))
     for m in range(1, _RBO_D + 1)
 )
 

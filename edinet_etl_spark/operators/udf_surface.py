@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from edinet_etl_spark.numeric import dec8
 from edinet_etl_spark.registry import query
 from edinet_etl_spark.tables import load
 
@@ -140,20 +141,13 @@ def udtf_char_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _zscore_fn():
     """Grouped-map kernel: whole group in, same-cardinality frame out.
-    Moments come from exact decimal sums (quantized like the engine's
-    HALF_UP cast), so mean/std — and therefore every z-score — are
-    bit-identical to the SQL oracle's decimal-sum formulation."""
-    import decimal
+    Moments come from exact decimal sums (`numeric.dec8`, quantized
+    like the engine's HALF_UP cast), so mean/std — and therefore every
+    z-score — are bit-identical to the SQL oracle's decimal-sum
+    formulation."""
     import math
 
-    q8 = decimal.Decimal(1).scaleb(-8)
-
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
-        def dec8(x: float) -> decimal.Decimal:
-            return decimal.Decimal(repr(x)).quantize(
-                q8, rounding=decimal.ROUND_HALF_UP
-            )
-
         raw = [float(v) for v in pdf["value"]]
         n = len(raw)
         s1 = sum(dec8(v) for v in raw)

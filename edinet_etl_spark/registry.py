@@ -104,8 +104,11 @@ def load_all() -> None:
 # oldest-evidence cohorts: all of r3, then r4 in name order up to the
 # 50-name window and behind it.  The r11 head (the r10-rewritten
 # dedup/LSH/IVF paths) was driver-green in r11 and sorts by module.
+# The two Python kernels that quantize through `numeric.dec8` join the
+# head right after the streaming queries.
 _PRIORITY: tuple[str, ...] = (
-    # ---- paths whose scratch dirs moved to session.scratch_dir ----
+    # ---- paths whose scratch dirs moved to session.scratch_dir: the
+    # streaming queries (their snapshot sinks share one commit) ... ----
     "streaming_attribution_left_outer", "streaming_cdc_snapshot",
     "streaming_dedup_events", "streaming_tumbling_hourly",
     "streaming_user_sessions", "streaming_user_totals",
@@ -113,6 +116,9 @@ _PRIORITY: tuple[str, ...] = (
     "streaming_purchase_attribution", "streaming_quality_monitor",
     "streaming_cms_heavy_hitters", "streaming_bitmap_distinct",
     "streaming_asof_enrich", "streaming_neardup_dedup",
+    # ---- the two numeric.dec8 kernels ----
+    "grouped_map_user_zscore", "rank_biased_overlap_eval",
+    # ---- ... and the batch queries that write scratch data ----
     "orc_roundtrip_stats", "jsonl_roundtrip_stats", "xml_roundtrip_stats",
     "csv_corrupt_records_audit", "dynamic_partition_pruned_join",
     "schema_evolution_read", "bucketed_colocated_join_audit",
@@ -131,10 +137,10 @@ _PRIORITY: tuple[str, ...] = (
     "cms_join_size_estimate", "doc_chunk_windows", "doc_rarity_scores",
     "document_fingerprints", "embedding_sq8_recon_error",
     "event_sequence_trigrams", "fulfilled_only_customers_except",
-    "incremental_agg_maintenance", "language_id_heuristic",
-    "lsh_hyperplane_buckets",
+    "incremental_agg_maintenance",
     # ---- behind the window: the rest of the r4 cohort, so a wider
     # sweep (or the next head) picks them up first ----
+    "language_id_heuristic", "lsh_hyperplane_buckets",
     "matryoshka_prefix_recall", "multimodal_audio_energy",
     "multimodal_features", "multimodal_frame_sample",
     "pii_redaction_report", "props_variant_stats", "quality_scores",

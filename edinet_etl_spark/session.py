@@ -15,6 +15,7 @@ coalescing/skew-join left on.  Every conf here is scale-motivated:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -76,19 +77,34 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+_SCRATCH: set[str] = set()
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    """Exit hook: remove every dir `scratch_dir` named in this process."""
+    for d in _SCRATCH:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def scratch_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """The engine's one name for a per-session working directory:
-    ``{tempdir}/edinet_{kind}_{md5(sf_dir|applicationId)[:12]}``.  Pure:
-    it creates nothing.  Keying on the application id as well as the
-    input directory keeps two sessions on the same data from
-    overwriting each other's dirs while a lazy read-back is pending.
+    ``{tempdir}/edinet_{kind}_{md5(sf_dir|applicationId)[:12]}``.  It
+    creates nothing, but records the path for the exit hook, so a
+    session's scratch lives until its Python process exits (a lazy
+    DataFrame over it stays readable until then).  Keying on the
+    application id as well as the input directory keeps two sessions
+    on the same data from overwriting each other's dirs while a lazy
+    read-back is pending.
 
     Precondition: the path is driver-local, but Spark tasks write into
     it (and read it back).  That holds in local mode, where executors
     share the driver's file system; on a cluster the temp dir must be
     shared storage every executor sees."""
     tag = hashlib.md5(f"{sf_dir}|{spark.sparkContext.applicationId}".encode())
-    return os.path.join(tempfile.gettempdir(), f"edinet_{kind}_{tag.hexdigest()[:12]}")
+    d = os.path.join(tempfile.gettempdir(), f"edinet_{kind}_{tag.hexdigest()[:12]}")
+    _SCRATCH.add(d)
+    return d
 
 
 def staged_dir(

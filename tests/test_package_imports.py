@@ -1,8 +1,9 @@
 """Static guards over the package source: every module under
 ``edinet_etl_spark/`` is parsed and checked — production code never
 imports test code, eager checkpoints go through one helper, scratch
-space is named by one helper, and the session policy
-(``session.prep``) is applied only by the registry."""
+space is named by one helper (and removed when the process exits),
+Python-side exact decimals come from one helper, and the session
+policy (``session.prep``) is applied only by the registry."""
 
 from __future__ import annotations
 
@@ -11,6 +12,9 @@ import glob
 import inspect
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
 from pathlib import Path
 from urllib.parse import urlparse
 
@@ -81,6 +85,57 @@ def test_scratch_space_only_through_session():
         for path in sorted(PACKAGE.rglob("*.py"))
         if path.name != "session.py"
         and "tempfile" in _imported_modules(ast.parse(path.read_text(), str(path)))
+    ]
+    assert offenders == []
+
+
+def test_scratch_dirs_removed_at_exit(tmp_path):
+    """A session's scratch lives until its Python process exits: a dir
+    built through ``staged_dir`` exists while the process runs and is
+    gone once it has exited."""
+    script = textwrap.dedent(
+        f"""
+        import os
+        from types import SimpleNamespace
+
+        from edinet_etl_spark.session import staged_dir
+
+        spark = SimpleNamespace(
+            sparkContext=SimpleNamespace(applicationId="exit-hook-test")
+        )
+
+        def build(staging):
+            open(os.path.join(staging, "part"), "w").close()
+
+        d = staged_dir(spark, {str(tmp_path)!r}, "exit_test", build)
+        print(d, os.listdir(d))
+        """
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        cwd=PACKAGE.parent,
+        env={**os.environ, "PYTHONPATH": str(PACKAGE.parent)},
+        timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    path, listing = done.stdout.strip().split(" ", 1)
+    assert listing == "['part']"
+    assert not os.path.exists(path)
+
+
+def test_exact_decimals_only_through_numeric():
+    """One Python-side exact-decimal rule: ``numeric.dec8`` is the only
+    code that may call ``.quantize(``."""
+    offenders = [
+        f"{path.relative_to(PACKAGE.parent)}:{node.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.name != "numeric.py"
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "quantize"
     ]
     assert offenders == []
 

@@ -256,9 +256,9 @@ def test_foreachbatch_upsert_snapshot(spark, tmp_path):
 
 def test_foreachbatch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a batch re-delivered after a
-    crash (same batch_id) must NOT double-count.  Pins the batch-id
-    marker inside the snapshot (atomic with the staging swap) for both
-    additive sinks."""
+    crash (same batch_id) must NOT double-count.  Pins the replay
+    guard on the committed CURRENT pointer for the five additive
+    sinks."""
     from edinet_etl_spark.tables import load
 
     ev = load(spark, SF_DIR, "events").limit(100)
@@ -284,6 +284,62 @@ def test_foreachbatch_replay_is_idempotent(spark, tmp_path):
     assert {
         r["user_id"]: r["n_events"] for r in jobs.read_snapshot(spark, snap_c).collect()
     } == base
+
+    # CMS, bitmap and as-of priority sinks: a replay is a no-op, and a
+    # genuine batch 1 lands exactly as one batch of both would
+    b1 = load(spark, SF_DIR, "events").filter(F.col("user_id") % 3 == 0)
+
+    def as_priority(df):
+        return df.select(F.col("event_type").alias("priority"), "value")
+
+    def rows(snap):
+        return sorted(tuple(r) for r in jobs.read_snapshot(spark, snap).collect())
+
+    for name, make, shape in [
+        ("cms", jobs.make_cms_upsert, lambda df: df),
+        ("bitmap", jobs.make_bitmap_upsert, lambda df: df),
+        ("priority", jobs.make_priority_upsert, as_priority),
+    ]:
+        snap = str(tmp_path / name)
+        upsert = make(snap)
+        upsert(shape(ev), 0)
+        first = rows(snap)
+        upsert(shape(ev), 0)  # re-delivery: must be a no-op
+        assert rows(snap) == first, name
+        upsert(shape(b1), 1)
+        one_shot = str(tmp_path / f"{name}_one_shot")
+        make(one_shot)(shape(ev.unionByName(b1)), 0)
+        assert rows(snap) == rows(one_shot), name
+
+
+def test_whole_rewrite_snapshot_reads_by_version(spark, tmp_path):
+    """One snapshot protocol: a whole-rewrite sink (the quality monitor)
+    commits a bucket manifest like the partitioned one, so its CURRENT
+    version also reads by number (``at=``), and a snapshot with no
+    committed version raises FileNotFoundError naming its dir."""
+    import json
+    import os
+    import re
+
+    ev = load(spark, SF_DIR, "events").limit(100)
+    snap = str(tmp_path / "qsnap")
+    upsert = jobs.make_quality_upsert(snap)
+    upsert(ev, 0)
+    upsert(ev, 1)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(jobs.read_snapshot(spark, snap, at=1)) == rows(
+        jobs.read_snapshot(spark, snap)
+    )
+    assert sorted(os.listdir(snap)) == ["CURRENT", "v1"]
+    assert json.load(open(os.path.join(snap, "v1", "MANIFEST.json"))) == {"0": 1}
+    with pytest.raises(FileNotFoundError):  # outside the one-version window
+        jobs.read_snapshot(spark, snap, at=0)
+    never = str(tmp_path / "never")
+    with pytest.raises(FileNotFoundError, match=re.escape(never)):
+        jobs.read_snapshot(spark, never)
 
 
 def test_partitioned_snapshot_touched_only(spark, tmp_path):
